@@ -224,9 +224,7 @@ object GraftSession {
       // floor duplicated badly). On a cluster reading 100 TB this
       // stays at or above the default (256–512 MB for narrow
       // projections); it is a per-deployment setting.
-      // SPARK_GRAFT_SCAN_MB overrides for A/B probes.
-      .config("spark.sql.files.maxPartitionBytes",
-        s"${sys.env.getOrElse("SPARK_GRAFT_SCAN_MB", "128").toInt * 1024 * 1024}")
+      .config("spark.sql.files.maxPartitionBytes", s"${128 * 1024 * 1024}")
       // small-file packing: the scale-probe corpora are written as
       // many ~1 MB files; the default 4 MB per-file "open cost" would
       // pack them back into few fat partitions

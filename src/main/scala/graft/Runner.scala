@@ -23,29 +23,16 @@ import org.apache.spark.sql.SparkSession
   * idempotent targets, dependency ordering and a machine-readable
   * per-query status line.
   *
-  * Caching contract: engine queries persist/checkpoint intermediate
-  * frames scoped to their own run (minhash signatures, QA cubes,
-  * zipWithIndex base RDDs). [[runOne]] snapshots BOTH the
-  * persistent-RDD ids and the CacheManager's registered plans before
-  * the query, and afterwards drops only what the query itself created
-  * — embedded in a host application, the host's own cached data is
-  * never touched. Clearing the CacheManager entries (not just the
-  * RDDs) matters: a stale entry whose buffers were unpersisted is a
-  * DEAD cache — a later query persisting the identical plan fragment
-  * (q_minhash_dedup → q_dedup_clusters both persist the signature
-  * frame; q_ngram_jaccard → q_containment the shingle frame) would
-  * hit "already cached" as a no-op and recompute the chain once per
-  * consumer with nothing stored.
-  *
-  * The snapshot-diff is SINGLE-FLIGHT: it assumes nothing else
-  * persists on this session while a query runs. A host thread that
-  * caches a frame mid-query would postdate the snapshots and be
-  * indistinguishable from the query's own scratch caches — and get
-  * dropped. Embedders that cache concurrently must serialize around
-  * [[runOne]] (the reference has the same one-task-at-a-time model:
-  * Luigi workers run tasks serially per process). Bench and
-  * NearDup.dedupClusters use the same snapshot-diff under the same
-  * assumption.
+  * Caching contract: every frame a query persists or checkpoints is
+  * owned by [[Caches]]. Query-scoped frames ([[Caches.hold]],
+  * [[Caches.checkpoint]]: minhash signatures, QA cubes, zipWithIndex
+  * base RDDs) end with the query — [[runOne]] calls
+  * [[Caches.endQuery]] after the write, on failure too, or a crashed
+  * query's frames would squeeze every later one. Run-scoped artifacts
+  * ([[Caches.memo]]: the span family's seed frame, the affinity pair
+  * frames) survive it, so the next query of the run reuses one build;
+  * [[runAll]] releases them at the end of the run. A host
+  * application's own cached frames are never touched.
   *
   * Usage: runMain graft.Runner <sfDir> <outDir> [query,query,…|all]
   * [--force]
@@ -90,43 +77,6 @@ object Runner {
     order.toSeq
   }
 
-  /** CachedData entries currently registered in the session's
-    * CacheManager. The enumeration reads the private `cachedData`
-    * field reflectively (no public listing exists); if a Spark
-    * upgrade moves it, this returns empty and the scoped cleanup
-    * degrades to RDD-level unpersist. */
-  private[graft] def cachedEntries(spark: SparkSession): Seq[Product] =
-    try {
-      val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sharedState.cacheManager
-      val f = cm.getClass.getDeclaredField("cachedData")
-      f.setAccessible(true)
-      f.get(cm).asInstanceOf[IndexedSeq[Product]].toSeq
-    } catch { case NonFatal(_) => Nil }
-
-  private[graft] def cachedPlans(spark: SparkSession): Seq[AnyRef] =
-    cachedEntries(spark).map(_.productElement(0).asInstanceOf[AnyRef])
-
-  /** The buffer-RDD ids behind a CachedData entry's InMemoryRelation,
-    * read reflectively. `Some(Nil)` means the buffers were never
-    * materialized (nothing to exempt); `None` means the internals
-    * moved under a Spark upgrade — callers must NOT keep the entry
-    * then, or the RDD backstop would strip its buffers and leave a
-    * dead cache. */
-  private[graft] def bufferRddIds(entry: Product): Option[Seq[Int]] =
-    try {
-      val rel = entry.productElement(1)
-      val cb = rel.getClass.getMethod("cacheBuilder").invoke(rel)
-      Some(cb.getClass.getDeclaredFields.toSeq
-        .filter(f => classOf[org.apache.spark.rdd.RDD[_]]
-          .isAssignableFrom(f.getType))
-        .flatMap { f =>
-          f.setAccessible(true)
-          Option(f.get(cb))
-        }
-        .map(_.asInstanceOf[org.apache.spark.rdd.RDD[_]].id))
-    } catch { case NonFatal(_) => None }
-
   def runOne(spark: SparkSession, sfDir: String, outDir: String,
              name: String, force: Boolean): String = {
     // Hadoop FS, not java.nio: outDir may be hdfs://, s3a://, file:/ —
@@ -135,69 +85,12 @@ object Runner {
     val success = new Path(target, "_SUCCESS")
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     if (!force && fs.exists(success)) "skipped (target exists)"
-    else {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val beforeEntries = cachedEntries(spark)
-      // buffer-RDD ids of SHARED artifacts kept past this query — the
-      // RDD backstop must not strip what the kept entries still serve
-      val exempt = mutable.Set[Int]()
+    else
       try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.mode("overwrite").parquet(target.toString)
         "written"
-      } finally {
-        // drop ONLY what this query created — on failure too, or a
-        // crashed query's frames squeeze every subsequent query. The
-        // host application's entries predate the snapshots and survive.
-        // EXCEPTION: frames tracked by [[Caches]] (the memoized
-        // one-artifact-many-consumers frames — the span family's seed
-        // frame, the affinity pair frames) are RUN-scoped, not
-        // query-scoped: kept here so the next query reuses one corpus
-        // scan instead of paying its own, released by [[runAll]] at
-        // the end of the run. An entry is kept ONLY when its buffer
-        // RDDs are identifiable (or not yet materialized) — otherwise
-        // the backstop below would strip the buffers and leave a dead
-        // cache, the recompute-per-consumer trap this cleanup exists
-        // to prevent.
-        // CacheManager entries first (uncacheQuery also unpersists the
-        // entry's buffers), then raw RDD ids as the backstop for
-        // localCheckpoints, which never touch the CacheManager.
-        // The classic-session cast sits INSIDE the guard: on a
-        // non-classic session (e.g. Connect) it would otherwise throw
-        // ClassCastException from the finally and mask the query's
-        // real result or exception — cachedEntries() already degrades
-        // to Nil there, and the RDD-level unpersist still runs.
-        try {
-          val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val shared = Caches.tracked.flatMap(df =>
-            try Some(df.queryExecution.normalized)
-            catch { case NonFatal(_) => None })
-          cachedEntries(spark)
-            .filterNot(e => beforeEntries.exists(b =>
-              b.asInstanceOf[AnyRef] eq e.asInstanceOf[AnyRef]))
-            .foreach { e =>
-              val p = e.productElement(0)
-                .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-              val keep =
-                if (shared.exists(sp => try sp.sameResult(p)
-                  catch { case NonFatal(_) => false }))
-                  bufferRddIds(e) match {
-                    case Some(ids) => exempt ++= ids; true
-                    case None => false
-                  }
-                else false
-              if (!keep)
-                try cs.sharedState.cacheManager.uncacheQuery(cs, p,
-                  cascade = false, blocking = false)
-                catch { case NonFatal(_) => () }
-            }
-        } catch { case NonFatal(_) => () }
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => before(id) || exempt(id) }
-          .values.foreach(_.unpersist(blocking = false))
-      }
-    }
+      } finally Caches.endQuery()
   }
 
   /** Run `names` (dependencies first) against `sfDir`, one target per
@@ -216,13 +109,9 @@ object Runner {
         catch { case NonFatal(e) => s"FAILED: $e" }
       name -> status
     }
-    // the RUN-scoped shared artifacts runOne kept alive across
-    // queries (seed frames, pair frames) end their lifetime with the
-    // run — a host that wants them warm across runs re-pays one build
-    try {
-      Caches.clear()
-      operators.Affinity.clearCache()
-    } catch { case NonFatal(_) => () }
+    // the run-scoped memos end with the run — a host that wants them
+    // warm across runs re-pays one build
+    Caches.clear()
     statuses
   }
 

@@ -634,7 +634,7 @@ object SparkEntry {
     * cross-session path a deployment uses), same discipline as the
     * [[embCount]] metadata memo. The rebuilt frame is a fresh local
     * relation per call, so Bench's between-run cache hygiene
-    * (unpersist/clearCache) never touches shared state. */
+    * ([[Caches.clear]]) never touches shared state. */
   private val annCentroidsMemo = scala.collection.concurrent.TrieMap
     .empty[String, (Array[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType)]

@@ -89,10 +89,9 @@ object Tables {
       // vs 3.08 s, q_quality_filter 0.78 vs 1.15 s) and the old
       // per-core floor (q_chunks 0.77 → 0.52 s, q_ngram_jaccard
       // 2.74 → 1.95 s); the knob only ever applies below
-      // cores×FLOOR_MB of input, so a cluster deployment never sees
-      // it. SPARK_GRAFT_FLOOR_MB overrides for A/B probes.
-      val floorBytes =
-        sys.env.getOrElse("SPARK_GRAFT_FLOOR_MB", "0.125").toDouble * 1024 * 1024
+      // cores × 0.125 MB of input, so a cluster deployment never
+      // sees it.
+      val floorBytes = 0.125 * 1024 * 1024
       val bytes = raw.queryExecution.optimizedPlan.stats.sizeInBytes
       val want = math.ceil(bytes.toDouble / floorBytes).toInt
       val target = math.min(cores, math.max(scanParts, want))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Item-affinity analytics over the order log: co-purchase pair
   * counts, item-item cosine similarity (the classic item-based
@@ -40,64 +39,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object Affinity {
 
-  /** Memoized shared pair frames, keyed by (session, input plan,
-    * builder). Running several affinity queries in one session used
-    * to build and persist an independent copy of the same pair frame
-    * per operator; the memo hands every operator the SAME persisted
-    * frame. Entries whose cache was dropped externally (Bench/Runner
-    * do scoped per-query release) re-persist on lookup — the plan is
-    * identical, only the materialization is redone. [[clearCache]] is
-    * the caller-side release for ALL frames this module persists,
-    * internal intermediates included. */
-  private val memo =
-    scala.collection.mutable.Map[(Int, Int, String), DataFrame]()
-
-  /** Internal persisted intermediates (e.g. the triangle orientation
-    * frame) that are not returned to the caller — released by
-    * [[clearCache]] so a long-lived session can reclaim them. */
-  private val held = scala.collection.mutable.ListBuffer[DataFrame]()
-
-  // visible to the Runner's run-scoped shared-artifact exemption
-  graft.Caches.registerProvider(() =>
-    synchronized((memo.values ++ held).toSeq))
-
-  private def hold(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    held += p
-    p
-  }
-
-  private def memoized(input: DataFrame, kind: String)
-                      (build: => DataFrame): DataFrame = synchronized {
-    val key = (System.identityHashCode(input.sparkSession),
-      input.queryExecution.analyzed.semanticHash(), kind)
-    memo.get(key) match {
-      case Some(df) =>
-        // external scoped cleanup (Bench, Runner) may have dropped the
-        // buffers; re-register so in-query reuse stays cached
-        if (df.storageLevel == StorageLevel.NONE)
-          df.persist(StorageLevel.MEMORY_AND_DISK)
-        df
-      case None =>
-        // the builder persists (and may eagerly materialize, so its
-        // own intermediates can be released immediately)
-        val df = build
-        memo(key) = df
-        df
-    }
-  }
-
-  /** Release every frame this module has persisted (memoized pair
-    * frames and internal intermediates). Safe to call mid-session;
-    * subsequent operator calls rebuild what they need. */
-  def clearCache(): Unit = synchronized {
-    (memo.values ++ held).foreach { df =>
-      try df.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    memo.clear()
-    held.clear()
-  }
+  /** Releases every graft-persisted frame; kept for callers that
+    * predate [[graft.Caches]]. */
+  def clearCache(): Unit = graft.Caches.clear()
 
   /** Distinct (order, item) memberships — an order listing an item on
     * several lines counts once, as a set membership. */
@@ -111,20 +55,19 @@ object Affinity {
     * join), so the exploded pairs carry (n_a, n_b) with them and the
     * pair grain never joins anything afterwards.
     *
-    * The RESULT is persisted and MEMOIZED (released via
-    * [[clearCache]]): [[itemSimilarity]] immediately unions the frame
-    * with its own swap, and without the persist each union branch
-    * re-runs the whole distinct→join→sets→explode chain — measured 3×
-    * the operator's total cost at sf0.1 — while the memo hands
-    * [[triangleStats]]/[[wedgeRecommendations]]/[[itemSimilarity]]
+    * The RESULT is persisted and MEMOIZED for the run
+    * ([[graft.Caches.memo]]): [[itemSimilarity]] immediately unions
+    * the frame with its own swap, and without the persist each union
+    * branch re-runs the whole distinct→join→sets→explode chain —
+    * measured 3× the operator's total cost at sf0.1 — while the memo
+    * hands [[triangleStats]]/[[wedgeRecommendations]]/[[itemSimilarity]]
     * the same copy instead of three. The first build materializes
     * eagerly so the internal (order, item) frame can be released at
-    * once instead of pinning storage for the session. (The graph
-    * operators use the leaner count-free [[coPairs]] instead.) */
+    * once instead of pinning storage for the rest of the query. (The
+    * graph operators use the leaner count-free [[coPairs]] instead.) */
   def coPurchasePairs(lineitem: DataFrame): DataFrame =
-    memoized(lineitem, "coPurchasePairs") {
-      val op = orderParts(lineitem)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    graft.Caches.memo(lineitem, "affinity.coPurchasePairs") {
+      val op = orderParts(lineitem).transform(graft.Caches.hold)
       val cnt = op.groupBy(col("part")).agg(count(lit(1)).as("cnt"))
       val sets = op.join(cnt, "part")
         .groupBy(col("okey"))
@@ -137,9 +80,9 @@ object Affinity {
         .groupBy(col("p.a.part").as("part_a"), col("p.b.part").as("part_b"),
           col("p.a.cnt").as("n_a"), col("p.b.cnt").as("n_b"))
         .agg(count(lit(1)).as("cooc"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.Caches.hold)
       res.count()
-      op.unpersist(blocking = false)
+      graft.Caches.release(op)
       res
     }
 
@@ -159,9 +102,8 @@ object Affinity {
       .unionAll(pairs.select(col("part_b").as("part"),
         col("part_a").as("other"), col("cooc"),
         col("n_b").as("n_a"), col("n_a").as("n_b")))
-    // persisted via hold(): the graft_topk cut and the count-recovery
-    // join both read it; released by [[clearCache]]
-    val scored = hold(sym
+    // held: the graft_topk cut and the count-recovery join both read it
+    val scored = graft.Caches.hold(sym
       .withColumn("cos_sim", col("cooc").cast("double") /
         sqrt(col("n_a").cast("double") * col("n_b"))))
     val top = scored.groupBy(col("part"))
@@ -192,11 +134,10 @@ object Affinity {
     * in-aggregate so the distinct pre-pass and the count-attach join
     * both drop out — one shuffle from the raw line stream to
     * per-order sets, one to the distinct pair grain (measured ~40%
-    * off [[pageRank]]'s setup at sf0.1). Persisted and memoized
-    * ([[graphStats]] and [[pageRank]] share one copy); released via
-    * [[clearCache]]. */
+    * off [[pageRank]]'s setup at sf0.1). Persisted and memoized for
+    * the run ([[graphStats]] and [[pageRank]] share one copy). */
   def coPairs(lineitem: DataFrame): DataFrame =
-    memoized(lineitem, "coPairs") {
+    graft.Caches.memo(lineitem, "affinity.coPairs") {
       val sets = lineitem
         .select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
         .groupBy(col("okey"))
@@ -209,7 +150,6 @@ object Affinity {
         .select(explode(call_function("graft_pairs", col("ps"))).as("p"))
         .select(col("p.a").as("part_a"), col("p.b").as("part_b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Degree distribution + size QA of the co-purchase graph — the
@@ -273,7 +213,7 @@ object Affinity {
     val pairs = coPurchasePairs(lineitem)
       .where(col("cooc") >= minSupport)
       .select(col("part_a"), col("part_b"))
-    val deg = hold(pairs
+    val deg = graft.Caches.hold(pairs
       .select(explode(array(col("part_a"), col("part_b"))).as("u"))
       .groupBy(col("u")).agg(count(lit(1)).as("deg")))
     val nodes = deg.agg(count(lit(1)).as("n_nodes"))
@@ -329,13 +269,13 @@ object Affinity {
       .select(col("part_a"), col("part_b"))
     val edges = pairs.unionAll(
       pairs.select(col("part_b"), col("part_a"))).toDF("src", "dst")
-    val deg = hold(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+    val deg = graft.Caches.hold(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val withDeg = pairs
       .join(deg.select(col("src").as("part_a"), col("deg").as("da")),
         "part_a")
       .join(deg.select(col("src").as("part_b"), col("deg").as("db")),
         "part_b")
-    val oriented = hold(withDeg.select(
+    val oriented = graft.Caches.hold(withDeg.select(
       when(col("da") < col("db") ||
         (col("da") === col("db") && col("part_a") < col("part_b")),
         struct(col("part_a").as("u"), col("part_b").as("v")))
@@ -418,7 +358,7 @@ object Affinity {
       .agg(count(lit(1)).as("c")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val support = wedgeSupportFor(hist, minSupportFloor, edgeBudget)
-    val pairs = hold(all
+    val pairs = graft.Caches.hold(all
       .where(col("cooc") >= support)
       .select(col("part_a"), col("part_b")))
     val edges = pairs.unionAll(
@@ -464,9 +404,9 @@ object Affinity {
     // frame re-exchanged every round (3 extra shuffles of the node
     // frame per query).
     val p = lineitem.sparkSession.sessionState.conf.numShufflePartitions
-    val edgesDeg = hold(edges.join(deg, "src")
+    val edgesDeg = graft.Caches.hold(edges.join(deg, "src")
       .repartition(p, col("src")))
-    val nodes = hold(deg.select(col("src").as("node"))
+    val nodes = graft.Caches.hold(deg.select(col("src").as("node"))
       .repartition(p, col("node")))
     // materialize BOTH caches before planning iteration 1: an
     // un-materialized AQE-planned cache reports unknown partitioning
@@ -494,8 +434,7 @@ object Affinity {
           nodes("node") === inflow("dst"), "left")
         .select(col("node"),
           (lit(150000L) + coalesce(col("inflow"), lit(0L))).as("rank_micro"))
-      if (sys.env.contains("SPARK_GRAFT_PR_EXPLAIN")) ranks.explain("formatted")
-      ranks = ranks.localCheckpoint()
+      ranks = graft.Caches.checkpoint(ranks)
     }
     ranks.orderBy(col("rank_micro").desc, col("node")).limit(topN)
       .select(col("node").as("part"), col("rank_micro"))
@@ -550,7 +489,7 @@ object Affinity {
       .agg(count(lit(1)).as("e2"), countDistinct(col("node")).as("n"))
       .head()
     val k = kCoreKFor(st.getLong(0) / 2, st.getLong(1), kFloor)
-    var cur = pairs0.localCheckpoint()
+    var cur = graft.Caches.checkpoint(pairs0)
     var curCount = cur.count()
     var stable = curCount == 0L
     var round = 0
@@ -562,7 +501,7 @@ object Affinity {
       val next = cur
         .join(good.select(col("node").as("part_a")), Seq("part_a"), "left_semi")
         .join(good.select(col("node").as("part_b")), Seq("part_b"), "left_semi")
-        .localCheckpoint()
+        .transform(graft.Caches.checkpoint)
       val nextCount = next.count()
       stable = nextCount == curCount
       cur = next

@@ -1241,7 +1241,7 @@ object Analytics {
         col("sum_c").cast("double") / col("n_orders") / 100.0)
       .withColumn("qi",
         row_number().over(Window.orderBy(col("quarter"))).cast("double"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val bx = (c: Column) => c.getField("qi")
     val by = (c: Column) => c.getField("aov")
     val fit = grid
@@ -1597,7 +1597,7 @@ object Analytics {
       .withColumn("p_cents", expr("(2 * c + q) div (2 * q)"))
       // three consumers (series, per-part base, global base) — without
       // the persist each branch re-runs the fact aggregate end-to-end
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val base = pq.groupBy(col("l_partkey"))
       .agg(min_by(struct(col("p_cents"), col("q")), col("quarter"))
         .as("b"), min(col("quarter")).as("bq"))
@@ -1664,7 +1664,7 @@ object Analytics {
       .groupBy(col("l_partkey"), col("quarter"))
       .agg(sum(col("cents")).as("c"), sum(col("qty")).as("q"))
       .withColumn("p_cents", expr("(2 * c + q) div (2 * q)"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val base = pq.groupBy(col("l_partkey"))
       .agg(min_by(struct(col("p_cents"), col("q")), col("quarter"))
         .as("b"), min(col("quarter")).as("bq"))
@@ -1713,7 +1713,7 @@ object Analytics {
           .cast("bigint").as("cents"))
       .groupBy(col("l_partkey"), col("qk"))
       .agg(sum(col("cents")).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val intro = pq.groupBy(col("l_partkey")).agg(min(col("qk")).as("q0"))
     pq.join(intro, Seq("l_partkey"))
       .withColumn("rel", col("qk") - col("q0"))

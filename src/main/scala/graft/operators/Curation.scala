@@ -283,8 +283,7 @@ object Curation {
       .sortWithinPartitions(col("doc_id"), col("chunk_ix"))
     // both the per-partition-sum job and the assignment pass read this
     // RDD — persist so the tokenize→chunk chain runs once
-    val base = sorted.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = graft.Caches.holdRdd(sorted.rdd)
     val nIdx = sorted.schema.fieldIndex("n_chunk_toks")
     val partSums = base.mapPartitionsWithIndex { (pid, it) =>
       var s = 0L
@@ -333,9 +332,7 @@ object Curation {
         countDistinct(col("doc_id")).as("n_docs"),
         sum(when(col("bin_offset") + col("n_chunk_toks") > contextLen,
           1L).otherwise(0L)).as("n_straddle"))
-      // two readers (grid + total) of a bins-grain integer frame;
-      // an INTERNAL intermediate (never returned), so scoped cleanup
-      // (Bench/Runner/Caches.clear) owns its release
+      // two readers (grid + total) of a bins-grain integer frame
       .transform(graft.Caches.hold)
     val total = perBin.agg(count(lit(1)).as("total_bins"))
     perBin.groupBy(col("n_docs"))
@@ -714,7 +711,7 @@ object Curation {
     val tok = docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), sizeOrNull(col("toks")).as("n_toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     // the flag frames are PERSISTED BEFORE the keep-filter on purpose:
     // filtering the raw operator output would push `keep = 1` down
     // through the staged signal projections, inlining the whole
@@ -726,10 +723,10 @@ object Curation {
     // the filter then runs against the in-memory relation.
     val qf = TextAnalysis.qualityFilter(docs)
       .select(col("doc_id"), col("keep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val bf = blocklistFilter(docs, blocklist, blMaxFrac)
       .select(col("doc_id"), col("kept"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val qIds = qf.where(col("keep") === 1).select(col("doc_id"))
     val bIds = bf.where(col("kept")).select(col("doc_id"))
     val s2 = docs.join(qIds, "doc_id").join(bIds, "doc_id")
@@ -810,7 +807,7 @@ object Curation {
     val t = docs.select(col("doc_id"),
       coalesce(sizeOrNull(tokens(col("text"))).cast("long"), lit(0L))
         .as("n_toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val stats = t.agg(min(col("n_toks")).as("lo"), max(col("n_toks")).as("hi"))
     val bucketed = t.crossJoin(broadcast(stats))
       .withColumn("bucket",

@@ -132,13 +132,13 @@ object DailyQA {
     val logF = log
       .groupingSets(logSets.map(_.map(col)), logCols.map(col): _*)
       .agg(count(lit(1)).as("cnt"), grouping_id().as("gid"))
-      .localCheckpoint()
+      .transform(graft.Caches.checkpoint)
     val adCols: Seq[String] = dims :+ "date"
     val adSets: Seq[Seq[String]] = dims.map(d => Seq(d, "date")) :+ Seq("date")
     val adF = ad.map(_
       .groupingSets(adSets.map(_.map(col)), adCols.map(col): _*)
       .agg(count(lit(1)).as("cnt"), grouping_id().as("gid"))
-      .localCheckpoint())
+      .transform(graft.Caches.checkpoint))
     val bounds = logF
       .where(col("gid") === gidOf(logCols, Seq("date") ++ metaCol.toSeq))
       .groupBy().agg(max(col("date")).as("max_d"))

@@ -1518,7 +1518,7 @@ object DataChecks {
       .select(col("event_type"), to_date(col("ts")).as("day"))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("nd"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val wd = daily
       .groupBy(col("event_type"), (weekday(col("day")) + 1).as("dow"))
       .agg(sum(col("nd")).as("tg"), count(lit(1)).as("kg"))

@@ -273,7 +273,7 @@ object Journey {
         col("user_id"))
       .groupBy(col("week"))
       .agg(hll_sketch_agg(col("user_id"), lit(lgK)).as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val cum = wk.as("a")
       .join(wk.as("b"), col("b.week") <= col("a.week"))
       .groupBy(col("a.week").as("week"))
@@ -328,7 +328,7 @@ object Journey {
       .groupBy(col("user_id"))
       .agg(sort_array(collect_set(
         date_trunc("week", col("ts")).cast("date"))).as("wks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val mx = perUser.agg(max(element_at(col("wks"), -1)).as("max_week"))
     val ix = sequence(lit(0), size(col("wks")) - 1)
     // CaseWhen/Or evaluate lazily, so the out-of-range element_at
@@ -418,7 +418,7 @@ object Journey {
     // aggregate as its own input (caller owns the lifetime)
     val perUser = events.groupBy(col("user_id"))
       .agg(aggs.head, aggs.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val asOf = perUser.agg(max(col("last_day")).as("as_of"))
     perUser.crossJoin(broadcast(asOf))
       .select(Seq(
@@ -460,7 +460,7 @@ object Journey {
       .agg(max(to_date(col("ts"))).as("last_day"),
         count(lit(1)).as("freq"),
         sum(round(col("value") * 100).cast("bigint")).as("mon_cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val asOf = perUser.agg(max(col("last_day")).as("as_of"))
     val u = perUser.crossJoin(broadcast(asOf))
       .withColumn("rec_days",
@@ -836,7 +836,7 @@ object Journey {
     // corpus-sized distinct runs once
     val ud = events.select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val firsts = ud.groupBy(col("user_id"))
       .agg(min(col("day")).as("cohort_day"))
     val cohorts = firsts.groupBy(col("cohort_day"))

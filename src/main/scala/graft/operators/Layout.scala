@@ -91,7 +91,7 @@ object Layout {
     // persisted: the probe fan-out and the total-rows leg both read it
     // (caller owns the lifetime)
     val rep = zorderReport(events, files)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val total = rep.agg(sum(col("n_rows")).as("total_rows"))
     val probes = for (d <- Seq("user", "time"); i <- 0 until nProbes)
       yield struct(lit(d).as("dim"), lit(i).as("probe_ix"),

@@ -10,15 +10,12 @@ import graft.functions.TextFunctions._
   * shape: all-pairs work only ever happens on candidate pairs that
   * share a shingle or an LSH bucket, never on the cross product.
   *
-  * Caching contract: the multi-consumer operators persist (or
+  * Caching contract: the multi-consumer operators hold (or
   * checkpoint) intermediate frames — minhash/simhash signature frames,
-  * the jaccard shingle frame, per-round CC labels — for the duration
-  * of their own query plan and do not unpersist them (the library
-  * returns lazy frames; there is no post-action hook). Callers running
-  * many queries in one session should free a query's caches after its
-  * terminal action; [[graft.Runner]] does this automatically by
-  * snapshotting persistent-RDD ids around each query, without touching
-  * a host application's own cached data.
+  * the jaccard shingle frame, per-round CC labels — through
+  * [[graft.Caches]] for the duration of their own query; the returned
+  * frames are lazy, so the release is [[graft.Caches.endQuery]] after
+  * the terminal action, which [[graft.Runner]] calls per query.
   */
 object NearDup {
 
@@ -113,18 +110,18 @@ object NearDup {
     // the same reason jaccardPairs persists its t); released as soon
     // as the histogram lands
     val t = shingleSets(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val hist = t
       .select(col("doc_id"), explode(col("sh")).as("s"))
       .groupBy(col("s")).agg(count(lit(1)).as("df"))
       .groupBy(col("df")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     // cap from the collected histogram via the SAME dfCapFor rule the
     // dedup operators apply — one driver-small action that also
     // materializes both caches (an in-plan broadcast-subquery cap
     // re-ran the shingle aggregate as the broadcast job's own input)
     val h = hist.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    t.unpersist(blocking = false)
+    graft.Caches.release(t)
     val cap = dfCapFor(h)
     hist
       .groupBy(length(col("df").cast("string")).cast("long")
@@ -205,7 +202,7 @@ object NearDup {
                                   dfCap: DfCap,
                                   metricName: String): (DataFrame, Column) = {
     val t = shingleSets(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val e0 = t.select(col("doc_id"), explode(col("sh")).as("s"))
     // per-shingle df frame: in Derived mode it feeds BOTH the
     // driver-small (df, count) histogram action and the hot filter, so
@@ -217,7 +214,7 @@ object NearDup {
       case UncappedDf => None
       case DerivedDfCap(floor, budget) =>
         val dfs = dfFrame
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .transform(graft.Caches.hold)
         val hist = dfs.groupBy(col("df")).agg(count(lit(1)).as("cnt"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         Some(dfCapFor(hist, floor, budget))
@@ -326,7 +323,7 @@ object NearDup {
         .withColumnRenamed("source", "src2"), "d2")
       .select(least(col("src1"), col("src2")).as("source_a"),
         greatest(col("src1"), col("src2")).as("source_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val total = m.agg(count(lit(1)).as("n_total"))
     m.groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_pairs"))
@@ -354,7 +351,7 @@ object NearDup {
       shingleSets(eval, n)
         .select(explode(col("sh")).as("s")).distinct())
     val tr = shingleSets(train, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val hits = tr.select(col("doc_id"), explode(col("sh")).as("s"))
       .join(evalShingles, "s")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
@@ -554,7 +551,7 @@ object NearDup {
                     preCap: Int = HardNegPreVerifyCap): DataFrame = {
     val rows = k / bands
     val sig = signatures(docs, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     // materialize ONCE before the fan-out: the banding branch and the
     // two verify legs all read this frame, and the verify legs sit
     // under exchanges whose map stages the scheduler launches
@@ -623,7 +620,7 @@ object NearDup {
     // projection in the engine) runs three times. MEMORY_AND_DISK so
     // a 100 TB corpus spills instead of evicting mid-job.
     val sig = signatures(docs, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val bnd = bandRows(sig, bands, rows)
     // bucket by (band, band_sig) and emit pairs from each bucket's
     // sorted, capped id list — no join blowup on hot buckets
@@ -882,7 +879,7 @@ object NearDup {
     val exact = newFp.join(idx.fingerprints, Seq("fp"), "left_outer")
       .select(col("doc_id"), col("exact_match"))
     val sigN = signatures(newDocs, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val cand = bandRows(sigN, bands, k / bands)
       .join(idx.buckets, Seq("band", "band_sig"))
       .select(col("doc_id"), explode(col("c_ids")).as("c_id"))
@@ -918,7 +915,7 @@ object NearDup {
                             private val backing: Option[DataFrame]) {
     /** Unpersist the shared signature scan (no-op for a loaded
       * index, whose frames are parquet-backed). */
-    def release(): Unit = backing.foreach(_.unpersist())
+    def release(): Unit = backing.foreach(graft.Caches.release)
   }
 
   def buildIncrementIndex(corpus: DataFrame, n: Int = 3, k: Int = 32,
@@ -929,7 +926,7 @@ object NearDup {
       .select(col("doc_id").as("c_id"), md5(normText(col("text"))).as("fp"))
       .groupBy(col("fp")).agg(min(col("c_id")).as("exact_match"))
     val sigC = signatures(corpus, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val buckets = bandRows(sigC, bands, k / bands)
       .groupBy(col("band"), col("band_sig"))
       .agg(slice(sort_array(collect_list(col("doc_id"))), 1, bucketCap)
@@ -1183,21 +1180,12 @@ object NearDup {
     // checkpoint dir — survives executor loss on a long cluster job;
     // localCheckpoint otherwise (executor-local blocks: an executor
     // loss mid-iteration fails the job and the caller retries — the
-    // documented single-job tradeoff). Local checkpoints are tracked
-    // by RDD id so each round frees the previous round's blocks once
-    // the next round is materialized — memory stays O(1) in rounds,
-    // not O(rounds).
+    // documented single-job tradeoff). Each round releases the
+    // previous round's local checkpoint once the next round is
+    // materialized — memory stays O(1) in rounds, not O(rounds).
     val reliable = sc.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): (DataFrame, Set[Int]) =
-      if (reliable) (df.checkpoint(), Set.empty)
-      else {
-        val before = sc.getPersistentRDDs.keySet
-        val out = df.localCheckpoint()
-        (out, sc.getPersistentRDDs.keySet.diff(before).toSet)
-      }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    def ckpt(df: DataFrame): DataFrame =
+      if (reliable) df.checkpoint() else graft.Caches.checkpoint(df)
 
     val ids = docs.select(col("doc_id").cast("long"))
     // both orientations from ONE in-task explode: a unionAll of the
@@ -1205,7 +1193,7 @@ object NearDup {
     // pipeline TWICE (the LSH verify joins are the expensive part —
     // the internal signature persist only dedups the scan below
     // them); the explode duplicates each row where it already is
-    val (sym, symIds) = ckpt(edges
+    val sym = ckpt(edges
       .select(col("d1").cast("long").as("a"), col("d2").cast("long").as("b"))
       .select(explode(array(
         struct(col("a"), col("b")),
@@ -1224,13 +1212,13 @@ object NearDup {
     val verts = ids.join(
       sym.select(col("a").as("doc_id")).distinct(), Seq("doc_id"),
       "left_semi")
-    var (labels, labelIds) = ckpt(verts.select(col("doc_id"), col("doc_id").as("rep")))
-    def step(cur: DataFrame): (DataFrame, Set[Int], Long) = {
+    var labels = ckpt(verts.select(col("doc_id"), col("doc_id").as("rep")))
+    def step(cur: DataFrame): (DataFrame, Long) = {
       val nbrMin = sym
         .join(cur.select(col("doc_id").as("a"), col("rep").as("nrep")), "a")
         .groupBy(col("b").as("doc_id"))
         .agg(min(col("nrep")).as("nbr_min"))
-      val (next, nextIds) = ckpt(cur
+      val next = ckpt(cur
         .join(nbrMin, Seq("doc_id"), "left_outer")
         .select(col("doc_id"),
           least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("rep")))
@@ -1238,17 +1226,16 @@ object NearDup {
         .join(cur.select(col("doc_id"), col("rep").as("old")), "doc_id")
         .where(col("rep") =!= col("old"))
         .count()
-      (next, nextIds, changed)
+      (next, changed)
     }
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val (next, nextIds, changed) = step(labels)
+      val (next, changed) = step(labels)
       // next is materialized and the changed-count no longer reads the
       // previous round — its blocks can go
-      free(labelIds)
+      graft.Caches.release(labels)
       labels = next
-      labelIds = nextIds
       converged = changed == 0
       iter += 1
     }
@@ -1261,8 +1248,8 @@ object NearDup {
     // unconverged (a diameter-of-exactly-maxIter component is complete
     // even though the loop never observed a quiet round).
     if (!converged) {
-      val (_, verifyIds, stillChanging) = step(labels)
-      free(verifyIds)
+      val (verify, stillChanging) = step(labels)
+      graft.Caches.release(verify)
       if (stillChanging > 0)
         throw new GraftDataException(
           s"dedupClusters did not converge within $maxIter iterations — " +
@@ -1270,7 +1257,7 @@ object NearDup {
     }
     // the result plan only reads the final label checkpoint; the edge
     // frame served its last read in the loop above
-    free(symIds)
+    graft.Caches.release(sym)
     val sizes = labels.groupBy(col("rep")).agg(count(lit(1)).as("cluster_size"))
     val clustered = labels.join(sizes, "rep")
       .select(col("doc_id"), col("rep").as("rep_id"), col("cluster_size"))

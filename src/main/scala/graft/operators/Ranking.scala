@@ -43,8 +43,7 @@ object Ranking {
     // both phases (cell counts, ranked row pass) read this frame —
     // without the hold each pays the full upstream scan, which
     // DOUBLES a CPU-dense input (the quality scan measured 59 s vs
-    // 26 s at the 100× probe before this); internal intermediate, so
-    // scoped cleanup (Bench/Runner/Caches.clear) owns the release
+    // 26 s at the 100× probe before this); released with the query
     val withB = graft.Caches.hold(rows.withColumn("gr_bucket", bucket))
     val cellKey = gCols :+ col("gr_bucket")
     // grid pass: per-cell counts → exclusive prefix offset + group

@@ -82,7 +82,7 @@ object SketchGates {
     val est = Pairwise.pairwiseOverlapApprox(media, dim)
     val hv = media.select(col(dim).as("value"), col("household_id"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val pv = hv.groupBy(col("value")).agg(count(lit(1)).as("nx"))
     val exactPairs = hv.as("a")
       .join(hv.as("b"),

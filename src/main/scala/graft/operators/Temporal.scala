@@ -192,7 +192,7 @@ object Temporal {
           Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("user_id"), col("session_ix"))
       .agg(sort_array(collect_set(col("event_type"))).as("types"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
   }
 
   /** Association rules over session itemsets: every DIRECTED type
@@ -269,14 +269,14 @@ object Temporal {
         (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
         col("ts").as("end"), col("event_id").as("purchase_id"),
         round(col("value") * 100).cast("bigint").as("cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val exposures = events.where(col("event_type") =!= "purchase")
       .select(col("user_id"), col("ts"), col("event_type").as("channel"))
     val pc = rangeJoin(purchases, exposures, "user_id", 86400L)
       .where(col("ts") < col("end")) // strictly before the purchase
       .groupBy(col("purchase_id"), col("cents"), col("channel"))
       .agg(count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val credited = pc
       .withColumn("n", sum(col("k")).over(
         Window.partitionBy(col("purchase_id"))))
@@ -313,7 +313,7 @@ object Temporal {
         (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
         col("ts").as("end"), col("event_id").as("purchase_id"),
         round(col("value") * 100).cast("bigint").as("cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val exposures = events.where(col("event_type") =!= "purchase")
       .select(col("user_id"), col("ts"), col("event_type").as("channel"))
     val pc = rangeJoin(purchases, exposures, "user_id", 86400L)
@@ -331,7 +331,7 @@ object Temporal {
         s"shiftleft(CAST(1 AS BIGINT), ${windowDays - 1} - CAST(age AS INT))"))
       .groupBy(col("purchase_id"), col("cents"), col("channel"))
       .agg(sum(col("w")).as("wsum"), count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val credited = pc
       .withColumn("tw", sum(col("wsum")).over(
         Window.partitionBy(col("purchase_id"))))
@@ -374,7 +374,7 @@ object Temporal {
         (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
         col("ts").as("end"), col("event_id").as("purchase_id"),
         round(col("value") * 100).cast("bigint").as("cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val exposures = events.where(col("event_type") =!= "purchase")
       .select(col("user_id"), col("ts"), col("event_id").as("touch_id"),
         col("event_type").as("channel"))
@@ -384,7 +384,7 @@ object Temporal {
       .agg(
         min(struct(col("ts"), col("touch_id"), col("channel"))).as("f"),
         max(struct(col("ts"), col("touch_id"), col("channel"))).as("l"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val credits = fl
       .select(col("f.channel").as("channel"), lit(1L).as("nf"),
         col("cents").as("vf"), lit(0L).as("nl"), lit(0L).as("vl"))
@@ -462,7 +462,7 @@ object Temporal {
       .select(concat_ws(">",
         slice(transform(col("evs"), e => e.getField("event_type")),
           1, maxLen)).as("path"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val total = paths.select(count(lit(1)).as("n_sessions"))
     paths.groupBy(col("path")).agg(count(lit(1)).as("n"))
       .crossJoin(broadcast(total))
@@ -604,7 +604,7 @@ object Temporal {
     val daily = events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val base = daily.select(col("event_type"),
       date_add(col("day"), lagDays).as("day"), col("n").as("forecast_n"))
     daily.join(base, Seq("event_type", "day"), "left")
@@ -821,7 +821,7 @@ object Temporal {
       .agg(min(col("ts")).as("s"), max(col("ts")).as("e"))
       .select(date_trunc("hour", col("s")).as("sh"),
         date_trunc("hour", col("e")).as("eh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val started = sh.groupBy(col("sh").as("hour"))
       .agg(count(lit(1)).as("n_started"))
     val ended = sh.groupBy(col("eh").as("hour"))
@@ -858,7 +858,7 @@ object Temporal {
         (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
         col("ts").as("end"), col("event_id").as("purchase_id"),
         round(col("value") * 100).cast("bigint").as("cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val exposures = events.where(col("event_type") =!= "purchase")
       .select(col("user_id"), col("ts"), col("event_id").as("touch_id"),
         col("event_type").as("channel"))

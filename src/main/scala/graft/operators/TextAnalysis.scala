@@ -198,7 +198,7 @@ object TextAnalysis {
         explode(tokens(col("text"))).as("term"))
       .groupBy(col("bucket"), col("term"))
       .agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val thr = tf.groupBy(col("bucket"))
       .agg(expr(s"graft_topk(CAST(cnt AS DOUBLE), xxhash64(term), $topK)")
         .as("tk"))
@@ -768,10 +768,10 @@ object TextAnalysis {
   def pmiBigrams(docs: DataFrame, minCount: Int = 5,
                  topN: Int = 200): DataFrame = {
     val toks = docs.select(tokens(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val uni = toks.select(explode(col("toks")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("n_term"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val totU = uni.agg(sum(col("n_term")).as("nn"))
     val totP = toks.agg(sum(greatest(size(col("toks")) - 1, lit(0))
       .cast("long")).as("np"))
@@ -980,7 +980,7 @@ object TextAnalysis {
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
       .select(filter(split(col("term"), ""), s => s =!= "").as("sym"),
         col("cnt"))
-      .localCheckpoint()
+      .transform(graft.Caches.checkpoint)
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var done = false
     for (ix <- 0 until nMerges if !done) {
@@ -1001,7 +1001,7 @@ object TextAnalysis {
         merges += ((ix, a, b, a + b, w))
         vocab = vocab.select(mergeFold(col("sym"), a, b).as("sym"),
           col("cnt"))
-          .localCheckpoint()
+          .transform(graft.Caches.checkpoint)
       }
     }
     merges.result()
@@ -1150,13 +1150,7 @@ object TextAnalysis {
                  k: Int): DataFrame = {
     require(queryTerms.nonEmpty, "searchTopK needs at least one term")
     // persisted: both the df aggregate and the scoring join read this
-    // frame — without the persist each side re-runs the corpus scan.
-    // CALLER OWNS the cache lifetime: the returned frame is lazy, so
-    // this function cannot unpersist after the action it never runs —
-    // a long-lived session invoking this repeatedly must unpersist
-    // (spark.catalog.clearCache() or track getPersistentRDDs deltas,
-    // as Bench.main does) or the cache pool accretes one dead entry
-    // per call
+    // frame — without the persist each side re-runs the corpus scan
     val hits = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .where(col("term").isin(queryTerms: _*))
@@ -1720,7 +1714,7 @@ object TextAnalysis {
     val freq = docs
       .select(col("source"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("n_occ"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val nv = freq.groupBy(col("source"))
       .agg(count(lit(1)).as("n_vocab"))
     val w = Window.partitionBy(col("source"))
@@ -1789,7 +1783,7 @@ object TextAnalysis {
     val toks = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
       .withColumn("bucket",
         expr(s"((doc_id - ${minId}L) * $b) div ${span}L") + 1L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val bucketTokens = toks
       .select(col("bucket"), size(col("toks")).as("nt"))
       .groupBy(col("bucket")).agg(sum(col("nt")).as("tb"))
@@ -1810,7 +1804,7 @@ object TextAnalysis {
       .withColumn("cum_tokens", sum(col("tb")).over(w))
       .withColumn("cum_vocab", sum(col("nw")).over(w))
       .where(col("cum_tokens") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val pts = cum.select(log(col("cum_tokens").cast("double")).as("lx"),
       log(col("cum_vocab").cast("double")).as("ly"))
     // ≤B-point OLS moments fold in FIXED lx order (lx is strictly
@@ -1878,7 +1872,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"), sum(col("qm")).as("s"))
       .withColumn("mean_quality",
         col("s").cast("double") / col("n_docs") / lit(1000000.0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val bx = (c: Column) => c.getField("bucket").cast("double")
     val by = (c: Column) => c.getField("mean_quality")
     val mm = per
@@ -1976,7 +1970,7 @@ object TextAnalysis {
           .otherwise(array().cast("array<string>"))).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("nn"))
       // two consumers (total + top cut): persist, released by caller
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val total = counts.agg(sum(col("nn")).as("total_occ"))
     val w = Window.orderBy(col("nn").desc, col("pair"))
     val ranked = counts.orderBy(col("nn").desc, col("pair")).limit(maxK)

@@ -43,7 +43,7 @@ object ValueMapping {
     // zipWithIndex runs its offset-count job over this RDD and the
     // main query then reads it again — persist so the distinct+sort
     // executes once, not twice
-    val base = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = graft.Caches.holdRdd(sorted.rdd)
     val rdd = base.zipWithIndex().map { case (r, i) =>
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
     }

@@ -202,7 +202,7 @@ object VectorSearch extends Logging {
       .select(col("vec_id"), col("dqf"))
       .withColumn("dn", sqrt(dot(col("dqf"), col("dqf"))))
       .where(col("dn") =!= 0.0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val q = healthy.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
@@ -291,41 +291,28 @@ object VectorSearch extends Logging {
   }
 
   /** Deterministic centroid assignment: nearest centroid by cosine
-    * (min centroid_id on ties). Centroids are broadcast; the argmax
-    * runs as a `graft_topk(…, 1)` bounded-heap aggregate over a SLIM
-    * (vec_id, centroid_id, ccos) projection of the broadcast-nested-
-    * loop expansion — the embedding arrays are dropped BEFORE the
-    * aggregate and joined back by vec_id afterwards.
+    * (min centroid_id on ties), as ONE row-local
+    * [[graft.functions.CellArgmax]] expression (`graft_cell_argmax`)
+    * over a centroid table collected when the frame is built (one
+    * small eager job). Output keeps the
+    * input grain — (vec_id, embedding, nrm, centroid_id), one row per
+    * non-zero-norm vector — with no join, no exchange and no
+    * aggregate: the corpus is never fanned out against the centroids.
     *
-    * Why not max_by/first: both are declarative aggregates whose
-    * buffers hold a struct/array, and Spark's HashAggregate cannot
-    * host complex-typed declarative buffers — the planner silently
-    * falls back to SortAggregate, which SORTS the corpus × centroids
-    * pair frame (with the arrays riding along) on both sides of the
-    * exchange. The round-9 100× probe measured that fallback at 297 s
-    * for a 200k × 448 assignment; the typed-imperative topk heap
-    * (ObjectHashAggregate, map-side combined, same (cos DESC, id ASC)
-    * tiebreak) plus one AQE-sized vec_id join measures ~20 s on the
-    * same data. All candidate rows for a vector sit in one map
-    * partition, so partials collapse to one row per vector before the
-    * only corpus-keyed exchange; the pair frame is never shuffled and
-    * never sorted. */
+    * The collected table is the √n-sized frame a broadcast would ship
+    * anyway (≈8 MB at 10⁹ vectors); at stream-serve time it is the
+    * published, bounded index table. The broadcast cross join this
+    * replaced fanned every vector to |centroids| rows, reduced them
+    * with a `graft_topk` aggregate and re-joined the corpus to recover
+    * the embedding — ~80 s CPU per assignment stage at the 100×
+    * probe, twice per trained ANN query. */
   def assignCells(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
     // zero-norm vectors/centroids have no defined cosine (NULL here,
     // inf/NaN in IEEE engines) — exclude them from the index rather
     // than let engine-specific null/NaN ordering pick their cells
     val e = withNorm(embeddings).where(col("nrm") =!= 0.0)
-    // The argmax runs as ONE native row-local expression over a
-    // plan-time centroid table ([[graft.functions.CellArgmax]] — the
-    // SrpBandSigs reference-object pattern): the previous broadcast
-    // cross join fanned every vector to |centroids| rows, paid a topk
-    // hash aggregate over that √n-times-corpus fan-out, then re-joined
-    // the corpus to itself to recover the embedding — measured ~80 s
-    // CPU per assignment stage at the 100× probe, twice per trained
-    // ANN query. Collecting the centroid frame here moves the same
-    // √n-sized rows the broadcast shipped anyway (≈8 MB at 10⁹
-    // vectors); at stream-serve time the centroids are the published
-    // (bounded) index table, same contract.
+    // the SrpBandSigs reference-object pattern: centroids ride inside
+    // the expression, not in a join
     val cRows = withNorm(centroids).where(col("nrm") =!= 0.0)
       .select(col("vec_id"), col("embedding"), col("nrm")).collect()
     if (cRows.isEmpty) {
@@ -348,7 +335,7 @@ object VectorSearch extends Logging {
   }
 
   /** Lloyd iterations for IVF centroid training: assign every vector
-    * to its nearest centroid (broadcast), recompute each non-empty
+    * to its nearest centroid ([[assignCells]]), recompute each non-empty
     * cell's centroid as the elementwise mean. Each iteration is one
     * map-side assignment pass + one (centroid, dim) aggregation —
     * linear in corpus size, the standard distributed k-means shape.
@@ -386,7 +373,7 @@ object VectorSearch extends Logging {
         // materialize the (tiny) centroid frame and truncate lineage:
         // without this, iteration i's plan re-executes iterations
         // 0..i-1, so Lloyd costs O(iterations²) corpus passes
-        .localCheckpoint()
+        .transform(graft.Caches.checkpoint)
     }
     centroids
   }
@@ -507,12 +494,8 @@ object VectorSearch extends Logging {
     * engine and oracle sides (cosine undefined). */
   def semanticDedup(embeddings: DataFrame, centroids: DataFrame,
                     threshold: Double): DataFrame = {
-    // CALLER OWNS the cache lifetime (same contract as searchTopK):
-    // the returned frame is lazy, so the persist can't be released
-    // here — repeated calls in a long-lived session must clearCache()
-    // or unpersist the delta (as Bench.main does) between calls
     val assigned = assignCells(embeddings, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val lo = assigned.select(col("centroid_id"), col("vec_id").as("v1"),
       col("embedding").as("e1"), col("nrm").as("n1"))
     val hi = assigned.select(col("centroid_id"), col("vec_id").as("v2"),
@@ -719,7 +702,7 @@ object VectorSearch extends Logging {
   def ivfBalance(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
     val cells = assignCells(embeddings, centroids)
       .groupBy(col("centroid_id")).agg(count(lit(1)).as("n_vecs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val g = cells.agg(count(lit(1)).as("n_cells_total"),
       sum(col("n_vecs")).as("n_total"), max(col("n_vecs")).as("max_total"))
     cells
@@ -872,7 +855,7 @@ object VectorSearch extends Logging {
       .select(col("vec_id"), col("embedding"), col("nrm"),
         call_function("graft_srp_sigs", col("embedding"),
           lit(nPlanes), lit(rows), lit(dim)).as("sigs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Caches.hold)
     val cand = withBits
       .select(col("vec_id"), posexplode(col("sigs")).as(Seq("band", "sig")))
       .groupBy(col("band"), col("sig"))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.storage.StorageLevel
 
 class CachesSpec extends SparkSpec {
@@ -72,5 +74,79 @@ class CachesSpec extends SparkSpec {
     assert(Caches.tracked.size == trackedBefore,
       "strip/novelty registered extra seed frames instead of sharing")
     Caches.clear()
+  }
+
+  test("a host frame persisted between a hold and endQuery survives endQuery") {
+    Caches.clear()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val held = Seq(1, 2).toDF("x").transform(Caches.hold)
+    held.count()
+    Caches.checkpoint(Seq(3, 4).toDF("c"))
+    val rdd = Caches.holdRdd(sc.parallelize(Seq(5, 6)))
+    rdd.count()
+    val in = Seq(7L).toDF("m")
+    val memo = Caches.memo(in, "spec.endQuery")(in.select("m"))
+    memo.count()
+    // the host persists its own frame while the query's frames are live
+    val host = Seq(8).toDF("h").persist(StorageLevel.MEMORY_AND_DISK)
+    host.count()
+    val live = sc.getPersistentRDDs.keySet -- before
+    assert(live.size == 5, s"expected 5 new persisted RDDs, got $live")
+
+    Caches.endQuery()
+    assert(held.storageLevel == StorageLevel.NONE)
+    assert(!sc.getPersistentRDDs.contains(rdd.id))
+    assert(host.storageLevel == StorageLevel.MEMORY_AND_DISK,
+      "endQuery released a host frame")
+    assert(memo.storageLevel == StorageLevel.MEMORY_AND_DISK,
+      "endQuery released a run-scoped memo")
+    // what is left is exactly the memo's and the host's buffers
+    assert((sc.getPersistentRDDs.keySet -- before).size == 2)
+    Caches.clear()
+    assert(memo.storageLevel == StorageLevel.NONE)
+    assert(host.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    host.unpersist()
+  }
+
+  test("release frees one hold or checkpoint early and ignores foreign frames") {
+    Caches.clear()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val a = Seq(1).toDF("a").transform(Caches.hold)
+    val c = Caches.checkpoint(Seq(2).toDF("c"))
+    a.count()
+    assert((sc.getPersistentRDDs.keySet -- before).size == 2)
+    Caches.release(a)
+    assert(a.storageLevel == StorageLevel.NONE && Caches.heldCount == 0)
+    Caches.release(c)
+    assert(sc.getPersistentRDDs.keySet == before)
+    // a frame Caches does not own is not its to release
+    val host = Seq(3).toDF("h").persist(StorageLevel.MEMORY_AND_DISK)
+    Caches.release(host)
+    assert(host.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    // nor does hold take over a plan that is already cached
+    Caches.hold(host)
+    assert(Caches.heldCount == 0)
+    Caches.endQuery()
+    assert(host.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    host.unpersist()
+  }
+
+  test("operator code persists and checkpoints only through Caches") {
+    // the invariant that lets Runner release a query's frames without
+    // diffing the session's cache state: nothing else persists
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val allowed = Set("Caches.scala", "Bench.scala", "DevProbe.scala")
+    val banned = """\.persist\(|\.cache\(\)|\.localCheckpoint\(""".r
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 20, s"source scan found only ${files.size} files under $root")
+    val hits = for {
+      f <- files if !allowed(f.getFileName.toString)
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if banned.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

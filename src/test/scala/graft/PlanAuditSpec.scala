@@ -40,17 +40,42 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan("q_value_mapping").contains("Window"))
   }
 
+  /** No corpus × centroids fan-out in `exec`: every broadcast
+    * nested-loop join has the filtered query rows (vec_id < 10) on one
+    * side — the query × centroids probe and the exact query × corpus
+    * leg — so none can pair the corpus with the centroid table, and no
+    * aggregate runs over such an expansion (the retired graft_topk
+    * assignment did). */
+  private def assertNoCorpusCentroidFanOut(
+      exec: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val p = exec.toString
+    assert(!p.contains("graft_topk") && !p.contains("SortAggregate"), p.take(3000))
+    val queryRows = """\(vec_id#\d+L < 10\)""".r
+    val joins = new AdaptiveSparkPlanHelper {}
+      .collect(exec) { case j: BroadcastNestedLoopJoinExec => j }
+    joins.foreach { j =>
+      assert(Seq(j.left, j.right).exists(s => queryRows.findFirstIn(s.toString).isDefined),
+        s"nested-loop join without the query side:\n${j.toString.take(3000)}")
+    }
+  }
+
   test("IVF assignment is aggregate-based; only the query top-k windows") {
-    val p = plan("q_ann_ivf")
-    // graft_topk (typed-imperative) — NOT max_by/first, whose complex
-    // declarative buffers force a SortAggregate that sorts the
-    // corpus × centroids frame (round-9 sf10 probe: 297 s vs 20 s)
-    assert(p.contains("graft_topk"), p.take(2000))
-    assert(!"SortAggregate.*graft_topk".r.findFirstIn(p).isDefined,
-      p.take(2000))
+    // (the name predates the native assignment) the cell assignment is
+    // ONE row-local graft_cell_argmax over the corpus against the
+    // plan-time centroid table — no broadcast corpus × centroids fan-out
+    // and no aggregate over it (the graft_topk heap it replaced, and
+    // before that a max_by/first SortAggregate: 297 s vs 20 s at the
+    // round-9 sf10 probe)
+    val exec = SparkEntry.queries("q_ann_ivf")(spark, "/root/testdata/sf0.001")
+      .queryExecution.executedPlan
+    val p = exec.toString
+    assert(p.contains("graft_cell_argmax("), p.take(3000))
+    assertNoCorpusCentroidFanOut(exec)
     // exactly one Window chain (rank over query_id) — the assignment
-    // no longer windows the corpus x centroids expansion
-    assert("(?<!Group)Window(?!GroupLimit)".r.findAllIn(p).size == 1, p.take(2000))
+    // never windows the corpus
+    assert("(?<!Group)Window(?!GroupLimit)".r.findAllIn(p).size == 1, p.take(3000))
   }
 
   test("minhash reuses one cached signature frame") {
@@ -848,14 +873,43 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("lloyd-trained IVF keeps the graft_topk assignment in training") {
-    // the trained-centroid chain adds a SECOND assignment pass (the
-    // Lloyd step) — BOTH must stay on the typed-imperative topk heap;
-    // a max_by/first regression in either silently re-plans the
-    // corpus × centroids frame through a SortAggregate
-    val p = plan("q_ann_recall_curve")
-    assert("graft_topk".r.findAllIn(p).size >= 2, p.take(3000))
-    assert(!"SortAggregate.*graft_topk".r.findFirstIn(p).isDefined,
-      p.take(3000))
+    // (the name predates the native assignment) the trained-centroid
+    // chain adds a SECOND assignment pass — the Lloyd step, executed
+    // while the query is built (centroids are trained once and
+    // collected) — and BOTH passes must stay on graft_cell_argmax with
+    // no corpus × centroids fan-out
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val lloyd = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "localCheckpoint") lloyd.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // train inside this test, not in whichever suite ran first
+    SparkEntry.clearSessionMemos()
+    spark.listenerManager.register(listener)
+    val exec =
+      try {
+        val df = SparkEntry.queries("q_ann_recall_curve")(spark,
+          "/root/testdata/sf0.001")
+        eventually(timeout(Span(30, Seconds)))(assert(!lloyd.isEmpty))
+        df.queryExecution.executedPlan
+      } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    lloyd.asScala.foreach { step =>
+      val s = step.toString
+      assert(s.contains("graft_cell_argmax("), s.take(3000))
+      // the Lloyd pass has no query side: any nested-loop join in it
+      // is the corpus × centroids expansion
+      assert(!s.contains("BroadcastNestedLoopJoin"), s.take(3000))
+      assertNoCorpusCentroidFanOut(step)
+    }
+    assert(exec.toString.contains("graft_cell_argmax("), exec.toString.take(3000))
+    assertNoCorpusCentroidFanOut(exec)
   }
 
   test("probe cost: broadcast cells join, query-partitioned window") {

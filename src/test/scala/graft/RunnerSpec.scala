@@ -38,18 +38,68 @@ class RunnerSpec extends SparkSpec {
     assert(second.forall(_._2 == "skipped (target exists)"))
   }
 
+  private def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Buffer-RDD ids behind the materialized caches of `Caches.tracked`. */
+  private def trackedBufferIds: Set[Int] = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    Caches.tracked.flatMap(df =>
+      cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]))
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .map(_.cachedColumnBuffers.id).toSet
+  }
+
+  /** Plans registered in the session's CacheManager, read from its
+    * private `cachedData` field (Spark has no public listing). */
+  private def cachedPlans: Seq[AnyRef] = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[IndexedSeq[Product]].toSeq
+      .map(_.productElement(0).asInstanceOf[AnyRef])
+  }
+
   test("runOne unpersists only the RDDs the query itself created") {
     val out = Files.createTempDirectory("graft-runner-cache").toString
+    val sfDir = "/root/testdata/sf0.001"
+    // one key per way a query persists: a held frame, local
+    // checkpoints, a per-round release, a raw RDD persist, a memo —
+    // and whether the key leaves a run-scoped memo behind (q_k_core
+    // reads the memoized co-purchase pair frame)
+    val forms = Seq(
+      ("q_minhash_dedup", "hold", false),
+      ("q_k_core", "checkpoint", true),
+      ("q_qa_multigroup", "checkpoint", false),
+      ("q_dedup_clusters", "release", false),
+      ("q_value_mapping", "rdd", false),
+      ("q_span_dedup", "memo", true))
+    Caches.clear()
     val hostFrame = spark.range(0, 10).persist()
     hostFrame.count() // materialize the host application's cache
-    val hostIds = spark.sparkContext.getPersistentRDDs.keySet
+    val hostIds = persistedIds
     assert(hostIds.nonEmpty)
-    // q_minhash_dedup persists its signature frame internally
-    Runner.runOne(spark, "/root/testdata/sf0.001", out, "q_minhash_dedup",
-      force = false)
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    // the query's own cached frames are gone, the host's survive
-    assert(after == hostIds)
+    forms.foreach { case (key, form, memo) =>
+      // the form is real: the query persists something while it runs
+      SparkEntry.queries(key)(spark, sfDir).write.format("noop")
+        .mode("overwrite").save()
+      assert((persistedIds -- hostIds).nonEmpty, s"$key ($form) persisted nothing")
+      Caches.clear()
+      assert(persistedIds == hostIds, s"$key ($form): clear left RDDs behind")
+
+      Runner.runOne(spark, sfDir, out, key, force = true)
+      // the query's own frames are gone, the host's and the run's
+      // memos survive
+      val memoIds = trackedBufferIds
+      assert(persistedIds == hostIds ++ memoIds, s"$key ($form)")
+      assert(memo == memoIds.nonEmpty, s"$key ($form): memos $memoIds")
+      Runner.runAll(spark, sfDir, out, Nil, force = true)
+      assert(persistedIds == hostIds, s"$key ($form): runAll kept RDDs")
+    }
+    assert(hostFrame.storageLevel.useMemory, "host cache was clobbered")
     hostFrame.unpersist()
   }
 
@@ -57,14 +107,14 @@ class RunnerSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-runner-cm").toString
     val hostFrame = spark.range(0, 7).toDF("h").persist()
     hostFrame.count()
-    val beforePlans = Runner.cachedPlans(spark)
+    val beforePlans = cachedPlans
     assert(beforePlans.nonEmpty, "reflective CacheManager enumeration broke")
     Runner.runOne(spark, "/root/testdata/sf0.001", out, "q_minhash_dedup",
       force = true)
     // a stale entry with unpersisted buffers would be a DEAD cache: the
     // next query persisting the same signature-frame plan would no-op
     // ("already cached") and recompute the chain once per consumer
-    val afterPlans = Runner.cachedPlans(spark)
+    val afterPlans = cachedPlans
     assert(afterPlans.size == beforePlans.size,
       s"leaked ${afterPlans.size - beforePlans.size} CacheManager entries")
     assert(hostFrame.storageLevel.useMemory, "host cache was clobbered")
@@ -75,8 +125,7 @@ class RunnerSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-runner-shared").toString
     val sfDir = "/root/testdata/sf0.001"
     Caches.clear()
-    operators.Affinity.clearCache()
-    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
+    val beforeIds = persistedIds
     assert(Runner.runOne(spark, sfDir, out, "q_span_dedup", force = true)
       == "written")
     // the memoized seed frame survived the per-query cleanup with its
@@ -89,7 +138,7 @@ class RunnerSpec extends SparkSpec {
       Seq("q_novelty", "q_span_strip"), force = true, deps = Map.empty)
     assert(statuses.forall(_._2 == "written"), statuses.toString)
     // end of run: the shared artifacts are gone, RDD-level too
-    assert(spark.sparkContext.getPersistentRDDs.keySet == beforeIds)
+    assert(persistedIds == beforeIds)
   }
 
   test("name parsing is flag-position independent") {
