@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 
 /** Scratch dev main — per-query stage-metric decomposition, not part
   * of the library. Usage: DevProbe <query names...> with
-  * SPARK_GRAFT_SF_DIR; each query runs twice (cold + warm) with
+  * SPARK_GRAFT_SF_DIR; each query runs twice (cold + warm), each run
+  * with its wall time and compiled code units, the warm one with
   * per-stage wall/cpu/gc/spill/shuffle breakdowns. */
 object DevProbe {
   def main(args: Array[String]): Unit = {
@@ -38,9 +40,13 @@ object DevProbe {
     }
     def time1(label: String, detail: Boolean)(f: => DataFrame): Unit = {
       stages.clear()
+      // code units compiled (codegen-cache misses): a warm run that
+      // still compiles names a plan whose generated source changes
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       f.write.format("noop").mode("overwrite").save()
-      println(f"[probe] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(f"[probe] $label ${(System.nanoTime() - t0) / 1e9}%.2f s " +
+        s"compiled=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0}")
       if (detail) stages.forEach(s => println("[probe]   " + s))
       clear()
     }

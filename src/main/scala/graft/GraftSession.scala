@@ -72,6 +72,21 @@ object GraftSession {
     }
   }
 
+  /** Entries in Spark's generated-code cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf: it sizes the
+    * JVM-wide cache when the first plan is compiled). The 100-entry
+    * default is smaller than one pass of graft's queries, so every
+    * repeated query recompiled fragments that a previous query had
+    * evicted — Janino compile plus fresh JIT work for each new class.
+    * Sized from the all-keys working set: two passes of all 319 keys
+    * through [[Runner.runOne]] at sf0.01 in one JVM (local[4]) compile
+    * 3,801 units and then 16 with this bound, against 6,832 and then
+    * 6,806 with the default — 44% of a cold pass were evicted
+    * fragments compiled again. Measured cost ≈29 KB of heap and ≈8 KB
+    * of metaspace per entry: after the first pass and a full GC,
+    * 266 MB heap and 219 MB metaspace vs 157 MB and 190 MB. */
+  val CodegenCacheMaxEntries: Int = 8192
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -240,6 +255,14 @@ object GraftSession {
       // regardless of data
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
+      // keep the whole-stage codegen stage id out of the generated class
+      // name (it stays in the source's comment): AQE numbers stages in
+      // the order it re-plans them, which follows the order concurrent
+      // shuffle stages finish, so with the id in the name the same
+      // fragment of q_reach_multi missed the cache as Stage6 after
+      // compiling as Stage8 on the pass before
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** local[n] session; n defaults from SPARK_GRAFT_CPUS. */
   def local(defaultCpus: Int = 4): SparkSession = {

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native IVF cell assignment: `CellArgmax(embedding, nrm)` over a
@@ -24,11 +24,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * Bit-equality with the composed form: the dot is the same
   * left-to-right double fold over min(|e|, |c|) elements as
   * [[DotProduct]], the cosine the same single double division by
-  * (nrm · cn), and the comparison the same `beats` rule as
-  * [[TopKAgg]] — argmax-with-tie-rule is evaluation-order-independent
-  * for finite scores, so scanning the centroid table in any order
-  * reproduces the aggregate's pick. Callers exclude zero-norm vectors
-  * and centroids (cosines stay finite). */
+  * (nrm · cn), and the comparison the order of the `score DESC, id
+  * ASC` window top-1 that `graft_topk(ccos, id, 1)` stands for:
+  * scores compare under Spark's double ordering (NaN above every
+  * number, NaNs equal), so argmax-with-tie-rule is
+  * evaluation-order-independent and scanning the centroid table in
+  * any order gives the window's pick, NaN included. Callers exclude
+  * zero-norm vectors and centroids. */
 case class CellArgmax(left: Expression, right: Expression,
                       ids: Array[Long], cents: Array[Array[Float]],
                       norms: Array[Double])
@@ -67,8 +69,8 @@ case class CellArgmax(left: Expression, right: Expression,
         i += 1
       }
       val score = acc / (nrm * norms(j))
-      if (first || score > bestScore ||
-          (score == bestScore && ids(j) < bestId)) {
+      val ord = SQLOrderingUtil.compareDoubles(score, bestScore)
+      if (first || ord > 0 || (ord == 0 && ids(j) < bestId)) {
         bestScore = score
         bestId = ids(j)
         first = false

@@ -160,7 +160,9 @@ object HammingPairs {
     // (round-13 verdict item 2). The popcount pass is two array reads
     // and one XOR per candidate — re-running it is cheaper than one
     // growth copy.
-    var cnt = 0
+    // counted in Long: identical signatures in a bucket of 65 537 make
+    // more survivors than an Int holds (the Pairs.compute bound)
+    var cnt = 0L
     i = 0
     while (i < n - 1) {
       val sigI = sigs(i)
@@ -171,7 +173,10 @@ object HammingPairs {
       }
       i += 1
     }
-    val out = new Array[Any](cnt)
+    require(cnt <= Int.MaxValue,
+      s"graft_hamming_pairs: $n signatures yield $cnt pairs (> Int.MaxValue); " +
+        "cap the bucket size before pairing")
+    val out = new Array[Any](cnt.toInt)
     var k = 0
     i = 0
     while (i < n - 1) {

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Native PQ encoder: the m per-subspace nearest codebook entries of
@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * with the same slice clamp as [[PqSubDots.compute]] (cself_j is
   * precomputed at construction with the identical fold — same JVM
   * arithmetic the Spark column ran), and the argmin applies min_by's
-  * `struct(d_j, centroid_id)` order (d asc, id asc ties) —
-  * order-independent for the finite doubles these folds produce, so
-  * scanning the codebook in any order reproduces the aggregate. */
+  * `struct(d_j, centroid_id)` order (d asc, id asc ties) under Spark's
+  * double ordering (NaN above every number, NaNs equal) —
+  * order-independent, so scanning the codebook in any order
+  * reproduces the aggregate, NaN distances included. */
 case class PqCodebookCodes(child: Expression,
                            ids: Array[Long], cents: Array[Array[Float]],
                            m: Int, subLen: Int)
@@ -106,7 +107,8 @@ case class PqCodebookCodes(child: Expression,
           k += 1
         }
         val d = (eself(j) + cs(j)) - 2.0 * acc
-        if (i == 0 || d < bestD(j) || (d == bestD(j) && id < bestId(j))) {
+        val ord = SQLOrderingUtil.compareDoubles(d, bestD(j))
+        if (i == 0 || ord < 0 || (ord == 0 && id < bestId(j))) {
           bestD(j) = d
           bestId(j) = id
         }

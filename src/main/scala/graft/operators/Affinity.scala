@@ -488,9 +488,14 @@ object Affinity {
       .select(explode(array(col("part_a"), col("part_b"))).as("node"))
       .agg(count(lit(1)).as("e2"), countDistinct(col("node")).as("n"))
       .head()
-    val k = kCoreKFor(st.getLong(0) / 2, st.getLong(1), kFloor)
+    // every edge contributes both endpoints to e2, so e2 / 2 is the
+    // starting edge count
+    var curCount = st.getLong(0) / 2
+    val k = kCoreKFor(curCount, st.getLong(1), kFloor)
+    // checkpointed although the pair frame is memoized: a first round
+    // over the in-memory frame plans two table-cache stages and no
+    // broadcast reuse, 5 jobs instead of this checkpoint's 1 plus 3
     var cur = graft.Caches.checkpoint(pairs0)
-    var curCount = cur.count()
     var stable = curCount == 0L
     var round = 0
     while (!stable && round < KCoreMaxPeels) {

@@ -196,6 +196,75 @@ class FusedExprSpec extends SparkSpec {
     assert(graft.functions.Pairs.compute(small, LongType).numElements() == 3)
   }
 
+  test("graft_hamming_pairs refuses a survivor count past Int.MaxValue") {
+    // 65537 identical signatures: every one of the 2 147 516 416 pairs
+    // survives, one past Int.MaxValue — an Int survivor count wraps to
+    // a negative output size
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    val big = new GenericArrayData(Array.tabulate(65537)(i =>
+      new GenericInternalRow(Array[Any](i.toLong, 42L)).asInstanceOf[Any]))
+    val e = intercept[IllegalArgumentException] {
+      graft.functions.HammingPairs.compute(big, 0)
+    }
+    assert(e.getMessage.contains("graft_hamming_pairs") &&
+      e.getMessage.contains("Int.MaxValue"), e.getMessage)
+    val small = new GenericArrayData(Array.tabulate(3)(i =>
+      new GenericInternalRow(Array[Any](i.toLong, 42L)).asInstanceOf[Any]))
+    assert(graft.functions.HammingPairs.compute(small, 0).numElements() == 3)
+  }
+
+  test("graft_cell_argmax and graft_pq_codes order NaN like their composed forms") {
+    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val nan = Float.NaN
+    def norm(v: Seq[Float]) = math.sqrt(v.map(x => x.toDouble * x).sum)
+    val vecs = Seq(Seq(1f, 0f, 0f, 1f), Seq(0f, 1f, 1f, 0f), Seq(2f, 1f, 0f, 3f))
+    val vdf = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, norm(v)) }
+      .toDF("vec_id", "embedding", "nrm")
+    // the NaN row sits in the first slot of one table and in a later
+    // slot of the other; NaN only in subspace 0 for the PQ codes
+    val rows = Seq(5L -> Seq(nan, 0f, 1f, 1f), 2L -> Seq(1f, 0f, 0f, 1f),
+      7L -> Seq(0f, 1f, 0f, 2f))
+    val m = 2; val subLen = 2
+    for (table <- Seq(rows, rows.tail.head +: rows.head +: rows.drop(2))) {
+      val ids = table.map(_._1).toArray
+      val cents = table.map(_._2.toArray).toArray
+      val cdf = table.map { case (id, c) => (id, c, norm(c)) }.toDF("cid", "ce", "cn")
+      val fused = vdf.select(col("vec_id"),
+        column(graft.functions.CellArgmax(expression(col("embedding")),
+          expression(col("nrm")), ids, cents, table.map(t => norm(t._2)).toArray))
+          .as("cell"),
+        column(graft.functions.PqCodebookCodes(expression(col("embedding")),
+          ids, cents, m, subLen)).as("codes"))
+      // composed: the window top-1 graft_topk replaced (score desc, id
+      // asc) and pqCodes' per-subspace min_by(id, struct(d_j, id))
+      val pairs = vdf.crossJoin(cdf)
+        .withColumn("score", call_function("graft_dot", col("embedding"),
+          col("ce")) / (col("nrm") * col("cn")))
+        .withColumn("es", call_function("graft_pq_subdots", col("embedding"),
+          col("embedding"), lit(m), lit(subLen)))
+        .withColumn("cs", call_function("graft_pq_subdots", col("ce"), col("ce"),
+          lit(m), lit(subLen)))
+        .withColumn("xd", call_function("graft_pq_subdots", col("embedding"),
+          col("ce"), lit(m), lit(subLen)))
+      val cell = pairs.withColumn("rn", row_number().over(Window
+          .partitionBy(col("vec_id")).orderBy(col("score").desc, col("cid").asc)))
+        .where(col("rn") === 1).select(col("vec_id"), col("cid").as("cell"))
+      val codes = pairs.groupBy(col("vec_id")).agg(array((0 until m).map { j =>
+        val d = element_at(col("es"), j + 1) + element_at(col("cs"), j + 1) -
+          lit(2.0) * element_at(col("xd"), j + 1)
+        min_by(col("cid"), struct(d, col("cid")))
+      }: _*).as("codes"))
+      val composed = cell.join(codes, "vec_id")
+      val got = fused.orderBy("vec_id").collect().toSeq
+      val want = composed.select("vec_id", "cell", "codes").orderBy("vec_id")
+        .collect().toSeq
+      assert(got == want, s"table ${ids.mkString(",")}")
+    }
+  }
+
   test("int-literal builder args accept bigint literals and foldables") {
     import spark.implicits._
     val df = Seq(Seq((1L, 0L), (2L, 3L))).toDF("ids")

@@ -6,11 +6,10 @@
 # after compiling). Usage:
 #   tools/bench.sh <mainClass> [args...]
 # Env: SPARK_GRAFT_* as usual; GRAFT_CLS overrides the snapshot dir,
-# SPARK_DRIVER_MEM / SPARK_GRAFT_XMS as in build.sbt.
+# SPARK_DRIVER_MEM as in build.sbt.
 set -euo pipefail
 CLS="${GRAFT_CLS:-/tmp/graft_cls}"
 MEM="${SPARK_DRIVER_MEM:-24g}"
-XMS="${SPARK_GRAFT_XMS:-$MEM}"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -19,5 +18,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"$MEM" -Xms"$XMS" -XX:ReservedCodeCacheSize=512m \
+  -Xmx"$MEM" -Xms"$MEM" -XX:ReservedCodeCacheSize=512m \
   -cp "/opt/spark/jars/*:$CLS" "$@"
