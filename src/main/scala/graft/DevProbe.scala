@@ -6,15 +6,20 @@ import org.apache.spark.sql.DataFrame
 /** Scratch dev main — per-query stage-metric decomposition, not part
   * of the library. Usage: DevProbe <query names...> with
   * SPARK_GRAFT_SF_DIR; each query runs twice (cold + warm), each run
-  * with its wall time and compiled code units, the warm one with
-  * per-stage wall/cpu/gc/spill/shuffle breakdowns. */
+  * with its wall time, compiled code units and Spark jobs (eager
+  * construction jobs included), the warm one with per-stage
+  * wall/cpu/gc/spill/shuffle breakdowns. */
 object DevProbe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
     val sc = spark.sparkContext
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val s = e.stageInfo
@@ -40,13 +45,20 @@ object DevProbe {
     }
     def time1(label: String, detail: Boolean)(f: => DataFrame): Unit = {
       stages.clear()
+      jobs.set(0)
       // code units compiled (codegen-cache misses): a warm run that
       // still compiles names a plan whose generated source changes
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       f.write.format("noop").mode("overwrite").save()
-      println(f"[probe] $label ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-        s"compiled=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0}")
+      val wall = (System.nanoTime() - t0) / 1e9
+      // the listener bus delivers job events asynchronously; drain it
+      // (Spark-private, so by reflection) before reading the count
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      println(f"[probe] $label $wall%.2f s " +
+        s"compiled=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0} " +
+        s"jobs=${jobs.get}")
       if (detail) stages.forEach(s => println("[probe]   " + s))
       clear()
     }

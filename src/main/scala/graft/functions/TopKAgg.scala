@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /** Exact bounded-heap top-k per group: `graft_topk(score, id, k)` →
@@ -22,9 +22,11 @@ import org.apache.spark.sql.types._
   * all rows, and no sort anywhere. Unlike the sketch aggregates this
   * is EXACT (top-k under a total order is mergeable without error:
   * the global top-k is contained in the union of partial top-ks), so
-  * its queries hash-match the window oracle bit-for-bit. Ties break by
-  * lower id, making the result independent of row order. Rows with a
-  * NULL score or id are skipped.
+  * its queries hash-match the window oracle bit-for-bit. Scores compare
+  * under Spark's own double ordering (NaN above every number, -0.0
+  * equal to 0.0, as in the window's ORDER BY), and ties break by lower
+  * id, making the result independent of row order. Rows with a NULL
+  * score or id are skipped.
   */
 case class TopKAgg(scoreExpr: Expression, idExpr: Expression,
                    kExpr: Expression,
@@ -41,7 +43,7 @@ case class TopKAgg(scoreExpr: Expression, idExpr: Expression,
   private val worstFirst: Ordering[(Double, Long)] =
     new Ordering[(Double, Long)] {
       override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
+        val c = SQLOrderingUtil.compareDoubles(b._1, a._1)
         if (c != 0) c else java.lang.Long.compare(a._2, b._2)
       }
     }
@@ -71,7 +73,7 @@ case class TopKAgg(scoreExpr: Expression, idExpr: Expression,
 
   /** True when a beats b under (score desc, id asc). */
   private def beats(a: (Double, Long), b: (Double, Long)): Boolean =
-    a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
+    worstFirst.compare(a, b) < 0
 
   private def offer(buf: mutable.PriorityQueue[(Double, Long)],
                     e: (Double, Long)): Unit =

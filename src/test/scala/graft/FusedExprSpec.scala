@@ -265,6 +265,34 @@ class FusedExprSpec extends SparkSpec {
     }
   }
 
+  test("graft_topk orders NaN and -0.0 like the row_number window") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // (grp, s, id): NaN sorts above every number, -0.0 ties 0.0 and
+    // falls to the lower id; each group is fed in both row orders, so
+    // the NaN sits in the first slot and in a later one
+    val rows = Seq(
+      (1, Double.NaN, 1L), (1, 1.0, 2L),
+      (2, 1.0, 1L), (2, Double.NaN, 2L), (2, 2.0, 3L),
+      (3, 0.0, 2L), (3, -0.0, 1L),
+      (4, 0.0, 3L), (4, -0.0, 1L), (4, 0.0, 2L), (4, -1.0, 0L))
+    for (order <- Seq(rows, rows.reverse); k <- Seq(1, 2)) {
+      // one partition: the aggregate sees the rows in exactly this order
+      val df = order.toDF("grp", "s", "id").coalesce(1)
+      val got = df.groupBy(col("grp"))
+        .agg(call_function("graft_topk", col("s"), col("id"), lit(k)).as("t"))
+        .select(col("grp"), posexplode(col("t")).as(Seq("pos", "e")))
+        .select(col("grp"), (col("pos") + 1).as("rk"), col("e.score"), col("e.id"))
+        .orderBy("grp", "rk").collect().toSeq
+      val want = df.withColumn("rk", row_number().over(Window
+          .partitionBy(col("grp")).orderBy(col("s").desc, col("id").asc)))
+        .where(col("rk") <= k)
+        .select(col("grp"), col("rk"), col("s"), col("id"))
+        .orderBy("grp", "rk").collect().toSeq
+      assert(got == want, s"k=$k, order ${order.map(_._3).mkString(",")}")
+    }
+  }
+
   test("int-literal builder args accept bigint literals and foldables") {
     import spark.implicits._
     val df = Seq(Seq((1L, 0L), (2L, 3L))).toDF("ids")

@@ -69,10 +69,10 @@ class RunnerSpec extends SparkSpec {
     // one key per way a query persists: a held frame, local
     // checkpoints, a per-round release, a raw RDD persist, a memo —
     // and whether the key leaves a run-scoped memo behind (q_k_core
-    // reads the memoized co-purchase pair frame)
+    // holds its half-edge RDD over the memoized co-purchase pairs)
     val forms = Seq(
       ("q_minhash_dedup", "hold", false),
-      ("q_k_core", "checkpoint", true),
+      ("q_k_core", "rdd + memo", true),
       ("q_qa_multigroup", "checkpoint", false),
       ("q_dedup_clusters", "release", false),
       ("q_value_mapping", "rdd", false),
