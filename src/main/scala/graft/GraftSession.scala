@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{BloomAgg, BloomContains, DeflateLen, DotProduct, HammingPairs, MatchMask, MinHashSigs, MisraGriesAgg, NfcNormalize, Pairs, PqSubDots, QualityCounts, RollingHash, RollingHashes, SeedHashes, SetJaccard, Shingles, SimHash40, SrpBandSigs, Tokenize, TopKAgg}
 
 /** Standard session config for the graft engine. One place to keep the
@@ -35,7 +37,7 @@ import graft.functions.{BloomAgg, BloomContains, DeflateLen, DotProduct, Hamming
   *    AQE does not split.
   */
 object GraftSession {
-  private type Exprs = Seq[org.apache.spark.sql.catalyst.expressions.Expression]
+  private type Exprs = Seq[Expression]
 
   /** Arity gate for the SQL-callable builders: a wrong-arity call
     * (`graft_minhash(sigs)`) must fail with a named analysis-time
@@ -52,10 +54,7 @@ object GraftSession {
     * constant-folding foldable expressions, so `graft_hamming_pairs(a,
     * 1 + 2)` works; anything non-foldable or non-integral fails with
     * a named analysis-time error instead of a raw match crash. */
-  private def intLitArg(fn: String, what: String,
-                        e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+  private def intLitArg(fn: String, what: String, e: Expression): Int = {
     val folded =
       if (e.foldable && e.deterministic) Literal.create(e.eval(), e.dataType)
       else e
@@ -71,6 +70,59 @@ object GraftSession {
         s"$fn $what must be an integral literal, got $other")
     }
   }
+
+  /** The string literals after the first argument of a (text,
+    * literal...) call. */
+  private def stringLits(fn: String, usage: String, what: String,
+                         exprs: Exprs): Seq[String] = {
+    require(exprs.length >= 2, s"$fn expects $usage")
+    exprs.tail.map {
+      case Literal(s: UTF8String, _) => s.toString
+      case other => throw new IllegalArgumentException(
+        s"$fn $what must be string literals, got $other")
+    }
+  }
+
+  /** Every SQL-callable graft function: (name, expression class,
+    * exact argument count, builder). The builder sees arguments that
+    * passed the [[arity]] gate; the two variadic (text, literal...)
+    * functions have no count and check their own arguments. */
+  private[graft] val Functions: Seq[(String, Class[_], Option[Int], Exprs => Expression)] =
+    Seq(
+      ("graft_dot", classOf[DotProduct], Some(2), e => DotProduct(e(0), e(1))),
+      ("graft_rolling_hash", classOf[RollingHash], Some(1), e => RollingHash(e(0))),
+      ("graft_minhash", classOf[MinHashSigs], Some(3), e => MinHashSigs(e(0), e(1), e(2))),
+      ("graft_simhash", classOf[SimHash40], Some(1), e => SimHash40(e(0))),
+      ("graft_bloom_agg", classOf[BloomAgg], Some(3),
+        e => BloomAgg(e(0), e(1), e(2)).toAggregateExpression()),
+      ("graft_topk", classOf[TopKAgg], Some(3),
+        e => TopKAgg(e(0), e(1), e(2)).toAggregateExpression()),
+      ("graft_nfc", classOf[NfcNormalize], Some(1), e => NfcNormalize(e(0))),
+      ("graft_heavy_agg", classOf[MisraGriesAgg], Some(2),
+        e => MisraGriesAgg(e(0), e(1)).toAggregateExpression()),
+      ("graft_match_mask", classOf[MatchMask], None, e => MatchMask(e.head,
+        stringLits("graft_match_mask", "(text, pattern, ...)", "patterns", e))),
+      ("graft_seed_hashes", classOf[SeedHashes], Some(2),
+        e => SeedHashes(e(0), intLitArg("graft_seed_hashes", "seedLen", e(1)))),
+      ("graft_deflate_len", classOf[DeflateLen], Some(1), e => DeflateLen(e(0))),
+      ("graft_tokens", classOf[Tokenize], Some(1), e => Tokenize(e(0))),
+      ("graft_quality_counts", classOf[QualityCounts], None, e => QualityCounts(e.head,
+        stringLits("graft_quality_counts", "(text, stopword...)", "stopwords", e))),
+      ("graft_bloom_contains", classOf[BloomContains], Some(2), e => BloomContains(e(0), e(1))),
+      ("graft_shingles", classOf[Shingles], Some(2),
+        e => Shingles(e(0), intLitArg("graft_shingles", "n", e(1)))),
+      ("graft_rolling_hashes", classOf[RollingHashes], Some(1), e => RollingHashes(e(0))),
+      ("graft_pairs", classOf[Pairs], Some(1), e => Pairs(e(0))),
+      ("graft_hamming_pairs", classOf[HammingPairs], Some(2),
+        e => HammingPairs(e(0), intLitArg("graft_hamming_pairs", "maxHamming", e(1)))),
+      ("graft_jaccard", classOf[SetJaccard], Some(2), e => SetJaccard(e(0), e(1))),
+      ("graft_pq_subdots", classOf[PqSubDots], Some(4), e => PqSubDots(e(0), e(1),
+        intLitArg("graft_pq_subdots", "m", e(2)),
+        intLitArg("graft_pq_subdots", "subLen", e(3)))),
+      ("graft_srp_sigs", classOf[SrpBandSigs], Some(4), e => SrpBandSigs(e(0),
+        intLitArg("graft_srp_sigs", "nPlanes", e(1)),
+        intLitArg("graft_srp_sigs", "perBand", e(2)),
+        intLitArg("graft_srp_sigs", "dim", e(3)))))
 
   /** Entries in Spark's generated-code cache
     * (`spark.sql.codegen.cache.maxEntries`, a static conf: it sizes the
@@ -91,138 +143,11 @@ object GraftSession {
     SparkSession.builder()
       .master(master)
       .withExtensions { ext =>
-        ext.injectFunction((
-          FunctionIdentifier("graft_dot"),
-          new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-          (exprs: Exprs) => { val e = arity("graft_dot", 2, exprs)
-            DotProduct(e.head, e(1)) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_rolling_hash"),
-          new ExpressionInfo(classOf[RollingHash].getName, "graft_rolling_hash"),
-          (exprs: Exprs) => { val e = arity("graft_rolling_hash", 1, exprs)
-            RollingHash(e.head) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_minhash"),
-          new ExpressionInfo(classOf[MinHashSigs].getName, "graft_minhash"),
-          (exprs: Exprs) => { val e = arity("graft_minhash", 3, exprs)
-            MinHashSigs(e(0), e(1), e(2)) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_simhash"),
-          new ExpressionInfo(classOf[SimHash40].getName, "graft_simhash"),
-          (exprs: Exprs) => { val e = arity("graft_simhash", 1, exprs)
-            SimHash40(e.head) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_bloom_agg"),
-          new ExpressionInfo(classOf[BloomAgg].getName, "graft_bloom_agg"),
-          (exprs: Exprs) => { val e = arity("graft_bloom_agg", 3, exprs)
-            BloomAgg(e(0), e(1), e(2)).toAggregateExpression() }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_topk"),
-          new ExpressionInfo(classOf[TopKAgg].getName, "graft_topk"),
-          (exprs: Exprs) => { val e = arity("graft_topk", 3, exprs)
-            TopKAgg(e(0), e(1), e(2)).toAggregateExpression() }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_nfc"),
-          new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-          (exprs: Exprs) => { val e = arity("graft_nfc", 1, exprs)
-            NfcNormalize(e.head) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_heavy_agg"),
-          new ExpressionInfo(classOf[MisraGriesAgg].getName, "graft_heavy_agg"),
-          (exprs: Exprs) => { val e = arity("graft_heavy_agg", 2, exprs)
-            MisraGriesAgg(e(0), e(1)).toAggregateExpression() }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_match_mask"),
-          new ExpressionInfo(classOf[MatchMask].getName, "graft_match_mask"),
-          (exprs: Exprs) => {
-            require(exprs.length >= 2,
-              "graft_match_mask expects (text, pattern, ...)")
-            val pats = exprs.tail.map {
-              case org.apache.spark.sql.catalyst.expressions.Literal(
-                s: org.apache.spark.unsafe.types.UTF8String, _) => s.toString
-              case other => throw new IllegalArgumentException(
-                s"graft_match_mask patterns must be string literals, got $other")
-            }
-            MatchMask(exprs.head, pats)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_seed_hashes"),
-          new ExpressionInfo(classOf[SeedHashes].getName, "graft_seed_hashes"),
-          (exprs: Exprs) => { val e = arity("graft_seed_hashes", 2, exprs)
-            SeedHashes(e.head, intLitArg("graft_seed_hashes", "seedLen", e(1))) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_deflate_len"),
-          new ExpressionInfo(classOf[DeflateLen].getName, "graft_deflate_len"),
-          (exprs: Exprs) => { val e = arity("graft_deflate_len", 1, exprs)
-            DeflateLen(e.head) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_tokens"),
-          new ExpressionInfo(classOf[Tokenize].getName, "graft_tokens"),
-          (exprs: Exprs) => { val e = arity("graft_tokens", 1, exprs)
-            Tokenize(e.head) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_quality_counts"),
-          new ExpressionInfo(classOf[QualityCounts].getName,
-            "graft_quality_counts"),
-          (exprs: Exprs) => {
-            require(exprs.length >= 2,
-              "graft_quality_counts expects (text, stopword...)")
-            val words = exprs.tail.map {
-              case org.apache.spark.sql.catalyst.expressions.Literal(
-                s: org.apache.spark.unsafe.types.UTF8String, _) => s.toString
-              case other => throw new IllegalArgumentException(
-                s"graft_quality_counts stopwords must be string literals, got $other")
-            }
-            QualityCounts(exprs.head, words)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_bloom_contains"),
-          new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom_contains"),
-          (exprs: Exprs) => { val e = arity("graft_bloom_contains", 2, exprs)
-            BloomContains(e(0), e(1)) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_shingles"),
-          new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
-          (exprs: Exprs) => { val e = arity("graft_shingles", 2, exprs)
-            Shingles(e.head, intLitArg("graft_shingles", "n", e(1))) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_rolling_hashes"),
-          new ExpressionInfo(classOf[RollingHashes].getName,
-            "graft_rolling_hashes"),
-          (exprs: Exprs) => { val e = arity("graft_rolling_hashes", 1, exprs)
-            RollingHashes(e.head) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_pairs"),
-          new ExpressionInfo(classOf[Pairs].getName, "graft_pairs"),
-          (exprs: Exprs) => { val e = arity("graft_pairs", 1, exprs)
-            Pairs(e.head) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_hamming_pairs"),
-          new ExpressionInfo(classOf[HammingPairs].getName,
-            "graft_hamming_pairs"),
-          (exprs: Exprs) => { val e = arity("graft_hamming_pairs", 2, exprs)
-            HammingPairs(e.head,
-              intLitArg("graft_hamming_pairs", "maxHamming", e(1))) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_jaccard"),
-          new ExpressionInfo(classOf[SetJaccard].getName, "graft_jaccard"),
-          (exprs: Exprs) => { val e = arity("graft_jaccard", 2, exprs)
-            SetJaccard(e.head, e(1)) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_pq_subdots"),
-          new ExpressionInfo(classOf[PqSubDots].getName, "graft_pq_subdots"),
-          (exprs: Exprs) => { val e = arity("graft_pq_subdots", 4, exprs)
-            PqSubDots(e.head, e(1),
-              intLitArg("graft_pq_subdots", "m", e(2)),
-              intLitArg("graft_pq_subdots", "subLen", e(3))) }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_srp_sigs"),
-          new ExpressionInfo(classOf[SrpBandSigs].getName, "graft_srp_sigs"),
-          (exprs: Exprs) => { val e = arity("graft_srp_sigs", 4, exprs)
-            SrpBandSigs(e.head,
-              intLitArg("graft_srp_sigs", "nPlanes", e(1)),
-              intLitArg("graft_srp_sigs", "perBand", e(2)),
-              intLitArg("graft_srp_sigs", "dim", e(3))) }))
+        Functions.foreach { case (name, cls, n, build) =>
+          ext.injectFunction((FunctionIdentifier(name),
+            new ExpressionInfo(cls.getName, name),
+            (exprs: Exprs) => build(n.fold(exprs)(arity(name, _, exprs)))))
+        }
       }
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       // Scan granularity: the 128 MB Spark default. Round 9 floored

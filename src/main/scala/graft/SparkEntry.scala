@@ -1360,7 +1360,7 @@ object SparkEntry {
       NearDup.indexStaleness(docs, idxFp)
     }),
     "q_dedup_bloom" -> ((s, d) => {
-      val docs = Tables.documentsFloored(s, d)
+      val docs = Tables.documents(s, d)
       NearDup.dedupIncrementBloom(
         docs.where(pmod(col("doc_id"), lit(IncrementMod)) === IncrementRem),
         docs.where(pmod(col("doc_id"), lit(IncrementMod)) =!= IncrementRem))
@@ -1372,7 +1372,7 @@ object SparkEntry {
     "q_minhash_dedup" -> ((s, d) => NearDup.minhashDedup(Tables.documents(s, d))),
     // contrastive hard negatives: banded-but-below-threshold pairs
     "q_hard_negatives" -> ((s, d) =>
-      NearDup.hardNegatives(Tables.documentsFloored(s, d))),
+      NearDup.hardNegatives(Tables.documents(s, d))),
     "q_dedup_clusters" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       NearDup.dedupClusters(docs, NearDup.minhashPairs(docs))
@@ -1504,7 +1504,7 @@ object SparkEntry {
     "q_reach_approx_gate" -> ((s, d) =>
       SketchGates.reachGate(Tables.media(s, d), "etype")),
     "q_tfidf" -> ((s, d) =>
-      TextAnalysis.tfidf(Tables.documentsFloored(s, d), TfidfPerDoc)),
+      TextAnalysis.tfidf(Tables.documents(s, d), TfidfPerDoc)),
     "q_inverted_index" -> ((s, d) =>
       TextAnalysis.invertedIndex(Tables.documentsFloored(s, d), IndexMinDf,
         IndexTopPostings)),
@@ -1852,7 +1852,7 @@ object SparkEntry {
     // Hash-gated via the unrolled merge-chain oracle (BpeVocabCtes);
     // TextSpec pins train+apply segmentations on the training fixture.
     "q_bpe_apply" -> ((s, d) => {
-      val docs = Tables.documentsFloored(s, d)
+      val docs = Tables.documents(s, d)
       val merges = TextAnalysis.bpeTrain(docs, BpeMerges).collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       TextAnalysis.bpeApply(docs, merges)

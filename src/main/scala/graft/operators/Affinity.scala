@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -21,15 +24,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    count join exists at all), and the per-item neighborhood cut
   *    uses the bounded-heap `graft_topk` aggregate — shuffle volume
   *    items×k, no sort over hot items' candidate lists;
-  *  - PageRank is the standard distributed value iteration: the
-  *    STATIC edge frame is hash-partitioned on src once and persisted,
-  *    so each iteration moves only the node-sized rank frame to the
-  *    edges (plus one edge-grain aggregate to the dst grain), and
-  *    lineage is cut per iteration with localCheckpoint (the Lloyd /
-  *    BPE loop pattern — without it the plan doubles per round);
-  *  - the k-core peel runs outside Catalyst, over a node-partitioned
-  *    half-edge RDD held for the query: one single-stage job per
-  *    round, no shuffle and no checkpoint ([[kCore]]).
+  *  - PageRank and the k-core peel run outside Catalyst, over one
+  *    node-partitioned half-edge RDD held for the query
+  *    ([[halfEdges]]): one single-stage job per round, no shuffle and
+  *    no checkpoint.
   *
   * Determinism (the gate property): similarity scores are
   * `cooc / sqrt(n_a·n_b)` where every input is an exact integer count
@@ -392,61 +390,41 @@ object Affinity {
     * rankₖ₊₁(v) = 150 000 + Σ_{u→v} ((rankₖ(u)·17) div 20) div deg(u)
     * — the 0.85-damped update in exact integer arithmetic (truncation
     * replaces float rounding; sums are order-independent, so the
-    * result is bit-identical however Spark schedules the shuffle).
+    * result is bit-identical however the rounds are scheduled).
     * Every node in the graph has deg ≥ 1 by construction (pairs are
-    * symmetric), so no dangling-mass term is needed. */
+    * symmetric), so no dangling-mass term is needed.
+    *
+    * Shape: the graph is symmetric, so a node's [[halfEdges]] are
+    * also its in-edge list. Each round is one single-stage job: the
+    * driver broadcasts every node's contribution with the sorted node
+    * ids and collects every node's inflow. The rank vector is two
+    * `Long` arrays of the node count (≤ distinct parts, ~20k at sf0.1). */
   def pageRank(lineitem: DataFrame, iters: Int = 3,
                topN: Int = 100): DataFrame = {
-    val pairs = coPairs(lineitem).select(col("part_a"), col("part_b"))
-    val edges = pairs.unionAll(
-      pairs.select(col("part_b"), col("part_a"))).toDF("src", "dst")
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // static over all iterations: partition edges AND nodes on the
-    // SAME key with an EXPLICIT partition count and persist. The
-    // explicit count matters twice: AQE never coalesces a
-    // user-numbered repartition, so both cached layouts come out at
-    // exactly P, and every iteration's rank frame (built from
-    // `nodes`, layout preserved through the co-partitioned join and
-    // localCheckpoint) is ALREADY hashpartitioning(node=src, P) — the
-    // per-round rank join and the rank rebuild join plan with zero
-    // Exchange. Round 13 partitioned only the edge side; the rank
-    // frame re-exchanged every round (3 extra shuffles of the node
-    // frame per query).
-    val p = lineitem.sparkSession.sessionState.conf.numShufflePartitions
-    val edgesDeg = graft.Caches.hold(edges.join(deg, "src")
-      .repartition(p, col("src")))
-    val nodes = graft.Caches.hold(deg.select(col("src").as("node"))
-      .repartition(p, col("node")))
-    // materialize BOTH caches before planning iteration 1: an
-    // un-materialized AQE-planned cache reports unknown partitioning
-    // to the consumer's EnsureRequirements (measured: every iteration
-    // re-exchanged both cached sides), a final one reports the
-    // repartition layout and the iteration joins plan with no
-    // Exchange on the cached inputs. One union job fills both caches
-    // (separate counts would serialize two jobs and re-run the deg
-    // aggregate)
-    edgesDeg.select(col("src"))
-      .unionAll(nodes.select(col("node"))).count()
-    var ranks = nodes.select(col("node"), lit(1000000L).as("rank_micro"))
+    val spark = lineitem.sparkSession
+    val half = halfEdges(coPairs(lineitem))
+    val (nodes, deg) = half.flatMap(p => perNode(p)(_ => 1L)).collect()
+      .sortBy(_._1).unzip
+    val rank = Array.fill(nodes.length)(1000000L)
     for (_ <- 1 to iters) {
-      // SHUFFLE_HASH: build the node-sized rank frame, STREAM the
-      // static edge frame — a sort-merge join would re-sort the edge
-      // partitions every round (the edges never change), and a
-      // broadcast would cap the node count at driver memory
-      val inflow = edgesDeg
-        .join(ranks.hint("SHUFFLE_HASH"), edgesDeg("src") === ranks("node"))
-        .select(col("dst"), expr("((rank_micro * 17) div 20) div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      // localCheckpoint: cut lineage per round — the iterated plan
-      // would otherwise double per iteration (the Lloyd pattern)
-      ranks = nodes.join(inflow.hint("SHUFFLE_HASH"),
-          nodes("node") === inflow("dst"), "left")
-        .select(col("node"),
-          (lit(150000L) + coalesce(col("inflow"), lit(0L))).as("rank_micro"))
-      ranks = graft.Caches.checkpoint(ranks)
+      val contrib = Array.tabulate(nodes.length)(i => rank(i) * 17 / 20 / deg(i))
+      val bc = spark.sparkContext.broadcast((nodes, contrib))
+      val inflow = half.flatMap { p =>
+        val (ids, c) = bc.value
+        perNode(p)(u => c(java.util.Arrays.binarySearch(ids, u)))
+      }.collect()
+      bc.destroy()
+      java.util.Arrays.fill(rank, 150000L)
+      inflow.foreach { case (v, in) =>
+        rank(java.util.Arrays.binarySearch(nodes, v)) += in }
     }
-    ranks.orderBy(col("rank_micro").desc, col("node")).limit(topN)
-      .select(col("node").as("part"), col("rank_micro"))
+    spark.createDataFrame(nodes.indices.map(i => Row(nodes(i), rank(i))).asJava,
+        StructType(Seq(
+          StructField("part", LongType, nullable = false),
+          StructField("rank_micro", LongType, nullable = false))))
+      .select(col("part").cast(lineitem.schema("l_partkey").dataType).as("part"),
+        col("rank_micro"))
+      .orderBy(col("rank_micro").desc, col("part")).limit(topN)
   }
 
   /** Unrolled-peel depth shared with the k-core oracle (CAPS.md):
@@ -485,54 +463,32 @@ object Affinity {
     * The oracle replays the same bounded peel as [[KCoreMaxPeels]]
     * unrolled CTE steps.
     *
-    * Shape: both orientations of every support-filtered [[coPairs]]
-    * edge are shuffled ONCE into an RDD of (node, neighbour)
-    * half-edges, hash-partitioned on node and sorted by node within
-    * each partition, and held for the query. Every node's half-edges
-    * then sit in one partition, so one `fold` derives k (half-edge
-    * count, and distinct nodes summed per partition) and each round
-    * is one `collect` of one `mapPartitions`: live degrees are
-    * counted run by run against a broadcast sorted `Array[Long]` of
-    * the nodes removed so far, and the partition returns its nodes
-    * under k — one job, one stage, no shuffle, and the stop test is
-    * that job's result being empty. Edges are never rewritten: a
-    * round re-reads all initial half-edges, so its work is O(initial
-    * half-edges), and the dead set is bounded by the node count.
-    *
-    * Why an RDD and not a DataFrame: a DataFrame round of the same
-    * shape (a persisted `repartition(n, node)`, an `isInCollection`
-    * dead-set filter, a partition-local `groupBy`, `collect`) is also
-    * one job, but every action pays analysis, cache lookup, AQE
-    * re-planning and plan-description events. Measured on a 3.4k-edge
-    * graph, 4 vCPUs, warm JVM: ~100–135 ms per DataFrame round against
-    * ~25 ms per RDD round; the DataFrame loop this replaced (degree
-    * aggregate, two left-semi joins, a localCheckpoint and a count per
-    * round) took ~200 ms per round. */
+    * Shape: over the support-filtered [[halfEdges]], one `fold`
+    * derives k (half-edge count, and distinct nodes summed per
+    * partition) and each round is one `collect` of one pass over the
+    * held partitions: live degrees are counted per node against a
+    * broadcast sorted `Array[Long]` of the nodes removed so far, and
+    * the partition returns its nodes under k — the stop test is that
+    * job's result being empty. Edges are never rewritten: a round
+    * re-reads all initial half-edges, so its work is O(initial
+    * half-edges), and the dead set is bounded by the node count. */
   def kCore(lineitem: DataFrame, minSupport: Int = 2,
             kFloor: Int = 2): DataFrame = {
     val spark = lineitem.sparkSession
-    val pairs = coPairs(lineitem).where(col("cooc") >= minSupport)
     val part = lineitem.schema("l_partkey")
-    val half = graft.Caches.holdRdd(pairs
-      .select(col("part_a").cast(LongType), col("part_b").cast(LongType)).rdd
-      .flatMap { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        Iterator((a, b), (b, a))
-      }
-      .repartitionAndSortWithinPartitions(
-        new HashPartitioner(spark.sessionState.conf.numShufflePartitions)))
-    val (halfEdges, nodes) = half
-      .mapPartitions(it => liveDegrees(it, Array.emptyLongArray))
+    val half = halfEdges(coPairs(lineitem).where(col("cooc") >= minSupport))
+    val (nHalf, nodes) = half
+      .flatMap(liveDegrees(_, Array.emptyLongArray))
       .map { case (_, d) => (d, 1L) }
       .fold((0L, 0L)) { case ((e1, n1), (e2, n2)) => (e1 + e2, n1 + n2) }
-    val k = kCoreKFor(halfEdges / 2, nodes, kFloor)
+    val k = kCoreKFor(nHalf / 2, nodes, kFloor)
     var dead = Array.emptyLongArray
-    var peeling = halfEdges > 0
+    var peeling = nHalf > 0
     var round = 0
     while (peeling && round < KCoreMaxPeels) {
       val bc = spark.sparkContext.broadcast(dead)
-      val low = half.mapPartitions(it =>
-        liveDegrees(it, bc.value).collect { case (u, d) if d < k => u })
+      val low = half.flatMap(p =>
+        liveDegrees(p, bc.value).collect { case (u, d) if d < k => u })
         .collect()
       bc.destroy()
       peeling = low.nonEmpty
@@ -542,8 +498,8 @@ object Affinity {
     }
     // not destroyed: the returned frame reads it when it executes
     val fin = spark.sparkContext.broadcast(dead)
-    val rows = half.mapPartitions(it =>
-      liveDegrees(it, fin.value).map { case (u, d) => Row(u, d) })
+    val rows = half.flatMap(p =>
+      liveDegrees(p, fin.value).map { case (u, d) => Row(u, d) })
     spark.createDataFrame(rows, StructType(Seq(
         StructField("part", LongType, part.nullable),
         StructField("core_deg", LongType, nullable = false))))
@@ -552,23 +508,62 @@ object Affinity {
       .orderBy(col("part"))
   }
 
-  /** (node, live degree) per node of one partition of node-sorted
-    * half-edges, counting only half-edges with neither end in the
-    * sorted `dead` set; a node with no live half-edge is left out. */
-  private def liveDegrees(half: Iterator[(Long, Long)],
-                          dead: Array[Long]): Iterator[(Long, Long)] = {
-    val live = half.filter { case (u, v) =>
-      java.util.Arrays.binarySearch(dead, u) < 0 &&
-        java.util.Arrays.binarySearch(dead, v) < 0
-    }.buffered
-    new Iterator[(Long, Long)] {
-      def hasNext: Boolean = live.hasNext
-      def next(): (Long, Long) = {
-        val u = live.next()._1
-        var d = 1L
-        while (live.hasNext && live.head._1 == u) { live.next(); d += 1 }
-        (u, d)
+  /** One held partition of [[halfEdges]]: its distinct nodes sorted,
+    * and per half-edge the index of its node in them and its neighbour. */
+  private type Half = (Array[Long], Array[Int], Array[Long])
+
+  /** Both orientations of every `pairs` (part_a, part_b) edge as
+    * (node, neighbour) half-edges, shuffled once, hash-partitioned on
+    * node and held for the query as primitive arrays ([[Half]], 12
+    * bytes a half-edge). Held boxed tuples, sorted by
+    * `repartitionAndSortWithinPartitions`, cost ~64 bytes each and
+    * stayed live through the sort: at ×10 sf0.1 the build stage took
+    * 2.5 s with 1.8–2.9 s of task GC, against ~0.5 s and none for the
+    * arrays. A node's half-edges are all in one partition, so a
+    * per-node round ([[perNode]]) is one single-stage job with no
+    * shuffle.
+    *
+    * Why an RDD and not a DataFrame: a DataFrame round of the same
+    * shape (a persisted node repartition, an `isInCollection` filter,
+    * a partition-local `groupBy`, `collect`) is also one job,
+    * but every action pays analysis, cache lookup, AQE re-planning and
+    * plan-description events. Measured on a 3.4k-edge graph, 4 vCPUs,
+    * warm JVM: ~100–135 ms per DataFrame round against ~25 ms per RDD
+    * round; the DataFrame peel this replaced (degree aggregate, two
+    * left-semi joins, a localCheckpoint and a count per round) took
+    * ~200 ms per round. */
+  private def halfEdges(pairs: DataFrame): RDD[Half] =
+    graft.Caches.holdRdd(pairs
+      .select(col("part_a").cast(LongType), col("part_b").cast(LongType)).rdd
+      .flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator((a, b), (b, a))
       }
-    }
+      .partitionBy(new HashPartitioner(
+        pairs.sparkSession.sessionState.conf.numShufflePartitions))
+      .mapPartitions { it =>
+        val (us, vs) = (Array.newBuilder[Long], Array.newBuilder[Long])
+        it.foreach { case (u, v) => us += u; vs += v }
+        val u = us.result()
+        val s = u.sorted
+        val ids = s.indices.filter(i => i == 0 || s(i) != s(i - 1)).map(s(_)).toArray
+        Iterator((ids, u.map(java.util.Arrays.binarySearch(ids, _)), vs.result()))
+      })
+
+  /** (node, Σ `w`(neighbour)) for every node of one held partition. */
+  private def perNode(half: Half)(w: Long => Long): Iterator[(Long, Long)] = {
+    val (ids, node, vs) = half
+    val acc = new Array[Long](ids.length)
+    node.indices.foreach(i => acc(node(i)) += w(vs(i)))
+    ids.iterator.zip(acc.iterator)
+  }
+
+  /** (node, live degree) per node of one held partition, counting only
+    * half-edges with neither end in the sorted `dead` set; a node with
+    * no live half-edge is left out. */
+  private def liveDegrees(half: Half, dead: Array[Long]): Iterator[(Long, Long)] = {
+    def live(x: Long) = java.util.Arrays.binarySearch(dead, x) < 0
+    perNode(half)(v => if (live(v)) 1L else 0L)
+      .filter { case (u, d) => d > 0 && live(u) }
   }
 }

@@ -541,12 +541,14 @@ class PlanAuditSpec extends SparkSpec {
     assert("InMemoryTableScan".r.findAllIn(p).size >= 2, p.take(2000))
   }
 
-  test("pagerank: iterations are checkpointed, final read is sorted topN") {
+  test("pagerank: rounds run off-plan, final read is a sorted topN of driver ranks") {
     val p = plan("q_pagerank")
-    // every value-iteration round materialized behind localCheckpoint —
-    // the final plan reads ONLY the checkpoint RDD (no live parquet
-    // scan, no join replay of the whole iteration chain)
+    // every value-iteration round runs on the held half-edge RDD
+    // before the frame is built — the final plan reads ONLY the
+    // driver's rank rows (no live parquet scan, no replay of the
+    // rounds) and cuts them with one sorted topN
     assert(!p.contains("FileScan parquet"), p.take(2000))
+    assert(p.contains("LocalTableScan"), p.take(2000))
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
   }
 
