@@ -19,12 +19,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    (never a self-join of the (order, item) stream — the
   *    [[Temporal.basketPairs]] idiom), so pair work is bounded by
   *    items-per-order², not corpus²;
-  *  - similarity joins are all key-grain (pair counts carry both
-  *    items' order counts WITH them via structs, so no post-pair
-  *    count join exists at all), and the per-item neighborhood cut
-  *    uses the bounded-heap `graft_topk` aggregate — shuffle volume
-  *    items×k, no sort over hot items' candidate lists;
-  *  - PageRank and the k-core peel run outside Catalyst, over one
+  *  - every operator reads one memoized edge frame, [[coPairs]];
+  *  - similarity joins are all key-grain (the item order counts join
+  *    the undirected pairs, never the doubled frame), and the per-item
+  *    neighborhood cut uses the bounded-heap `graft_topk` aggregate —
+  *    shuffle volume items×k, no sort over hot items' candidate lists;
+  *  - PageRank and the k-core peel (and [[NearDup.dedupClusters]]'
+  *    connected components) run outside Catalyst, over one
   *    node-partitioned half-edge RDD held for the query
   *    ([[halfEdges]]): one single-stage job per round, no shuffle and
   *    no checkpoint.
@@ -52,53 +53,21 @@ object Affinity {
     lineitem.select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
       .distinct()
 
-  /** Undirected co-purchase pairs with both sides' order counts:
-    * (part_a < part_b, n_a, n_b, cooc). Each item's order count is
-    * attached BEFORE the per-order set aggregation (one key-grain
-    * join), so the exploded pairs carry (n_a, n_b) with them and the
-    * pair grain never joins anything afterwards.
-    *
-    * The RESULT is persisted and MEMOIZED for the run
-    * ([[graft.Caches.memo]]): [[itemSimilarity]] immediately unions
-    * the frame with its own swap, and without the persist each union
-    * branch re-runs the whole distinct→join→sets→explode chain —
-    * measured 3× the operator's total cost at sf0.1 — while the memo
-    * hands [[triangleStats]]/[[wedgeRecommendations]]/[[itemSimilarity]]
-    * the same copy instead of three. The first build materializes
-    * eagerly so the internal (order, item) frame can be released at
-    * once instead of pinning storage for the rest of the query. (The
-    * graph operators use the leaner [[coPairs]] instead.) */
-  def coPurchasePairs(lineitem: DataFrame): DataFrame =
-    graft.Caches.memo(lineitem, "affinity.coPurchasePairs") {
-      val op = orderParts(lineitem).transform(graft.Caches.hold)
-      val cnt = op.groupBy(col("part")).agg(count(lit(1)).as("cnt"))
-      val sets = op.join(cnt, "part")
-        .groupBy(col("okey"))
-        .agg(sort_array(collect_set(struct(col("part"), col("cnt")))).as("ps"))
-      // native graft_pairs over the (part, cnt) carrier structs — the
-      // interpreted nested-transform fan-out this replaces was the
-      // family's dominant CPU (see coPairs)
-      val res = sets.where(size(col("ps")) >= 2)
-        .select(explode(call_function("graft_pairs", col("ps"))).as("p"))
-        .groupBy(col("p.a.part").as("part_a"), col("p.b.part").as("part_b"),
-          col("p.a.cnt").as("n_a"), col("p.b.cnt").as("n_b"))
-        .agg(count(lit(1)).as("cooc"))
-        .transform(graft.Caches.hold)
-      res.count()
-      graft.Caches.release(op)
-      res
-    }
-
   /** Top-`topN` most-similar items per item by co-purchase cosine:
     * cos(a,b) = |orders with both| / sqrt(|orders with a|·|orders
-    * with b|). The neighborhood cut is the bounded-heap `graft_topk`
-    * (score desc, item-id-asc ties — exactly the oracle's
-    * row_number order), and the kept (item, other) keys re-join the
-    * persisted scored frame to recover the count columns — a
-    * (items×k)-sized probe into the pair grain, cheaper than sorting
-    * every hot item's full candidate list under a window. */
+    * with b|). Each side's order count joins onto the undirected
+    * [[coPairs]] rows at key grain before the swap-union, so the
+    * doubled frame never joins anything. The neighborhood cut is the
+    * bounded-heap `graft_topk` (score desc, item-id-asc ties — exactly
+    * the oracle's row_number order), and the kept (item, other) keys
+    * re-join the persisted scored frame to recover the count columns
+    * — an (items×k)-sized probe into the pair grain, cheaper than
+    * sorting every hot item's full candidate list under a window. */
   def itemSimilarity(lineitem: DataFrame, topN: Int = 5): DataFrame = {
-    val pairs = coPurchasePairs(lineitem)
+    val cnt = orderParts(lineitem).groupBy(col("part")).agg(count(lit(1)).as("n"))
+    val pairs = coPairs(lineitem)
+      .join(cnt.select(col("part").as("part_a"), col("n").as("n_a")), "part_a")
+      .join(cnt.select(col("part").as("part_b"), col("n").as("n_b")), "part_b")
     val sym = pairs
       .select(col("part_a").as("part"), col("part_b").as("other"),
         col("cooc"), col("n_a"), col("n_b"))
@@ -122,16 +91,16 @@ object Affinity {
   }
 
   /** Undirected co-purchase pairs with their co-occurrence count —
-    * the graph edge set: (part_a < part_b, cooc). Leaner than
-    * [[coPurchasePairs]]: collect_set dedups in-aggregate and no order
-    * counts ride along, so the distinct pre-pass and the count-attach
-    * join both drop out — one shuffle from the raw line stream to
-    * per-order sets, one to the pair grain (measured ~40% off
-    * [[pageRank]]'s setup at sf0.1). `cooc` is the number of orders
-    * holding both items, equal to [[coPurchasePairs]]' column.
-    * Persisted and memoized for the run: [[graphStats]] and
-    * [[pageRank]] read the pairs, [[kCore]] the support-filtered
-    * pairs, all from one copy. */
+    * the one edge frame of the co-purchase graph: (part_a < part_b,
+    * cooc), `cooc` the number of orders holding both items.
+    * collect_set dedups in-aggregate, so there is one shuffle from the
+    * raw line stream to per-order sets and one to the pair grain; no
+    * order counts ride along (the build that carried them needed a
+    * distinct pre-pass and a count-attach join, ~40% more setup at
+    * sf0.1 — [[itemSimilarity]] joins its counts on at key grain
+    * instead). Persisted and memoized for the run: every graph
+    * operator reads this one copy, the support-filtered ones through a
+    * `cooc` filter. */
   def coPairs(lineitem: DataFrame): DataFrame =
     graft.Caches.memo(lineitem, "affinity.coPairs") {
       val sets = lineitem
@@ -189,7 +158,7 @@ object Affinity {
     * the degrees are, r says how they WIRE.
     *
     * Determinism and scale: the same support-≥`minSupport` edge set as
-    * [[triangleStats]] (memoized [[coPurchasePairs]] bounds the pair
+    * [[triangleStats]] (the memoized [[coPairs]] bounds the pair
     * explosion). The directed edge list of the standard Newman r is
     * never MATERIALIZED: per undirected pair it holds (da,db) AND
     * (db,da), so the moments fold symmetrically off the UNDOUBLED
@@ -206,7 +175,7 @@ object Affinity {
     * conversions, one sqrt and one division, mirrored exactly in the
     * oracle. Output is one row. */
   def degreeAssortativity(lineitem: DataFrame, minSupport: Int = 2): DataFrame = {
-    val pairs = coPurchasePairs(lineitem)
+    val pairs = coPairs(lineitem)
       .where(col("cooc") >= minSupport)
       .select(col("part_a"), col("part_b"))
     val deg = graft.Caches.hold(pairs
@@ -260,7 +229,7 @@ object Affinity {
     * degree frame — no join at all. */
   def triangleStats(lineitem: DataFrame, minSupport: Int = 2): DataFrame = {
     require(minSupport >= 1, "minSupport must be at least 1")
-    val pairs = coPurchasePairs(lineitem)
+    val pairs = coPairs(lineitem)
       .where(col("cooc") >= minSupport)
       .select(col("part_a"), col("part_b"))
     val edges = pairs.unionAll(
@@ -349,7 +318,7 @@ object Affinity {
                            neighborCap: Int = 64,
                            topN: Int = 100,
                            edgeBudget: Long = 100000L): DataFrame = {
-    val all = coPurchasePairs(lineitem)
+    val all = coPairs(lineitem)
     val hist = all.groupBy(col("cooc"))
       .agg(count(lit(1)).as("c")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -402,7 +371,7 @@ object Affinity {
   def pageRank(lineitem: DataFrame, iters: Int = 3,
                topN: Int = 100): DataFrame = {
     val spark = lineitem.sparkSession
-    val half = halfEdges(coPairs(lineitem))
+    val half = halfEdges(coPairs(lineitem).select(col("part_a"), col("part_b")))
     val (nodes, deg) = half.flatMap(p => perNode(p)(_ => 1L)).collect()
       .sortBy(_._1).unzip
     val rank = Array.fill(nodes.length)(1000000L)
@@ -476,7 +445,8 @@ object Affinity {
             kFloor: Int = 2): DataFrame = {
     val spark = lineitem.sparkSession
     val part = lineitem.schema("l_partkey")
-    val half = halfEdges(coPairs(lineitem).where(col("cooc") >= minSupport))
+    val half = halfEdges(coPairs(lineitem).where(col("cooc") >= minSupport)
+      .select(col("part_a"), col("part_b")))
     val (nHalf, nodes) = half
       .flatMap(liveDegrees(_, Array.emptyLongArray))
       .map { case (_, d) => (d, 1L) }
@@ -510,18 +480,19 @@ object Affinity {
 
   /** One held partition of [[halfEdges]]: its distinct nodes sorted,
     * and per half-edge the index of its node in them and its neighbour. */
-  private type Half = (Array[Long], Array[Int], Array[Long])
+  private[operators] type Half = (Array[Long], Array[Int], Array[Long])
 
-  /** Both orientations of every `pairs` (part_a, part_b) edge as
-    * (node, neighbour) half-edges, shuffled once, hash-partitioned on
-    * node and held for the query as primitive arrays ([[Half]], 12
-    * bytes a half-edge). Held boxed tuples, sorted by
-    * `repartitionAndSortWithinPartitions`, cost ~64 bytes each and
-    * stayed live through the sort: at ×10 sf0.1 the build stage took
-    * 2.5 s with 1.8–2.9 s of task GC, against ~0.5 s and none for the
-    * arrays. A node's half-edges are all in one partition, so a
-    * per-node round ([[perNode]]) is one single-stage job with no
-    * shuffle.
+  /** Both orientations of every edge of `edges` — a frame of two
+    * columns, the endpoints, read as longs — as (node, neighbour)
+    * half-edges, shuffled once, hash-partitioned on node and held for
+    * the query as primitive arrays ([[Half]], 12 bytes a half-edge).
+    * Held boxed tuples, sorted by `repartitionAndSortWithinPartitions`,
+    * cost ~64 bytes each and stayed live through the sort: at ×10
+    * sf0.1 the build stage took 2.5 s with 1.8–2.9 s of task GC,
+    * against ~0.5 s and none for the arrays. A node's half-edges are
+    * all in one partition, so a per-node round ([[perNode]]) is one
+    * single-stage job with no shuffle. The graph rounds of [[kCore]],
+    * [[pageRank]] and [[NearDup.dedupClusters]] all run on it.
     *
     * Why an RDD and not a DataFrame: a DataFrame round of the same
     * shape (a persisted node repartition, an `isInCollection` filter,
@@ -532,15 +503,15 @@ object Affinity {
     * round; the DataFrame peel this replaced (degree aggregate, two
     * left-semi joins, a localCheckpoint and a count per round) took
     * ~200 ms per round. */
-  private def halfEdges(pairs: DataFrame): RDD[Half] =
-    graft.Caches.holdRdd(pairs
-      .select(col("part_a").cast(LongType), col("part_b").cast(LongType)).rdd
+  private[operators] def halfEdges(edges: DataFrame): RDD[Half] =
+    graft.Caches.holdRdd(edges.toDF("a", "b")
+      .select(col("a").cast(LongType), col("b").cast(LongType)).rdd
       .flatMap { r =>
         val (a, b) = (r.getLong(0), r.getLong(1))
         Iterator((a, b), (b, a))
       }
       .partitionBy(new HashPartitioner(
-        pairs.sparkSession.sessionState.conf.numShufflePartitions))
+        edges.sparkSession.sessionState.conf.numShufflePartitions))
       .mapPartitions { it =>
         val (us, vs) = (Array.newBuilder[Long], Array.newBuilder[Long])
         it.foreach { case (u, v) => us += u; vs += v }
@@ -550,11 +521,14 @@ object Affinity {
         Iterator((ids, u.map(java.util.Arrays.binarySearch(ids, _)), vs.result()))
       })
 
-  /** (node, Σ `w`(neighbour)) for every node of one held partition. */
-  private def perNode(half: Half)(w: Long => Long): Iterator[(Long, Long)] = {
+  /** (node, `w`(neighbour) folded by `combine` from `zero`) for every
+    * node of one held partition: a sum by default (degrees, rank
+    * inflow), a minimum for component labels. */
+  private[operators] def perNode(half: Half)(w: Long => Long,
+      combine: (Long, Long) => Long = _ + _, zero: Long = 0L): Iterator[(Long, Long)] = {
     val (ids, node, vs) = half
-    val acc = new Array[Long](ids.length)
-    node.indices.foreach(i => acc(node(i)) += w(vs(i)))
+    val acc = Array.fill(ids.length)(zero)
+    node.indices.foreach(i => acc(node(i)) = combine(acc(node(i)), w(vs(i))))
     ids.iterator.zip(acc.iterator)
   }
 

@@ -710,17 +710,13 @@ object Analytics {
       .groupBy(col("o_custkey")).agg(sum(col("cents")).as("rev_c"))
       .join(customer.select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
-    // rank via the [[Ranking.groupedRank]] two-phase discipline, not
-    // a row_number window partitioned by nation: nations are ~25
-    // values, so that window is 25 single-reducer sorts of the whole
-    // customer grain at 100 TB. The (digit count, two leading digits)
-    // sub-bucket of rev_c is integer-exact and monotone in the sort
-    // order; RankingSpec pins groupedRank ≡ the window row_number.
-    val s = col("rev_c").cast("string")
-    val bk = length(s) * 100 + substring(s, 1, 2).cast("int")
-    Ranking.groupedRank(rev, Seq("c_nationkey"), bk,
-        Seq(col("rev_c"), col("o_custkey")))
-      .withColumn("rk", col("rank"))
+    // a row_number window partitioned by nation: the two-phase
+    // [[Ranking.groupedRank]] form of it ran 6 more jobs and was slower
+    // warm at sf0.1 and at ×10 (CHANGES.md)
+    val w = Window.partitionBy(col("c_nationkey"))
+      .orderBy(col("rev_c"), col("o_custkey"))
+    rev
+      .withColumn("rk", row_number().over(w).cast("long"))
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_custs"), sum(col("rev_c")).as("total_c"),
         sum(col("rk") * col("rev_c")).as("iws"))
@@ -834,19 +830,15 @@ object Analytics {
       .groupBy(col("o_custkey")).agg(sum(col("cents")).as("rev_c"))
       .join(broadcast(customer.select(col("c_custkey"), col("c_mktsegment"))),
         col("o_custkey") === col("c_custkey"))
+    // an ntile window partitioned by segment: the two-phase
+    // [[Ranking.groupedRank]] + [[Ranking.ntileExpr]] form of it ran 7
+    // more jobs and was slower warm at sf0.1 and at ×10 (CHANGES.md)
+    val w = Window.partitionBy(col("c_mktsegment"))
+      .orderBy(col("rev_c"), col("o_custkey"))
     val wseg = Window.partitionBy(col("segment"))
     val wcum = Window.partitionBy(col("segment")).orderBy(col("decile"))
-    // deciles via the [[Ranking.groupedRank]] two-phase rank plus the
-    // closed-form exact [[Ranking.ntileExpr]], not an ntile window
-    // partitioned by segment: segments are 5 values, so that window
-    // is 5 single-reducer sorts of the whole customer grain at
-    // 100 TB (the qualityNormalize adjudication). wseg/wcum stay
-    // windows — they run on the ≤(segments×10)-row grid.
-    val s = col("rev_c").cast("string")
-    val bk = length(s) * 100 + substring(s, 1, 2).cast("int")
-    Ranking.groupedRank(rev, Seq("c_mktsegment"), bk,
-        Seq(col("rev_c"), col("o_custkey")))
-      .withColumn("decile", Ranking.ntileExpr("rank", "n_grp", 10).cast("long"))
+    rev
+      .withColumn("decile", ntile(10).over(w).cast("long"))
       .groupBy(col("c_mktsegment").as("segment"), col("decile"))
       .agg(count(lit(1)).as("n_custs"), sum(col("rev_c")).as("rev_cents"))
       .select(col("segment"), col("decile"), col("n_custs"),

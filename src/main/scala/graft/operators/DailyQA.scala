@@ -93,8 +93,8 @@ object DailyQA {
     * here each input is aggregated ONCE by a single GROUPING SETS
     * pass — one set per dimension, `date` (and the meta column) kept
     * in every set so the trailing-period shapes are date-filters over
-    * the pre-aggregated cube — and every (dim, shape) block is a tiny
-    * re-aggregation of that persisted cube. At scale this means ONE
+    * the pre-aggregated cube — and every (dim, shape) block is a label
+    * group of one re-aggregation of that cube. At scale this means ONE
     * shuffle of each fact input (Expand multiplies rows by the set
     * count, but map-side partial aggregation collapses them before
     * the exchange, and per-set key cardinality is Σ|dim_i|×|dates| —
@@ -115,16 +115,16 @@ object DailyQA {
       all.zipWithIndex.collect { case (c, i) if !kept.contains(c) =>
         1L << (all.size - 1 - i) }.sum
 
-    // localCheckpoint, not persist: the cube is materialized ONCE and
-    // every block scans the resulting (tiny) RDD. A persisted cube
-    // does not survive union-branch deduplication — DeduplicateRelations
-    // rewrites each branch's attribute ids and the rewritten
-    // grouping-sets subtree no longer cache-matches canonically
-    // (measured: 31 raw re-aggregations, 2 cache hits), so the persist
-    // route silently recomputes the Expand per block. The checkpoint
-    // trades lineage (an executor loss mid-query fails the query, the
-    // caller's retry recomputes) for a guaranteed single evaluation —
-    // the right trade for a cube that is Σ|dim_i|×|dates|×|confs| rows.
+    // The log cube has two readers — the trailing-period max-date
+    // bound and `expanded` (the bound also feeds the ad side's
+    // `expanded`) — so it is local-checkpointed: its Expand and input
+    // scan run once, in the checkpoint's own job, and every reader
+    // scans the (tiny) cube RDD. The checkpoint trades lineage (an
+    // executor loss mid-query fails the query, the caller's retry
+    // recomputes) for a guaranteed single evaluation — the right
+    // trade for a cube that is Σ|dim_i|×|dates|×|confs| rows. The ad
+    // cube has one reader, so it stays in the plan: its Expand runs
+    // inside the query, with no materialization job of its own.
     val logCols: Seq[String] = dims ++ Seq("date") ++ metaCol.toSeq
     val logSets: Seq[Seq[String]] =
       dims.map(d => Seq(d, "date") ++ metaCol.toSeq) :+
@@ -137,8 +137,7 @@ object DailyQA {
     val adSets: Seq[Seq[String]] = dims.map(d => Seq(d, "date")) :+ Seq("date")
     val adF = ad.map(_
       .groupingSets(adSets.map(_.map(col)), adCols.map(col): _*)
-      .agg(count(lit(1)).as("cnt"), grouping_id().as("gid"))
-      .transform(graft.Caches.checkpoint))
+      .agg(count(lit(1)).as("cnt"), grouping_id().as("gid")))
     val bounds = logF
       .where(col("gid") === gidOf(logCols, Seq("date") ++ metaCol.toSeq))
       .groupBy().agg(max(col("date")).as("max_d"))

@@ -91,8 +91,9 @@ object Entity {
     * address = one m² blowup). Connected components over star edges
     * are identical to components over the full pair graph (every
     * member reaches every other through the hub). CC itself is
-    * [[NearDup.dedupClusters]]' iterative min-label machinery —
-    * checkpointed rounds, fail-loud past maxIter.
+    * [[NearDup.dedupClusters]]' iterative min-label machinery — one
+    * single-stage job per round over held half-edges, fail-loud past
+    * maxIter.
     *
     * `keys` are (kind, expression) pairs; NULL key values never link
     * (an absent identifier is not a shared identifier). */

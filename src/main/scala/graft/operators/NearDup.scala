@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.TextFunctions._
 
 /** Near-duplicate detection over documents: exact n-gram Jaccard via
@@ -12,7 +13,7 @@ import graft.functions.TextFunctions._
   *
   * Caching contract: the multi-consumer operators hold (or
   * checkpoint) intermediate frames — minhash/simhash signature frames,
-  * the jaccard shingle frame, per-round CC labels — through
+  * the jaccard shingle frame, the CC half-edges — through
   * [[graft.Caches]] for the duration of their own query; the returned
   * frames are lazy, so the release is [[graft.Caches.endQuery]] after
   * the terminal action, which [[graft.Runner]] calls per query.
@@ -1166,75 +1167,51 @@ object NearDup {
     * one-hop summary only looks at direct partners (A~B, B~C puts A
     * and C in different groups there; here they share a cluster).
     *
-    * Each iteration is one join + one min-aggregate on the label
-    * frame, localCheckpointed so iteration i's plan does not
-    * re-execute 0..i-1, with a convergence count per round — the
-    * standard distributed CC shape (Pregel-style, linear per round,
-    * rounds ≈ graph diameter; near-dup clusters are near-cliques so
-    * it converges in 1–2 rounds). Output: (doc_id, rep_id,
-    * cluster_size), cluster_size ≥ 1. */
+    * Shape: the pairs with both ends in `docs` become the held
+    * [[Affinity.halfEdges]] — the same build and per-node fold as
+    * [[Affinity.kCore]] and [[Affinity.pageRank]] — and the labels a
+    * driver `Long` array over the sorted edge-touched doc ids (a doc
+    * with no verified pair never changes its label, so only the
+    * near-dup sliver of the corpus iterates). Each synchronous round
+    * is one single-stage job: broadcast the labels, collect every
+    * node's minimum neighbour label, lower each label to it. Rounds ≈
+    * graph diameter; near-dup clusters are near-cliques, so it
+    * converges in 1–2. Singletons are appended after convergence as
+    * (doc_id, doc_id, 1), which is exactly what the fixpoint assigns
+    * them; an edge with a NULL end or an end outside `docs` links
+    * nothing. Output: (doc_id, rep_id, cluster_size), cluster_size ≥ 1. */
   def dedupClusters(docs: DataFrame, edges: DataFrame,
                     maxIter: Int = 20): DataFrame = {
-    val sc = docs.sparkSession.sparkContext
-    // reliable (HDFS-file) checkpoints when the session has a
-    // checkpoint dir — survives executor loss on a long cluster job;
-    // localCheckpoint otherwise (executor-local blocks: an executor
-    // loss mid-iteration fails the job and the caller retries — the
-    // documented single-job tradeoff). Each round releases the
-    // previous round's local checkpoint once the next round is
-    // materialized — memory stays O(1) in rounds, not O(rounds).
-    val reliable = sc.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else graft.Caches.checkpoint(df)
-
+    val spark = docs.sparkSession
     val ids = docs.select(col("doc_id").cast("long"))
-    // both orientations from ONE in-task explode: a unionAll of the
-    // edge plan with its own reversal executes the upstream pair
-    // pipeline TWICE (the LSH verify joins are the expensive part —
-    // the internal signature persist only dedups the scan below
-    // them); the explode duplicates each row where it already is
-    val sym = ckpt(edges
+    def inDocs(c: String) = ids.select(col("doc_id").as(c))
+    val half = Affinity.halfEdges(edges
       .select(col("d1").cast("long").as("a"), col("d2").cast("long").as("b"))
-      .select(explode(array(
-        struct(col("a"), col("b")),
-        struct(col("b").as("a"), col("a").as("b")))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b")))
-    // only EDGE-TOUCHED vertices iterate: a doc with no verified pair
-    // can never change its label, so the propagation loop (join +
-    // min-agg + checkpoint + convergence count, × rounds) runs on the
-    // near-dup subset instead of the corpus — at 100 TB the dup
-    // family is a sliver of the corpus, and the old corpus-grain
-    // label frame paid every round on 100% of it. Singletons are
-    // appended after convergence as (doc_id, doc_id, 1), which is
-    // exactly what the fixpoint assigns them. The semi-join keeps the
-    // old semantics for ill-formed edge lists (an endpoint outside
-    // `docs` never gets a label, so it cannot propagate its id).
-    val verts = ids.join(
-      sym.select(col("a").as("doc_id")).distinct(), Seq("doc_id"),
-      "left_semi")
-    var labels = ckpt(verts.select(col("doc_id"), col("doc_id").as("rep")))
-    def step(cur: DataFrame): (DataFrame, Long) = {
-      val nbrMin = sym
-        .join(cur.select(col("doc_id").as("a"), col("rep").as("nrep")), "a")
-        .groupBy(col("b").as("doc_id"))
-        .agg(min(col("nrep")).as("nbr_min"))
-      val next = ckpt(cur
-        .join(nbrMin, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("rep")))
-      val changed = next.as("n")
-        .join(cur.select(col("doc_id"), col("rep").as("old")), "doc_id")
-        .where(col("rep") =!= col("old"))
-        .count()
+      .join(inDocs("a"), Seq("a"), "left_semi")
+      .join(inDocs("b"), Seq("b"), "left_semi"))
+    val nodes = half.flatMap(_._1.iterator).collect().sorted
+    // one round: (next labels, how many labels it lowered)
+    def step(labels: Array[Long]): (Array[Long], Int) = {
+      val bc = spark.sparkContext.broadcast((nodes, labels))
+      val nbrMin = half.flatMap { p =>
+        val (ns, ls) = bc.value
+        Affinity.perNode(p)(v => ls(java.util.Arrays.binarySearch(ns, v)),
+          _ min _, Long.MaxValue)
+      }.collect()
+      bc.destroy()
+      val next = labels.clone()
+      var changed = 0
+      nbrMin.foreach { case (u, m) =>
+        val i = java.util.Arrays.binarySearch(nodes, u)
+        if (m < next(i)) { next(i) = m; changed += 1 }
+      }
       (next, changed)
     }
+    var labels = nodes
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       val (next, changed) = step(labels)
-      // next is materialized and the changed-count no longer reads the
-      // previous round — its blocks can go
-      graft.Caches.release(labels)
       labels = next
       converged = changed == 0
       iter += 1
@@ -1247,22 +1224,24 @@ object NearDup {
     // labels gets one extra verification step before being declared
     // unconverged (a diameter-of-exactly-maxIter component is complete
     // even though the loop never observed a quiet round).
-    if (!converged) {
-      val (verify, stillChanging) = step(labels)
-      graft.Caches.release(verify)
-      if (stillChanging > 0)
-        throw new GraftDataException(
-          s"dedupClusters did not converge within $maxIter iterations — " +
-            "a component has diameter exceeding the budget; raise maxIter")
+    if (!converged && step(labels)._2 > 0)
+      throw new GraftDataException(
+        s"dedupClusters did not converge within $maxIter iterations — " +
+          "a component has diameter exceeding the budget; raise maxIter")
+    // not destroyed: the returned frame reads it when it executes
+    val fin = spark.sparkContext.broadcast((nodes, labels))
+    val rows = half.flatMap { case (ns, _, _) =>
+      val (all, ls) = fin.value
+      ns.iterator.map(u => Row(u, ls(java.util.Arrays.binarySearch(all, u))))
     }
-    // the result plan only reads the final label checkpoint; the edge
-    // frame served its last read in the loop above
-    graft.Caches.release(sym)
-    val sizes = labels.groupBy(col("rep")).agg(count(lit(1)).as("cluster_size"))
-    val clustered = labels.join(sizes, "rep")
+    val labelled = spark.createDataFrame(rows, StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("rep", LongType, nullable = false))))
+    val sizes = labelled.groupBy(col("rep")).agg(count(lit(1)).as("cluster_size"))
+    val clustered = labelled.join(sizes, "rep")
       .select(col("doc_id"), col("rep").as("rep_id"), col("cluster_size"))
     val singletons = ids
-      .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .join(labelled.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("rep_id"),
         lit(1L).as("cluster_size"))
     clustered.unionByName(singletons).orderBy(col("doc_id"))

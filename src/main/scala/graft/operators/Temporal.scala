@@ -243,6 +243,18 @@ object Temporal {
       .orderBy(col("antecedent"), col("consequent"))
   }
 
+  /** The purchases the attribution family credits: (user_id, start =
+    * ts − `windowDays`, end = ts, purchase_id, integer cents), held
+    * for the query — each model's pair leg and its unattributed anti
+    * leg both read it. */
+  private def purchaseWindows(events: DataFrame, windowDays: Int): DataFrame =
+    events.where(col("event_type") === "purchase")
+      .select(col("user_id"),
+        (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
+        col("ts").as("end"), col("event_id").as("purchase_id"),
+        round(col("value") * 100).cast("bigint").as("cents"))
+      .transform(graft.Caches.hold)
+
   /** Equal-split multi-touch attribution: every purchase's value is
     * divided equally over the user's exposure events in the trailing
     * `windowDays` window strictly before it, credited to the
@@ -262,14 +274,7 @@ object Temporal {
     * unbounded interval cross product); everything after the pair
     * count is (purchase × channel)-sized. */
   def attribution(events: DataFrame, windowDays: Int): DataFrame = {
-    // persisted: the pair leg and the unattributed anti leg both read
-    // it (caller owns the lifetime, as for the other shared frames)
-    val purchases = events.where(col("event_type") === "purchase")
-      .select(col("user_id"),
-        (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
-        col("ts").as("end"), col("event_id").as("purchase_id"),
-        round(col("value") * 100).cast("bigint").as("cents"))
-      .transform(graft.Caches.hold)
+    val purchases = purchaseWindows(events, windowDays)
     val exposures = events.where(col("event_type") =!= "purchase")
       .select(col("user_id"), col("ts"), col("event_type").as("channel"))
     val pc = rangeJoin(purchases, exposures, "user_id", 86400L)
@@ -308,12 +313,7 @@ object Temporal {
     * is the same day-binned [[rangeJoin]]; everything after the pair
     * stage is (purchase × channel)-sized. */
   def attributionDecay(events: DataFrame, windowDays: Int): DataFrame = {
-    val purchases = events.where(col("event_type") === "purchase")
-      .select(col("user_id"),
-        (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
-        col("ts").as("end"), col("event_id").as("purchase_id"),
-        round(col("value") * 100).cast("bigint").as("cents"))
-      .transform(graft.Caches.hold)
+    val purchases = purchaseWindows(events, windowDays)
     val exposures = events.where(col("event_type") =!= "purchase")
       .select(col("user_id"), col("ts"), col("event_type").as("channel"))
     val pc = rangeJoin(purchases, exposures, "user_id", 86400L)
@@ -369,12 +369,7 @@ object Temporal {
     * frame is persisted: the credit legs and the `(none)` anti-join
     * both read it. */
   def attributionFirstLast(events: DataFrame, windowDays: Int): DataFrame = {
-    val purchases = events.where(col("event_type") === "purchase")
-      .select(col("user_id"),
-        (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
-        col("ts").as("end"), col("event_id").as("purchase_id"),
-        round(col("value") * 100).cast("bigint").as("cents"))
-      .transform(graft.Caches.hold)
+    val purchases = purchaseWindows(events, windowDays)
     val exposures = events.where(col("event_type") =!= "purchase")
       .select(col("user_id"), col("ts"), col("event_id").as("touch_id"),
         col("event_type").as("channel"))
@@ -853,12 +848,7 @@ object Temporal {
     * channel sums are exact in any summation order. Unattributed
     * purchases land in `(none)` at full value. */
   def attributionUShaped(events: DataFrame, windowDays: Int): DataFrame = {
-    val purchases = events.where(col("event_type") === "purchase")
-      .select(col("user_id"),
-        (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
-        col("ts").as("end"), col("event_id").as("purchase_id"),
-        round(col("value") * 100).cast("bigint").as("cents"))
-      .transform(graft.Caches.hold)
+    val purchases = purchaseWindows(events, windowDays)
     val exposures = events.where(col("event_type") =!= "purchase")
       .select(col("user_id"), col("ts"), col("event_id").as("touch_id"),
         col("event_type").as("channel"))

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Affinity
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 class AffinitySpec extends SparkSpec {
   import spark.implicits._
@@ -17,10 +18,16 @@ class AffinitySpec extends SparkSpec {
     (3L, 10L), (3L, 10L), (3L, 40L),
     (4L, 50L))
 
-  test("coPurchasePairs counts distinct-order co-memberships with both counts") {
-    val out = Affinity.coPurchasePairs(baskets).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).sortBy(x => (x._1, x._2))
+  test("coPairs and itemSimilarity count distinct-order co-memberships with both counts") {
+    val pairs = Affinity.coPairs(baskets).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(x => (x._1, x._2))
+    val counts = Affinity.itemSimilarity(baskets, topN = 10).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(3), r.getLong(4))).toMap
+    val out = pairs.map { case (a, b, cooc) =>
+      val (na, nb) = counts((a, b))
+      assert(counts((b, a)) == ((nb, na)), s"($b, $a) does not mirror ($a, $b)")
+      (a, b, na, nb, cooc)
+    }
     // (part_a, part_b, n_a, n_b, cooc); order counts 10→3, 20→2,
     // 30/40→1; the duplicated (3, 10) line adds no pair
     assert(out.toSeq == Seq(
@@ -28,6 +35,7 @@ class AffinitySpec extends SparkSpec {
       (10L, 30L, 3L, 1L, 1L),
       (10L, 40L, 3L, 1L, 1L),
       (20L, 30L, 2L, 1L, 1L)))
+    assert(counts.size == 2 * out.length)
   }
 
   test("itemSimilarity ranks by cosine with id-asc ties at the cut") {
@@ -169,4 +177,32 @@ class AffinitySpec extends SparkSpec {
     assert(r.getDouble(2) == -1.0)
     Affinity.clearCache()
   }
+}
+
+object AffinitySpec {
+
+  /** The co-purchase pair build [[Affinity.coPairs]] replaced:
+    * undirected pairs with both sides' order counts, (part_a < part_b,
+    * n_a, n_b, cooc), the counts attached before the per-order set
+    * aggregation; memoized for the run. */
+  def coPurchasePairs(lineitem: DataFrame): DataFrame =
+    Caches.memo(lineitem, "affinity.coPurchasePairs") {
+      val op = lineitem
+        .select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
+        .distinct()
+        .transform(Caches.hold)
+      val cnt = op.groupBy(col("part")).agg(count(lit(1)).as("cnt"))
+      val sets = op.join(cnt, "part")
+        .groupBy(col("okey"))
+        .agg(sort_array(collect_set(struct(col("part"), col("cnt")))).as("ps"))
+      val res = sets.where(size(col("ps")) >= 2)
+        .select(explode(call_function("graft_pairs", col("ps"))).as("p"))
+        .groupBy(col("p.a.part").as("part_a"), col("p.b.part").as("part_b"),
+          col("p.a.cnt").as("n_a"), col("p.b.cnt").as("n_b"))
+        .agg(count(lit(1)).as("cooc"))
+        .transform(Caches.hold)
+      res.count()
+      Caches.release(op)
+      res
+    }
 }

@@ -473,7 +473,8 @@ class EdgeCaseSpec extends SparkSpec {
   test("affinity family tolerates empty and singleton order sets") {
     import graft.operators.Affinity
     val empty = Seq.empty[(Long, Long)].toDF("l_orderkey", "l_partkey")
-    assert(Affinity.coPurchasePairs(empty).collect().isEmpty)
+    assert(Affinity.coPairs(empty).collect().isEmpty)
+    assert(Affinity.itemSimilarity(empty).collect().isEmpty)
     assert(Affinity.pageRank(empty).collect().isEmpty)
     assert(Affinity.graphStats(empty).collect().isEmpty)
     // singleton orders yield no pairs -> no graph, empty everywhere

@@ -112,7 +112,7 @@ object KCoreSpec {
     * result and the number of rounds run. */
   def reference(lineitem: DataFrame, minSupport: Int,
                 kFloor: Int = 2): (DataFrame, Int) = {
-    val pairs0 = Affinity.coPurchasePairs(lineitem)
+    val pairs0 = AffinitySpec.coPurchasePairs(lineitem)
       .where(col("cooc") >= minSupport)
       .select(col("part_a"), col("part_b"))
     val st = pairs0

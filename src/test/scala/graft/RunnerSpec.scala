@@ -67,14 +67,16 @@ class RunnerSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-runner-cache").toString
     val sfDir = "/root/testdata/sf0.001"
     // one key per way a query persists: a held frame, local
-    // checkpoints, a per-round release, a raw RDD persist, a memo —
-    // and whether the key leaves a run-scoped memo behind (q_k_core
-    // holds its half-edge RDD over the memoized co-purchase pairs)
+    // checkpoints, an early release, a raw RDD persist, a memo — and
+    // whether the key leaves a run-scoped memo behind (q_k_core holds
+    // its half-edge RDD over the memoized co-purchase pairs;
+    // q_dedup_clusters holds its half-edge RDD only)
     val forms = Seq(
       ("q_minhash_dedup", "hold", false),
       ("q_k_core", "rdd + memo", true),
       ("q_qa_multigroup", "checkpoint", false),
-      ("q_dedup_clusters", "release", false),
+      ("q_dedup_clusters", "rdd", false),
+      ("q_shingle_stats", "release", false),
       ("q_value_mapping", "rdd", false),
       ("q_span_dedup", "memo", true))
     Caches.clear()
@@ -101,6 +103,21 @@ class RunnerSpec extends SparkSpec {
     }
     assert(hostFrame.storageLevel.useMemory, "host cache was clobbered")
     hostFrame.unpersist()
+  }
+
+  test("Verify releases each dumped query's frames after its write") {
+    val out = Files.createTempDirectory("graft-verify-cache").toString
+    Caches.clear()
+    val before = persistedIds
+    Verify.dump(spark, sf("events"), out,
+      Seq("q_minhash_dedup", "q_qa_multigroup"))
+    assert(Files.exists(Paths.get(out, "q_qa_multigroup", "_SUCCESS")))
+    // both keys hold or checkpoint frames while they run; only the
+    // run-scoped memos may outlive their dump
+    assert(persistedIds == before ++ trackedBufferIds,
+      s"left behind: ${persistedIds -- before -- trackedBufferIds}")
+    Caches.clear()
+    assert(persistedIds == before)
   }
 
   test("runOne removes its CacheManager entries, not just the RDDs") {
