@@ -236,7 +236,7 @@ object Bench {
     val spark = GraftSession.local()
     // warm the JVM/codegen once on the smallest table so the first
     // timed query doesn't pay one-time session costs
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    Tables.region(spark, sfDir).count()
     // Fail loud: a crashing query records -1 (never a plausible time),
     // is named in the errors list, and fails the whole bench run — a
     // silently-swallowed failure would read as a very fast success and

@@ -6,9 +6,10 @@ import org.apache.spark.sql.DataFrame
 /** Scratch dev main — per-query stage-metric decomposition, not part
   * of the library. Usage: DevProbe <query names...> with
   * SPARK_GRAFT_SF_DIR; each query runs twice (cold + warm), each run
-  * with its wall time, compiled code units and Spark jobs (eager
-  * construction jobs included), the warm one with per-stage
-  * wall/cpu/gc/spill/shuffle breakdowns. */
+  * with its wall time, compiled code units, Spark jobs (eager
+  * construction jobs included) and, split out, the construction time
+  * and the eager jobs run while the frame was built; the warm one
+  * with per-stage wall/cpu/gc/spill/shuffle breakdowns. */
 object DevProbe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
@@ -43,6 +44,12 @@ object DevProbe {
       SparkEntry.clearSessionMemos()
       sc.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
+    // the listener bus delivers job events asynchronously; drain it
+    // (Spark-private, so by reflection) before reading the count
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
     def time1(label: String, detail: Boolean)(f: => DataFrame): Unit = {
       stages.clear()
       jobs.set(0)
@@ -50,15 +57,18 @@ object DevProbe {
       // still compiles names a plan whose generated source changes
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // the listener bus delivers job events asynchronously; drain it
-      // (Spark-private, so by reflection) before reading the count
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      val df = f
+      val construct = (System.nanoTime() - t0) / 1e9
+      // jobs run while the frame was built; the drain is off the clock
+      drain()
+      val eager = jobs.get
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val wall = construct + (System.nanoTime() - t1) / 1e9
+      drain()
       println(f"[probe] $label $wall%.2f s " +
         s"compiled=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0} " +
-        s"jobs=${jobs.get}")
+        f"jobs=${jobs.get} construct=$construct%.2f eager=$eager")
       if (detail) stages.forEach(s => println("[probe]   " + s))
       clear()
     }

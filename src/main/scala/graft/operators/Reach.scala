@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Reach counting: projection-weighted household counts per dimension
   * value with a `unique` flag (household touched exactly one value of
@@ -12,25 +13,19 @@ import org.apache.spark.sql.functions._
   * (`add_uniq_col` + `reach_count`).
   *
   * Spark-first notes: the reference computes the per-household row
-  * count with a groupBy + re-join (two shuffles on the same key); here
-  * a single window `count over (partition by household)` does it in
-  * one shuffle, and the whole result stays a distributed DataFrame
-  * (no `toPandas`). At 100 TB the only wide exchanges are the
-  * hash-partition on `household_id` (natural key of the fact table)
-  * and the final small groupBy on the dimension values.
+  * count with a groupBy + re-join (two shuffles on the same key), and
+  * runs one such job per dimension (hh_reach.py:48-61 + main:68-85).
+  * Here every dimension goes through ONE pass over (household,
+  * dimension, value-as-string) cells: one dedup, one `count over
+  * (partition by household, dimension)` window for the flag, one
+  * (dimension, value) aggregate and one sort, so a multi-dimension
+  * table scans its input once and runs the jobs of one dimension. The
+  * single-dimension [[reachCount]] feeds the same pass a plain
+  * projection. At 100 TB the wide exchanges are the dedup and flag
+  * partitions on the household key (natural key of the fact table)
+  * and the small (dimension, value) aggregate.
   */
 object Reach {
-
-  /** Distinct (cntCol, dim) pairs plus `unique` = 1.0 if the cntCol
-    * entity has exactly one distinct dim value, else 0.0.
-    * Mirrors hh_reach.add_uniq_col (hh_reach.py:7-13). */
-  def addUniqCol(df: DataFrame, cntCol: String, dim: String): DataFrame = {
-    val dd = df.na.drop(Seq(dim)).dropDuplicates(cntCol, dim)
-    val w = Window.partitionBy(cntCol)
-    dd.withColumn(
-      "unique",
-      when(count(lit(1)).over(w) > 1, lit(0.0)).otherwise(lit(1.0)))
-  }
 
   /** Projection-weighted reach per dimension value:
     * (dimension, value, count, unique, duplicates) ordered by count
@@ -42,28 +37,67 @@ object Reach {
       cntCol: String,
       dimOpt: Option[String],
       projOpt: Option[String]): DataFrame = {
-    val (proj, df0) = projOpt match {
-      case Some(p) => (p, df)
-      case None => ("projfact", df.withColumn("projfact", lit(1.0)))
+    val (dim, value) = dimOpt match {
+      case Some(d) => (d, dimValue(df, d))
+      case None => ("all", lit(""))
     }
-    val (dim, df1) = dimOpt match {
-      case Some(d) => (d, df0.na.drop(Seq(d)))
-      case None => ("all", df0.withColumn("all", lit("")))
+    reach(df.select(col(cntCol).as("rc_cnt"), projCol(projOpt),
+      lit(dim).as("dimension"), value.as("value")))
+  }
+
+  /** Multi-dimension reach table: [[reachCount]] of every dimension,
+    * ordered by (dimension, count desc, value), in one pass. Each input
+    * row becomes one (dimension, value) cell per dimension; a household
+    * is `unique` in a dimension when it has one distinct value there,
+    * so the flag window partitions by (household, dimension). */
+  def reachByDimensions(df: DataFrame, cntCol: String, dims: Seq[String],
+                        proj: Option[String]): DataFrame = {
+    require(dims.nonEmpty, "reachByDimensions needs at least one dimension")
+    val cells = explode(array(dims.map(d =>
+      struct(lit(d).as("dimension"), dimValue(df, d).as("value"))): _*))
+    reach(df.select(col(cntCol).as("rc_cnt"), projCol(proj), cells.as("rc_cell"))
+      .select(col("rc_cnt"), col("rc_proj"),
+        col("rc_cell.dimension").as("dimension"), col("rc_cell.value").as("value")))
+  }
+
+  /** The projection weight, 1.0 when there is none. */
+  private def projCol(projOpt: Option[String]): Column =
+    projOpt.fold(lit(1.0))(col).as("rc_proj")
+
+  /** Dimension `d` as the string the table reports. A NULL value is no
+    * cell (the reference's `dropna` on the dimension), and so is a
+    * floating-point NaN, which `dropna` drops too. Floating-point -0.0
+    * becomes 0.0 before the cast: grouped natively it is one key with
+    * 0.0, but its string is "-0.0". Types whose string form is not
+    * one-to-one (binary, nested) are rejected by name. */
+  private def dimValue(df: DataFrame, d: String): Column = {
+    val c = col(d)
+    df.select(c).schema.head.dataType match {
+      case t @ (FloatType | DoubleType) =>
+        val zero = lit(0).cast(t)
+        when(!isnan(c), when(c === zero, zero).otherwise(c)).cast("string")
+      case _: StringType | BooleanType | ByteType | ShortType | IntegerType |
+           LongType | _: DecimalType | DateType | TimestampType |
+           TimestampNTZType => c.cast("string")
+      case t => throw new IllegalArgumentException(
+        s"reach dimension $d has type ${t.simpleString}; " +
+          "only atomic non-binary types have one string per value")
     }
-    val uniq = addUniqCol(df1, cntCol, dim)
-    uniq
-      .groupBy(col(dim))
+  }
+
+  /** The reach pass over (rc_cnt, rc_proj, dimension, value) cells. */
+  private def reach(cells: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("rc_cnt"), col("dimension"))
+    cells.where(col("value").isNotNull)
+      .dropDuplicates("rc_cnt", "dimension", "value")
+      .withColumn("rc_unique",
+        when(count(lit(1)).over(w) > 1, lit(0.0)).otherwise(lit(1.0)))
+      .groupBy(col("dimension"), col("value"))
       .agg(
-        round(sum(col(proj))).as("count"),
-        round(sum(col("unique") * col(proj))).as("unique"))
+        round(sum(col("rc_proj"))).as("count"),
+        round(sum(col("rc_unique") * col("rc_proj"))).as("unique"))
       .withColumn("duplicates", col("count") - col("unique"))
-      .select(
-        lit(dim).as("dimension"),
-        col(dim).cast("string").as("value"),
-        col("count"),
-        col("unique"),
-        col("duplicates"))
-      .orderBy(desc("count"), asc("value"))
+      .orderBy(asc("dimension"), desc("count"), asc("value"))
   }
 
   /** Delete-a-group jackknife variance of the projection-weighted
@@ -154,17 +188,6 @@ object Reach {
       .orderBy(col(dim))
   }
 
-  /** Multi-dimension reach table: one reach frame per dimension,
-    * unioned. The reference assembles this with a driver-side pandas
-    * append loop over dimensions (hh_reach.py:48-61 + main:68-85);
-    * here it is a single distributed union plan — every dimension's
-    * aggregation runs concurrently and nothing collects. */
-  def reachByDimensions(df: DataFrame, cntCol: String, dims: Seq[String],
-                        proj: Option[String]): DataFrame =
-    dims.map(d => reachCount(df, cntCol, Some(d), proj))
-      .reduce(_.unionAll(_))
-      .orderBy(asc("dimension"), desc("count"), asc("value"))
-
   /** Hierarchical exposure totals in ONE pass: exposures, projected
     * sum and exact distinct-household reach at every prefix level of
     * `dims` (full detail → per-dim1 → grand total) via ROLLUP. The
@@ -198,7 +221,7 @@ object Reach {
     * while a sketch is a fixed ~KB state with map-side combine; the
     * mergeability is what makes incremental / cross-partition reach
     * roll-ups cheap. No DuckDB oracle (sketch internals are
-    * engine-specific — rows-only gate); ReachSpec bounds the estimate
+    * engine-specific — rows-only gate); TemporalSpec bounds the estimate
     * against the exact count instead (lgK=12 → ~1.6% rsd). */
   def approxReach(media: DataFrame, dim: String): DataFrame = {
     val perValue = media

@@ -122,28 +122,21 @@ object TextAnalysis {
     * engines, so they must not sit inside a rank window a hash gate
     * replays.
     *
-    * Shape: one quality scan, then the [[Ranking.groupedRank]]
-    * two-phase rank — NOT an ntile window partitioned by source: a
-    * source is a handful of values, so that window is a few
-    * single-reducer sorts of the whole corpus at 100 TB. The score is
-    * a product of ratios in [0,1] by construction, so 256 fixed-width
-    * score sub-buckets are monotone in the sort order; per-(source,
-    * bucket) row_number + the broadcast grid prefix offset IS the
-    * per-source rank, and [[Ranking.ntileExpr]] replays ntile's exact
-    * remainder-first banding from it — output bit-identical to the
-    * window form the oracle runs. Final grid aggregate over
+    * Shape: one quality scan, then an ntile window partitioned by
+    * source, the form the oracle runs. The two-phase
+    * [[Ranking.groupedRank]] + [[Ranking.ntileExpr]] form of it ran 10
+    * jobs against 4 and was slower warm at sf0.1 and at ×10 (CHANGES.md),
+    * as it was for q_gini and q_ltv_deciles. Final grid aggregate over
     * sources×deciles cells; min/max per cell are order-independent,
     * so the doubles hash-match; a mean would not. */
   def qualityNormalize(docs: DataFrame, deciles: Int = 10): DataFrame = {
     require(deciles >= 2, s"need at least 2 bands: $deciles")
-    val B = 256
     val nn = qualityFrame(docs, Seq("source"))
       .where(col("quality_score").isNotNull)
       .select(col("source"), col("doc_id"), col("quality_score"))
-    Ranking.groupedRank(nn, Seq("source"),
-        least(floor(col("quality_score") * B), lit(B - 1)).cast("int"),
-        Seq(col("quality_score"), col("doc_id")))
-      .withColumn("decile", Ranking.ntileExpr("rank", "n_grp", deciles))
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("quality_score"), col("doc_id"))
+    nn.withColumn("decile", ntile(deciles).over(w))
       .groupBy(col("source"), col("decile"))
       .agg(count(lit(1)).as("n_docs"),
         min(col("quality_score")).as("q_lo"),

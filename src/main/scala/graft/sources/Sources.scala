@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object Sources {
 
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
 
   def csv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
     spark.read.option("header", header.toString).option("inferSchema", "true").csv(path)

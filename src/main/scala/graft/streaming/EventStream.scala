@@ -32,7 +32,7 @@ object EventStream extends org.apache.spark.internal.Logging {
     * arrives as raw nanos under the nanosAsLong session flag and is
     * converted exactly like Tables.events. */
   def fromParquetDir(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = graft.Tables.parquet(spark, dir).schema
     val raw = spark.readStream.schema(schema).parquet(dir)
     if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

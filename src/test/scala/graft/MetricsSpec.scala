@@ -71,7 +71,7 @@ class MetricsSpec extends SparkSpec {
     assert(salted == Map("a" -> 6.0, "b" -> 4.0))
   }
 
-  test("multi-dimension reach unions per-dimension frames") {
+  test("multi-dimension reach reports every dimension in one table") {
     val r = Reach.reachByDimensions(
       media.withColumn("week_s", col("week").cast("string")),
       "household_id", Seq("etype", "week_s"), Some("projfact"))

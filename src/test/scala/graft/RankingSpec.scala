@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.Ranking
 
 /** The two-phase rank machinery must be BIT-identical to the window
-  * forms it replaces — q_quality_norm / q_user_concentration keep
-  * their ntile-replay oracles, so any divergence here is a silent
+  * forms it replaces — q_user_concentration keeps its ntile-replay
+  * oracle, so any divergence here is a silent
   * correctness bug, not a perf regression. Sizes straddle every
   * ntile remainder case (n % k = 0, < k, n < k). */
 class RankingSpec extends SparkSpec {

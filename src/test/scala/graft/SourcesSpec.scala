@@ -30,6 +30,20 @@ class SourcesSpec extends SparkSpec {
     assert(scan.contains("PartitionFilters") && scan.contains("date#"), scan)
   }
 
+  test("a hive-partitioned read through the schema resolver equals a plain read") {
+    val df = Seq((1L, "2024-01-01", 3, 1.0), (2L, "2024-01-02", 4, 2.0),
+      (3L, "2024-01-02", 3, 3.0)).toDF("id", "date", "hour", "v")
+    Sources.writePartitioned(df, s"$tmp/hive", Seq("date", "hour"))
+    val plain = spark.read.parquet(s"$tmp/hive")
+    // twice: the second read takes the resolver's remembered schema
+    (1 to 2).foreach { i =>
+      val read = Sources.parquet(spark, s"$tmp/hive")
+      assert(read.schema == plain.schema, s"read $i")
+      assert(read.orderBy("id").collect().toSeq == plain.orderBy("id").collect().toSeq,
+        s"read $i")
+    }
+  }
+
   test("jdbc round-trip against embedded Derby") {
     val url = "jdbc:derby:memory:graftdb;create=true"
     val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
