@@ -132,7 +132,8 @@ object Bench {
       "reach/projection legs"),
     "q_qa_hourshift" -> ("parameter variant of the benched q_qa_daily " +
       "(hour shift + trailing period)"),
-    "q_reach_multi" -> "union-of-per-dim assembly of the benched q_reach_by_type")
+    "q_reach_multi" -> ("multi-dimension variant of the benched " +
+      "q_reach_by_type (one stacked reach pass)"))
 
   /** Timed runs per query — the min is recorded. One run is hostage to
     * neighbor load on a shared box (BENCH_r02 recorded 110 s for an

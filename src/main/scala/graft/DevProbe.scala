@@ -36,13 +36,11 @@ object DevProbe {
           s.name.take(60))
       }
     })
+    // same trial hygiene as Bench.runOnce: the warm run must pay
+    // its own ANN training, or the probe measures the memo
     def clear(): Unit = {
-      spark.catalog.clearCache()
       Caches.clear()
-      // same trial hygiene as Bench.runOnce: the warm run must pay
-      // its own ANN training, or the probe measures the memo
       SparkEntry.clearSessionMemos()
-      sc.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
     // the listener bus delivers job events asynchronously; drain it
     // (Spark-private, so by reflection) before reading the count

@@ -1234,20 +1234,8 @@ object Analytics {
       .withColumn("qi",
         row_number().over(Window.orderBy(col("quarter"))).cast("double"))
       .transform(graft.Caches.hold)
-    val bx = (c: Column) => c.getField("qi")
-    val by = (c: Column) => c.getField("aov")
-    val fit = grid
-      .agg(count(lit(1)).as("k"),
-        array_sort(collect_list(struct(col("qi"), col("aov")))).as("a"))
-      .select(col("k"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + bx(x)).as("sx"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + by(x)).as("sy"),
-        aggregate(col("a"), lit(0.0),
-          (ac, x) => ac + bx(x) * by(x)).as("sxy"),
-        aggregate(col("a"), lit(0.0),
-          (ac, x) => ac + bx(x) * bx(x)).as("sxx"),
-        aggregate(col("a"), lit(0.0),
-          (ac, x) => ac + by(x) * by(x)).as("syy"))
+    val fit = Ranking.olsMoments(grid, Nil, struct(col("qi"), col("aov")),
+        _.getField("qi"), _.getField("aov"))
       .select(
         ((col("k") * col("sxy") - col("sx") * col("sy")) /
           nullif(col("k") * col("sxx") - col("sx") * col("sx"),
@@ -1462,27 +1450,26 @@ object Analytics {
     * return" from "cheap ships return".
     *
     * Shape: single scan, row-local banding, 3-row grid rollup, the
-    * fixed-shape Wilson chain. */
+    * [[Ranking.wilsonLower]] bound. */
   def discountReturns(lineitem: DataFrame, z: Double = 1.96): DataFrame = {
     val bp = round(col("l_discount") * 100).cast("int")
     val bandIx = when(bp === 0, 0).when(bp <= 5, 1).otherwise(2)
     val bandNm = when(bp === 0, "none").when(bp <= 5, "light_1_5")
       .otherwise("deep_6_plus")
-    val agg = lineitem
-      .select(bandIx.as("band_ix"), bandNm.as("band"), col("l_returnflag"))
-      .groupBy(col("band_ix"), col("band"))
-      .agg(count(lit(1)).as("n_lines"),
-        count(when(col("l_returnflag") === "R", 1)).as("n_returned"))
-    val nD = col("n_lines").cast("double")
-    val p = col("n_returned").cast("double") / nD
-    val z2 = z * z
-    val lb = (p + lit(z2) / (nD * 2) - lit(z) *
-      sqrt(p * (lit(1.0) - p) / nD + lit(z2) / (nD * nD * 4))) /
-      (lit(1.0) + lit(z2) / nD)
-    agg.select(col("band_ix"), col("band"), col("n_lines"),
-        col("n_returned"), p.as("return_rate"), lb.as("wilson_lb"))
-      .orderBy(col("band_ix"))
+    returnReport(lineitem
+      .select(bandIx.as("band_ix"), bandNm.as("band"), col("l_returnflag")),
+      Seq("band_ix", "band"), z)
   }
+
+  /** The report the three return-rate functions share: per `keys`
+    * group of `lines`, the line count, the returned ('R') line count,
+    * their rate and its Wilson lower bound, ordered by the first key. */
+  private def returnReport(lines: DataFrame, keys: Seq[String],
+                           z: Double): DataFrame =
+    Ranking.wilsonReport(lines.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("n_lines"),
+          count(when(col("l_returnflag") === "R", 1)).as("n_returned")),
+      keys, "n_lines", "n_returned", "return_rate", z)
 
   /** Return rate by fulfillment-latency band: do late-shipped lines
     * come back more? Lines are banded by the order→ship day gap
@@ -1495,7 +1482,7 @@ object Analytics {
     *
     * Shape: the orderkey fact⋈fact join is the only corpus-sized
     * exchange; banding is a row-local CASE and the rollup is a
-    * 4-row grid. The Wilson bound is the fixed-shape IEEE chain. */
+    * 4-row grid. The bound is [[Ranking.wilsonLower]]. */
   def lateReturns(lineitem: DataFrame, orders: DataFrame,
                   z: Double = 1.96): DataFrame = {
     val lag0 = datediff(col("l_shipdate").cast("date"),
@@ -1504,24 +1491,13 @@ object Analytics {
       .when(lag0 <= 90, 2).otherwise(3)
     val bandNm = when(lag0 <= 7, "0-7").when(lag0 <= 30, "8-30")
       .when(lag0 <= 90, "31-90").otherwise("90+")
-    val agg = lineitem.select(col("l_orderkey"), col("l_shipdate"),
+    returnReport(lineitem.select(col("l_orderkey"), col("l_shipdate"),
         col("l_returnflag"))
       .join(orders.select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
       .select(bandIx.as("band_ix"), bandNm.as("band"),
-        col("l_returnflag"))
-      .groupBy(col("band_ix"), col("band"))
-      .agg(count(lit(1)).as("n_lines"),
-        count(when(col("l_returnflag") === "R", 1)).as("n_returned"))
-    val nD = col("n_lines").cast("double")
-    val p = col("n_returned").cast("double") / nD
-    val z2 = z * z
-    val lb = (p + lit(z2) / (nD * 2) - lit(z) *
-      sqrt(p * (lit(1.0) - p) / nD + lit(z2) / (nD * nD * 4))) /
-      (lit(1.0) + lit(z2) / nD)
-    agg.select(col("band_ix"), col("band"), col("n_lines"),
-        col("n_returned"), p.as("return_rate"), lb.as("wilson_lb"))
-      .orderBy(col("band_ix"))
+        col("l_returnflag")),
+      Seq("band_ix", "band"), z)
   }
 
   /** New-vs-returning revenue split per quarter: each order is "new"
@@ -1862,24 +1838,13 @@ object Analytics {
   /** Return rate per brand with the Wilson lower bound — the
     * returns-QA twin of the conversion rate: a brand with 1 return
     * in 2 lines must not outrank one with 90 in 1000. Exact counts
-    * from one aggregate; the bound is the fixed-shape IEEE chain. */
+    * from one aggregate; the bound is [[Ranking.wilsonLower]]. */
   def returnRate(lineitem: DataFrame, part: DataFrame,
                  z: Double = 1.96): DataFrame = {
-    val agg = lineitem
+    returnReport(lineitem
       .join(broadcast(part.select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand"))
-      .agg(count(lit(1)).as("n_lines"),
-        count(when(col("l_returnflag") === "R", 1)).as("n_returned"))
-    val nD = col("n_lines").cast("double")
-    val p = col("n_returned").cast("double") / nD
-    val z2 = z * z
-    val lb = (p + lit(z2) / (nD * 2) - lit(z) *
-      sqrt(p * (lit(1.0) - p) / nD + lit(z2) / (nD * nD * 4))) /
-      (lit(1.0) + lit(z2) / nD)
-    agg.select(col("p_brand"), col("n_lines"), col("n_returned"),
-        p.as("return_rate"), lb.as("wilson_lb"))
-      .orderBy(col("p_brand"))
+        col("l_partkey") === col("p_partkey")),
+      Seq("p_brand"), z)
   }
 
   /** Quarter-over-quarter revenue growth per nation: quarter-grain

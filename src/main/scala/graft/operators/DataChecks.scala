@@ -1464,7 +1464,7 @@ object DataChecks {
     *
     * Shape: one (hour-of-day) hash aggregate off a row-local hour
     * extraction — a 24-row grid at any corpus size; the bound is
-    * the fixed-shape IEEE chain. */
+    * [[Ranking.wilsonLower]]. */
   def errorShare(events: DataFrame, z: Double = 1.96): DataFrame =
     errorShareFromCounts(hourErrorCounts(events), z)
 
@@ -1484,17 +1484,9 @@ object DataChecks {
     * batch finisher over the streaming twin's continuously-maintained
     * 24-row count table. */
   private[graft] def errorShareFromCounts(agg: DataFrame,
-                                          z: Double): DataFrame = {
-    val nD = col("n_events").cast("double")
-    val p = col("n_errors").cast("double") / nD
-    val z2 = z * z
-    val lb = (p + lit(z2) / (nD * 2) - lit(z) *
-      sqrt(p * (lit(1.0) - p) / nD + lit(z2) / (nD * nD * 4))) /
-      (lit(1.0) + lit(z2) / nD)
-    agg.select(col("hod"), col("n_events"), col("n_errors"),
-        p.as("error_share"), lb.as("wilson_lb"))
-      .orderBy(col("hod"))
-  }
+                                          z: Double): DataFrame =
+    Ranking.wilsonReport(agg, Seq("hod"), "n_events", "n_errors",
+      "error_share", z)
 
   /** Weekday-seasonality STRENGTH per event type: the one-way-ANOVA
     * η² of daily volumes grouped by ISO weekday — the share of

@@ -512,12 +512,8 @@ object Journey {
       .agg(countDistinct(col("user_id")).as("n"),
         countDistinct(when(col("event_type") === successType,
           col("user_id"))).as("s"))
-    val nD = col("n").cast("double")
-    val p = col("s").cast("double") / nD
-    val z2 = z * z
-    val lb = (p + lit(z2) / (nD * 2) - lit(z) *
-      sqrt(p * (lit(1.0) - p) / nD + lit(z2) / (nD * nD * 4))) /
-      (lit(1.0) + lit(z2) / nD)
+    val p = col("s").cast("double") / col("n").cast("double")
+    val lb = Ranking.wilsonLower(col("s"), col("n"), z)
     agg.select(col("segment"), col("n"), col("s"),
         when(col("n") > 0, p).as("rate"),
         when(col("n") > 0, lb).as("wilson_lb"))

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Two-phase exact ranking — the scale discipline for "rank every row
-  * of a big grain within a small partition key" (per-source doc
-  * ranks, global user ranks). A bare window
+  * of a big grain within a small partition key" (today one global
+  * rank, q_user_concentration's users by spend). A bare window
   * `row_number().over(partitionBy(fewValues).orderBy(...))` funnels
   * each key's ENTIRE row set through one reducer: at 100 TB a
   * per-source quality rank becomes a handful of single-task corpus
@@ -27,6 +27,10 @@ import org.apache.spark.sql.functions._
   * group — a degenerate distribution (all rows one score) re-creates
   * the hot cell, which is data, not plan; callers pick the bucket key
   * to spread their real distribution.
+  *
+  * Also the home of the fixed-shape statistics several operators share
+  * and their oracles replay: [[ntileExpr]], [[wilsonLower]] and
+  * [[olsMoments]].
   */
 object Ranking {
 
@@ -147,4 +151,50 @@ object Ranking {
         + ($rankCol - ($nCol % $k) * (($nCol div $k) + 1) - 1)
           div ($nCol div $k) + 1
       END""").cast("int")
+
+  /** Wilson-score lower bound of the proportion `successes`/`n` at
+    * normal quantile `z`, as one fixed-shape IEEE chain over the two
+    * counts cast to double — every step correctly rounded, the same
+    * structure as the oracles' replay, so results match bit for bit.
+    * NULL at n = 0 (non-ANSI division by zero); a caller that wants
+    * another guard wraps the column itself. */
+  def wilsonLower(successes: Column, n: Column, z: Double): Column = {
+    val nD = n.cast("double")
+    val p = successes.cast("double") / nD
+    val z2 = z * z
+    (p + lit(z2) / (nD * 2) - lit(z) *
+      sqrt(p * (lit(1.0) - p) / nD + lit(z2) / (nD * nD * 4))) /
+      (lit(1.0) + lit(z2) / nD)
+  }
+
+  /** The Wilson rate report of a counts frame: the `keys`, the trial
+    * count `n`, the success count `s`, the rate s/n as `rate` and its
+    * [[wilsonLower]] bound as `wilson_lb`, ordered by the first key. */
+  def wilsonReport(counts: DataFrame, keys: Seq[String], n: String,
+                   s: String, rate: String, z: Double): DataFrame =
+    counts.select(keys.map(col) ++ Seq(col(n), col(s),
+        (col(s).cast("double") / col(n).cast("double")).as(rate),
+        wilsonLower(col(s), col(n), z).as("wilson_lb")): _*)
+      .orderBy(col(keys.head))
+
+  /** OLS moments of a small point set, per `group` (or over all rows
+    * when `group` is empty): `k` = point count and the double sums
+    * `sx, sy, sxy, sxx, syy` of `x`/`y` read off each point. The points
+    * are collected as `point` structs, sorted, and folded left in that
+    * order, so the sums do not depend on how the shuffle delivered the
+    * rows (a plain double `sum` is order-dependent in the last ulp).
+    * Callers build their own slope, intercept and r2 from the moments.
+    * Meant for grid-sized point sets: each group's points are one row. */
+  def olsMoments(points: DataFrame, group: Seq[String], point: Column,
+                 x: Column => Column, y: Column => Column): DataFrame = {
+    def fold(f: Column => Column): Column =
+      aggregate(col("a"), lit(0.0), (ac, e) => ac + f(e))
+    points.groupBy(group.map(col): _*)
+      .agg(count(lit(1)).as("k"), array_sort(collect_list(point)).as("a"))
+      .select(group.map(col) ++ Seq(col("k"),
+        fold(x).as("sx"), fold(y).as("sy"),
+        fold(e => x(e) * y(e)).as("sxy"),
+        fold(e => x(e) * x(e)).as("sxx"),
+        fold(e => y(e) * y(e)).as("syy")): _*)
+  }
 }

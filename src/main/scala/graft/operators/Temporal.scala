@@ -19,28 +19,16 @@ object Temporal {
     * The batch twin of [[graft.streaming.EventStream.sessionize]] —
     * EquivalenceSpec proves both emit the same sessions.
     *
-    * Shape: ONE hash exchange on user_id, then two per-key window
-    * passes (lag → session-start flags, running sum → session index)
-    * and a per-(user, session) aggregate that reuses the same
+    * Shape: the shared [[sessionRows]] step — ONE hash exchange on
+    * user_id, then two per-key window passes (lag → session-start
+    * flags, running sum → session index) — and a per-(user, session)
+    * aggregate that reuses the same
     * partitioning. Gaps compare integer epoch-microseconds (exact at
     * any timestamp precision; a double epoch would lose sub-second
     * bits past 2^53). At 100 TB the plan is embarrassingly parallel in
     * user_id — no global state, no driver loop. */
-  def sessionize(events: DataFrame, gapMinutes: Int): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = events
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"),
-        unix_micros(col("ts")).as("tu"))
-      .withColumn("new_sess",
-        when(lag(col("tu"), 1).over(order).isNull ||
-          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("session_ix",
-        sum(col("new_sess")).over(order.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)))
-    sess
+  def sessionize(events: DataFrame, gapMinutes: Int): DataFrame =
+    sessionRows(events, gapMinutes, col("value"))
       .groupBy(col("user_id"), col("session_ix"))
       .agg(
         min(col("ts")).as("session_start"),
@@ -48,6 +36,30 @@ object Temporal {
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("total_value"))
       .orderBy(col("user_id"), col("session_ix"))
+
+  /** The gap-session step every session operator here shares: the
+    * events' (user_id, ts, event_id, `extra`…) columns plus `tu` (ts
+    * in integer epoch-microseconds), `new_sess` (1 on a user's first
+    * event and on every event more than `gapMinutes` after the one
+    * before it) and `session_ix` (the running count of session starts,
+    * 1-based per user). Rows are ordered per user by (ts, event_id), so
+    * equal timestamps break ties by event_id and the sessions are
+    * deterministic; a gap of exactly `gapMinutes` stays in the session. */
+  private[graft] def sessionRows(events: DataFrame, gapMinutes: Int,
+                                 extra: Column*): DataFrame = {
+    val gapUs = gapMinutes * 60L * 1000000L
+    val order = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    events
+      .select(Seq(col("user_id"), col("ts"), col("event_id")) ++ extra :+
+        unix_micros(col("ts")).as("tu"): _*)
+      .withColumn("new_sess",
+        when(lag(col("tu"), 1).over(order).isNull ||
+          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
+          .otherwise(0))
+      .withColumn("session_ix",
+        sum(col("new_sess")).over(order.rowsBetween(
+          Window.unboundedPreceding, Window.currentRow)))
   }
 
   /** Backward as-of join: for every left row, the single right row
@@ -142,8 +154,8 @@ object Temporal {
 
   /** Session co-occurrence (market-basket support over sessions):
     * which event types happen together in one session, counted over
-    * the [[sessionize]] session definition (same gap rule, same
-    * deterministic (ts, event_id) ordering). Per session the DISTINCT
+    * the shared [[sessionRows]] sessions (the [[sessionize]] gap rule
+    * and deterministic (ts, event_id) order). Per session the DISTINCT
     * type set is tiny (bounded by the type vocabulary), so the pair
     * fan-out is the LSH-bucket pattern — sorted set, in-task (t1 < t2)
     * pair generation, never a self-join. Plan: ONE user_id exchange
@@ -169,27 +181,15 @@ object Temporal {
 
   /** The shared session-type-set frame behind [[basketPairs]] and
     * [[assocRules]]: one row per (user, session) with the sorted
-    * DISTINCT event-type set, sessions cut by the [[sessionize]] gap
-    * rule over the deterministic (ts, event_id) order. Persisted: the
+    * DISTINCT event-type set, sessions cut by [[sessionRows]].
+    * Persisted: the
     * pair/item legs AND the broadcast session total all read it —
     * unpersisted, each branch re-runs the session windows end-to-end
     * (another full user_id exchange per consumer). Caller owns the
     * cache lifetime (same contract as the minhash signature frame). */
   private def sessionTypeSets(events: DataFrame,
                               gapMinutes: Int): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    events
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("tu"))
-      .withColumn("new_sess",
-        when(lag(col("tu"), 1).over(order).isNull ||
-          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("session_ix",
-        sum(col("new_sess")).over(order.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)))
+    sessionRows(events, gapMinutes, col("event_type"))
       .groupBy(col("user_id"), col("session_ix"))
       .agg(sort_array(collect_set(col("event_type"))).as("types"))
       .transform(graft.Caches.hold)
@@ -243,17 +243,51 @@ object Temporal {
       .orderBy(col("antecedent"), col("consequent"))
   }
 
-  /** The purchases the attribution family credits: (user_id, start =
-    * ts − `windowDays`, end = ts, purchase_id, integer cents), held
-    * for the query — each model's pair leg and its unattributed anti
-    * leg both read it. */
-  private def purchaseWindows(events: DataFrame, windowDays: Int): DataFrame =
-    events.where(col("event_type") === "purchase")
+  /** The pairing step every attribution model shares. Returns the
+    * purchases the family credits — (user_id, start = ts − `windowDays`,
+    * end = ts, purchase_id, integer cents), held for the query, since
+    * each model's pair leg and its `(none)` leg both read it — and
+    * their in-window pairs: every (purchase, exposure) of one user with
+    * the exposure in [start, end), carrying the exposure's ts, touch_id
+    * and channel (event type). Pairing is the day-binned [[rangeJoin]]
+    * (an equi-join on (user, day bin), never an unbounded interval
+    * cross product); a model that never reads touch_id gets it pruned
+    * from its plan. */
+  private def attributionPairs(events: DataFrame,
+                               windowDays: Int): (DataFrame, DataFrame) = {
+    val purchases = events.where(col("event_type") === "purchase")
       .select(col("user_id"),
         (col("ts") - expr(s"INTERVAL $windowDays DAYS")).as("start"),
         col("ts").as("end"), col("event_id").as("purchase_id"),
         round(col("value") * 100).cast("bigint").as("cents"))
       .transform(graft.Caches.hold)
+    val exposures = events.where(col("event_type") =!= "purchase")
+      .select(col("user_id"), col("ts"), col("event_id").as("touch_id"),
+        col("event_type").as("channel"))
+    (purchases, rangeJoin(purchases, exposures, "user_id", 86400L)
+      .where(col("ts") < col("end"))) // strictly before the purchase
+  }
+
+  /** The split models' channel report: the `credited` (channel, k,
+    * credit) rows plus every purchase no pair reaches, credited at its
+    * full value to `(none)` — so the report accounts for all purchase
+    * value — summed per channel. Credits are integer micro-cents with
+    * one display division at the end; `nCredits` is the model's
+    * per-channel credit count. */
+  private def splitReport(purchases: DataFrame, pairs: DataFrame,
+                          credited: DataFrame, nCredits: Column): DataFrame = {
+    val unattributed = purchases
+      .join(pairs.select(col("purchase_id")).distinct(),
+        Seq("purchase_id"), "left_anti")
+      .select(lit("(none)").as("channel"), lit(1L).as("k"),
+        (col("cents") * 1000000L).as("credit"))
+    credited.union(unattributed)
+      .groupBy(col("channel"))
+      .agg(nCredits.as("n_credits"),
+        (sum(col("credit")).cast("double") / 100000000.0)
+          .as("credited_value"))
+      .orderBy(col("channel"))
+  }
 
   /** Equal-split multi-touch attribution: every purchase's value is
     * divided equally over the user's exposure events in the trailing
@@ -269,16 +303,13 @@ object Temporal {
     * credit is integer MICRO-CENTS — `cents·10⁶ div n` — exact in any
     * summation order, with one display division at the very end (each
     * purchase strands < n micro-cents of remainder — bounded,
-    * documented, and far below the display unit). Pairing reuses the
-    * [[rangeJoin]] bin pattern (day-binned equi-join, never an
-    * unbounded interval cross product); everything after the pair
+    * documented, and far below the display unit). Pairing is the
+    * shared [[attributionPairs]] step and the `(none)` leg plus the
+    * channel report are [[splitReport]]; everything after the pair
     * count is (purchase × channel)-sized. */
   def attribution(events: DataFrame, windowDays: Int): DataFrame = {
-    val purchases = purchaseWindows(events, windowDays)
-    val exposures = events.where(col("event_type") =!= "purchase")
-      .select(col("user_id"), col("ts"), col("event_type").as("channel"))
-    val pc = rangeJoin(purchases, exposures, "user_id", 86400L)
-      .where(col("ts") < col("end")) // strictly before the purchase
+    val (purchases, pairs) = attributionPairs(events, windowDays)
+    val pc = pairs
       .groupBy(col("purchase_id"), col("cents"), col("channel"))
       .agg(count(lit(1)).as("k"))
       .transform(graft.Caches.hold)
@@ -287,17 +318,7 @@ object Temporal {
         Window.partitionBy(col("purchase_id"))))
       .select(col("channel"), col("k"),
         (expr("(cents * 1000000) div n") * col("k")).as("credit"))
-    val unattributed = purchases
-      .join(pc.select(col("purchase_id")).distinct(),
-        Seq("purchase_id"), "left_anti")
-      .select(lit("(none)").as("channel"), lit(1L).as("k"),
-        (col("cents") * 1000000L).as("credit"))
-    credited.union(unattributed)
-      .groupBy(col("channel"))
-      .agg(sum(col("k")).as("n_credits"),
-        (sum(col("credit")).cast("double") / 100000000.0)
-          .as("credited_value"))
-      .orderBy(col("channel"))
+    splitReport(purchases, pc, credited, sum(col("k")))
   }
 
   /** Time-decay multi-touch attribution — [[attribution]] with
@@ -309,15 +330,13 @@ object Temporal {
     * `(cents·10⁶·w_channel) div W` per purchase — so channel sums are
     * exact in any summation order, the same determinism discipline as
     * the equal-split operator (which is this with all weights 1).
-    * Unattributed purchases land in `(none)` at full value. Pairing
-    * is the same day-binned [[rangeJoin]]; everything after the pair
-    * stage is (purchase × channel)-sized. */
+    * Unattributed purchases land in `(none)` at full value. Pairs
+    * come from [[attributionPairs]] and the report is [[splitReport]],
+    * as for [[attribution]]; everything after the pair stage is
+    * (purchase × channel)-sized. */
   def attributionDecay(events: DataFrame, windowDays: Int): DataFrame = {
-    val purchases = purchaseWindows(events, windowDays)
-    val exposures = events.where(col("event_type") =!= "purchase")
-      .select(col("user_id"), col("ts"), col("event_type").as("channel"))
-    val pc = rangeJoin(purchases, exposures, "user_id", 86400L)
-      .where(col("ts") < col("end"))
+    val (purchases, pairs) = attributionPairs(events, windowDays)
+    val pc = pairs
       // whole days of age on integer MICROSECONDS (unix_timestamp
       // truncates sub-second parts and would disagree with the
       // oracle's epoch_us near day boundaries); 0-based,
@@ -337,17 +356,7 @@ object Temporal {
         Window.partitionBy(col("purchase_id"))))
       .select(col("channel"), col("k"),
         expr("(cents * 1000000 * wsum) div tw").as("credit"))
-    val unattributed = purchases
-      .join(pc.select(col("purchase_id")).distinct(),
-        Seq("purchase_id"), "left_anti")
-      .select(lit("(none)").as("channel"), lit(1L).as("k"),
-        (col("cents") * 1000000L).as("credit"))
-    credited.union(unattributed)
-      .groupBy(col("channel"))
-      .agg(sum(col("k")).as("n_credits"),
-        (sum(col("credit")).cast("double") / 100000000.0)
-          .as("credited_value"))
-      .orderBy(col("channel"))
+    splitReport(purchases, pc, credited, sum(col("k")))
   }
 
   /** First/last-touch attribution: each purchase's FULL value credited
@@ -361,20 +370,16 @@ object Temporal {
     * no exposure in window land in `(none)` in BOTH accountings, so
     * each column totals the same complete purchase value.
     *
-    * Shape: the same day-binned [[rangeJoin]] pairing as the split
-    * operators, but the per-purchase reduction is one order-independent
+    * Shape: the [[attributionPairs]] pairing the split operators
+    * share, but the per-purchase reduction is one order-independent
     * min/max over (ts, touch_id, channel) structs — no window, no
     * credit division, value stays integer cents end to end (touch_id
     * breaks ts ties, the oracle's row_number order). The attributed
     * frame is persisted: the credit legs and the `(none)` anti-join
     * both read it. */
   def attributionFirstLast(events: DataFrame, windowDays: Int): DataFrame = {
-    val purchases = purchaseWindows(events, windowDays)
-    val exposures = events.where(col("event_type") =!= "purchase")
-      .select(col("user_id"), col("ts"), col("event_id").as("touch_id"),
-        col("event_type").as("channel"))
-    val fl = rangeJoin(purchases, exposures, "user_id", 86400L)
-      .where(col("ts") < col("end")) // strictly before the purchase
+    val (purchases, pairs) = attributionPairs(events, windowDays)
+    val fl = pairs
       .groupBy(col("purchase_id"), col("cents"))
       .agg(
         min(struct(col("ts"), col("touch_id"), col("channel"))).as("f"),
@@ -426,8 +431,8 @@ object Temporal {
     * `maxLen` contribute their prefix (a path is a prefix class, so
     * counts are stable as sessions grow).
     *
-    * Shape: the same single user_id exchange as [[sessionize]] for the
-    * session windows, then a per-(user, session) aggregate collects
+    * Shape: the [[sessionRows]] session windows (one user_id
+    * exchange), then a per-(user, session) aggregate collects
     * the session's (ts, event_id, type) structs — bounded by session
     * length, never a user's whole history — sorts them in-row, slices
     * the prefix and joins it to one string; the path aggregate and
@@ -436,22 +441,10 @@ object Temporal {
     * bigint division by a broadcast 1-row session total. */
   def sessionPaths(events: DataFrame, gapMinutes: Int,
                    maxLen: Int = 5, topN: Int = 20): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = events
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("tu"))
-      .withColumn("new_sess",
-        when(lag(col("tu"), 1).over(order).isNull ||
-          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("session_ix",
-        sum(col("new_sess")).over(order.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)))
     // persisted: the path leg and the broadcast session total both
     // read it (the basketPairs contract; caller owns the lifetime)
-    val paths = sess.groupBy(col("user_id"), col("session_ix"))
+    val paths = sessionRows(events, gapMinutes, col("event_type"))
+      .groupBy(col("user_id"), col("session_ix"))
       .agg(sort_array(collect_list(struct(
         col("ts"), col("event_id"), col("event_type")))).as("evs"))
       .select(concat_ws(">",
@@ -611,27 +604,15 @@ object Temporal {
   /** Session bounce rate per entry event type: the share of sessions
     * that ended after ONE event, keyed by what the session STARTED
     * with — the landing-quality read every funnel review opens with.
-    * Sessions come from the same gap rule as [[sessionize]]; the
-    * entry event is the (tu, event_id)-min struct (order-independent
-    * argmin, no second window); the bounce share carries the Wilson
-    * lower bound (the conversionWilson fixed-shape IEEE chain) so
-    * thin entry types can't outrank well-measured ones. */
+    * Sessions come from [[sessionRows]]; the entry event is the
+    * (tu, event_id)-min struct (order-independent argmin, no second
+    * window); the bounce share carries the
+    * [[Ranking.wilsonLower]] bound so thin entry types can't outrank
+    * well-measured ones. */
   def bounceRate(events: DataFrame, gapMinutes: Int,
                  z: Double = 1.96): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), unix_micros(col("ts")).as("tu"))
-      .withColumn("new_sess",
-        when(lag(col("tu"), 1).over(order).isNull ||
-          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("session_ix",
-        sum(col("new_sess")).over(order.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)))
-    val agg = sess.groupBy(col("user_id"), col("session_ix"))
+    val agg = sessionRows(events, gapMinutes, col("event_type"))
+      .groupBy(col("user_id"), col("session_ix"))
       .agg(count(lit(1)).as("n_events"),
         min(struct(col("tu").as("tu"), col("event_id").as("eid"),
           col("event_type").as("et"))).as("first"))
@@ -639,15 +620,8 @@ object Temporal {
       .groupBy(col("entry_type"))
       .agg(count(lit(1)).as("n_sessions"),
         count(when(col("n_events") === 1, 1)).as("n_bounces"))
-    val nD = col("n_sessions").cast("double")
-    val p = col("n_bounces").cast("double") / nD
-    val z2 = z * z
-    val lb = (p + lit(z2) / (nD * 2) - lit(z) *
-      sqrt(p * (lit(1.0) - p) / nD + lit(z2) / (nD * nD * 4))) /
-      (lit(1.0) + lit(z2) / nD)
-    agg.select(col("entry_type"), col("n_sessions"), col("n_bounces"),
-        p.as("bounce_rate"), lb.as("wilson_lb"))
-      .orderBy(col("entry_type"))
+    Ranking.wilsonReport(agg, Seq("entry_type"), "n_sessions", "n_bounces",
+      "bounce_rate", z)
   }
 
   /** Session-depth distribution: sessions bucketed by event count
@@ -660,21 +634,9 @@ object Temporal {
     * Shape: the one user_id exchange builds sessions; the rollup is
     * a ≤6-row grid with window-sum shares. */
   def sessionDepth(events: DataFrame, gapMinutes: Int): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
-    events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        unix_micros(col("ts")).as("tu"))
-      .withColumn("new_sess",
-        when(lag(col("tu"), 1).over(order).isNull ||
-          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("session_ix",
-        sum(col("new_sess")).over(order.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)))
+    sessionRows(events, gapMinutes)
       .groupBy(col("user_id"), col("session_ix"))
       .agg(count(lit(1)).as("ne"))
       .groupBy(least(col("ne"), lit(6L)).as("depth_bucket"))
@@ -695,23 +657,11 @@ object Temporal {
     *
     * Shape: the one user_id exchange builds sessions; the convert
     * flag is an in-aggregate max so no second pass; the rollup is an
-    * entry-type grid and the bound is the fixed-shape IEEE chain. */
+    * entry-type grid and the bound is [[Ranking.wilsonLower]]. */
   def sessionConversion(events: DataFrame, gapMinutes: Int,
                         z: Double = 1.96): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), unix_micros(col("ts")).as("tu"))
-      .withColumn("new_sess",
-        when(lag(col("tu"), 1).over(order).isNull ||
-          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("session_ix",
-        sum(col("new_sess")).over(order.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)))
-    val agg = sess.groupBy(col("user_id"), col("session_ix"))
+    val agg = sessionRows(events, gapMinutes, col("event_type"))
+      .groupBy(col("user_id"), col("session_ix"))
       .agg(min(struct(col("tu").as("tu"), col("event_id").as("eid"),
         col("event_type").as("et"))).as("first"),
         max((col("event_type") === "purchase").cast("int"))
@@ -720,15 +670,8 @@ object Temporal {
       .groupBy(col("entry_type"))
       .agg(count(lit(1)).as("n_sessions"),
         count(when(col("converted") === 1, 1)).as("n_converting"))
-    val nD = col("n_sessions").cast("double")
-    val p = col("n_converting").cast("double") / nD
-    val z2 = z * z
-    val lb = (p + lit(z2) / (nD * 2) - lit(z) *
-      sqrt(p * (lit(1.0) - p) / nD + lit(z2) / (nD * nD * 4))) /
-      (lit(1.0) + lit(z2) / nD)
-    agg.select(col("entry_type"), col("n_sessions"), col("n_converting"),
-        p.as("conversion_rate"), lb.as("wilson_lb"))
-      .orderBy(col("entry_type"))
+    Ranking.wilsonReport(agg, Seq("entry_type"), "n_sessions", "n_converting",
+      "conversion_rate", z)
   }
 
   /** Session-duration distribution per entry type: wall-clock length
@@ -746,20 +689,8 @@ object Temporal {
     * division last. Entry type is min(struct(tu, event_id, type)) —
     * deterministic under the session's total event order. */
   def sessionDuration(events: DataFrame, gapMinutes: Int): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), unix_micros(col("ts")).as("tu"))
-      .withColumn("new_sess",
-        when(lag(col("tu"), 1).over(order).isNull ||
-          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("session_ix",
-        sum(col("new_sess")).over(order.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)))
-    sess.groupBy(col("user_id"), col("session_ix"))
+    sessionRows(events, gapMinutes, col("event_type"))
+      .groupBy(col("user_id"), col("session_ix"))
       .agg(min(struct(col("tu").as("tu"), col("event_id").as("eid"),
         col("event_type").as("et"))).as("first"),
         min(col("tu")).as("lo"), max(col("tu")).as("hi"))
@@ -797,21 +728,9 @@ object Temporal {
     * (tens of thousands of rows at ANY corpus size, so the
     * unpartitioned window is safe by construction). */
   def concurrency(events: DataFrame, gapMinutes: Int): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val order = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
     // persisted: started/ended/spine all read it — unpersisted, each
     // branch re-runs the session windows end-to-end
-    val sh = events
-      .select(col("user_id"), col("ts"), col("event_id"),
-        unix_micros(col("ts")).as("tu"))
-      .withColumn("new_sess",
-        when(lag(col("tu"), 1).over(order).isNull ||
-          col("tu") - lag(col("tu"), 1).over(order) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("session_ix",
-        sum(col("new_sess")).over(order.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)))
+    val sh = sessionRows(events, gapMinutes)
       .groupBy(col("user_id"), col("session_ix"))
       .agg(min(col("ts")).as("s"), max(col("ts")).as("e"))
       .select(date_trunc("hour", col("s")).as("sh"),
@@ -845,38 +764,27 @@ object Temporal {
     * (ts, exposure id) — partitions bounded by touches-per-window,
     * never corpus-sized. Credits stay INTEGER micro-cents with the
     * family's div discipline (each CASE arm replayed verbatim), so
-    * channel sums are exact in any summation order. Unattributed
-    * purchases land in `(none)` at full value. */
+    * channel sums are exact in any summation order. Pairs come from
+    * [[attributionPairs]]; unattributed purchases land in `(none)` at
+    * full value through [[splitReport]], whose credit count here is
+    * the touch count. */
   def attributionUShaped(events: DataFrame, windowDays: Int): DataFrame = {
-    val purchases = purchaseWindows(events, windowDays)
-    val exposures = events.where(col("event_type") =!= "purchase")
-      .select(col("user_id"), col("ts"), col("event_id").as("touch_id"),
-        col("event_type").as("channel"))
+    val (purchases, pairs) = attributionPairs(events, windowDays)
     val w = Window.partitionBy(col("purchase_id"))
-    val pc = rangeJoin(purchases, exposures, "user_id", 86400L)
-      .where(col("ts") < col("end"))
+    val pc = pairs
       .select(col("purchase_id"), col("cents"), col("channel"),
         col("ts"), col("touch_id"))
       .withColumn("pos", row_number().over(
         w.orderBy(col("ts"), col("touch_id"))))
       .withColumn("n", count(lit(1)).over(w))
     val total = col("cents") * 1000000L
-    val credited = pc.select(col("channel"),
+    val credited = pc.select(col("channel"), lit(1L).as("k"),
       when(col("n") === 1, total)
         .when(col("n") === 2, expr("(cents * 1000000 * 50) div 100"))
         .when(col("pos") === 1 || col("pos") === col("n"),
           expr("(cents * 1000000 * 40) div 100"))
         .otherwise(expr("((cents * 1000000 * 20) div 100) div (n - 2)"))
         .as("credit"))
-    val unattributed = purchases
-      .join(pc.select(col("purchase_id")).distinct(),
-        Seq("purchase_id"), "left_anti")
-      .select(lit("(none)").as("channel"), (col("cents") * 1000000L).as("credit"))
-    credited.union(unattributed)
-      .groupBy(col("channel"))
-      .agg(count(lit(1)).as("n_credits"),
-        (sum(col("credit")).cast("double") / 100000000.0)
-          .as("credited_value"))
-      .orderBy(col("channel"))
+    splitReport(purchases, pc, credited, count(lit(1)))
   }
 }

@@ -1717,21 +1717,9 @@ object TextAnalysis {
       .select(col("source"), col("rank"),
         log(col("rank").cast("double")).as("lx"),
         log(col("n_occ").cast("double")).as("ly"))
-    val mm = pts.groupBy(col("source"))
-      .agg(count(lit(1)).as("k"),
-        array_sort(collect_list(struct(col("rank"), col("lx"),
-          col("ly")))).as("a"))
-      .select(col("source"), col("k"),
-        aggregate(col("a"), lit(0.0),
-          (ac, x) => ac + x.getField("lx")).as("sx"),
-        aggregate(col("a"), lit(0.0),
-          (ac, x) => ac + x.getField("ly")).as("sy"),
-        aggregate(col("a"), lit(0.0),
-          (ac, x) => ac + x.getField("lx") * x.getField("ly")).as("sxy"),
-        aggregate(col("a"), lit(0.0),
-          (ac, x) => ac + x.getField("lx") * x.getField("lx")).as("sxx"),
-        aggregate(col("a"), lit(0.0),
-          (ac, x) => ac + x.getField("ly") * x.getField("ly")).as("syy"))
+    val mm = Ranking.olsMoments(pts, Seq("source"),
+      struct(col("rank"), col("lx"), col("ly")),
+      _.getField("lx"), _.getField("ly"))
     mm.join(nv, Seq("source"))
       .select(col("source"), col("n_vocab"), col("k").as("n_top_terms"),
         (-(col("k") * col("sxy") - col("sx") * col("sy")) /
@@ -1803,18 +1791,8 @@ object TextAnalysis {
     // ≤B-point OLS moments fold in FIXED lx order (lx is strictly
     // increasing across prefixes) — a plain shuffled double sum would
     // be order-dependent in the last ULP
-    val gx = (c: Column) => c.getField("lx")
-    val gy = (c: Column) => c.getField("ly")
-    val mm = pts
-      .agg(count(lit(1)).as("k"),
-        array_sort(collect_list(struct(col("lx"), col("ly")))).as("a"))
-      .select(col("k"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + gx(x)).as("sx"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + gy(x)).as("sy"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + gx(x) * gy(x)).as("sxy"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + gx(x) * gx(x)).as("sxx"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + gy(x) * gy(x)).as("syy"))
-    val fit = mm
+    val fit = Ranking.olsMoments(pts, Nil, struct(col("lx"), col("ly")),
+        _.getField("lx"), _.getField("ly"))
       .withColumn("heaps_beta",
         (col("k") * col("sxy") - col("sx") * col("sy")) /
           (col("k") * col("sxx") - col("sx") * col("sx")))
@@ -1866,19 +1844,9 @@ object TextAnalysis {
       .withColumn("mean_quality",
         col("s").cast("double") / col("n_docs") / lit(1000000.0))
       .transform(graft.Caches.hold)
-    val bx = (c: Column) => c.getField("bucket").cast("double")
-    val by = (c: Column) => c.getField("mean_quality")
-    val mm = per
-      .agg(count(lit(1)).as("k"),
-        array_sort(collect_list(struct(col("bucket"), col("mean_quality"))))
-          .as("a"))
-      .select(col("k"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + bx(x)).as("sx"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + by(x)).as("sy"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + bx(x) * by(x)).as("sxy"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + bx(x) * bx(x)).as("sxx"),
-        aggregate(col("a"), lit(0.0), (ac, x) => ac + by(x) * by(x)).as("syy"))
-    val fit = mm
+    val fit = Ranking.olsMoments(per, Nil,
+        struct(col("bucket"), col("mean_quality")),
+        _.getField("bucket").cast("double"), _.getField("mean_quality"))
       .withColumn("slope",
         (col("k") * col("sxy") - col("sx") * col("sy")) /
           (col("k") * col("sxx") - col("sx") * col("sx")))

@@ -135,10 +135,12 @@ class CachesSpec extends SparkSpec {
 
   test("operator code persists and checkpoints only through Caches") {
     // the invariant that lets Runner release a query's frames without
-    // diffing the session's cache state: nothing else persists
+    // diffing the session's cache state: nothing else persists, and
+    // nothing outside Caches sweeps the session's caches either
     val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val allowed = Set("Caches.scala", "Bench.scala", "DevProbe.scala")
-    val banned = """\.persist\(|\.cache\(\)|\.localCheckpoint\(""".r
+    val allowed = Set("Caches.scala")
+    val banned = ("""\.persist\(|\.cache\(\)|\.localCheckpoint\(|""" +
+      """getPersistentRDDs|catalog\.clearCache""").r
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 20, s"source scan found only ${files.size} files under $root")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Ranking
@@ -92,5 +94,83 @@ class RankingSpec extends SparkSpec {
     assert(empty.count() == 0)
     assert(empty.columns.toSet ==
       Set("id", "v", "n_grp", "rank"), empty.columns.toSeq)
+  }
+
+  /** The Wilson bound in plain Scala, in the expression's order. */
+  private def wilson(s: Long, n: Long, z: Double): Double = {
+    val nD = n.toDouble
+    val p = s.toDouble / nD
+    val z2 = z * z
+    (p + z2 / (nD * 2) - z * math.sqrt(p * (1.0 - p) / nD +
+      z2 / (nD * nD * 4))) / (1.0 + z2 / nD)
+  }
+
+  test("wilsonLower equals the Scala closed form bit for bit, NULL at n = 0") {
+    def lb(s: Long, n: Long, z: Double) = Seq((s, n)).toDF("s", "n")
+      .select(Ranking.wilsonLower(col("s"), col("n"), z)).head()
+    // the last three are counts where a reassociated chain rounds
+    // differently in the final bit
+    for ((s, n, z) <- Seq((0L, 1L, 1.96), (1L, 2L, 1.96), (90L, 100L, 1.96),
+        (3L, 7L, 1.0), (999L, 1000L, 2.576), (5L, 5L, 1.645),
+        (123456L, 9876543L, 1.96), (28065L, 668866L, 2.576),
+        (76797L, 175556L, 1.0), (951L, 16918L, 1.645))) {
+      assert(java.lang.Double.doubleToLongBits(lb(s, n, z).getDouble(0)) ==
+        java.lang.Double.doubleToLongBits(wilson(s, n, z)), s"s=$s n=$n z=$z")
+    }
+    assert(lb(0L, 0L, 1.96).isNullAt(0))
+  }
+
+  test("olsMoments equal a Scala left fold in sorted order, bit for bit") {
+    // magnitudes far apart make the double sums order-sensitive: any
+    // other fold order would change the last bits
+    val rnd = new scala.util.Random(11)
+    val pts = (1 to 60).map { i =>
+      (if (i % 3 == 0) "a" else "b", i.toLong,
+        rnd.nextDouble() * math.pow(10, rnd.nextInt(12) - 4),
+        rnd.nextGaussian() * math.pow(10, rnd.nextInt(10) - 3))
+    }
+    val df = rnd.shuffle(pts).toDF("g", "i", "x", "y").repartition(4)
+    def fold(ps: Seq[(String, Long, Double, Double)]): Seq[Double] = {
+      val s = ps.sortBy(_._2)
+      def sum(f: ((String, Long, Double, Double)) => Double) =
+        s.foldLeft(0.0)((ac, p) => ac + f(p))
+      Seq(s.size.toDouble, sum(_._3), sum(_._4), sum(p => p._3 * p._4),
+        sum(p => p._3 * p._3), sum(p => p._4 * p._4))
+    }
+    def row(r: org.apache.spark.sql.Row, from: Int): Seq[Double] =
+      r.getLong(from).toDouble +: (from + 1 to from + 5).map(r.getDouble)
+    val point = struct(col("i"), col("x"), col("y"))
+    val grouped = Ranking.olsMoments(df, Seq("g"), point,
+        _.getField("x"), _.getField("y"))
+      .collect().map(r => r.getString(0) -> row(r, 1)).toMap
+    assert(grouped.keySet == Set("a", "b"))
+    pts.groupBy(_._1).foreach { case (g, ps) =>
+      assert(grouped(g).map(java.lang.Double.doubleToLongBits) ==
+        fold(ps).map(java.lang.Double.doubleToLongBits), s"group $g")
+    }
+    val global = Ranking.olsMoments(df, Nil, point,
+      _.getField("x"), _.getField("y")).collect()
+    assert(global.length == 1)
+    assert(row(global(0), 0).map(java.lang.Double.doubleToLongBits) ==
+      fold(pts).map(java.lang.Double.doubleToLongBits))
+  }
+
+  test("each shared fixed-shape step is written once under src/main") {
+    // the session window, the Wilson chain, the OLS fold and the
+    // attribution pairing each have one definition; a second copy
+    // is a second place to fix
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 20, s"source scan found only ${files.size} files under $root")
+    val text = files.map(f => f -> new String(java.nio.file.Files.readAllBytes(f)))
+    for (marker <- Seq("""withColumn("new_sess"""", "sqrt(p * (lit(1.0) - p)",
+        """aggregate(col("a"), lit(0.0)""", "rangeJoin(purchases, exposures")) {
+      val hits = text.flatMap { case (f, t) =>
+        Iterator.iterate(t.indexOf(marker))(i => t.indexOf(marker, i + 1))
+          .takeWhile(_ >= 0).map(_ => f.getFileName.toString)
+      }
+      assert(hits.size == 1, s"$marker found in: ${hits.mkString(", ")}")
+    }
   }
 }

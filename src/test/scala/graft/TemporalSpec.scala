@@ -451,6 +451,75 @@ class TemporalSpec extends SparkSpec {
     assert(out("(none)") == ((1L, 7.77, 1L, 7.77)))
   }
 
+  /** (event_id -> (new_sess, session_ix)) of sessionRows at a 30-minute gap. */
+  private def sessionOf(rows: (Long, String, Long, Double)*) =
+    Temporal.sessionRows(ev(rows: _*), 30)
+      .collect().map(r => r.getAs[Long]("event_id") ->
+        ((r.getAs[Int]("new_sess"), r.getAs[Long]("session_ix")))).toMap
+
+  test("sessionRows: a gap of exactly gapMinutes stays, one microsecond more splits") {
+    assert(sessionOf(
+      (1L, "2024-01-01 10:00:00", 1L, 0.0),
+      (1L, "2024-01-01 10:30:00", 2L, 0.0),          // gap == 30 min
+      (1L, "2024-01-01 11:00:00.000001", 3L, 0.0))   // gap == 30 min + 1 us
+      == Map(1L -> ((1, 1L)), 2L -> ((0, 1L)), 3L -> ((1, 2L))))
+  }
+
+  test("sessionRows orders equal timestamps by event_id") {
+    // the lower event_id opens the session whatever the input order
+    assert(sessionOf(
+      (2L, "2024-01-01 10:00:00", 7L, 0.0),
+      (2L, "2024-01-01 10:00:00", 5L, 0.0),
+      (2L, "2024-01-01 12:00:00", 6L, 0.0),
+      (2L, "2024-01-01 12:00:00", 4L, 0.0))
+      == Map(5L -> ((1, 1L)), 7L -> ((0, 1L)), 4L -> ((1, 2L)), 6L -> ((0, 2L))))
+  }
+
+  test("sessionRows gives a single-event user one session") {
+    val out = Temporal.sessionRows(
+      ev((3L, "2024-01-01 10:00:00", 9L, 2.5)), 30, col("value")).collect()
+    assert(out.length == 1)
+    assert(out(0).getAs[Int]("new_sess") == 1 &&
+      out(0).getAs[Long]("session_ix") == 1L)
+    assert(out(0).getAs[Double]("value") == 2.5)
+    assert(out(0).getAs[Long]("tu") ==
+      ts("2024-01-01 10:00:00").getTime * 1000L)
+  }
+
+  test("attribution models conserve total purchase value") {
+    // 8 users, 3 days of views/clicks/searches and purchases at cent
+    // values; windowDays = 2 leaves some purchases with no exposure
+    val rnd = new scala.util.Random(5)
+    val types = Seq("view", "click", "search", "purchase", "purchase")
+    val rows = (1 to 240).map { i =>
+      val typ = types(rnd.nextInt(types.size))
+      (i.toLong, (1 + rnd.nextInt(8)).toLong,
+        new Timestamp(ts("2024-01-01 00:00:00").getTime +
+          rnd.nextInt(3 * 86400) * 1000L),
+        typ, if (typ == "purchase") (1 + rnd.nextInt(99999)) / 100.0 else 0.0)
+    }
+    val e = rows.toDF("event_id", "user_id", "ts", "event_type", "value")
+    val purchases = rows.filter(_._4 == "purchase")
+    val totalCents = purchases.map(p => math.round(p._5 * 100)).sum
+    // each purchase strands less than one micro-cent per exposure
+    // paired with it; its user's exposure count bounds that
+    val stranded = purchases.map(p =>
+      rows.count(r => r._2 == p._2 && r._4 != "purchase")).sum.toLong
+    def microCents(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => math.round(r.getAs[Double]("credited_value") * 1e8)).sum
+    for ((name, model) <- Seq(
+        "equal" -> (Temporal.attribution _),
+        "decay" -> (Temporal.attributionDecay _),
+        "u" -> (Temporal.attributionUShaped _))) {
+      val lost = totalCents * 1000000L - microCents(model(e, 2))
+      assert(lost >= 0 && lost <= stranded, s"$name lost $lost micro-cents")
+    }
+    val fl = Temporal.attributionFirstLast(e, 2).collect()
+    for (c <- Seq("first_value", "last_value"))
+      assert(fl.map(r => math.round(r.getAs[Double](c) * 100)).sum == totalCents, c)
+    assert(fl.exists(_.getString(0) == "(none)"))
+  }
+
   test("burstiness: clockwork is -1, mixed gaps hit the closed form") {
     // type a: gaps 60s, 60s (sigma 0 -> B = -1); type b: gaps 1s and
     // 99s -> D = 2*9802e12 - (100e6)^2 = 9604e12, sqrt = 98e6,
