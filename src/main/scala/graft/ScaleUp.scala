@@ -50,7 +50,7 @@ object ScaleUp {
     val factor = factorS.toInt
     require(factor >= 1)
     val spark = GraftSession.local()
-    def in(t: String) = spark.read.parquet(s"$inDir/$t.parquet")
+    def in(t: String) = Tables.load(spark, inDir, t)
     // Facts ship as 64 files, not as one: the input is a single small
     // file, so the crossJoin inherits ONE partition and a plain write
     // emits one fat single-row-group file — unsplittable, so every

@@ -104,7 +104,14 @@ object Pairs {
   * stage the whole query (q_simhash_pairs: 4.5 s CPU in one task at
   * sf0.1). Here the signatures are unpacked into two long arrays once
   * and the loop is two jumps and a popcount per pair, materializing
-  * only survivors. */
+  * only survivors.
+  *
+  * NULLs: a NULL array yields NULL. An element whose struct or
+  * simhash is NULL pairs with nothing, as in the composed form, where
+  * `bit_count(NULL)` fails the filter. A surviving pair with a NULL
+  * doc_id is an `IllegalArgumentException` naming the function: the
+  * composed form would emit it with a NULL d1 or d2, which this
+  * output declares non-nullable. */
 case class HammingPairs(child: Expression, maxHamming: Int)
     extends UnaryExpression {
 
@@ -141,17 +148,24 @@ case class HammingPairs(child: Expression, maxHamming: Int)
 
 object HammingPairs {
   def compute(arr: ArrayData, maxHamming: Int): GenericArrayData = {
-    val n = arr.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    val ids = new Array[Long](n)
-    val sigs = new Array[Long](n)
+    val len = arr.numElements()
+    val ids = new Array[Long](len)
+    val sigs = new Array[Long](len)
+    val nullIds = new Array[Boolean](len)
+    // only the elements with a struct and a simhash can pair
+    var n = 0
     var i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, 2)
-      ids(i) = row.getLong(0)
-      sigs(i) = row.getLong(1)
+    while (i < len) {
+      val row = if (arr.isNullAt(i)) null else arr.getStruct(i, 2)
+      if (row != null && !row.isNullAt(1)) {
+        nullIds(n) = row.isNullAt(0)
+        if (!nullIds(n)) ids(n) = row.getLong(0)
+        sigs(n) = row.getLong(1)
+        n += 1
+      }
       i += 1
     }
+    if (n < 2) return new GenericArrayData(Array.empty[Any])
     // two passes — count survivors, then fill an exact-size array
     // (the Pairs.compute discipline): the growable ArrayBuffer this
     // replaces re-allocated and copied its boxed backing array ~log n
@@ -186,6 +200,9 @@ object HammingPairs {
       while (j < n) {
         val h = java.lang.Long.bitCount(sigI ^ sigs(j))
         if (h <= maxHamming) {
+          require(!nullIds(i) && !nullIds(j),
+            "graft_hamming_pairs: a NULL doc_id in a pair within hamming " +
+              s"$maxHamming; d1 and d2 are non-nullable")
           out(k) = new GenericInternalRow(Array[Any](idI, ids(j), h))
           k += 1
         }

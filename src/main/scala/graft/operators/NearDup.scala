@@ -1315,18 +1315,36 @@ object NearDup {
     *
     * Scale shape: signatures are ZERO shuffle ([[simhash]]'s native
     * row-local graft_simhash pass); bucketing shuffles
-    * (band, key, simhash) rows only; candidate pairs are generated AND
-    * hamming-verified inside the bucket's task — the signature is one
-    * long, so unlike minhash (whose shingle sets are too big to carry)
-    * the verification data rides along with the bucket and the cap²
-    * candidate explosion never leaves its task: only verified pairs
-    * (then de-duplicated across bands) are ever shuffled. A degenerate
-    * bucket — e.g. a whole corpus of near-identical bags whose band
-    * keys coincide, exactly what this synthetic corpus does — costs
-    * O(cap²) local work, never O(m²) and never a cap²-row shuffle.
+    * (band, key, doc_id, simhash) rows only; candidate pairs are
+    * generated AND hamming-verified inside the bucket's task — the
+    * signature is one long, so unlike minhash (whose shingle sets are
+    * too big to carry) the verification data rides along with the
+    * bucket and the cap² candidate explosion never leaves its task. A
+    * degenerate bucket — e.g. a whole corpus of near-identical bags
+    * whose band keys coincide, exactly what this synthetic corpus
+    * does — costs O(cap²) local work, never O(m²) and never a
+    * cap²-row shuffle. The bucket rows are hash-repartitioned to
+    * `spark.sql.shuffle.partitions` explicitly: that shuffle is small
+    * (a few hundred buckets), so AQE would coalesce it into ONE
+    * partition and run the whole fan-out behind it — work that grows
+    * with the output, not with the shuffle — on one core; AQE never
+    * coalesces a repartition with an explicit count. The verified
+    * pairs are shuffled ONCE, by range on (d1, d2): that partitioning
+    * already clusters the cross-band `distinct` and orders the final
+    * sort, so neither adds a hash exchange of its own.
     * Output: (d1 < d2, hamming). */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   bucketCap: Int = DefaultBucketCap): DataFrame = {
+                   bucketCap: Int = DefaultBucketCap): DataFrame =
+    verifiedPairs(docs, maxHamming, bucketCap)
+      .repartitionByRange(col("d1"), col("d2"))
+      .distinct()
+      .orderBy(col("d1"), col("d2"))
+
+  /** [[simhashPairs]]' verified (d1, d2, hamming) rows of every band,
+    * before the cross-band `distinct`: a pair sharing k bands appears
+    * k times. */
+  private def verifiedPairs(docs: DataFrame, maxHamming: Int,
+                            bucketCap: Int): DataFrame = {
     require(maxHamming <= 3,
       "maxHamming > 3 breaks the 4-band pigeonhole recall guarantee")
     val fp = simhashFrame(docs)
@@ -1337,6 +1355,8 @@ object NearDup {
         explode(array(bandStructs: _*)).as("bs"))
       .select(col("doc_id"), col("simhash"),
         col("bs.band").as("band"), col("bs.key").as("key"))
+      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
+        col("band"), col("key"))
       // struct sort = doc_id order (ids are unique), so the capped
       // prefix is identical to the sorted-id prefix the oracle replays
       .groupBy(col("band"), col("key"))
@@ -1355,8 +1375,6 @@ object NearDup {
         col("ids"), lit(maxHamming))).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"),
         col("p.hamming").as("hamming"))
-      .distinct()
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** Hamming-distance histogram of the SimHash candidate pairs — the
@@ -1366,13 +1384,16 @@ object NearDup {
     * (raise it or re-band), mass at 0–1 means the corpus carries
     * exact-ish duplicates the cheaper fingerprint pass should have
     * caught first. One ≤(maxHamming+1)-row grid off the same banded
-    * candidate generation as [[simhashPairs]] — never all pairs. */
+    * candidate generation as [[simhashPairs]] — never all pairs. It
+    * counts the distinct pairs without [[simhashPairs]]' range
+    * exchange: that exchange serves only the (d1, d2) sort, and its
+    * bound-sampling job is of no use to a count. */
   def hammingHist(docs: DataFrame, maxHamming: Int = 3,
                   bucketCap: Int = DefaultBucketCap): DataFrame = {
     val wAll = org.apache.spark.sql.expressions.Window
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    simhashPairs(docs, maxHamming, bucketCap)
+    verifiedPairs(docs, maxHamming, bucketCap).distinct()
       .groupBy(col("hamming")).agg(count(lit(1)).as("n_pairs"))
       .withColumn("pair_share",
         col("n_pairs").cast("double") / sum(col("n_pairs")).over(wAll))

@@ -78,7 +78,7 @@ object Sources {
     val old = new org.apache.hadoop.fs.Path(parent, path.getName + "._compact_old")
     fs.delete(tmp, true) // stale leftovers from a prior crash
     fs.delete(old, true)
-    spark.read.parquet(dir).coalesce(nFiles)
+    parquet(spark, dir).coalesce(nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     // Rename the source ASIDE (not delete-first): if the swap-in fails
     // the source is restored, so there is no window where the table is

@@ -151,33 +151,54 @@ class FusedExprSpec extends SparkSpec {
   }
 
   test("graft_hamming_pairs equals the filtered nested-transform chain") {
-    import spark.implicits._
-    val rows = Seq(
-      Seq((1L, 0L), (2L, 1L), (3L, 7L), (4L, 0L)),   // mixed distances
-      Seq((9L, 255L), (10L, 0L)),                    // all filtered out
-      Seq((5L, 42L)), Seq[(Long, Long)]())           // singleton, empty
-    val df = rows.toDF("raw")
-      .select(transform(col("raw"),
-        x => struct(x.getField("_1").as("doc_id"),
-          x.getField("_2").as("simhash"))).as("ids"))
+    val schema = StructType(Seq(StructField("ids", ArrayType(StructType(Seq(
+      StructField("doc_id", LongType), StructField("simhash", LongType)))))))
+    def frame(rows: Seq[Seq[(java.lang.Long, java.lang.Long)]]) =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(r =>
+        Row(if (r == null) null else r.map {
+          case null => null
+          case (id, sig) => Row(id, sig)
+        })): _*), schema)
+    def el(id: java.lang.Long, sig: java.lang.Long) = (id, sig)
     val maxHamming = 3
-    val raced = df.select(
-      call_function("graft_hamming_pairs", col("ids"), lit(maxHamming))
-        .as("fused"),
-      // size guard as in production (simhashPairs filters buckets of
-      // size > 1 before the fan-out): sequence(1, 0) steps DOWNWARD,
-      // so the unguarded composed form emits junk on short arrays
-      expr(
-        s"""CASE WHEN size(ids) >= 2 THEN
-           flatten(transform(sequence(1, size(ids) - 1),
-           i -> filter(transform(sequence(i + 1, size(ids)),
-             j -> struct(ids[i-1].doc_id AS d1, ids[j-1].doc_id AS d2,
-               cast(bit_count(ids[i-1].simhash ^ ids[j-1].simhash) AS int)
-                 AS hamming)),
-             x -> x.hamming <= $maxHamming)))
-           ELSE array() END""").as("composed"))
-    assert(raced.where(not(col("fused") === col("composed"))).isEmpty)
+    val fused = call_function("graft_hamming_pairs", col("ids"), lit(maxHamming))
+    // size guard as in production (simhashPairs filters buckets of
+    // size > 1 before the fan-out): sequence(1, 0) steps DOWNWARD,
+    // so the unguarded composed form emits junk on short arrays
+    val composed = expr(
+      s"""CASE WHEN ids IS NULL THEN NULL WHEN size(ids) >= 2 THEN
+         flatten(transform(sequence(1, size(ids) - 1),
+         i -> filter(transform(sequence(i + 1, size(ids)),
+           j -> struct(ids[i-1].doc_id AS d1, ids[j-1].doc_id AS d2,
+             cast(bit_count(ids[i-1].simhash ^ ids[j-1].simhash) AS int)
+               AS hamming)),
+           x -> x.hamming <= $maxHamming)))
+         ELSE array() END""")
+    val rows = Seq(
+      Seq(el(1L, 0L), el(2L, 1L), el(3L, 7L), el(4L, 0L)),  // mixed distances
+      Seq(el(9L, 255L), el(10L, 0L)),                       // all filtered out
+      Seq(el(5L, 42L)), Seq(),                              // singleton, empty
+      null,                                                 // NULL array
+      Seq(el(1L, null), el(3L, 0L)),                        // NULL simhash
+      Seq(null, el(2L, 1L), el(3L, 0L)),                    // NULL element
+      Seq(el(1L, 0L), el(2L, null), null, el(3L, 1L), el(4L, null)),
+      Seq(el(null, 255L), el(3L, 0L)),                      // NULL id, no pair
+      Seq(el(null, null), el(3L, 0L), el(4L, 1L)))          // NULL id and simhash
+    val raced = frame(rows).select(fused.as("fused"), composed.as("composed"))
+    assert(raced.where(not(col("fused") <=> col("composed"))).isEmpty)
     assert(raced.where(size(col("fused")) > 0).count() > 0)
+    // a NULL doc_id in a surviving pair: the composed form emits a NULL
+    // d1 or d2, which the native output declares non-nullable
+    for (row <- Seq(Seq(el(null, 0L), el(3L, 0L)), Seq(el(2L, 5L), el(null, 4L)))) {
+      val df = frame(Seq(row))
+      assert(df.select(composed).head().getSeq[Row](0)
+        .exists(p => p.isNullAt(0) || p.isNullAt(1)), row)
+      val e = intercept[Exception](df.select(fused).collect())
+      val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i.getMessage }
+      assert(named.exists(m => m.contains("graft_hamming_pairs") &&
+        m.contains("NULL doc_id")), e.toString)
+    }
   }
 
   test("graft_pairs refuses a fan-out past Int.MaxValue instead of corrupting") {

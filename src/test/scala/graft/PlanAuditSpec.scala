@@ -123,6 +123,52 @@ class PlanAuditSpec extends SparkSpec {
     // bit_count runs inside graft_hamming_pairs, not as a per-pair
     // interpreted lambda
     assert(p.contains("graft_hamming_pairs"), p.take(2000))
+    // the verified pairs cross the network once: one range exchange on
+    // (d1, d2) clusters the cross-band distinct AND orders the sort;
+    // a hash exchange over the pair columns is the second pair shuffle
+    val exchanges = p.linesIterator.filter(_.contains("Exchange ")).toSeq
+    val pairCols = """\b(d1|d2|hamming)#""".r
+    val pairEx = exchanges.filter(pairCols.findFirstIn(_).isDefined)
+    assert(pairEx.size == 1 && pairEx.head.contains("rangepartitioning("), p.take(3000))
+    assert(!exchanges.exists(l => l.contains("hashpartitioning(") &&
+      pairCols.findFirstIn(l).isDefined), p.take(3000))
+  }
+
+  test("simhash pairs generates candidates on numShufflePartitions tasks") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+    // the bucket shuffle is small, so AQE would coalesce it into one
+    // partition and run the whole pair fan-out behind it in one task
+    val df = SparkEntry.queries("q_simhash_pairs")(spark, sf("documents"))
+    df.collect()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val fin = df.queryExecution.executedPlan
+    def isBucket(s: org.apache.spark.sql.execution.SparkPlan) = s match {
+      case q: ShuffleQueryStageExec => q.shuffle.outputPartitioning match {
+        case HashPartitioning(keys, _) =>
+          keys.collect { case a: Attribute => a.name } == Seq("band", "key")
+        case _ => false
+      }
+      case _ => false
+    }
+    val n = spark.sessionState.conf.numShufflePartitions
+    val stages = helper.collect(fin) {
+      case q: ShuffleQueryStageExec if isBucket(q) => q.shuffle.numPartitions
+    }
+    val reads = helper.collect(fin) {
+      case r: AQEShuffleReadExec if isBucket(r.child) => r.partitionSpecs.size
+    }
+    assert(stages == Seq(n) && reads.forall(_ == n), fin.toString.take(3000))
+  }
+
+  test("hamming histogram counts pairs without the sort's range exchange") {
+    // only simhashPairs' (d1, d2) sort needs the range exchange; its
+    // bound-sampling job is of no use to a histogram
+    val p = plan("q_hamming_hist")
+    assert(p.contains("graft_hamming_pairs") && !p.contains("rangepartitioning(d1#"),
+      p.take(3000))
   }
 
   test("stratified sample is a pure scan+filter: no join, no aggregate") {
