@@ -99,7 +99,8 @@ object GraftSession {
         e => TopKAgg(e(0), e(1), e(2)).toAggregateExpression()),
       ("graft_nfc", classOf[NfcNormalize], Some(1), e => NfcNormalize(e(0))),
       ("graft_heavy_agg", classOf[MisraGriesAgg], Some(2),
-        e => MisraGriesAgg(e(0), e(1)).toAggregateExpression()),
+        e => MisraGriesAgg(e(0),
+          Literal(intLitArg("graft_heavy_agg", "k", e(1)))).toAggregateExpression()),
       ("graft_match_mask", classOf[MatchMask], None, e => MatchMask(e.head,
         stringLits("graft_match_mask", "(text, pattern, ...)", "patterns", e))),
       ("graft_seed_hashes", classOf[SeedHashes], Some(2),

@@ -24,7 +24,10 @@ import org.apache.spark.sql.types._
   * LOWER bound within n/(k+1) of the true count. Estimates (not true
   * counts) depend on merge order, so the operator is rows-only at the
   * gate with a spec bounding it against the exact aggregate — the same
-  * contract as the HLL reach and KLL percentile sketches.
+  * contract as the HLL reach and KLL percentile sketches. The SQL
+  * builder passes `k` as an int literal: it accepts any integral
+  * literal and names a NULL, fractional or string `k` with an
+  * `IllegalArgumentException`.
   */
 case class MisraGriesAgg(child: Expression, kExpr: Expression,
                          mutableAggBufferOffset: Int = 0,

@@ -106,6 +106,11 @@ object Pairs {
   * and the loop is two jumps and a popcount per pair, materializing
   * only survivors.
   *
+  * The engine's own simhash pairs ([[graft.operators.NearDup.simhashPairs]])
+  * no longer call this expression: they run outside Catalyst and share
+  * only its popcount scan ([[HammingPairs.scan]]). It stays registered
+  * for SQL callers.
+  *
   * NULLs: a NULL array yields NULL. An element whose struct or
   * simhash is NULL pairs with nothing, as in the composed form, where
   * `bit_count(NULL)` fails the filter. A surviving pair with a NULL
@@ -179,12 +184,7 @@ object HammingPairs {
     var cnt = 0L
     i = 0
     while (i < n - 1) {
-      val sigI = sigs(i)
-      var j = i + 1
-      while (j < n) {
-        if (java.lang.Long.bitCount(sigI ^ sigs(j)) <= maxHamming) cnt += 1
-        j += 1
-      }
+      scan(sigs(i), sigs, i + 1, n, maxHamming)((_, _) => cnt += 1)
       i += 1
     }
     require(cnt <= Int.MaxValue,
@@ -195,21 +195,29 @@ object HammingPairs {
     i = 0
     while (i < n - 1) {
       val idI = ids(i)
-      val sigI = sigs(i)
-      var j = i + 1
-      while (j < n) {
-        val h = java.lang.Long.bitCount(sigI ^ sigs(j))
-        if (h <= maxHamming) {
-          require(!nullIds(i) && !nullIds(j),
-            "graft_hamming_pairs: a NULL doc_id in a pair within hamming " +
-              s"$maxHamming; d1 and d2 are non-nullable")
-          out(k) = new GenericInternalRow(Array[Any](idI, ids(j), h))
-          k += 1
-        }
-        j += 1
+      val nullI = nullIds(i)
+      scan(sigs(i), sigs, i + 1, n, maxHamming) { (j, h) =>
+        require(!nullI && !nullIds(j),
+          "graft_hamming_pairs: a NULL doc_id in a pair within hamming " +
+            s"$maxHamming; d1 and d2 are non-nullable")
+        out(k) = new GenericInternalRow(Array[Any](idI, ids(j), h))
+        k += 1
       }
       i += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** The popcount scan of one member against a run of others:
+    * `f(j, h)` for each j in [from, until), in order, whose signature
+    * is within hamming h ≤ `maxHamming` of `sig`. */
+  @inline def scan(sig: Long, sigs: Array[Long], from: Int, until: Int,
+                   maxHamming: Int)(f: (Int, Int) => Unit): Unit = {
+    var j = from
+    while (j < until) {
+      val h = java.lang.Long.bitCount(sig ^ sigs(j))
+      if (h <= maxHamming) f(j, h)
+      j += 1
+    }
   }
 }

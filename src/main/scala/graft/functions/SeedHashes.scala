@@ -18,7 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * reuses one digest instance and feeds token bytes directly, no
   * intermediate slice or joined string. Same native-over-HOF move as
   * [[MinHashSigs]]. Arrays shorter than `seedLen` yield an empty
-  * result; NULL input propagates NULL.
+  * result; NULL input propagates NULL. A NULL token is skipped with its
+  * separator, as `concat_ws` skips it (a window of only NULLs hashes
+  * the empty string).
   */
 case class SeedHashes(child: Expression, seedLen: Int)
     extends UnaryExpression {
@@ -41,16 +43,24 @@ case class SeedHashes(child: Expression, seedLen: Int)
     if (n < seedLen) return new GenericArrayData(Array.empty[Any])
     val toks = new Array[Array[Byte]](n)
     var i = 0
-    while (i < n) { toks(i) = arr.getUTF8String(i).getBytes; i += 1 }
+    while (i < n) {
+      if (!arr.isNullAt(i)) toks(i) = arr.getUTF8String(i).getBytes
+      i += 1
+    }
     val md = java.security.MessageDigest.getInstance("MD5")
     val out = new Array[Any](n - seedLen + 1)
     var p = 0
     while (p <= n - seedLen) {
       md.reset()
+      var joined = false
       var j = 0
       while (j < seedLen) {
-        if (j > 0) md.update(' '.toByte)
-        md.update(toks(p + j))
+        val t = toks(p + j)
+        if (t != null) {
+          if (joined) md.update(' '.toByte)
+          md.update(t)
+          joined = true
+        }
         j += 1
       }
       val dig = md.digest()

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import graft.functions.HammingPairs
 import graft.functions.TextFunctions._
 
 /** Near-duplicate detection over documents: exact n-gram Jaccard via
@@ -1279,9 +1284,8 @@ object NearDup {
   def simhash(docs: DataFrame): DataFrame =
     simhashFrame(docs).orderBy(col("doc_id"))
 
-  /** [[simhash]] without the presentation sort — the shared input of
-    * the band bucketing and both verification sides in
-    * [[simhashPairs]]. */
+  /** [[simhash]] without the presentation sort — the input of
+    * [[simhashPairs]]' band bucketing. */
   private def simhashFrame(docs: DataFrame): DataFrame = {
     // one native row-local pass over the token array (graft_simhash):
     // the previous 40-sum-column aggregate hash-shuffled the whole
@@ -1315,66 +1319,162 @@ object NearDup {
     *
     * Scale shape: signatures are ZERO shuffle ([[simhash]]'s native
     * row-local graft_simhash pass); bucketing shuffles
-    * (band, key, doc_id, simhash) rows only; candidate pairs are
-    * generated AND hamming-verified inside the bucket's task — the
-    * signature is one long, so unlike minhash (whose shingle sets are
-    * too big to carry) the verification data rides along with the
-    * bucket and the cap² candidate explosion never leaves its task. A
+    * (band, key, doc_id, simhash) rows only, and the capped buckets
+    * are collected to the driver while the frame is built. That is
+    * bounded by the banding, not by the corpus: at most 4 × 1024
+    * buckets of `bucketCap` members, 16 bytes a member (doc_id and
+    * simhash) plus two int indexes, broadcast as primitive arrays
+    * ([[SimhashBuckets]]). The frame's rows are one single-stage RDD
+    * job of `spark.sql.shuffle.partitions` tasks, in which each d1 is
+    * owned by one task: the members with a bucket tail behind them,
+    * in doc_id order, are cut into contiguous d1 ranges of about equal
+    * candidate count (the tail lengths), never inside a d1, and with
+    * no empty range while there are as many d1s as tasks. A task scans
+    * each of its d1s' ≤ 4 bucket tails with the popcount test
+    * ([[graft.functions.HammingPairs.scan]]), sorts the survivors and
+    * drops the cross-band repeats. Its rows come out in (d1, d2)
+    * order, and the tasks in d1 order, so the pairs never cross the
+    * network: no pair exchange, no range-bound sampling job (which
+    * re-ran the whole fan-out), no `distinct` and no sort. A
     * degenerate bucket — e.g. a whole corpus of near-identical bags
     * whose band keys coincide, exactly what this synthetic corpus
-    * does — costs O(cap²) local work, never O(m²) and never a
-    * cap²-row shuffle. The bucket rows are hash-repartitioned to
-    * `spark.sql.shuffle.partitions` explicitly: that shuffle is small
-    * (a few hundred buckets), so AQE would coalesce it into ONE
-    * partition and run the whole fan-out behind it — work that grows
-    * with the output, not with the shuffle — on one core; AQE never
-    * coalesces a repartition with an explicit count. The verified
-    * pairs are shuffled ONCE, by range on (d1, d2): that partitioning
-    * already clusters the cross-band `distinct` and orders the final
-    * sort, so neither adds a hash exchange of its own.
+    * does — costs O(cap²) popcounts spread over the tasks that own
+    * its members, never O(m²). The frame holds its broadcast, as
+    * [[Affinity.kCore]]'s does.
     * Output: (d1 < d2, hamming). */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   bucketCap: Int = DefaultBucketCap): DataFrame =
-    verifiedPairs(docs, maxHamming, bucketCap)
-      .repartitionByRange(col("d1"), col("d2"))
-      .distinct()
-      .orderBy(col("d1"), col("d2"))
-
-  /** [[simhashPairs]]' verified (d1, d2, hamming) rows of every band,
-    * before the cross-band `distinct`: a pair sharing k bands appears
-    * k times. */
-  private def verifiedPairs(docs: DataFrame, maxHamming: Int,
-                            bucketCap: Int): DataFrame = {
+                   bucketCap: Int = DefaultBucketCap): DataFrame = {
     require(maxHamming <= 3,
       "maxHamming > 3 breaks the 4-band pigeonhole recall guarantee")
-    val fp = simhashFrame(docs)
+    require(maxHamming >= 0, s"simhashPairs: maxHamming=$maxHamming")
+    val spark = docs.sparkSession
     val bandStructs = (0 until 4).map(b =>
       struct(lit(b).as("band"), col(s"b$b").as("key")))
-    fp
+    val buckets = simhashFrame(docs)
       .select(col("doc_id"), col("simhash"),
         explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("simhash"),
-        col("bs.band").as("band"), col("bs.key").as("key"))
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band"), col("key"))
+      .groupBy(col("bs.band"), col("bs.key"))
       // struct sort = doc_id order (ids are unique), so the capped
       // prefix is identical to the sorted-id prefix the oracle replays
-      .groupBy(col("band"), col("key"))
       .agg(slice(sort_array(collect_list(struct(col("doc_id"), col("simhash")))),
         1, bucketCap).as("ids"))
       .where(size(col("ids")) > 1)
-      // the hamming filter sits INSIDE the generator: a degenerate
-      // cap-sized bucket evaluates cap² popcounts but only ever
-      // materializes the surviving pairs. graft_hamming_pairs is the
-      // native one-pass form of the interpreted
-      // flatten(transform(..., filter(transform(...)))) chain it
-      // replaced — identical structs, identical order; the composed
-      // form walked an expression tree per candidate pair and was the
-      // whole query's cost (one 4.5 s single-task stage at sf0.1)
-      .select(explode(call_function("graft_hamming_pairs",
-        col("ids"), lit(maxHamming))).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"),
-        col("p.hamming").as("hamming"))
+      .select(col("ids"))
+      .collect()
+      .map(_.getSeq[Row](0))
+    val members = buckets.flatten
+    val bounds = buckets.map(_.size).scanLeft(0)(_ + _)
+    val end = buckets.indices.flatMap(b => Seq.fill(buckets(b).size)(bounds(b + 1))).toArray
+    val ids = members.map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
+    val sigs = members.map(_.getLong(1))
+    // a NULL doc_id fails if it would pair (d1 and d2 are
+    // non-nullable), as in graft_hamming_pairs; otherwise it pairs
+    // with nothing and owns nothing. NULLs sort first in a bucket, so
+    // their own tails hold every pair they are in.
+    val nullId = members.map(_.isNullAt(0))
+    for (m <- members.indices if nullId(m))
+      HammingPairs.scan(sigs(m), sigs, m + 1, end(m), maxHamming)((_, _) =>
+        throw new IllegalArgumentException("simhashPairs: a NULL doc_id in a pair " +
+          s"within hamming $maxHamming; d1 and d2 are non-nullable"))
+    val owners = members.indices.filter(m => !nullId(m) && m + 1 < end(m))
+      .sortBy(ids(_)).toArray
+    val starts = owners.indices
+      .filter(i => i == 0 || ids(owners(i)) != ids(owners(i - 1))) :+ owners.length
+    val weights = starts.indices.init.map(g =>
+      (starts(g) until starts(g + 1)).map(i => end(owners(i)) - owners(i) - 1L).sum)
+    val n = spark.sessionState.conf.numShufflePartitions
+    val cuts = balancedCuts(weights, n).map(starts(_))
+    // not destroyed: the returned frame reads it when it executes
+    val bc = spark.sparkContext.broadcast(SimhashBuckets(ids, sigs, end, owners))
+    val rows = spark.sparkContext.parallelize(0 until n, n)
+      .flatMap(t => bc.value.rows(cuts(t), cuts(t + 1), maxHamming))
+    GraftExpressionBridge.internalFrame(spark, rows, StructType(Seq(
+      StructField("d1", LongType, nullable = false),
+      StructField("d2", LongType, nullable = false),
+      StructField("hamming", IntegerType, nullable = false))))
+  }
+
+  /** [[simhashPairs]]' collected buckets as primitive arrays: each
+    * bucket's members are contiguous in `ids`/`sigs` in doc_id order,
+    * `end(m)` is one past the last member of m's bucket, and `owners`
+    * holds every member with a tail behind it, in doc_id order. */
+  private final case class SimhashBuckets(ids: Array[Long], sigs: Array[Long],
+                                          end: Array[Int], owners: Array[Int]) {
+
+    /** The (d1, d2, hamming) rows of `owners` [lo, hi), which hold
+      * whole d1s, in (d1, d2, hamming) order, each row once. */
+    def rows(lo: Int, hi: Int, maxHamming: Int): Iterator[InternalRow] = {
+      // one d2 list per hamming value: each sorts as primitives, and
+      // the merge orders equal d2s by hamming
+      val byH = Array.fill(maxHamming + 1)(new mutable.ArrayBuilder.ofLong)
+      (lo until hi).iterator
+        .filter(i => i == lo || ids(owners(i)) != ids(owners(i - 1)))
+        .flatMap { start =>
+          val d1 = ids(owners(start))
+          var i = start
+          while (i < hi && ids(owners(i)) == d1) {
+            val m = owners(i)
+            HammingPairs.scan(sigs(m), sigs, m + 1, end(m), maxHamming)(
+              (j, h) => byH(h) += ids(j))
+            i += 1
+          }
+          val lists = new Array[Array[Long]](byH.length)
+          var total = 0
+          var c = 0
+          while (c < lists.length) {
+            lists(c) = byH(c).result()
+            byH(c).clear()
+            java.util.Arrays.sort(lists(c))
+            total += lists(c).length
+            c += 1
+          }
+          val at = new Array[Int](lists.length)
+          val out = new Array[InternalRow](total)
+          var k = 0
+          var h = 0
+          while (h >= 0) {
+            // the list with the smallest next d2, the lowest h on ties
+            h = -1
+            c = 0
+            while (c < lists.length) {
+              if (at(c) < lists(c).length &&
+                (h < 0 || lists(c)(at(c)) < lists(h)(at(h)))) h = c
+              c += 1
+            }
+            if (h >= 0) {
+              val d2 = lists(h)(at(h))
+              // a pair sharing k bands was found k times
+              while (at(h) < lists(h).length && lists(h)(at(h)) == d2) at(h) += 1
+              out(k) = new GenericInternalRow(Array[Any](d1, d2, h))
+              k += 1
+            }
+          }
+          out.iterator.take(k)
+        }
+    }
+  }
+
+  /** Cut points 0 = c(0) ≤ … ≤ c(n) = weights.length splitting the
+    * weighted items, in order, into `n` contiguous ranges of about
+    * equal weight. No range is empty while there are at least `n`
+    * items; with fewer, the first ranges take one item each. */
+  private[graft] def balancedCuts(weights: Seq[Long], n: Int): Array[Int] = {
+    val g = weights.length
+    val before = weights.scanLeft(0L)(_ + _)
+    val cuts = new Array[Int](n + 1)
+    cuts(n) = g
+    var at = 0
+    for (k <- 1 until n) {
+      // the item boundary nearest k/n of the weight (scaled by n)
+      val target = before(g) * k
+      while (at < g && before(at) * n < target) at += 1
+      val near =
+        if (at > 0 && target - before(at - 1) * n < before(at) * n - target) at - 1
+        else at
+      val lo = math.min(cuts(k - 1) + 1, g)
+      cuts(k) = math.min(math.max(near, lo), math.max(g - (n - k), lo))
+    }
+    cuts
   }
 
   /** Hamming-distance histogram of the SimHash candidate pairs — the
@@ -1383,20 +1483,21 @@ object NearDup {
     * boundary means the threshold is cutting through a real cluster
     * (raise it or re-band), mass at 0–1 means the corpus carries
     * exact-ish duplicates the cheaper fingerprint pass should have
-    * caught first. One ≤(maxHamming+1)-row grid off the same banded
-    * candidate generation as [[simhashPairs]] — never all pairs. It
-    * counts the distinct pairs without [[simhashPairs]]' range
-    * exchange: that exchange serves only the (d1, d2) sort, and its
-    * bound-sampling job is of no use to a count. */
+    * caught first. One ≤(maxHamming+1)-row grid counted off
+    * [[simhashPairs]]' own d1-owned tasks: each task counts its pairs
+    * per hamming value, and only those partial counts (one row a
+    * task) cross to the single task that finishes the grid — no pair
+    * or hamming-keyed exchange, and never all pairs. */
   def hammingHist(docs: DataFrame, maxHamming: Int = 3,
                   bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val wAll = org.apache.spark.sql.expressions.Window
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    verifiedPairs(docs, maxHamming, bucketCap).distinct()
-      .groupBy(col("hamming")).agg(count(lit(1)).as("n_pairs"))
-      .withColumn("pair_share",
-        col("n_pairs").cast("double") / sum(col("n_pairs")).over(wAll))
+    val grid = (0 to maxHamming).map(h => struct(lit(h).as("hamming"),
+      count_if(col("hamming") === h).as("n_pairs")))
+    simhashPairs(docs, maxHamming, bucketCap)
+      .agg(array(grid: _*).as("grid"), count(lit(1)).as("total"))
+      .select(explode(col("grid")).as("g"), col("total"))
+      .where(col("g.n_pairs") > 0)
+      .select(col("g.hamming").as("hamming"), col("g.n_pairs").as("n_pairs"),
+        (col("g.n_pairs").cast("double") / col("total")).as("pair_share"))
       .orderBy(col("hamming"))
   }
 

@@ -355,4 +355,60 @@ class FusedExprSpec extends SparkSpec {
     assert(graft.operators.VectorSearch.srpPlanes(16, 64).map(_.toSeq) ==
       graft.operators.VectorSearch.srpPlanes(64, 64).take(16).map(_.toSeq))
   }
+
+  /** The IllegalArgumentException message in `e`'s cause chain. */
+  private def namedIae(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i.getMessage }
+
+  test("graft_seed_hashes equals md5(concat_ws(slice)) on NULL tokens and short arrays") {
+    // concat_ws skips a NULL token (and its separator); a window of
+    // only NULLs joins to the empty string
+    val k = 2
+    val raced = spark.sql(
+      s"""SELECT graft_seed_hashes(t, $k) AS fused,
+         CASE WHEN t IS NULL THEN NULL WHEN size(t) < $k THEN array()
+           ELSE transform(sequence(0, size(t) - $k),
+             i -> md5(concat_ws(' ', slice(t, i + 1, $k)))) END AS composed
+         FROM VALUES (array('a', NULL, 'b', 'c')), (array(NULL, 'a')),
+           (array(NULL, NULL, NULL)), (array('a', 'b')), (array('a')),
+           (array()), (array('é', NULL, 'ü')), (CAST(NULL AS array<string>)) AS v(t)""")
+    assert(raced.count() == 8)
+    assert(raced.where(not(col("fused") <=> col("composed"))).isEmpty,
+      raced.collect().mkString("\n"))
+    val e = intercept[Exception](spark.sql(
+      "SELECT graft_seed_hashes(array('a'), 0)").collect())
+    assert(namedIae(e).exists(_.contains("graft_seed_hashes")), e.toString)
+  }
+
+  test("graft_heavy_agg names a NULL, fractional or string k") {
+    val keys = "FROM VALUES (1L), (1L), (2L) AS v(x)"
+    assert(spark.sql(s"SELECT graft_heavy_agg(x, 2) $keys").head().getSeq[Row](0)
+      .map(r => (r.getLong(0), r.getLong(1))) == Seq((1L, 2L), (2L, 1L)))
+    // an integral literal of any width is k, as for the other builders
+    assert(spark.sql(s"SELECT graft_heavy_agg(x, 2L) $keys").head().getSeq[Row](0)
+      .size == 2)
+    for (k <- Seq("NULL", "CAST(NULL AS int)", "2.5", "CAST(2 AS decimal(10, 0))", "'2'")) {
+      val e = intercept[Exception](spark.sql(s"SELECT graft_heavy_agg(x, $k) $keys").collect())
+      assert(namedIae(e).exists(m => m.contains("graft_heavy_agg") && m.contains(" k ")),
+        s"k=$k: $e")
+    }
+  }
+
+  test("graft_nfc: NULL, empty, already-NFC and decomposed input") {
+    import java.text.Normalizer
+    import spark.implicits._
+    val inputs = Seq(null, "", "plain ascii", "caf\u00e9", "cafe\u0301",
+      "\u1100\u1161\u11a8", "A\u030a\u0301 \u212b", "e\u0301\u0323")
+    val df = inputs.map(Tuple1(_)).toDF("s")
+    df.createOrReplaceTempView("nfc_in")
+    for (sql <- Seq("SELECT s, graft_nfc(s) FROM nfc_in",
+                    "SELECT s, graft_nfc(s) FROM nfc_in WHERE length(coalesce(s, 'x')) >= 0")) {
+      val got = spark.sql(sql).collect().map(r => (r.getString(0), r.getString(1)))
+      assert(got.toSeq == inputs.map(s =>
+        (s, if (s == null) null else Normalizer.normalize(s, Normalizer.Form.NFC))), sql)
+    }
+    // already-NFC input comes back unchanged, decomposed input composes
+    assert(spark.sql("SELECT graft_nfc('cafe\u0301') = 'caf\u00e9'").head().getBoolean(0))
+  }
 }

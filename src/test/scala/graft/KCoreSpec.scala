@@ -146,10 +146,11 @@ object KCoreSpec {
     (out, round)
   }
 
-  case class Job(id: Int, stages: Int, shuffleRead: Long)
+  case class Job(id: Int, stages: Int, shuffleRead: Long, tasks: Int = 0)
 
-  /** Submitted stages and shuffle-read bytes per job, in job order;
-    * skipped stages (shuffle output reused) never count. */
+  /** Submitted stages, finished tasks and shuffle-read bytes per job,
+    * in job order; skipped stages (shuffle output reused) never
+    * count. */
   class JobLog extends SparkListener {
     private val stageJob = mutable.Map[Int, Int]()
     private val jobs = mutable.LinkedHashMap[Int, Job]()
@@ -165,9 +166,11 @@ object KCoreSpec {
         }
       }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      for (j <- stageJob.get(e.stageId); m <- Option(e.taskMetrics))
-        jobs(j) = jobs(j).copy(shuffleRead = jobs(j).shuffleRead +
-          m.shuffleReadMetrics.totalBytesRead)
+      for (j <- stageJob.get(e.stageId)) {
+        val read = Option(e.taskMetrics).fold(0L)(_.shuffleReadMetrics.totalBytesRead)
+        jobs(j) = jobs(j).copy(shuffleRead = jobs(j).shuffleRead + read,
+          tasks = jobs(j).tasks + 1)
+      }
     }
 
     /** The jobs so far, once the listener bus has delivered their

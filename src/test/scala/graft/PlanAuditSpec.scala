@@ -114,61 +114,48 @@ class PlanAuditSpec extends SparkSpec {
 
   test("simhash pairs verifies hamming in-task: no joins, no cache") {
     val p = plan("q_simhash_pairs")
-    // the one-long signature rides inside the bucket list, so pair
-    // generation AND hamming verification happen in the bucket's own
-    // task — a join (or a cached frame feeding one) in this plan means
-    // the cap² candidate explosion is being shuffled again
+    // each d1's pairs are generated, verified, de-duplicated across
+    // bands and ordered inside the one task that owns the d1: a join,
+    // an exchange or a sort in this plan means the pairs cross the
+    // network again; a cached frame means they are held twice
     assert(!p.contains("Join"), p.take(2000))
-    // the in-task verify is the native fused generator (round 13) —
-    // bit_count runs inside graft_hamming_pairs, not as a per-pair
-    // interpreted lambda
-    assert(p.contains("graft_hamming_pairs"), p.take(2000))
-    // the verified pairs cross the network once: one range exchange on
-    // (d1, d2) clusters the cross-band distinct AND orders the sort;
-    // a hash exchange over the pair columns is the second pair shuffle
-    val exchanges = p.linesIterator.filter(_.contains("Exchange ")).toSeq
-    val pairCols = """\b(d1|d2|hamming)#""".r
-    val pairEx = exchanges.filter(pairCols.findFirstIn(_).isDefined)
-    assert(pairEx.size == 1 && pairEx.head.contains("rangepartitioning("), p.take(3000))
-    assert(!exchanges.exists(l => l.contains("hashpartitioning(") &&
-      pairCols.findFirstIn(l).isDefined), p.take(3000))
+    assert(!p.contains("Exchange"), p.take(2000))
+    assert(!p.contains("Sort"), p.take(2000))
+    assert(!p.contains("InMemoryTableScan"), p.take(2000))
   }
 
   test("simhash pairs generates candidates on numShufflePartitions tasks") {
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
-      AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
-    // the bucket shuffle is small, so AQE would coalesce it into one
-    // partition and run the whole pair fan-out behind it in one task
-    val df = SparkEntry.queries("q_simhash_pairs")(spark, sf("documents"))
-    df.collect()
-    val helper = new AdaptiveSparkPlanHelper {}
-    val fin = df.queryExecution.executedPlan
-    def isBucket(s: org.apache.spark.sql.execution.SparkPlan) = s match {
-      case q: ShuffleQueryStageExec => q.shuffle.outputPartitioning match {
-        case HashPartitioning(keys, _) =>
-          keys.collect { case a: Attribute => a.name } == Seq("band", "key")
-        case _ => false
-      }
-      case _ => false
-    }
-    val n = spark.sessionState.conf.numShufflePartitions
-    val stages = helper.collect(fin) {
-      case q: ShuffleQueryStageExec if isBucket(q) => q.shuffle.numPartitions
-    }
-    val reads = helper.collect(fin) {
-      case r: AQEShuffleReadExec if isBucket(r.child) => r.partitionSpecs.size
-    }
-    assert(stages == Seq(n) && reads.forall(_ == n), fin.toString.take(3000))
+    val q = SparkEntry.queries("q_simhash_pairs")
+    // a first build infers the documents schema (Tables.parquet)
+    q(spark, sf("documents"))
+    val jobs = new KCoreSpec.JobLog
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val df = q(spark, sf("documents"))
+      val built = jobs.settled()
+      df.collect()
+      val ran = jobs.settled().drop(built.size)
+      // building runs only the bucket collect: the (band, key) shuffle
+      // and the read of the aggregated buckets
+      assert(built.nonEmpty && built.size <= 2 && built.last.shuffleRead > 0,
+        built.mkString("\n"))
+      // executing runs one single-stage job, one task per d1 range
+      val n = spark.sessionState.conf.numShufflePartitions
+      assert(ran.size == 1 && ran.head.stages == 1 && ran.head.tasks == n &&
+        ran.head.shuffleRead == 0, ran.mkString("\n"))
+    } finally spark.sparkContext.removeSparkListener(jobs)
   }
 
   test("hamming histogram counts pairs without the sort's range exchange") {
-    // only simhashPairs' (d1, d2) sort needs the range exchange; its
-    // bound-sampling job is of no use to a histogram
+    // the histogram counts off simhashPairs' own d1-owned tasks: no
+    // exchange is keyed on a pair column, neither for a cross-band
+    // distinct nor for a hamming group-by
     val p = plan("q_hamming_hist")
-    assert(p.contains("graft_hamming_pairs") && !p.contains("rangepartitioning(d1#"),
-      p.take(3000))
+    val pairCols = """\b(d1|d2|hamming)#""".r
+    val keyed = p.linesIterator.filter(l => l.contains("Exchange ") &&
+      (l.contains("rangepartitioning(") || l.contains("hashpartitioning(")) &&
+      pairCols.findFirstIn(l).isDefined).toSeq
+    assert(keyed.isEmpty, p.take(3000))
   }
 
   test("stratified sample is a pure scan+filter: no join, no aggregate") {
