@@ -1,8740 +1,50 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.operators._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.keys._
+import graft.operators.Analytics
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
-  * Every query key has a same-named DuckDB oracle in [[oracleSql]]
-  * unless the op is hash-function-dependent (rows-only check).
-  * Column names/types are aligned between both sides (the driver's
-  * compare sorts columns by name and hashes values).
+/** Driver contract — see SURVEY.md §2 for the inventory. Every query
+  * key is declared once, in its family's registry under `graft.keys`
+  * ([[graft.keys.Key]]), with a same-named DuckDB oracle or the reason
+  * it is a rows-only slot. Column names/types are aligned between both
+  * sides (the driver's compare sorts columns by name and hashes
+  * values). This object concatenates the registries.
   */
 object SparkEntry {
 
-  /** Synthetic deterministic projection factor — SURVEY.md §3. Must
-    * stay in sync with the `CAST(1 + user_id % 7 AS DOUBLE)` used in
-    * every oracle below. */
-  private val ProjfactSql = "CAST(1 + user_id % 7 AS DOUBLE)"
+  /** The registries, in bench order. */
+  private[graft] val families: Seq[Family] = Seq(CommerceKeys,
+    HouseholdKeys, QualityKeys, TextKeys, CurationKeys, NearDupKeys,
+    VectorKeys, EventKeys, GraphKeys)
 
-  /** |pct_diff| threshold for q_qa_flags — ~the planted 1-in-20 ad-side
-    * drop rate, so the flag splits the groups non-trivially. */
-  private val QaTolerance = 0.0526
-
-  /** q_containment threshold: strictly stronger than the 0.3 jaccard
-    * gate — the asymmetric check finds ~10× more pairs on the planted
-    * corpus (short-in-long dups that symmetric jaccard misses). */
-  private val ContainmentThreshold = 0.6
-
-  /** q_dedup_sweep candidate Jaccard thresholds (permille): brackets
-    * the 0.3 gate q_ngram_jaccard runs at so the report shows how the
-    * pair/drop counts decay toward strictness. */
-  private val SweepThresholdsPm = Seq(300, 500, 700, 900)
-
-  /** q_decontam: eval set = docs with doc_id % Mod == Rem (a
-    * deterministic ~5% held-out slice); contamination = sharing any
-    * 8-gram with it. 8 words ≈ the corpus's doc length scale (30–80
-    * tokens), selective enough to flag only planted near-dups. */
-  private val DecontamN = 8
-  private val DecontamEvalMod = 20
-  private val DecontamEvalRem = 7
-
-  /** q_stratified_sample: per-language keep rates (language mixture
-    * reweighting). Chosen to split every stratum non-trivially on the
-    * test corpus: fr kept whole, en/es halved, de/zh quartered. */
-  private val SampleRates = Map(
-    "en" -> 0.5, "fr" -> 1.0, "de" -> 0.25, "es" -> 0.5, "zh" -> 0.25)
-  private val SampleBuckets = 10000
-
-  /** q_blocklist: corpus-vocabulary terms (synthetic docs have no real
-    * profanity; what matters is the deterministic filter contract) and
-    * a hit-fraction threshold that splits the corpus ~80/20. */
-  private val BlocklistTerms = Seq("slow", "big", "customer")
-  private val BlocklistMaxFrac = 0.12
-
-  /** q_canary_scan phrases: multi-word substrings with corpus hit
-    * counts spanning rare→common, plus one deliberately absent canary
-    * (index 4) so the report proves a zero is a zero. Order matters —
-    * bit i of the mask is phrase i. */
-  private val CanaryPhrases = Seq("agg join small", "table window table",
-    "fast spark", "scan slow fast", "benchmark answer key")
-
-  /** q_chunks/q_chunk_dedup: 32-token windows every 24 tokens
-    * (8-token overlap) — small enough that the planted near-dup docs
-    * share exact windows at every SF. */
-  private val ChunkSize = 32
-  private val ChunkStride = 24
-
-  /** q_pack: training-bin token budget (≈16 chunks per bin). */
-  private val PackContextLen = 512
-
-  /** q_vocab top-N (non-binding on the 31-term synthetic vocabulary —
-    * the ordering contract, not the cut, is what the gate checks). */
-  private val VocabTopN = 1000
-  /** q_ngram_coverage head-coverage checkpoints. */
-  private val CoverageKs = Seq(100, 1000, 10000)
-  /** q_ann_recall_curve recall@k checkpoints. */
-  private val AnnCurveKs = Seq(1, 3, 5)
-  /** q_knn_accuracy query prefix (vec_id < max) and vote size. */
-  private val KnnQueryMax = 100
-  private val KnnK = 5
-  /** q_stickiness trailing window (the MAU in DAU/MAU). */
-  private val StickinessDays = 30
-
-  /** q_source_kl: corpus-term simplex size (+1 residual bucket) the
-    * per-source KL folds over — bounds the fold at any corpus size. */
-  private val KlTopTerms = 2000
-
-  /** q_zipf: top-rank terms the log-log OLS fits over. */
-  private val ZipfTopK = 100
-
-  /** q_heaps: doc_id-grid prefix checkpoints the ln–ln Heaps fit runs
-    * over (no global sort — the grid is row-local off min/max ids). */
-  private val HeapsCheckpoints = 10
-
-  /** q_quality_trend: ingestion-order buckets (same id grid). */
-  private val QualityTrendBuckets = 10
-
-  /** q_embed_outliers: farthest-from-centroid vectors kept per label. */
-  private val OutlierTopK = 10
-
-  /** q_benford: χ² suspect threshold (8 df, p≈0.01). */
-  private val BenfordChi2Crit = 20.09
-
-  /** q_reconcile: header/detail mismatch tolerance in cents. */
-  private val ReconTolCents = 1L
-
-  /** q_fd_audit: candidate determinant → dependent pairs over orders
-    * (one true key FD, two deliberately violated candidates). */
-  private val FdAuditPairs = Seq(
-    ("o_orderkey", "o_custkey"),
-    ("o_custkey", "o_orderpriority"),
-    ("o_orderpriority", "o_orderstatus"))
-
-  /** q_corr_matrix: audited lineitem measures with their decimal
-    * quantization scales (quantity is integral; the rest are 2dp). */
-  private val CorrMatrixCols = Seq(
-    ("l_quantity", 0), ("l_extendedprice", 2),
-    ("l_discount", 2), ("l_tax", 2))
-
-  /** q_bpe_pairs top-N — BINDING on the synthetic corpus (~40-word
-    * vocabulary → hundreds of distinct adjacent pairs), so the
-    * deterministic tie-break at the cut is itself gate-checked. */
-  private val BpeTopN = 200
-
-  /** q_bpe_train merge rounds — replayed structurally by the
-    * unrolled-CTE oracle ([[bpeVocabCtes]]), the k-core precedent:
-    * each data-dependent argmax round is one MATERIALIZED CTE step,
-    * so the gate hash-checks the full merge sequence. */
-  private val BpeMerges = 10
-
-  /** The BPE merge loop unrolled to exactly [[BpeMerges]]
-    * MATERIALIZED CTE steps — shared by the q_bpe_train and
-    * q_bpe_apply oracles. Symbol arrays ride as '[s1][s2]…' strings
-    * (tokens are [a-z0-9]+ so a bracket can never occur inside a
-    * symbol); the engine's greedy left-to-right merge fold
-    * ([[graft.operators.TextAnalysis.bpeTrain]]'s mergeFold) is
-    * EXACTLY SQL replace()'s non-overlapping left-to-right scan — a
-    * replacement is never re-scanned, so a merged symbol cannot
-    * immediately re-merge, and overlapping runs resolve left-first
-    * on both sides. Yields v0..v$BpeMerges (term, symstr, cnt) and
-    * m0..m${BpeMerges-1} (a, b, w) — the per-round winning pair. */
-  private lazy val BpeVocabCtes: String = {
-    val steps = (0 until BpeMerges).map { k =>
-      s"""p$k AS MATERIALIZED (
-            SELECT pp[1] AS a, pp[2] AS b, CAST(sum(cnt) AS BIGINT) AS w
-            FROM (SELECT unnest(list_transform(range(1, len(sym)),
-                i -> [sym[i], sym[i + 1]])) AS pp, cnt
-              FROM (SELECT regexp_extract_all(symstr,
-                  '\\[([^\\]]+)\\]', 1) AS sym, cnt FROM v$k) s
-              WHERE len(sym) >= 2)
-            GROUP BY 1, 2),
-          m$k AS MATERIALIZED (SELECT a, b, w FROM p$k
-            ORDER BY w DESC, a, b LIMIT 1),
-          v${k + 1} AS MATERIALIZED (SELECT term,
-            replace(symstr,
-              '[' || (SELECT a FROM m$k) || '][' ||
-                (SELECT b FROM m$k) || ']',
-              '[' || (SELECT a FROM m$k) ||
-                (SELECT b FROM m$k) || ']') AS symstr,
-            cnt FROM v$k)"""
-    }.mkString(",\n          ")
-    s"""v0 AS MATERIALIZED (
-          SELECT term, regexp_replace(term, '(.)', '[\\1]', 'g') AS symstr,
-            CAST(count(*) AS BIGINT) AS cnt
-          FROM (SELECT unnest($ToksSql) AS term FROM documents)
-          GROUP BY 1),
-          $steps"""
+  /** Every key of `families` in declaration order. A `Map` keeps the
+    * last of two same-named entries without a word, so a key declared
+    * twice, in one family or two, fails here with its declarers. */
+  private[graft] def declared(families: Seq[Family]): Seq[Key] = {
+    val all = families.flatMap(f => f.keys.map(f.name -> _))
+    val twice = all.groupBy(_._2.name).collect {
+      case (k, ds) if ds.size > 1 => s"$k (${ds.map(_._1).mkString(", ")})"
+    }
+    if (twice.nonEmpty) throw new IllegalArgumentException(
+      s"query key declared more than once: ${twice.toSeq.sorted.mkString("; ")}")
+    all.map(_._2)
   }
 
-  /** q_quality_cap: best docs kept per source. */
-  private val QualityPerSource = 3
+  val registry: Seq[Key] = declared(families)
 
-  /** q_dedup_incremental: the "daily increment" slice (doc_id % Mod ==
-    * Rem); the rest of documents plays the existing corpus. */
-  private val IncrementMod = 10
-  private val IncrementRem = 3
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(k => k.name -> k.build).toMap
 
-  /** q_multimodal_frames: every 5th frame, at most 4 per doc. */
-  private val FrameStride = 5
-  private val MaxFrames = 4
-
-  /** q_sessionize: gap (minutes) closing a session. 30 min splits the
-    * synthetic per-user event streams into multi-session histories at
-    * every SF. */
-  private val SessionGapMin = 30
-
-  /** q_rolling_daily: trailing window length in days. */
-  private val RollingDays = 7
-
-  /** q_tfidf: terms kept per document. */
-  private val TfidfPerDoc = 3
-
-  /** q_inverted_index: df floor and postings kept per term. */
-  private val IndexMinDf = 2
-  private val IndexTopPostings = 5
-
-  /** q_ship_priority (TPC-H Q3 shape): segment, cutoff, top-k. The
-    * cutoff sits mid-range of the order dates so both date filters
-    * are selective. */
-  private val ShipSegment = "BUILDING"
-  private val ShipCutoff = "1998-06-01"
-  private val ShipTopK = 10
-
-  /** q_local_volume (TPC-H Q5 shape): region and order-year window
-    * (orders span 1995–2001 in the testdata). */
-  private val Q5Region = "ASIA"
-  private val Q5YearStart = "1996-01-01"
-  private val Q5YearEnd = "1997-01-01"
-
-  /** q_returned_items (TPC-H Q10 shape): order quarter + top-k. */
-  private val Q10Start = "1997-01-01"
-  private val Q10End = "1997-04-01"
-  private val Q10TopK = 20
-
-  /** q_order_priority (TPC-H Q4 shape): order quarter + the lateness
-    * threshold. Ship delays here spread years (median 36 d, p90
-    * 1404 d), so 365 makes "had a late line" a genuine split rather
-    * than all-or-nothing. */
-  private val Q4Start = "1997-01-01"
-  private val Q4End = "1997-04-01"
-  private val Q4LateDays = 365
-
-  /** q_revenue_forecast (TPC-H Q6 shape): ship year + discount band
-    * (the generator's discounts sit on an exact 0.01 grid, 0.00–0.10)
-    * + quantity cap. */
-  private val Q6YearStart = "1997-01-01"
-  private val Q6YearEnd = "1998-01-01"
-  private val Q6DiscLo = 0.05
-  private val Q6DiscHi = 0.07
-  private val Q6MaxQty = 24.0
-
-  /** q_nation_trade (TPC-H Q7 shape): the two trading nations. */
-  private val Q7NationA = "NATION_1"
-  private val Q7NationB = "NATION_2"
-
-  /** q_market_share (TPC-H Q8 shape): target supplier nation,
-    * customer region, part type under study. */
-  private val Q8SuppNation = "NATION_3"
-  private val Q8CustRegion = "ASIA"
-  private val Q8PartType = "ECONOMY"
-
-  /** q_product_profit (TPC-H Q9 shape): part type under study. */
-  private val Q9PartType = "PROMO"
-
-  /** q_priority_delay (TPC-H Q12 shape): ship year + the LATE band
-    * threshold (same 365-day lateness notion as Q4). */
-  private val Q12Start = "1997-01-01"
-  private val Q12End = "1998-01-01"
-  private val Q12LateDays = 365
-
-  /** q_cust_order_dist (TPC-H Q13 shape): priority class excluded
-    * from the per-customer order counts. */
-  private val Q13ExcludePriority = "5-LOW"
-
-  /** q_promo_share (TPC-H Q14 shape): promo part type + ship window
-    * (a year of months so the month grain has >1 row). */
-  private val Q14PromoType = "PROMO"
-  private val Q14Start = "1997-01-01"
-  private val Q14End = "1998-01-01"
-
-  /** q_top_supplier (TPC-H Q15 shape): revenue window (a quarter). */
-  private val Q15Start = "1997-01-01"
-  private val Q15End = "1997-04-01"
-
-  /** q_supplier_variety (TPC-H Q16 shape): excluded brand + size band
-    * width (p_size spans 1–50 → five bands). */
-  private val Q16ExcludeBrand = "Brand#1"
-  private val Q16SizeBand = 10
-
-  /** q_disjunctive_rev (TPC-H Q19 shape): the three clause brands
-    * (disjoint by construction, so clause labels are exact). */
-  private val Q19Brands = Seq("Brand#1", "Brand#9", "Brand#15")
-
-  /** q_late_suppliers: ship-delay threshold (days). The synthetic
-    * shipdates spread years past the order date (95th pct ≈ 1723
-    * days), so 1800 makes "late" a selective ~4% slice. */
-  private val LateDelayDays = 1800
-
-  /** q_k_anon: minimum equivalence-class size; balance bands of 1000
-    * currency units generalize c_acctbal. */
-  private val KAnonK = 5
-  private val KAnonBalBand = 1000
-
-  /** q_l_diversity: distinct sensitive (balance-band) values each
-    * (nation, segment) class must carry. */
-  private val LDiversityL = 3
-
-  /** q_t_closeness: max ordered-EMD distance between a class's
-    * balance-band distribution and the table's. */
-  private val TClosenessT = 0.15
-
-  /** q_curriculum: equal-population quality tiers. */
-  private val CurriculumBuckets = 10
-
-  /** q_token_budget: spend half the corpus's tokens; priority weight
-    * 2 for even-suffixed sources, 1 for odd (standing in for a
-    * user-supplied source-priority table, derived from the source
-    * name so the oracle replays it). */
-  private val TokenBudgetNum = 1L
-  private val TokenBudgetDen = 2L
-  private def tokenBudgetWeight =
-    when(regexp_extract(col("source"), "([0-9]+)$", 1).cast("int") % 2 === 0,
-      lit(2L)).otherwise(lit(1L))
-
-  /** q_forecast_naive: seasonal lag in days (same weekday last week). */
-  private val ForecastLagDays = 7
-
-  /** q_autocorr: lags (days) tested — 1 for day-to-day persistence, 7
-    * for weekly cadence (the [[ForecastLagDays]] model check). */
-  private val AutocorrLags = Seq(1, 7)
-
-  /** q_item_similarity: neighbors kept per item. */
-  private val ItemSimTopN = 5
-
-  /** q_pagerank: damped value-iteration rounds (unrolled verbatim in
-    * the oracle CTE chain) and report size. */
-  private val PageRankIters = 3
-  private val PageRankTopN = 100
-
-  /** q_fanout_audit: per-key multiplicity cap — the top bucket reads
-    * "cap or more". */
-  private[graft] val FanoutMultCap = 8
-
-  /** q_changepoint: window length and minimum observed days per side. */
-  private val ChangepointDays = 7
-  private val ChangepointMinDays = 3
-
-  /** q_freshness: trailing activity windows (days before the corpus
-    * frontier day). */
-  private val FreshnessTrailDays = Seq(1, 7)
-
-  /** q_file_skipping: z-order files and probes per dimension (probe
-    * width = 1024/8 = 128 cells). */
-  private val SkipFiles = 64
-  private val SkipProbes = 8
-
-  /** q_small_orders (TPC-H Q17 shape): a line is "small" below this
-    * fraction of its part's average quantity. */
-  private val SmallOrderFrac = 0.2
-
-  /** q_bulk_orders (Q18 shape): quantity threshold ≈ p95 of per-order
-    * totals (874 qualifying orders at sf0.01), report size. */
-  private val BulkMinQty = 200
-  private val BulkTopK = 100
-
-  /** q_idle_customers (Q22 shape): no-order trailing window — 365 d
-    * keeps 149 of 1500 above-average customers at sf0.01 (classic
-    * no-orders-EVER is degenerate here: every customer orders). */
-  private val IdleDays = 365
-
-  /** q_min_cost_supplier (TPC-H Q2 shape): supplier region, part
-    * type/size slice (size divisible by 5 ≈ 1/5 of the type's parts),
-    * classic report cut. 57 rows at sf0.01. */
-  private val Q2Region = "EUROPE"
-  private val Q2PartType = "STANDARD"
-  private val Q2SizeMod = 5
-  private val Q2TopK = 100
-
-  /** q_important_stock (TPC-H Q11 shape): the stock-holding nation and
-    * the cross-multiplied share threshold (part value > 1/500 of the
-    * nation total keeps 50 of ~1200 observed parts at sf0.01; the
-    * classic fraction scales with 1/|supplier| the same way). */
-  private val Q11NationKey = 3
-  private val Q11FracDen = 500L
-
-  /** q_promo_stock_suppliers (TPC-H Q20 shape): promo part type and
-    * ship-year window (64 qualifying suppliers at sf0.01). */
-  private val Q20PartType = "PROMO"
-  private val Q20Start = "1997-01-01"
-  private val Q20End = "1998-01-01"
-
-  /** q_ctr_wilson: success event type, segment count (the
-    * qa_multigroup site convention), z. */
-  private val CtrSuccessType = "purchase"
-  private val CtrSegments = 5
-  private val CtrZ = 1.96
-  private val PmiMinCount = 5
-  private val PmiTopN = 200
-  private val PrefixK = 8
-  private val PrefixMinDocs = 2
-  private val PrefixTopN = 100
-  private val SampleBiasMod = 10
-  private val SampleBiasCritical = 3.841
-  private val IngestBuckets = 20
-  private val ConsistencyTopK = 20
-
-  /** q_entity_components synthetic shared identifiers: key g3 groups
-    * consecutive custkey triples; key dec links the multiples of 3
-    * within each 30-key decade — so triples chain into ~30-record
-    * entities through the decade hubs, exercising transitivity
-    * without collapsing the table into one giant component. */
-  private val EntityG3 = 3
-  private val EntityDecade = 30
-
-  /** q_triangles: co-purchase min-support — the noise floor AND the
-    * density control (support-1 basket graphs are near-complete;
-    * support 2 is non-degenerate at every SF: 3258/61/1 triangles at
-    * sf0.001/0.01/0.1). */
-  private val TriangleMinSupport = 2
-
-  /** q_k_core oracle: the same min-support edge CTE as q_triangles,
-    * the derived-k rule (max(2, ⌈edges/nodes⌉), integer ceil-div —
-    * [[graft.operators.Affinity.kCoreKFor]]), and the peel unrolled
-    * to exactly [[graft.operators.Affinity.KCoreMaxPeels]] CTE steps
-    * — the engine's depth cap replayed structurally (PureProps pins
-    * the final step index), with idempotence making post-convergence
-    * steps no-ops. Each step drops edges with an endpoint whose
-    * degree in the PREVIOUS step's set is under k (simultaneous
-    * removal, matching the engine's round semantics). */
-  private lazy val kCoreOracleSql: String = {
-    val depth = graft.operators.Affinity.KCoreMaxPeels
-    // AS MATERIALIZED is load-bearing: each step references its
-    // predecessor five times, and an inlining planner would expand
-    // the 24-step chain to 5^24 parquet scans
-    val steps = (1 to depth).map { i =>
-      s"""p$i AS MATERIALIZED (SELECT pa, pb FROM p${i - 1}
-          WHERE pa IN (SELECT node FROM (SELECT pa AS node FROM p${i - 1}
-              UNION ALL SELECT pb FROM p${i - 1}) t
-            GROUP BY node HAVING count(*) >= (SELECT k FROM kk))
-          AND pb IN (SELECT node FROM (SELECT pa AS node FROM p${i - 1}
-              UNION ALL SELECT pb FROM p${i - 1}) t
-            GROUP BY node HAVING count(*) >= (SELECT k FROM kk)))"""
-    }.mkString(",\n          ")
-    s"""WITH op AS (SELECT DISTINCT l_orderkey AS okey,
-            l_partkey AS part FROM lineitem),
-          p0 AS MATERIALIZED (SELECT a.part AS pa, b.part AS pb
-            FROM op a JOIN op b ON a.okey = b.okey AND a.part < b.part
-            GROUP BY 1, 2 HAVING count(*) >= $TriangleMinSupport),
-          kk AS MATERIALIZED (SELECT CASE WHEN count(DISTINCT node) = 0 THEN 2
-              ELSE greatest(2, (count(*) // 2 + count(DISTINCT node) - 1)
-                // count(DISTINCT node)) END AS k
-            FROM (SELECT pa AS node FROM p0 UNION ALL SELECT pb FROM p0) t),
-          $steps
-          SELECT part, CAST(count(*) AS BIGINT) AS core_deg,
-            (SELECT CAST(k AS INTEGER) FROM kk) AS k
-          FROM (SELECT pa AS part FROM p$depth
-            UNION ALL SELECT pb FROM p$depth) t
-          GROUP BY 1 ORDER BY part"""
-  }
-
-  /** q_wedge_recs: per-vertex neighbor cap (hub fan-out ≤ cap², the
-    * LSH-bucket discipline), report size, and the edge BUDGET the
-    * corpus-derived support level is solved against
-    * ([[graft.operators.Affinity.wedgeSupportFor]]): wedge candidate
-    * volume is bounded by 2·budget·cap² regardless of corpus density.
-    * 100k edges × cap 64 ⇒ ≤ ~3·10⁸ candidate wedge pairs worst
-    * case, seconds of in-task explode work at any SF; non-binding at
-    * gate scale (support-2 edges ≈ 3.6k at sf0.1), binding exactly
-    * when density would otherwise compound. */
-  private[graft] val WedgeNeighborCap = 64
-  private val WedgeTopN = 100
-  private[graft] val WedgeEdgeBudget = 100000L
-
-  /** The q_pagerank oracle's unrolled value-iteration rounds: one
-    * (contribution, rank) CTE pair per round over the shared
-    * e/deg/nodes frames. */
-  private val PageRankIterCtes: String = (1 to PageRankIters).map(i =>
-    s"""c$i AS (SELECT e.dst AS node,
-            CAST(sum(((r.rank_micro * 17) // 20) // d.deg) AS BIGINT)
-              AS inflow
-            FROM e JOIN r${i - 1} r ON r.node = e.src
-            JOIN deg d ON d.src = e.src GROUP BY 1),
-          r$i AS (SELECT n.node,
-            CAST(150000 + coalesce(c.inflow, 0) AS BIGINT) AS rank_micro
-            FROM nodes n LEFT JOIN c$i c USING (node))""")
-    .mkString(",\n          ")
-
-  /** q_range_join: attribution window length (days) after a purchase.
-    * The range-join band width equals the window, so each interval
-    * explodes to at most 2 bins. */
-  private val AttribDays = 3
-
-  /** q_cohort / q_funnel_steps: the full synthetic stream has every
-    * user active in week 1 and completing every stage (degenerate
-    * retention/conversion), so the journey queries run on
-    * deterministic modular event_id slices that simulate sparse
-    * product usage — non-trivial at every SF. */
-  private val CohortSliceMod = 17
-  private val FunnelSliceMod = 13
-  private val FunnelStages = Seq("view", "click", "purchase")
-
-  /** q_funnel_windowed: conversion deadline per step (days). 14 BINDS
-    * on the sparse funnel slice at every SF while keeping all stages
-    * non-zero (probed: sf0.01 unbounded (102, 46, 12) vs windowed
-    * (102, 35, 6)) — the windowed counts must differ from the
-    * unbounded funnel's or the query proves nothing. */
-  private val FunnelWindowDays = 14
-
-  /** q_session_paths: opening-path prefix length and report size. */
-  private val PathMaxLen = 5
-  private val PathTopN = 20
-
-  /** q_user_features: the fixed event-type domain of the testdata —
-    * static so the feature schema is data-independent. */
-  private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
-
-  /** q_dq_rules: the expectations suite on `orders`. The price cap is
-    * deliberately INSIDE the data range so the report shows real
-    * violations, not a wall of zeros. */
-  private val OrderPriceCap = 300000
-
-  /** q_ooo_audit candidate watermark delays (seconds). */
-  private val OooDelays = Seq(60, 300, 3600)
-
-  /** q_watermark_rec: max tolerated drop rate, per-mille (integer so
-    * the selection threshold is exact in both engines). */
-  private val WatermarkTargetPm = 5
-
-  /** q_span_dedup: seed-window length in tokens. Repeated spans
-    * shorter than this are invisible by design (ExactSubstr's
-    * min-match-length knob). */
-  private val SpanSeedLen = 8
-
-  /** Shared CTE prefix of the span-family oracles (q_span_dedup,
-    * q_span_strip, q_novelty): planted span fixture → tokens → md5
-    * seed windows per position. Mirrors NearDup.plantSpans +
-    * NearDup.seedFrame; md5 is bit-identical across engines. */
-  private def spanSeedCtes: String = {
-    val k = SpanSeedLen
-    s"""planted AS (SELECT doc_id,
-            CASE WHEN doc_id % 7 = 0
-              THEN text || ' ${NearDup.PlantedSpan}' ELSE text END AS text
-          FROM documents),
-          tk AS (SELECT doc_id, $ToksSql AS toks FROM planted),
-          tt AS (SELECT doc_id, toks FROM tk WHERE len(toks) >= $k),
-          s0 AS (SELECT doc_id, toks,
-              unnest(generate_series(1, len(toks) - ${k - 1})) AS i
-            FROM tt),
-          s AS (SELECT doc_id, i - 1 AS pos,
-              md5(array_to_string(toks[i:i + ${k - 1}], ' ')) AS sk
-            FROM s0)"""
-  }
-
-  /** [[spanSeedCtes]] extended through island merging to `sp`, the
-    * per-doc maximal-span frame (doc_id, island, span_start,
-    * span_end, n_seeds) — shared by q_span_dedup and q_span_strip. */
-  private def spanCtes: String = {
-    val k = SpanSeedLen
-    s"""$spanSeedCtes,
-          shared AS (SELECT sk FROM s GROUP BY sk
-            HAVING min(doc_id) <> max(doc_id)),
-          h AS (SELECT s.doc_id, s.pos FROM s JOIN shared USING (sk)),
-          i1 AS (SELECT doc_id, pos,
-              lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-            FROM h),
-          i2 AS (SELECT doc_id, pos, CASE WHEN prev IS NULL
-              OR pos - prev > $k THEN 1 ELSE 0 END AS ni FROM i1),
-          i3 AS (SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id
-              ORDER BY pos) AS island FROM i2),
-          sp AS (SELECT doc_id, island, min(pos) AS span_start,
-              max(pos) + $k AS span_end, count(*) AS n_seeds
-            FROM i3 GROUP BY doc_id, island)"""
-  }
-  private def orderRules: Seq[(String, Column)] = Seq(
-    "custkey_not_null" -> col("o_custkey").isNotNull,
-    "orderdate_in_range" ->
-      col("o_orderdate").between("1992-01-01", "1998-12-31"),
-    "orderkey_not_null" -> col("o_orderkey").isNotNull,
-    "status_known" -> col("o_orderstatus").isin("O", "F", "P"),
-    "totalprice_below_cap" -> (col("o_totalprice") < OrderPriceCap),
-    "totalprice_positive" -> (col("o_totalprice") > 0))
-
-  /** q_gap_fill: 1-in-997 event slice — sparse enough that the daily
-    * series has real holes at every SF. */
-  private val GapSliceMod = 997
-
-  /** q_histogram: fixed-width value bins (events.value spans ~0–490 at
-    * every SF, so all 10 interior bins populate; the open under/
-    * overflow bins are exercised by spec). */
-  private val HistLo = 0.0
-  private val HistWidth = 50.0
-  private val HistBins = 10
-
-  /** q_qa_anomaly: 7-day trailing baseline, 3σ threshold, ≥4 baseline
-    * days before a day may flag. */
-  private val AnomalyDays = 7
-  private val AnomalyK = 3
-  private val AnomalyMinDays = 4
-
-  /** q_semantic_dedup: same deterministic centroid seeds as the ANN
-    * queries ([[annSeeds]]), same 0.4 cosine gate as the near-dup
-    * queries — so the three vector surfaces stay comparable. */
-  private val SemDedupThreshold = 0.4
-
-  /** Centroid seeds for the IVF/PQ/semantic-dedup family: every
-    * (√n)-th vec_id ([[VectorSearch.centroidStrideFor]] — cells grow
-    * as √n, keeping assignment AND in-cell quadratic work at n^1.5;
-    * the fixed ÷50 stride this replaces grew cells linearly and
-    * assignment quadratically, 12–21× at the 10× sf1 probe). The
-    * corpus count is one cheap parquet metadata action, memoized per
-    * data dir; the oracles replay round(sqrt(count(*))) off the same
-    * table. */
-  private val embCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  private def embCount(emb: DataFrame, d: String): Long =
-    embCountMemo.getOrElseUpdate(d, emb.count())
-  private def annSeeds(emb: DataFrame, d: String): DataFrame = {
-    val stride = VectorSearch.centroidStrideFor(embCount(emb, d))
-    emb.where(col("vec_id") % stride === 0)
-  }
-
-  /** The oracle-side twin of [[annSeeds]]'s stride. */
-  private val CentroidStrideSql =
-    "(SELECT greatest(1, CAST(round(sqrt(count(*))) AS BIGINT)) FROM embeddings)"
-
-  /** Lloyd iterations for the IVF-family centroids: ONE refinement of
-    * the stride seeds. Measured at sf0.1 (DevProbe, 45 cells / 2000
-    * vectors): recall@3 0.267→0.333, recall@10 0.22→0.25, cell
-    * imbalance 1.44→1.33 vs raw stride seeds; a second iteration gave
-    * part of that back (recall@3 0.30) while doubling training cost —
-    * the classic k-means knee. PQ codebooks stay on raw stride seeds:
-    * they quantize 16-dim SUBspaces where the full-vector Lloyd means
-    * are not the relevant geometry. */
-  private val LloydIters = 1
-
-  /** Trained IVF centroids: [[annSeeds]] refined by [[LloydIters]]
-    * bounded, deterministic k-means steps
-    * ([[VectorSearch.trainCentroids]] — integer-quantized means, so
-    * the result is summation-order-independent and the DuckDB oracle
-    * replays the identical refinement via [[TrainedCtrCtes]]).
-    *
-    * Trained ONCE PER SESSION per data dir and memoized as collected
-    * rows (√n centroids × 64 floats — ~115 KB at the 100× probe's
-    * 200k vectors; still ~8 MB at 10⁹, and the frame is broadcast
-    * downstream anyway): eight query keys rank against these
-    * centroids, and retraining inside every plan re-paid the Lloyd
-    * corpus pass eight times per marathon — the round-12 verdict
-    * named exactly that inline re-training as the one real gap in
-    * the ANN serving story. Training is deterministic
-    * (summation-order-independent integer means), so the memo can
-    * never change a result — it is the in-session analog of the
-    * published catalog snapshot ([[graft.operators.AnnIndex
-    * .publishIvfPq]] / [[graft.operators.AnnIndex.publish]], the
-    * cross-session path a deployment uses), same discipline as the
-    * [[embCount]] metadata memo. The rebuilt frame is a fresh local
-    * relation per call, so Bench's between-run cache hygiene
-    * ([[Caches.clear]]) never touches shared state. */
-  private val annCentroidsMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType)]
-  private def annCentroids(emb: DataFrame, d: String): DataFrame = {
-    val (rows, schema) = annCentroidsMemo.getOrElseUpdate(d, {
-      val t = VectorSearch.trainCentroids(emb, annSeeds(emb, d), LloydIters)
-        .select(col("centroid_id").as("vec_id"), col("embedding"))
-      (t.collect(), t.schema)
-    })
-    emb.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** Drop the per-data-dir session memos ([[embCountMemo]],
-    * [[annCentroidsMemo]]). Bench calls this in its between-trial
-    * hygiene block so every timed trial pays its own Lloyd training
-    * and corpus count — a memo that survived the purge would let
-    * min-of-2 record training-free ANN trials, which measures the
-    * memo, not the engine. The deployment story for "index built
-    * once" is the published [[graft.operators.AnnIndex]] catalog
-    * serve, not this in-session cache. */
-  def clearSessionMemos(): Unit = {
-    embCountMemo.clear()
-    annCentroidsMemo.clear()
-  }
-
-  /** q_mixture: per-source target weights (unlisted sources weight 1)
-    * and the token budget as a fraction of the corpus. Weights are
-    * dyadic rationals so every windowed partial sum is exactly
-    * representable — the normalizer is summation-order-independent. */
-  private val MixtureWeights = Map("src0" -> 4.0, "src3" -> 2.0, "src7" -> 0.5)
-  private val MixtureBudget = 0.5
-  /** q_trending_terms grid: ingestion-order buckets × chart depth. */
-  private val TrendBuckets = 4
-  private val TrendTopK = 15
-  /** q_decompose centered-trend half-window (days each side). */
-  private val DecomposeHalf = 3
-
-  /** q_search: literal query terms (corpus-vocabulary words) and the
-    * result-list size. */
-  private val SearchTerms = Seq("spark", "window", "stream")
-
-  /** q_search_eval: (query id, conjunctive term set) pairs — terms
-    * drawn from the synthetic vocab so every query has matches — and
-    * the precision@k cut. */
-  private val EvalQueries = Seq(
-    "multi_spark_table" -> Seq("spark", "table"),
-    "pair_window_stream" -> Seq("window", "stream"),
-    "single_merge" -> Seq("merge"))
-  private val EvalK = 10
-  private val SearchK = 20
-
-  /** q_qa_orphans: the measurement panel = customers with key <
-    * PanelMaxKey — the stand-in for the reference's matched-universe
-    * file; events from users outside it count as orphans (would be
-    * dropped by the universe semi-join). */
-  private val PanelMaxKey = 100
-
-  /** q_active_users: trailing active-user window (the WAU leg). */
-  private val ActiveDays = 7
-
-  /** q_sample_fixed: docs kept per stratum — binds (strata are larger)
-    * at every SF. */
-  private val FixedPerStratum = 30
-
-  /** q_weighted_sample: docs drawn per source by token-mass A-ES keys
-    * — binds at every SF (sources are larger). */
-  private val WeightedPerStratum = 25
-
-  /** q_reach_var: jackknife replicate groups. */
-  private val JackknifeGroups = 10
-
-  /** q_table_diff / q_scd_merge planted snapshot deltas: keys %
-    * ChangeMod change an attribute, % DropMod vanish (diff only),
-    * % NewMod reappear shifted by NewKeyOffset as brand-new keys.
-    * Non-trivial added/removed/changed/closed populations at every
-    * SF. */
-  private val ChangeMod = 9
-  private val DropMod = 13
-  private val NewMod = 17
-  private val NewKeyOffset = 1000000L
-
-  /** q_cdc_apply planted change log: % UpdMod updated at seq 1,
-    * % DelMod deleted at seq 2, % InsMod inserted as shifted new keys
-    * at seq 2, % ResMod (⊂ DelMod's multiples) re-upserted at seq 3 —
-    * so last-writer-wins is exercised in both directions (update→
-    * delete wins delete, delete→upsert resurrects). */
-  private val CdcUpdMod = 5
-  private val CdcDelMod = 7
-  private val CdcInsMod = 11
-  private val CdcResMod = 21
-
-  /** q_entity_match: planted typos over customer names — id % 3 == 0
-    * gets one mid-name substitution (dist 1), % 3 == 1 two (dist 2),
-    * % 3 == 2 a LAST-char substitution that breaks the trailing-chars
-    * blocking key — the intentional blocking-miss class (NULL match)
-    * that makes the matcher's recall tradeoff visible in the gate.
-    * Block length is corpus-derived (Entity.blockLenFor), replayed
-    * in SQL by the oracle off count(*) of the clean side. */
-  private val EntityMaxDist = 2
-
-  /** q_split: 80/10/10 train/val/test over [[SampleBuckets]] salted
-    * hash buckets. */
-  private val SplitTrainBuckets = 8000
-  private val SplitValBuckets = 1000
-
-  /** q_schema_contract: the declared orders contract — v2 of the
-    * feed (adds o_comment, narrows o_totalprice to a decimal), so the
-    * drift report against the actual v1 parquet carries one
-    * missing_in_actual and one type_changed row by construction. */
-  private val OrdersContract = Seq(
-    "o_orderkey" -> "bigint", "o_custkey" -> "bigint",
-    "o_orderstatus" -> "string", "o_totalprice" -> "decimal(12,2)",
-    "o_orderdate" -> "timestamp", "o_orderpriority" -> "string",
-    "o_comment" -> "string")
-
-  /** q_join_skew: report size + the per-bucket output-row target
-    * the power-of-two bucket ladder is solved against. */
-  private val JoinSkewTopK = 20
-  private val JoinSkewTarget = 1000000L
-
-  /** q_vector_health: the testdata embedding dimensionality. */
-  private val EmbeddingDim = 64
-
-  /** q_shard_plan: output shards the balance plan targets. */
-  private val ShardCount = 16
-
-  /** q_bloom_join: the dim-side nation cut (5 of 25 nations ≈ 20%
-    * join selectivity — selective enough that pruning pays). */
-  private val BloomJoinMaxNation = 5
-
-  /** q_skew_report: heaviest keys listed. */
-  private val SkewTopN = 10
-
-  /** q_profile columns — numeric and string legs of the lineitem
-    * describe-profile; both the query and its oracle are generated
-    * from these lists. */
-  private val ProfileNumCols =
-    Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
-  private val ProfileStrCols = Seq("l_returnflag", "l_linestatus")
-
-  /** Oracle twins of Curation.sampleBucket + the SampleRates CASE —
-    * shared by q_stratified_sample and q_curation_funnel. */
-  private def sampleBucketSql(id: String) =
-    s"('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 6))::BIGINT % $SampleBuckets"
-  private lazy val SampleCaseSql = SampleRates.keys.toSeq.sorted.map(l =>
-    s"WHEN '$l' THEN ${math.round(SampleRates(l) * SampleBuckets)}")
-    .mkString("CASE lang ", " ", " ELSE 0 END")
-
-  /** One multigroup-QA oracle block: grouped log/ad counts outer-joined
-    * on `keys`, log-side meta left-joined, labels applied. Mirrors one
-    * [[graft.operators.DailyQA.multiGroupingQA]] `block`. */
-  private def qaBlockSql(d: String, logT: String, adT: String,
-                         dateSel: String, dimLabel: String,
-                         byDate: Boolean): String = {
-    val keys = if (byDate) s"$d, date" else d
-    s"""SELECT '$dimLabel' AS dimension, CAST($d AS VARCHAR) AS value,
-       $dateSel AS date, exe_imp, impressions,
-       impressions - exe_imp AS diff,
-       CAST(impressions - exe_imp AS DOUBLE) / nullif(impressions, 0) AS pct_diff,
-       meta
-       FROM (
-         SELECT $keys, exe_imp, impressions, meta FROM
-           (SELECT $keys, count(*) AS exe_imp FROM $logT GROUP BY $keys) l
-           FULL JOIN (SELECT $keys, count(*) AS impressions FROM $adT
-                      GROUP BY $keys) a USING ($keys)
-           LEFT JOIN (SELECT $keys, string_agg(conf, ' ' ORDER BY conf) AS meta
-                      FROM (SELECT DISTINCT $keys, conf FROM $logT)
-                      GROUP BY $keys) m USING ($keys))"""
-  }
+  /** Built on first read: the query path builds no oracle text. */
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case Key(n, _, Key.Sql(sql), _) => n -> sql() }.toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Analytics.pricingSummary(Tables.lineitem(spark, "/root/testdata/sf0.001"))
 
-  private val etypes = Seq("click", "error", "purchase", "signup", "view")
-
-  /** Before/after inputs per SURVEY.md §3: purchases are the
-    * 'purchase' events (integer-valued volumes so double sums are
-    * exact in both engines), exposures a sparse view/click sample (so
-    * both exposed and not-exposed households exist), universe the
-    * customer table. */
-  private def beforeAfterInputs(s: SparkSession, d: String) = {
-    val ev = Tables.events(s, d)
-    val purch = ev.where(col("event_type") === "purchase").select(
-      col("user_id").as("household_id"),
-      to_date(col("ts")).as("pdate"),
-      floor(col("value")).cast("double").as("volume_tgt"),
-      (floor(col("value")) * 2 + 1).cast("double").as("volume_cat"))
-    val expo = ev
-      .where(col("event_type").isin("view", "click") && col("event_id") % 97 === 0)
-      .select(col("user_id").as("household_id"), to_date(col("ts")).as("date"))
-    val univ = Tables.customer(s, d).select(col("c_custkey").as("household_id"))
-    (purch, expo, univ)
-  }
-
-  /** Shared CTE prefix for the before/after oracles; `maxdays` =
-    * maxWks*7-1, `mindays` = minWks*7 (see BeforeAfter.filterToRange). */
-  private def beforeAfterCtes(maxdays: Int, mindays: Int, exposedOnly: Boolean): String = {
-    val exposedFilter = if (exposedOnly) "WHERE hh_exposed = 'exposed'" else ""
-    s"""WITH purch AS (
-       SELECT user_id AS household_id, CAST(ts AS DATE) AS pdate,
-         CAST(floor(value) AS DOUBLE) AS volume_tgt,
-         CAST(floor(value) * 2 + 1 AS DOUBLE) AS volume_cat
-       FROM events WHERE event_type = 'purchase'),
-     expo AS (
-       SELECT user_id AS household_id, CAST(ts AS DATE) AS date
-       FROM events WHERE event_type IN ('view', 'click') AND event_id % 97 = 0),
-     firstexpo AS (
-       SELECT household_id, min(date) AS date FROM expo GROUP BY 1),
-     univfe AS (
-       SELECT * FROM firstexpo
-       WHERE household_id IN (SELECT c_custkey FROM customer)),
-     raw0 AS (
-       SELECT coalesce(f.household_id, p.household_id) AS household_id,
-         CASE WHEN f.date IS NULL THEN 'not exposed' ELSE 'exposed' END AS hh_exposed,
-         CASE WHEN f.date IS NULL THEN (SELECT min(date) FROM expo)
-              ELSE f.date END AS date,
-         p.pdate, p.volume_tgt, p.volume_cat,
-         (SELECT max(pdate) FROM purch) AS max_dt
-       FROM univfe f FULL JOIN purch p ON f.household_id = p.household_id),
-     raw AS (SELECT * FROM raw0 $exposedFilter),
-     lim AS (
-       SELECT *, CASE WHEN max_dt < date + $maxdays THEN max_dt
-                      ELSE date + $maxdays END AS post_limit FROM raw),
-     filt AS (
-       SELECT household_id, hh_exposed, date, pdate, volume_tgt, volume_cat,
-         date_diff('day', date, post_limit) + 1 AS wgt
-       FROM lim
-       WHERE date_diff('day', pdate, date) < date_diff('day', date, post_limit) + 1
-         AND pdate <= post_limit
-         AND date_diff('day', date, post_limit) + 1 >= $mindays),
-     aggd AS (
-       SELECT household_id,
-         CASE WHEN pdate < date THEN 'before' ELSE 'after' END AS bef_aft,
-         hh_exposed, max(wgt) AS wgt, sum(volume_tgt) AS volume_tgt,
-         sum(volume_cat) AS volume_cat
-       FROM filt GROUP BY 1, 2, 3),
-     balanced AS (
-       SELECT * FROM aggd
-       UNION ALL
-       SELECT b.household_id, 'after', b.hh_exposed, b.wgt,
-         CAST(0 AS DOUBLE), CAST(0 AS DOUBLE) FROM aggd b
-       LEFT JOIN aggd a ON a.bef_aft = 'after' AND a.hh_exposed = b.hh_exposed
-         AND a.household_id = b.household_id
-       WHERE b.bef_aft = 'before' AND a.household_id IS NULL
-       UNION ALL
-       SELECT a.household_id, 'before', a.hh_exposed, a.wgt,
-         CAST(0 AS DOUBLE), CAST(0 AS DOUBLE) FROM aggd a
-       LEFT JOIN aggd b ON b.bef_aft = 'before' AND b.hh_exposed = a.hh_exposed
-         AND b.household_id = a.household_id
-       WHERE a.bef_aft = 'after' AND b.household_id IS NULL),
-     wts AS (
-       SELECT *, max(CASE WHEN volume_tgt > 0 THEN 1 ELSE 0 END)
-         OVER (PARTITION BY household_id) AS brandbuyer FROM balanced),
-     wts2 AS (
-       SELECT household_id, bef_aft, hh_exposed, wgt, volume_tgt, volume_cat,
-         volume_cat * brandbuyer AS volume_cat_bb,
-         volume_tgt * wgt AS brand_wgt, volume_cat * wgt AS category_wgt,
-         volume_cat * brandbuyer * wgt AS category_wgt_bb,
-         CASE WHEN volume_tgt > 0 THEN wgt END AS bwgt,
-         CASE WHEN volume_cat > 0 THEN wgt END AS cwgt,
-         CASE WHEN volume_cat * brandbuyer > 0 THEN wgt END AS cwgt_bb
-       FROM wts)"""
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> ((s, d) =>
-      Analytics.pricingSummary(Tables.lineitem(s, d))),
-    // TPC-H Q5 shape: same-nation customer/supplier revenue per
-    // region-year — the 6-table star join
-    "q_local_volume" -> ((s, d) =>
-      Analytics.localSupplierVolume(Tables.lineitem(s, d),
-        Tables.orders(s, d), Tables.customer(s, d), Tables.supplier(s, d),
-        Tables.nation(s, d), Tables.region(s, d),
-        Q5Region, Q5YearStart, Q5YearEnd)),
-    "q_returned_items" -> ((s, d) =>
-      Analytics.returnedItemReport(Tables.lineitem(s, d),
-        Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d),
-        Q10Start, Q10End, Q10TopK)),
-    // TPC-H Q4 shape: EXISTS-a-late-line as a left-semi join
-    "q_order_priority" -> ((s, d) =>
-      Analytics.orderPriorityCheck(Tables.orders(s, d),
-        Tables.lineitem(s, d), Q4Start, Q4End, Q4LateDays)),
-    // TPC-H Q6 shape: pure scan-filter aggregate, zero joins
-    "q_revenue_forecast" -> ((s, d) =>
-      Analytics.revenueChangeForecast(Tables.lineitem(s, d),
-        Q6YearStart, Q6YearEnd, Q6DiscLo, Q6DiscHi, Q6MaxQty)),
-    // TPC-H Q7 shape: bilateral trade, nation filters before broadcast
-    "q_nation_trade" -> ((s, d) =>
-      Analytics.nationTradeVolume(Tables.lineitem(s, d),
-        Tables.orders(s, d), Tables.customer(s, d), Tables.supplier(s, d),
-        Tables.nation(s, d), Q7NationA, Q7NationB)),
-    // TPC-H Q8 shape: conditional-sum market share, one aggregate
-    "q_market_share" -> ((s, d) =>
-      Analytics.marketShare(Tables.lineitem(s, d), Tables.orders(s, d),
-        Tables.customer(s, d), Tables.supplier(s, d), Tables.nation(s, d),
-        Tables.region(s, d), Tables.part(s, d),
-        Q8SuppNation, Q8CustRegion, Q8PartType)),
-    // TPC-H Q9 shape: nation×year profit for one part type
-    "q_product_profit" -> ((s, d) =>
-      Analytics.productTypeProfit(Tables.lineitem(s, d),
-        Tables.orders(s, d), Tables.supplier(s, d), Tables.nation(s, d),
-        Tables.part(s, d), Q9PartType)),
-    // TPC-H Q12 shape: ship-delay band × order-priority cross-tab
-    "q_priority_delay" -> ((s, d) =>
-      Analytics.shipDelayPriority(Tables.lineitem(s, d),
-        Tables.orders(s, d), Q12Start, Q12End, Q12LateDays)),
-    // order→ship lag quartiles per priority (grid percentiles)
-    "q_fulfillment_latency" -> ((s, d) =>
-      Analytics.fulfillmentLatency(Tables.lineitem(s, d),
-        Tables.orders(s, d))),
-    // order-grain completion (last line ships) quartiles per priority
-    "q_order_completion" -> ((s, d) =>
-      Analytics.orderCompletion(Tables.lineitem(s, d),
-        Tables.orders(s, d))),
-    // first-quarter-new vs returning revenue accounting
-    "q_new_returning" -> ((s, d) =>
-      Analytics.newVsReturning(Tables.orders(s, d))),
-    // priority composition drift per quarter
-    "q_priority_mix" -> ((s, d) =>
-      Analytics.priorityMix(Tables.orders(s, d))),
-    // per-quarter AOV with ordered-fold OLS slope constants
-    "q_aov_trend" -> ((s, d) =>
-      Analytics.aovTrend(Tables.orders(s, d))),
-    // 7x24 weekday-hour traffic grid with dual shares
-    "q_traffic_heatmap" -> ((s, d) =>
-      Analytics.trafficHeatmap(Tables.events(s, d))),
-    // top-K suppliers by ship-lag variance (micro-day rank cut)
-    "q_supplier_consistency" -> ((s, d) =>
-      Analytics.supplierConsistency(Tables.lineitem(s, d),
-        Tables.orders(s, d), ConsistencyTopK)),
-    // one-row corpus concentration (doc + token Gini per source)
-    "q_source_gini" -> ((s, d) =>
-      Curation.sourceGini(Tables.documents(s, d))),
-    // cent-quantized Laspeyres basket index per brand/quarter
-    "q_price_index" -> ((s, d) =>
-      Analytics.priceIndex(Tables.lineitem(s, d), Tables.part(s, d))),
-    // difference-array open-order backlog curve
-    "q_backlog" -> ((s, d) =>
-      Analytics.backlog(Tables.orders(s, d), Tables.lineitem(s, d))),
-    // in-order brand pair support + lift (sales-fact cross-sell)
-    "q_brand_affinity" -> ((s, d) =>
-      Analytics.brandAffinity(Tables.lineitem(s, d), Tables.part(s, d))),
-    // return rate by ship-latency band with Wilson lower bounds
-    "q_late_returns" -> ((s, d) =>
-      Analytics.lateReturns(Tables.lineitem(s, d), Tables.orders(s, d),
-        CtrZ)),
-    // TPC-H Q13 shape: order-count histogram incl. zero-order customers
-    "q_cust_order_dist" -> ((s, d) =>
-      Analytics.customerOrderDistribution(Tables.customer(s, d),
-        Tables.orders(s, d), Q13ExcludePriority)),
-    // TPC-H Q14 shape: monthly promo revenue percentage
-    "q_promo_share" -> ((s, d) =>
-      Analytics.promoRevenueShare(Tables.lineitem(s, d),
-        Tables.part(s, d), Q14PromoType, Q14Start, Q14End)),
-    // TPC-H Q15 shape: argmax supplier via broadcast 1-row max
-    "q_top_supplier" -> ((s, d) =>
-      Analytics.topSupplier(Tables.lineitem(s, d), Tables.supplier(s, d),
-        Q15Start, Q15End)),
-    // TPC-H Q16 shape: supplier variety per part group
-    "q_supplier_variety" -> ((s, d) =>
-      Analytics.partSupplierVariety(Tables.lineitem(s, d),
-        Tables.part(s, d), Q16ExcludeBrand, Q16SizeBand)),
-    // TPC-H Q19 shape: OR-of-ANDs predicates, per-clause revenue
-    "q_disjunctive_rev" -> ((s, d) =>
-      Analytics.disjunctiveRevenue(Tables.lineitem(s, d),
-        Tables.part(s, d), Q19Brands)),
-    // TPC-H Q2 shape: min-cost supplier per part from observed pairs
-    "q_min_cost_supplier" -> ((s, d) =>
-      Analytics.minCostSupplier(Tables.lineitem(s, d), Tables.part(s, d),
-        Tables.supplier(s, d), Tables.nation(s, d), Tables.region(s, d),
-        Q2Region, Q2PartType, Q2SizeMod, Q2TopK)),
-    // TPC-H Q11 shape: important-stock share threshold, one nation
-    "q_important_stock" -> ((s, d) =>
-      Analytics.importantStock(Tables.lineitem(s, d),
-        Tables.supplier(s, d), Q11NationKey, Q11FracDen)),
-    // TPC-H Q20 shape: suppliers dominating promo-part window volume
-    "q_promo_stock_suppliers" -> ((s, d) =>
-      Analytics.promoStockSuppliers(Tables.lineitem(s, d),
-        Tables.part(s, d), Tables.supplier(s, d), Tables.nation(s, d),
-        Q20PartType, Q20Start, Q20End)),
-    "q_revenue_by_nation" -> ((s, d) =>
-      Analytics.revenueByNation(Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d))),
-    // QoQ revenue growth per nation (grid-sized lag window)
-    "q_revenue_growth" -> ((s, d) =>
-      Analytics.revenueGrowth(Tables.orders(s, d), Tables.customer(s, d),
-        Tables.nation(s, d))),
-    // dead inventory + revenue-magnitude catalog buckets
-    "q_dead_stock" -> ((s, d) =>
-      Analytics.deadStock(Tables.lineitem(s, d), Tables.part(s, d))),
-    // repurchase cadence percentiles per segment
-    "q_repurchase" -> ((s, d) =>
-      Analytics.repurchaseCycle(Tables.orders(s, d), Tables.customer(s, d))),
-    // Kaplan–Meier time-to-second-order survival (censoring-aware)
-    "q_km_survival" -> ((s, d) =>
-      Analytics.kmRepurchase(Tables.orders(s, d), Tables.customer(s, d))),
-    // order-intensity band transition matrix between history halves
-    "q_segment_migration" -> ((s, d) =>
-      Analytics.segmentMigration(Tables.orders(s, d))),
-    // revenue exposure through negative-balance suppliers
-    "q_supplier_risk" -> ((s, d) =>
-      Analytics.supplierRisk(Tables.lineitem(s, d), Tables.supplier(s, d))),
-    // realized unit price vs list price per brand
-    "q_price_realization" -> ((s, d) =>
-      Analytics.priceRealization(Tables.lineitem(s, d), Tables.part(s, d))),
-    // basket-position effect on volume/value
-    "q_line_position" -> ((s, d) =>
-      Analytics.linePosition(Tables.lineitem(s, d))),
-    // header/detail financial reconciliation + orphan headers
-    "q_reconcile" -> ((s, d) =>
-      Analytics.reconcile(Tables.orders(s, d), Tables.lineitem(s, d),
-        ReconTolCents)),
-    // supplier revenue concentration (HHI) per nation
-    "q_supplier_hhi" -> ((s, d) =>
-      Analytics.supplierHhi(Tables.lineitem(s, d), Tables.supplier(s, d))),
-    // first-order discount elasticity per brand
-    "q_discount_lift" -> ((s, d) =>
-      Analytics.discountLift(Tables.lineitem(s, d), Tables.part(s, d))),
-    // intraday traffic profile + peak hour per type
-    "q_hourly_profile" -> ((s, d) =>
-      Analytics.hourlyProfile(Tables.events(s, d))),
-    // per-nation customer revenue inequality (exact rank-weighted sum)
-    "q_gini" -> ((s, d) =>
-      Analytics.giniByNation(Tables.orders(s, d), Tables.customer(s, d))),
-    // LTV decile table: where the revenue mass sits, per segment
-    "q_ltv_deciles" -> ((s, d) =>
-      Analytics.ltvDeciles(Tables.orders(s, d), Tables.customer(s, d))),
-    // least-squares qty-per-discount-point slope per brand
-    "q_discount_elasticity" -> ((s, d) =>
-      Analytics.discountElasticity(Tables.lineitem(s, d), Tables.part(s, d))),
-    "q_top_orders_per_cust" -> ((s, d) =>
-      Analytics.topOrdersPerCustomer(Tables.orders(s, d))),
-    // Same result through the graft_topk bounded-heap aggregate — the
-    // no-sort scale path; shares the window oracle shape.
-    "q_topk_orders" -> ((s, d) =>
-      Analytics.topOrdersPerCustomerAgg(Tables.orders(s, d))),
-    // Bloom false positives die in the exact join, so the plain-join
-    // oracle is byte-identical.
-    "q_bloom_join" -> ((s, d) =>
-      Analytics.bloomPrunedOrderStats(Tables.orders(s, d),
-        Tables.customer(s, d), BloomJoinMaxNation)),
-    "q_event_windows" -> ((s, d) =>
-      Analytics.eventWindows(Tables.events(s, d))),
-    "q_reach_overall" -> ((s, d) =>
-      Reach.reachCount(Tables.media(s, d), "household_id", None, Some("projfact"))),
-    "q_reach_by_type" -> ((s, d) =>
-      Reach.reachCount(Tables.media(s, d), "household_id", Some("etype"), Some("projfact"))),
-    // Sparse deterministic samples keep these distributions
-    // non-degenerate (at sf>=0.01 every household otherwise hits every
-    // event type and frequency cap).
-    "q_frequency" -> ((s, d) =>
-      Frequency.freqDistribution(
-        Tables.media(s, d).where(col("event_id") % 37 === 0), None)),
-    "q_pairwise_matrix" -> ((s, d) =>
-      Pairwise.membershipMatrix(
-        Tables.media(s, d).where(col("event_id") % 23 === 0), "etype", etypes)),
-    // Per-household sampling rate 1/(household_id+2) keeps the deduped
-    // distinct-etype counts spread over >1 bucket at EVERY sf (an
-    // unsampled input degenerates to one row: all households hit all 5
-    // event types at sf>=0.01).
-    "q_frequency_dedup" -> ((s, d) =>
-      Frequency.freqDistribution(
-        Tables.media(s, d)
-          .where(col("event_id") % (col("household_id") + 2) === 0),
-        Some("etype"))),
-    "q_friendly_rename" -> ((s, d) => {
-      val reach = Reach.reachCount(
-        Tables.media(s, d), "household_id", Some("etype"), Some("projfact"))
-      val hier = Tables.nation(s, d).select(
-        col("n_name").as("dimension"),
-        concat(lit("Nation "), col("n_name")).as("friendly_name"))
-        .unionAll(Tables.events(s, d).select(col("event_type"), col("event_type"))
-          .distinct()
-          .select(col("event_type").as("dimension"),
-            upper(col("event_type")).as("friendly_name")))
-      ValueMapping.toFriendly(reach, "value", hier)
-        .orderBy(desc("count"), asc("value"))
-    }),
-    "q_pairwise_pairs" -> ((s, d) =>
-      Pairwise.pairwiseOverlap(Tables.media(s, d), "etype")),
-    // Rows-only: HLL internals are engine-specific; MetricsSpec bounds
-    // the inclusion-exclusion estimates against exact distinct counts.
-    "q_pairwise_approx" -> ((s, d) =>
-      Pairwise.pairwiseOverlapApprox(Tables.media(s, d), "etype")),
-    // bound gate: every pair's side counts within 5%, the
-    // inclusion-exclusion overlap within 8% of the exact union -
-    // hash-gated via the exact leg + TRUE verdicts in the oracle
-    "q_pairwise_approx_gate" -> ((s, d) =>
-      SketchGates.pairwiseGate(Tables.media(s, d), "etype")),
-    "q_reach_multi" -> ((s, d) =>
-      Reach.reachByDimensions(
-        Tables.media(s, d).withColumn("week_s", col("week").cast("string")),
-        "household_id", Seq("etype", "week_s"), Some("projfact"))),
-    "q_reach_week" -> ((s, d) =>
-      ReachWeek.weeklyReach(Tables.media(s, d).where(col("event_id") % 101 === 0))),
-    "q_projection_ratio" -> ((s, d) =>
-      ProjectionRatio.projectionRatios(Tables.media(s, d))),
-    "q_value_mapping" -> ((s, d) =>
-      ValueMapping.mapValues(Tables.part(s, d).select(
-        col("p_partkey").as("id"),
-        lit("part_id").as("id_type"),
-        col("p_type").as("key"),
-        col("p_brand").as("value")))),
-    "q_media_projection" -> ((s, d) => {
-      val m = Tables.media(s, d)
-      val dfs = Seq(
-        m.where(col("etype").isin("view", "click")),
-        m.where(!col("etype").isin("view", "click")))
-      val proj = m.select(col("household_id"), col("projfact"))
-      val ratio = m.select(col("etype")).distinct()
-        .withColumn("ratio", lit(1.0) + length(col("etype")).cast("double") / 2)
-      MediaBuilder.makeMedia(dfs, "date", proj, Some(ratio))
-        .groupBy(col("date"))
-        .agg(round(sum(col("projfact")), 1).as("proj_sum"), count(lit(1)).as("n"))
-        .orderBy(col("date"))
-    }),
-    "q_before_after" -> ((s, d) => {
-      val (p, e, u) = beforeAfterInputs(s, d)
-      BeforeAfter.metrics(
-        BeforeAfter.getBeforeAfter(BeforeAfter.constructHHFirst(p, e, u), 1, 2))
-    }),
-    // Welch two-sample t-test of mean value between type pairs
-    "q_welch" -> ((s, d) =>
-      BeforeAfter.welchPairs(Tables.events(s, d))),
-    "q_contingency" -> ((s, d) => {
-      val (p, e, u) = beforeAfterInputs(s, d)
-      BeforeAfter.contingency(
-        BeforeAfter.getBeforeAfter(
-          BeforeAfter.constructHHFirst(p, e, u).where(col("hh_exposed") === "exposed"),
-          1, 1))
-    }),
-    "q_qa_daily" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      DailyQA.groupingDiff(
-        ev.select(col("event_type"), to_date(col("ts")).as("date")),
-        ev.where(col("event_id") % 20 =!= 0)
-          .select(col("event_type"), to_date(col("ts")).as("date")),
-        Seq("event_type", "date"))
-    }),
-    "q_qa_hourshift" -> ((s, d) =>
-      DailyQA.shiftedDailyCounts(Tables.events(s, d), "ts", -6, 7)),
-    "q_qa_multigroup" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      def prep(df: DataFrame) = df.select(
-        col("event_type"),
-        (col("user_id") % 5).cast("string").as("site"),
-        to_date(col("ts")).as("date"),
-        (col("user_id") % 10).cast("string").as("conf"))
-      DailyQA.multiGroupingQA(
-        prep(ev), Some(prep(ev.where(col("event_id") % 20 =!= 0))),
-        Seq("event_type", "site"), 7, Some("conf"))
-    }),
-    "q_qa_flags" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val qa = DailyQA.groupingDiff(
-        ev.select(col("event_type"), to_date(col("ts")).as("date")),
-        ev.where(col("event_id") % 20 =!= 0)
-          .select(col("event_type"), to_date(col("ts")).as("date")),
-        Seq("event_type", "date"))
-      DataChecks.flagExceedances(qa, QaTolerance)
-        .orderBy(col("event_type"), col("date"))
-    }),
-    "q_qa_meta" -> ((s, d) =>
-      DailyQA.metaAgg(
-        Tables.events(s, d).select(
-          col("event_type"),
-          (col("user_id") % 10).cast("string").as("conf")),
-        "event_type", "conf")),
-    "q_friendly_join" -> ((s, d) => {
-      val part = Tables.part(s, d)
-      val ka = part.select(
-        col("p_partkey").as("id"),
-        lit("part_id").as("id_type"),
-        col("p_type").as("key"),
-        col("p_brand").as("value"))
-      val dm = part.where(col("p_partkey") % 3 === 0).select(
-        lit("partid").as("dimension"),
-        when(col("p_partkey") % 9 === 0, col("p_partkey") + 1000000)
-          .otherwise(col("p_partkey")).as("label"),
-        lit("dig").as("etype"),
-        (col("p_partkey") + 100000).as("id"))
-      ValueMapping.makeMap(ka, dm)
-    }),
-    // documentsFloored on the regex/shingle-heavy single-pass queries
-    // below — see Tables.documentsFloored scaladoc for the measured
-    // keep/skip decision per query
-    // per-source language-mix drift gauge (shares + entropy)
-    "q_lang_mix" -> ((s, d) =>
-      TextAnalysis.langMixBySource(Tables.documents(s, d))),
-    "q_lang_id" -> ((s, d) =>
-      TextAnalysis.languageId(Tables.documentsFloored(s, d))),
-    // per-language tokenizer cost gauge (fertility, chars/token)
-    "q_fertility" -> ((s, d) =>
-      TextAnalysis.fertilityByLanguage(Tables.documentsFloored(s, d))),
-    "q_text_quality" -> ((s, d) =>
-      TextAnalysis.qualityScore(Tables.documentsFloored(s, d))),
-    "q_token_count" -> ((s, d) => TextAnalysis.tokenCounts(Tables.documentsFloored(s, d))),
-    "q_fingerprint" -> ((s, d) => TextAnalysis.fingerprints(Tables.documents(s, d))),
-    "q_repetition" -> ((s, d) =>
-      TextAnalysis.repetitionSignals(Tables.documentsFloored(s, d))),
-    // DEFLATE internals are engine-specific (no deflate in DuckDB) →
-    // rows-only gate; TextSpec pins determinism + ordering bounds.
-    "q_compress_ratio" -> ((s, d) =>
-      TextAnalysis.compressionRatio(Tables.documents(s, d))),
-    "q_quality_filter" -> ((s, d) =>
-      TextAnalysis.qualityFilter(Tables.documentsFloored(s, d))),
-    "q_dedup_exact" -> ((s, d) => TextAnalysis.exactDedup(Tables.documents(s, d))),
-    // cross-signal QA: fixed-width quality bands x exact-dup flags
-    "q_quality_dup_calib" -> ((s, d) =>
-      TextAnalysis.qualityDupCalibration(Tables.documents(s, d))),
-    // Mann-Whitney AUC of the quality score as a dup detector
-    "q_dup_auc" -> ((s, d) =>
-      TextAnalysis.dupAuc(Tables.documents(s, d))),
-    "q_ngram_jaccard" -> ((s, d) =>
-      NearDup.jaccardPairs(Tables.documentsFloored(s, d), 3, 0.3)),
-    "q_dedup_sweep" -> ((s, d) =>
-      NearDup.dedupSweep(Tables.documentsFloored(s, d), 3,
-        SweepThresholdsPm)),
-    "q_span_dedup" -> ((s, d) =>
-      NearDup.spanDedup(NearDup.plantSpans(Tables.documents(s, d)),
-        SpanSeedLen)),
-    "q_span_strip" -> ((s, d) =>
-      NearDup.spanStrip(NearDup.plantSpans(Tables.documents(s, d)),
-        SpanSeedLen)),
-    "q_novelty" -> ((s, d) =>
-      NearDup.seedNovelty(NearDup.plantSpans(Tables.documentsFloored(s, d)),
-        SpanSeedLen)),
-    // Text twin of q_dedup_recall: banding recall + df-cap precision
-    // of the minhash path vs the exact index at the same threshold
-    // (0.5 — pinned by the verify stage both here and in the oracle).
-    "q_minhash_recall" -> ((s, d) =>
-      NearDup.minhashRecallSampled(Tables.documentsFloored(s, d))),
-    // The banding S-curve measured: observed candidate rate per exact
-    // jaccard decile vs the closed 1-(1-s^2)^16 theory (exact
-    // squaring chain, no libm pow) — bands/rows tuning as a gate row.
-    "q_lsh_curve" -> ((s, d) =>
-      NearDup.lshCurveSampled(Tables.documentsFloored(s, d))),
-    // Sketch-accuracy twin: mean minhash agreement estimate vs mean
-    // exact jaccard per decile, with the bias — validates the k=32
-    // estimator itself, not just the banding built on it.
-    "q_minhash_est" -> ((s, d) =>
-      NearDup.minhashEstCurveSampled(Tables.documentsFloored(s, d))),
-    "q_containment" -> ((s, d) =>
-      NearDup.containmentPairs(Tables.documentsFloored(s, d), 3,
-        ContainmentThreshold)),
-    "q_decontam" -> ((s, d) => {
-      val docs = Tables.documentsFloored(s, d)
-      NearDup.decontaminate(
-        docs.where(pmod(col("doc_id"), lit(DecontamEvalMod)) =!= DecontamEvalRem),
-        docs.where(pmod(col("doc_id"), lit(DecontamEvalMod)) === DecontamEvalRem),
-        DecontamN)
-    }),
-    "q_stratified_sample" -> ((s, d) =>
-      Curation.stratifiedSample(Tables.documents(s, d), SampleRates,
-        buckets = SampleBuckets, passthrough = Seq("source"))),
-    "q_blocklist" -> ((s, d) =>
-      Curation.blocklistFilter(Tables.documents(s, d), BlocklistTerms,
-        BlocklistMaxFrac)),
-    "q_canary_scan" -> ((s, d) =>
-      Curation.canaryScan(Tables.documents(s, d), CanaryPhrases)),
-    "q_chunks" -> ((s, d) =>
-      Curation.chunks(Tables.documentsFloored(s, d), ChunkSize, ChunkStride)),
-    "q_chunk_dedup" -> ((s, d) =>
-      Curation.chunkDedup(Tables.documents(s, d), ChunkSize, ChunkStride)),
-    "q_profile" -> ((s, d) =>
-      DataChecks.profile(Tables.lineitem(s, d), ProfileNumCols, ProfileStrCols)),
-    "q_pack" -> ((s, d) =>
-      Curation.packChunks(Tables.documents(s, d), PackContextLen,
-        ChunkSize, ChunkStride).orderBy(col("doc_id"), col("chunk_ix"))),
-    // packing fragmentation: docs-per-bin distribution + straddling
-    // chunks — the cross-document-attention gauge for packed training
-    "q_pack_frag" -> ((s, d) =>
-      Curation.packFragmentation(Tables.documents(s, d), PackContextLen,
-        ChunkSize, ChunkStride)),
-    "q_curation_funnel" -> ((s, d) =>
-      Curation.curationFunnel(Tables.documents(s, d), BlocklistTerms,
-        BlocklistMaxFrac, SampleRates, SampleBuckets)),
-    "q_vocab" -> ((s, d) =>
-      TextAnalysis.vocabulary(Tables.documents(s, d), VocabTopN)),
-    // one-row corpus nutrition label (composes the gated signals)
-    "q_corpus_card" -> ((s, d) =>
-      TextAnalysis.corpusCard(Tables.documentsFloored(s, d))),
-    // one-row "does this corpus look like language" gauge
-    "q_zipf" -> ((s, d) =>
-      TextAnalysis.zipfFit(Tables.documents(s, d), ZipfTopK)),
-    // vocabulary-growth twin of q_zipf (Heaps' law over id-grid
-    // prefixes; β drift = growth-regime shift)
-    "q_heaps" -> ((s, d) =>
-      TextAnalysis.heapsFit(Tables.documents(s, d), HeapsCheckpoints)),
-    // quality drift across ingestion order (id-grid buckets + OLS)
-    "q_quality_trend" -> ((s, d) =>
-      TextAnalysis.qualityTrend(Tables.documents(s, d),
-        QualityTrendBuckets)),
-    // which sources copy from which: the near-dup pair frame at
-    // (source, source) grain
-    "q_dup_sources" -> ((s, d) =>
-      NearDup.dupSourceMatrix(Tables.documentsFloored(s, d), 3, 0.3)),
-    "q_bpe_pairs" -> ((s, d) =>
-      TextAnalysis.bpePairs(Tables.documentsFloored(s, d), BpeTopN)),
-    "q_bpe_train" -> ((s, d) =>
-      TextAnalysis.bpeTrain(Tables.documentsFloored(s, d), BpeMerges)),
-    "q_quality_cap" -> ((s, d) =>
-      Curation.topQualityPerSource(Tables.documents(s, d), QualityPerSource)),
-    "q_dedup_incremental" -> ((s, d) => {
-      val docs = Tables.documentsFloored(s, d)
-      NearDup.dedupIncrement(
-        docs.where(pmod(col("doc_id"), lit(IncrementMod)) === IncrementRem),
-        docs.where(pmod(col("doc_id"), lit(IncrementMod)) =!= IncrementRem))
-    }),
-    // Bloom-pruned exact increment probe: same IncrementMod/Rem split
-    // as q_dedup_incremental; the oracle replays plain exact semantics
-    // (the bloom only prunes — a false negative would fail the gate).
-    // staleness verdict for the published dedup index: the live
-    // corpus (post-increment) vs the snapshot the index was built
-    // from — rebuild when drift exceeds the pinned thresholds
-    "q_index_staleness" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val idxFp = docs
-        .where(pmod(col("doc_id"), lit(IncrementMod)) =!= IncrementRem)
-        .select(md5(graft.functions.TextFunctions.normText(col("text")))
-          .as("fp"))
-      NearDup.indexStaleness(docs, idxFp)
-    }),
-    "q_dedup_bloom" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      NearDup.dedupIncrementBloom(
-        docs.where(pmod(col("doc_id"), lit(IncrementMod)) === IncrementRem),
-        docs.where(pmod(col("doc_id"), lit(IncrementMod)) =!= IncrementRem))
-    }),
-    // LSH bucket-occupancy histogram of the published dedup index —
-    // the cap-engagement QA read before trusting an increment run
-    "q_dedup_index_stats" -> ((s, d) =>
-      NearDup.indexStats(Tables.documentsFloored(s, d))),
-    "q_minhash_dedup" -> ((s, d) => NearDup.minhashDedup(Tables.documents(s, d))),
-    // contrastive hard negatives: banded-but-below-threshold pairs
-    "q_hard_negatives" -> ((s, d) =>
-      NearDup.hardNegatives(Tables.documents(s, d))),
-    "q_dedup_clusters" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      NearDup.dedupClusters(docs, NearDup.minhashPairs(docs))
-    }),
-    "q_simhash" -> ((s, d) => NearDup.simhash(Tables.documentsFloored(s, d))),
-    "q_simhash_pairs" -> ((s, d) => NearDup.simhashPairs(Tables.documents(s, d))),
-    "q_embed_neardup" -> ((s, d) =>
-      VectorSearch.cosineNearDup(Tables.embeddings(s, d), 0.4)),
-    // corpus-derived plane count (srpParamsFor): gate corpora derive
-    // 12/20 planes, 100 TB derives more — the oracle replays the
-    // power-of-two ladder in SQL against a prefix-stable plane table
-    "q_embed_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.srpNearDup(emb, 0.4,
-        corpusCount = Some(embCount(emb, d)))
-    }),
-    // SRP occupancy gate: proves the derived plane count keeps
-    // ordinary buckets under the stored-prefix cap AT THIS SCALE —
-    // the observed-histogram check behind trusting q_embed_lsh's
-    // recall (the minhash family's q_dedup_index_stats, for SRP)
-    "q_srp_bucket_stats" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.srpBucketStats(emb, embCount(emb, d))
-    }),
-    "q_ann_topk" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.bruteForceTopK(emb, emb.where(col("vec_id") < 10), 5)
-    }),
-    // pre-filtered top-k within the query's own label stratum
-    "q_ann_filtered" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.filteredTopK(emb, emb.where(col("vec_id") < 10), 5)
-    }),
-    "q_ann_ivf" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.ivfTopK(emb, annCentroids(emb, d),
-        col("vec_id") < 10, 3)
-    }),
-    "q_ann_ivf_p2" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.ivfTopK(emb, annCentroids(emb, d),
-        col("vec_id") < 10, 3, nprobe = 2)
-    }),
-    // recall@3 of q_ann_ivf's serving path vs the exact top-3 — the
-    // ANN twin of q_dedup_recall, linear in the corpus (fixed queries)
-    "q_ann_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.annRecall(emb, annCentroids(emb, d), col("vec_id") < 10, 3)
-    }),
-    "q_ann_pq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.pqTopK(emb, annSeeds(emb, d),
-        col("vec_id") < 10, 5)
-    }),
-    "q_ann_pq_rerank" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.pqTopKRerank(emb, annSeeds(emb, d),
-        col("vec_id") < 10, 5)
-    }),
-    // IVFADC: the PQ fold restricted to each query's nprobe=2 trained
-    // IVF cells — the 100 TB path where flat PQ's per-query
-    // corpus-linear code scan dies
-    "q_ann_ivfpq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.ivfPqTopK(emb, annCentroids(emb, d), annSeeds(emb, d),
-        col("vec_id") < 10, 5, nprobe = 2)
-    }),
-    // Real PNG encode→decode round trip (javax.imageio); the oracle
-    // predicts the decoded geometry + pixel sum in closed form.
-    "q_multimodal_meta" -> ((s, d) =>
-      Multimodal.mediaMeta(s, Tables.documents(s, d))),
-    // real RIFF/PCM WAV encode -> byte-level parse round trip
-    "q_multimodal_audio" -> ((s, d) =>
-      Multimodal.audioMeta(s, Tables.documents(s, d))),
-    "q_multimodal_frames" -> ((s, d) =>
-      Multimodal.sampleFrames(Tables.documents(s, d), FrameStride, MaxFrames)),
-    // Planted pathological key: half of all events collapse onto
-    // hot_key 0 — the one-household-with-millions-of-rows shape. The
-    // salted two-phase sum bounds any single reducer's input to
-    // 1/32 of the hot key; integer (floored) volumes keep the
-    // differently-ordered partial sums bit-exact against the oracle's
-    // single-pass sum.
-    "q_skew_salted" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(
-        when(col("event_id") % 2 === 0, lit(0L))
-          .otherwise(col("user_id").cast("long")).as("hot_key"),
-        floor(col("value")).cast("long").as("v"),
-        col("event_id"))
-      Skew.saltedSum(ev, Seq("hot_key"), "v", col("event_id"), 32)
-        .orderBy(col("hot_key"))
-    }),
-    // landing-quality: 1-event-session share per entry type
-    "q_bounce_rate" -> ((s, d) =>
-      Temporal.bounceRate(Tables.events(s, d), SessionGapMin, CtrZ)),
-    // returns QA per brand, Wilson-bounded
-    "q_return_rate" -> ((s, d) =>
-      Analytics.returnRate(Tables.lineitem(s, d), Tables.part(s, d), CtrZ)),
-    "q_sessionize" -> ((s, d) =>
-      Temporal.sessionize(Tables.events(s, d), SessionGapMin)),
-    // One exposure per (user, instant) before the as-of probe: the
-    // carried payload at equal timestamps is otherwise tie-order
-    // dependent on BOTH engines (max event_id wins, deterministically).
-    "q_asof_join" -> ((s, d) => {
-      val e = Tables.events(s, d)
-      val purchases = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      val tie = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"), col("ts")).orderBy(col("event_id").desc)
-      val exposures = e.where(col("event_type") =!= "purchase")
-        .withColumn("rk", row_number().over(tie)).where(col("rk") === 1)
-        .select(col("user_id"), col("ts"), col("event_type"))
-      Temporal.asofJoin(purchases, exposures, "user_id",
-        Seq("ts", "event_type"))
-        .withColumn("gap_us",
-          unix_micros(col("ts")) - unix_micros(col("asof_ts")))
-        .orderBy(col("user_id"), col("ts"), col("event_id"))
-    }),
-    "q_rolling_daily" -> ((s, d) =>
-      Temporal.rollingDaily(Tables.events(s, d), RollingDays)),
-    "q_reach_rollup" -> ((s, d) =>
-      Reach.reachRollup(Tables.media(s, d), Seq("etype", "week"),
-        "projfact")),
-    // Sketch-based: engine-specific HLL internals → rows-only gate;
-    // ReachSpec bounds the estimates against the exact counts.
-    "q_reach_approx" -> ((s, d) =>
-      Reach.approxReach(Tables.media(s, d), "etype")),
-    // bound gate: per-value + merged "all" HLL estimates within 5%
-    // of the exact distinct counts (driver-checked, not spec-only)
-    "q_reach_approx_gate" -> ((s, d) =>
-      SketchGates.reachGate(Tables.media(s, d), "etype")),
-    "q_tfidf" -> ((s, d) =>
-      TextAnalysis.tfidf(Tables.documents(s, d), TfidfPerDoc)),
-    "q_inverted_index" -> ((s, d) =>
-      TextAnalysis.invertedIndex(Tables.documentsFloored(s, d), IndexMinDf,
-        IndexTopPostings)),
-    "q_lm_score" -> ((s, d) => TextAnalysis.lmScore(Tables.documents(s, d))),
-    // PII is PLANTED deterministically in-query (the raw corpus has
-    // none — an all-zeros oracle could not catch a broken pattern)
-    // and the planting is mirrored verbatim in the oracle SQL, so the
-    // hash check verifies real counts and real replacements.
-    "q_pii_redact" -> ((s, d) =>
-      Privacy.piiRedact(Privacy.plantPii(Tables.documentsFloored(s, d)))),
-    // Boilerplate is PLANTED deterministically like the PII above (the
-    // synthetic corpus has no URLs/markup) and mirrored in the oracle.
-    "q_text_clean" -> ((s, d) =>
-      TextAnalysis.cleanText(
-        TextAnalysis.plantNoise(Tables.documentsFloored(s, d)))),
-    // Mixed composed/decomposed Unicode planted like the PII/noise
-    // above; normalization via the native graft_nfc expression.
-    "q_unicode_norm" -> ((s, d) =>
-      TextAnalysis.unicodeNormalize(
-        TextAnalysis.plantUnicode(Tables.documents(s, d)))),
-    // Boilerplate lines planted on overlapping doc_id mods; the strip
-    // derives the frequent set from the corpus itself.
-    "q_boilerplate" -> ((s, d) =>
-      Curation.boilerplateStrip(
-        Curation.plantBoilerplate(Tables.documents(s, d)))),
-    "q_source_drift" -> ((s, d) =>
-      DataChecks.sourceDrift(Tables.documents(s, d))),
-    "q_shard_plan" -> ((s, d) =>
-      Curation.shardPlan(Tables.documents(s, d), ShardCount)),
-    "q_split_leak" -> ((s, d) =>
-      Curation.splitLeak(Tables.documents(s, d), SampleBuckets,
-        SplitTrainBuckets, SplitValBuckets)),
-    "q_zorder" -> ((s, d) => Layout.zorderReport(Tables.events(s, d))),
-    // Mix drift between deterministic even/odd epoch-day snapshots —
-    // the synthetic stand-in for yesterday-vs-today QA.
-    "q_qa_drift" -> ((s, d) => {
-      val e = Tables.events(s, d).withColumn("dn",
-        datediff(to_date(col("ts")), lit("1970-01-01")))
-      DataChecks.distributionDrift(
-        e.where(pmod(col("dn"), lit(2)) === 0),
-        e.where(pmod(col("dn"), lit(2)) === 1), "event_type")
-    }),
-    // Attribution windows: follow-up activity within AttribDays after
-    // each purchase, via the banded range join (equi-join on
-    // (user, bin) + residual filter — never a nested-loop join).
-    "q_range_join" -> ((s, d) => {
-      val e = Tables.events(s, d)
-      val purchases = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("start"),
-          (col("ts") + expr(s"INTERVAL $AttribDays DAYS")).as("end"),
-          col("event_id"))
-      val follows = e.where(col("event_type") =!= "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      val counts = Temporal.rangeJoin(purchases, follows, "user_id",
-        AttribDays * 86400L)
-        .groupBy(col("event_id"))
-        .agg(count(lit(1)).as("n_follow"),
-          round(sum(col("value")), 2).as("follow_value"))
-      purchases.select(col("user_id"), col("start").as("ts"), col("event_id"))
-        .join(counts, Seq("event_id"), "left_outer")
-        .withColumn("n_follow", coalesce(col("n_follow"), lit(0L)))
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("n_follow"), col("follow_value"))
-        .orderBy(col("user_id"), col("ts"), col("event_id"))
-    }),
-    "q_cohort" -> ((s, d) =>
-      Journey.cohortRetention(Tables.events(s, d)
-        .where(col("event_id") % CohortSliceMod === 0))),
-    // Same sparse slice as q_cohort so weekly gaps actually occur.
-    "q_lifecycle" -> ((s, d) =>
-      Journey.lifecycle(Tables.events(s, d)
-        .where(col("event_id") % CohortSliceMod === 0))),
-    // Rows-only (engine-specific sketches); JourneySpec pins
-    // small-domain near-exactness and bounds vs the exact lifecycle.
-    "q_lifecycle_approx" -> ((s, d) =>
-      Journey.lifecycleApprox(Tables.events(s, d)
-        .where(col("event_id") % CohortSliceMod === 0))),
-    // bound gate: sketch growth accounting vs the exact lifecycle at
-    // active-week grain (active 5%, statuses 8% inclusion-exclusion)
-    "q_lifecycle_approx_gate" -> ((s, d) =>
-      SketchGates.lifecycleGate(Tables.events(s, d)
-        .where(col("event_id") % CohortSliceMod === 0))),
-    "q_funnel_steps" -> ((s, d) =>
-      Journey.funnelSteps(Tables.events(s, d)
-        .where(col("event_id") % FunnelSliceMod === 0), FunnelStages)),
-    "q_funnel_latency" -> ((s, d) =>
-      Journey.funnelLatency(Tables.events(s, d)
-        .where(col("event_id") % FunnelSliceMod === 0), FunnelStages)),
-    "q_funnel_windowed" -> ((s, d) =>
-      Journey.funnelWindowed(Tables.events(s, d)
-        .where(col("event_id") % FunnelSliceMod === 0), FunnelStages,
-        FunnelWindowDays)),
-    "q_next_event" -> ((s, d) =>
-      Journey.nextEventMatrix(Tables.events(s, d))),
-    "q_rfm" -> ((s, d) =>
-      Journey.rfmSegments(Tables.events(s, d))),
-    // cadence-personalized churn flags, integer cross-multiplied
-    "q_churn_risk" -> ((s, d) =>
-      Journey.churnRisk(Tables.orders(s, d), Tables.customer(s, d))),
-    // decimal-magnitude engagement buckets with user + event shares
-    "q_engagement_dist" -> ((s, d) =>
-      Journey.engagementDist(Tables.events(s, d))),
-    // chi-square GOF of the 1-in-10 event_id sample vs full
-    "q_sample_bias" -> ((s, d) =>
-      DataChecks.sampleBias(Tables.events(s, d), SampleBiasMod,
-        SampleBiasCritical)),
-    // Wilson-bounded error share by hour of day
-    "q_error_share" -> ((s, d) =>
-      DataChecks.errorShare(Tables.events(s, d), CtrZ)),
-    // D1/D7/D30 fixed-horizon retention per daily cohort
-    "q_retention_days" -> ((s, d) =>
-      Journey.retentionDays(Tables.events(s, d))),
-    // first-week cent value per daily cohort
-    "q_cohort_value" -> ((s, d) =>
-      Journey.cohortValue(Tables.events(s, d))),
-    // Wilson-bounded return rate by integer discount-point band
-    "q_discount_returns" -> ((s, d) =>
-      Analytics.discountReturns(Tables.lineitem(s, d), CtrZ)),
-    // returns rate + revenue share per ship quarter
-    "q_return_trend" -> ((s, d) =>
-      Analytics.returnTrend(Tables.lineitem(s, d))),
-    // weekly new/expansion/contraction/flat/resurrected/churned cents
-    "q_revenue_accounting" -> ((s, d) =>
-      Journey.revenueAccounting(Tables.events(s, d))),
-    "q_trend" -> ((s, d) =>
-      DataChecks.dailyTrend(Tables.events(s, d))),
-    "q_source_overlap" -> ((s, d) =>
-      TextAnalysis.sourceVocabOverlap(Tables.documents(s, d))),
-    // per-source unigram KL vs the corpus over the top-K simplex
-    "q_source_kl" -> ((s, d) =>
-      TextAnalysis.sourceKl(Tables.documents(s, d), KlTopTerms)),
-    "q_ttr" -> ((s, d) =>
-      TextAnalysis.lexicalDiversity(Tables.documents(s, d))),
-    "q_entropy" -> ((s, d) =>
-      TextAnalysis.tokenEntropy(Tables.documents(s, d))),
-    // micro-nat-ranked PMI collocations with a min-count floor
-    "q_pmi_bigrams" -> ((s, d) =>
-      TextAnalysis.pmiBigrams(Tables.documentsFloored(s, d), PmiMinCount,
-        PmiTopN)),
-    // exact-dedup ROI in docs AND tokens per source
-    "q_dedup_savings" -> ((s, d) =>
-      TextAnalysis.dedupSavings(Tables.documents(s, d))),
-    // first-k-token template families (exact-dedup blind spot)
-    "q_prefix_templates" -> ((s, d) =>
-      TextAnalysis.prefixTemplates(Tables.documents(s, d), PrefixK,
-        PrefixMinDocs, PrefixTopN)),
-    // dup-family size-magnitude histogram
-    "q_dup_cluster_hist" -> ((s, d) =>
-      TextAnalysis.dupClusterHist(Tables.documents(s, d))),
-    // per-source character-class composition shares
-    "q_char_profile" -> ((s, d) =>
-      TextAnalysis.charProfile(Tables.documents(s, d))),
-    // clamped token-length histogram with cumulative share
-    "q_token_lengths" -> ((s, d) =>
-      TextAnalysis.tokenLengths(Tables.documents(s, d))),
-    // source-mix drift across ingestion-order id buckets
-    "q_ingest_mix" -> ((s, d) =>
-      Curation.ingestMix(Tables.documents(s, d), IngestBuckets)),
-    // per-source Zipf alpha (rank-ordered OLS folds)
-    "q_zipf_by_source" -> ((s, d) =>
-      TextAnalysis.zipfBySource(Tables.documents(s, d), ZipfTopK)),
-    "q_readability" -> ((s, d) =>
-      TextAnalysis.readabilityBands(Tables.documents(s, d))),
-    "q_session_paths" -> ((s, d) =>
-      Temporal.sessionPaths(Tables.events(s, d), SessionGapMin,
-        PathMaxLen, PathTopN)),
-    "q_attribution" -> ((s, d) =>
-      Temporal.attribution(Tables.events(s, d), AttribDays)),
-    // position-based (40/20/40) attribution — the family's third member
-    "q_attribution_u" -> ((s, d) =>
-      Temporal.attributionUShaped(Tables.events(s, d), AttribDays)),
-    "q_attribution_decay" -> ((s, d) =>
-      Temporal.attributionDecay(Tables.events(s, d), AttribDays)),
-    // single-touch brackets of the multi-touch family (opener/closer)
-    "q_attribution_fl" -> ((s, d) =>
-      Temporal.attributionFirstLast(Tables.events(s, d), AttribDays)),
-    // Goh–Barabási burstiness of the inter-event gap population
-    "q_burstiness" -> ((s, d) =>
-      Temporal.burstiness(Tables.events(s, d))),
-    // ABC cumulative-revenue classification of the part catalog
-    "q_abc_analysis" -> ((s, d) =>
-      Analytics.abcAnalysis(Tables.lineitem(s, d))),
-    // endpoint-degree correlation of the co-purchase graph
-    "q_assortativity" -> ((s, d) =>
-      Affinity.degreeAssortativity(Tables.lineitem(s, d),
-        TriangleMinSupport)),
-    // per-source 3-sigma length-outlier QA
-    "q_length_outliers" -> ((s, d) =>
-      TextAnalysis.lengthOutliers(Tables.documents(s, d))),
-    // per-source OOV rate vs the top-N corpus vocabulary
-    "q_oov_rate" -> ((s, d) =>
-      TextAnalysis.oovRate(Tables.documentsFloored(s, d), VocabTopN)),
-    // head-coverage curve of the bigram distribution
-    "q_ngram_coverage" -> ((s, d) =>
-      TextAnalysis.ngramCoverage(Tables.documentsFloored(s, d), CoverageKs)),
-    // next-event Shannon entropy per from-type
-    "q_transition_entropy" -> ((s, d) =>
-      Journey.transitionEntropy(Tables.events(s, d))),
-    // event/value concentration deciles over users
-    "q_user_concentration" -> ((s, d) =>
-      Journey.userConcentration(Tables.events(s, d))),
-    // DAU/MAU(30) habit ratio per day
-    "q_stickiness" -> ((s, d) =>
-      Journey.stickiness(Tables.events(s, d), StickinessDays)),
-    // shingle-index df histogram + in-plan derived df cap
-    "q_shingle_stats" -> ((s, d) =>
-      NearDup.shingleStats(Tables.documentsFloored(s, d))),
-    // per-brand unit-price range consistency QA
-    "q_price_dispersion" -> ((s, d) =>
-      Analytics.priceDispersion(Tables.lineitem(s, d), Tables.part(s, d))),
-    // per-brand ever-sold catalog coverage
-    "q_catalog_coverage" -> ((s, d) =>
-      Analytics.catalogCoverage(Tables.lineitem(s, d), Tables.part(s, d))),
-    // one-way-ANOVA weekday seasonality strength per type
-    "q_weekday_anova" -> ((s, d) =>
-      DataChecks.weekdayAnova(Tables.events(s, d))),
-    // max peak-to-trough fall of daily order revenue
-    "q_drawdown" -> ((s, d) =>
-      DataChecks.drawdown(Tables.orders(s, d))),
-    // recall@k curve of IVF serving vs exact brute force
-    "q_ann_recall_curve" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.annRecallCurve(emb, annCentroids(emb, d),
-        col("vec_id") < 10, AnnCurveKs)
-    }),
-    // per-dimension embedding moments/zero-share QA
-    "q_dim_stats" -> ((s, d) =>
-      VectorSearch.dimensionStats(Tables.embeddings(s, d))),
-    // per-source doc-length quartiles + p95 on the integer grid
-    "q_length_bands" -> ((s, d) =>
-      TextAnalysis.lengthBands(Tables.documents(s, d))),
-    // simhash candidate hamming-distance histogram
-    "q_hamming_hist" -> ((s, d) =>
-      NearDup.hammingHist(Tables.documentsFloored(s, d))),
-    // IVF cell-occupancy histogram + imbalance ratio
-    "q_ivf_balance" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.ivfBalance(emb, annCentroids(emb, d))
-    }),
-    // per-query probe cost: which cells each query visits at
-    // nprobe 1..2, cumulative candidates scanned, corpus share —
-    // the p99 driver q_ivf_balance's histogram can't attribute
-    "q_ann_probe_cost" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.probeCost(emb, annCentroids(emb, d), col("vec_id") < 10)
-    }),
-    // leave-one-out kNN label accuracy per class
-    "q_knn_accuracy" -> ((s, d) =>
-      VectorSearch.knnAccuracy(Tables.embeddings(s, d),
-        col("vec_id") < KnnQueryMax, KnnK)),
-    // per-segment balance quartiles + negative share on the cent grid
-    "q_acctbal_bands" -> ((s, d) =>
-      Analytics.acctbalBands(Tables.customer(s, d))),
-    // Laspeyres/Paasche/Fisher on the matched-part panel
-    "q_fisher_index" -> ((s, d) =>
-      Analytics.fisherIndex(Tables.lineitem(s, d), Tables.part(s, d))),
-    // part-vintage revenue ramp over relative quarters 0-3
-    "q_part_vintage" -> ((s, d) =>
-      Analytics.partVintage(Tables.lineitem(s, d))),
-    // order-width distribution (lines per order, dual shares)
-    "q_order_lines" -> ((s, d) =>
-      Analytics.orderLineDist(Tables.lineitem(s, d))),
-    "q_dq_rules" -> ((s, d) =>
-      DataChecks.ruleCheck(Tables.orders(s, d), orderRules)),
-    // key-discovery / denormalization-consistency audit
-    "q_fd_audit" -> ((s, d) =>
-      DataChecks.fdAudit(Tables.orders(s, d), FdAuditPairs)),
-    // second-moment column profile (which measures move together)
-    "q_corr_matrix" -> ((s, d) =>
-      DataChecks.corrMatrix(Tables.lineitem(s, d), CorrMatrixCols)),
-    "q_ooo_audit" -> ((s, d) =>
-      DataChecks.oooAudit(DataChecks.plantLate(Tables.events(s, d)),
-        OooDelays)),
-    "q_watermark_rec" -> ((s, d) =>
-      DataChecks.watermarkRecommendation(
-        DataChecks.plantLate(Tables.events(s, d)), OooDelays,
-        WatermarkTargetPm)),
-    "q_record_dedup" -> ((s, d) => {
-      // one cheap count action derives the blocking width from the
-      // corpus (Linkage.blockCharsFor) — the oracle replays the same
-      // formula in SQL off count(*), so both widen in lockstep.
-      val planted = Linkage.plantDupes(Tables.customer(s, d))
-      Linkage.entityMatch(planted, corpusCount = Some(planted.count()))
-    }),
-    "q_ship_priority" -> ((s, d) =>
-      Analytics.shippingPriority(Tables.customer(s, d), Tables.orders(s, d),
-        Tables.lineitem(s, d), ShipSegment, ShipCutoff, ShipTopK)),
-    "q_late_suppliers" -> ((s, d) =>
-      Analytics.soleLateSuppliers(Tables.lineitem(s, d),
-        Tables.orders(s, d), Tables.supplier(s, d), LateDelayDays)),
-    "q_k_anon" -> ((s, d) =>
-      Privacy.kAnonymity(Tables.customer(s, d), Seq(
-        "nationkey" -> col("c_nationkey"),
-        "segment" -> col("c_mktsegment"),
-        "bal_band" -> floor(col("c_acctbal") / KAnonBalBand).cast("bigint")),
-        KAnonK)),
-    // l-diversity over the coarser (nation, segment) classes with the
-    // balance band as the SENSITIVE attribute — the homogeneity-attack
-    // audit on top of q_k_anon
-    "q_l_diversity" -> ((s, d) =>
-      Privacy.lDiversity(Tables.customer(s, d), Seq(
-        "nationkey" -> col("c_nationkey"),
-        "segment" -> col("c_mktsegment")),
-        "bal_band" -> floor(col("c_acctbal") / KAnonBalBand).cast("bigint"),
-        LDiversityL)),
-    // t-closeness over the same classes/sensitive as q_l_diversity —
-    // the skewness-attack audit (distribution distance, not count)
-    "q_t_closeness" -> ((s, d) =>
-      Privacy.tCloseness(Tables.customer(s, d), Seq(
-        "nationkey" -> col("c_nationkey"),
-        "segment" -> col("c_mktsegment")),
-        "bal_band" -> floor(col("c_acctbal") / KAnonBalBand).cast("bigint"),
-        TClosenessT)),
-    "q_forecast_naive" -> ((s, d) =>
-      Temporal.forecastNaive(Tables.events(s, d), ForecastLagDays)),
-    "q_autocorr" -> ((s, d) =>
-      DataChecks.autocorr(Tables.events(s, d), AutocorrLags)),
-    // cross-type daily-volume correlation (exact bigint moments)
-    "q_comovement" -> ((s, d) =>
-      DataChecks.comoveCorrelation(Tables.events(s, d))),
-    // Benford first-digit forensics on the value feed
-    "q_benford" -> ((s, d) =>
-      DataChecks.benfordQa(Tables.events(s, d), BenfordChi2Crit)),
-    "q_chi2_independence" -> ((s, d) =>
-      DataChecks.chi2Independence(Tables.events(s, d))),
-    "q_fanout_audit" -> ((s, d) =>
-      DataChecks.fanoutAudit(Tables.customer(s, d), Tables.orders(s, d),
-        "c_custkey", "o_custkey", FanoutMultCap)),
-    "q_item_similarity" -> ((s, d) =>
-      Affinity.itemSimilarity(Tables.lineitem(s, d), ItemSimTopN)),
-    "q_pagerank" -> ((s, d) =>
-      Affinity.pageRank(Tables.lineitem(s, d), PageRankIters, PageRankTopN)),
-    "q_triangles" -> ((s, d) =>
-      Affinity.triangleStats(Tables.lineitem(s, d), TriangleMinSupport)),
-    // k derived from the support graph's own density; peel depth
-    // capped at KCoreMaxPeels on BOTH sides (unrolled in the oracle)
-    "q_k_core" -> ((s, d) =>
-      Affinity.kCore(Tables.lineitem(s, d), TriangleMinSupport)),
-    "q_wedge_recs" -> ((s, d) =>
-      Affinity.wedgeRecommendations(Tables.lineitem(s, d),
-        TriangleMinSupport, WedgeNeighborCap, WedgeTopN,
-        WedgeEdgeBudget)),
-    "q_bigram_lm" -> ((s, d) =>
-      TextAnalysis.bigramLmScore(Tables.documents(s, d))),
-    // Hash-gated via the unrolled merge-chain oracle (BpeVocabCtes);
-    // TextSpec pins train+apply segmentations on the training fixture.
-    "q_bpe_apply" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val merges = TextAnalysis.bpeTrain(docs, BpeMerges).collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextAnalysis.bpeApply(docs, merges)
-    }),
-    "q_graph_stats" -> ((s, d) =>
-      Affinity.graphStats(Tables.lineitem(s, d))),
-    "q_changepoint" -> ((s, d) =>
-      DataChecks.changepoint(Tables.events(s, d), ChangepointDays,
-        ChangepointMinDays)),
-    "q_freshness" -> ((s, d) =>
-      DataChecks.freshness(Tables.events(s, d), FreshnessTrailDays)),
-    "q_seasonality" -> ((s, d) =>
-      DataChecks.seasonality(Tables.events(s, d))),
-    // additive trend/weekday/residual split of the daily series
-    "q_decompose" -> ((s, d) =>
-      DataChecks.seasonalDecompose(Tables.events(s, d), DecomposeHalf)),
-    "q_file_skipping" -> ((s, d) =>
-      Layout.fileSkipping(Tables.events(s, d), SkipFiles, SkipProbes)),
-    "q_small_orders" -> ((s, d) =>
-      Analytics.smallOrderRevenue(Tables.lineitem(s, d), Tables.part(s, d),
-        SmallOrderFrac)),
-    "q_bulk_orders" -> ((s, d) =>
-      Analytics.bulkOrders(Tables.lineitem(s, d), Tables.orders(s, d),
-        Tables.customer(s, d), BulkMinQty, BulkTopK)),
-    "q_idle_customers" -> ((s, d) =>
-      Analytics.idleRichCustomers(Tables.customer(s, d),
-        Tables.orders(s, d), IdleDays)),
-    "q_ctr_wilson" -> ((s, d) =>
-      Journey.conversionWilson(Tables.events(s, d), CtrSuccessType,
-        CtrSegments, CtrZ)),
-    "q_entity_components" -> ((s, d) =>
-      Entity.linkByKeys(Tables.customer(s, d), "c_custkey", Seq(
-        "g3" -> expr(s"c_custkey div $EntityG3").cast("string"),
-        "dec" -> when(col("c_custkey") % EntityG3 === 0,
-          expr(s"c_custkey div $EntityDecade")).cast("string")))),
-    "q_user_features" -> ((s, d) =>
-      Journey.userFeatures(Tables.events(s, d), EventTypes)),
-    "q_histogram" -> ((s, d) =>
-      DataChecks.histogram(Tables.events(s, d), "value", "event_type",
-        HistLo, HistWidth, HistBins)),
-    "q_qa_anomaly" -> ((s, d) =>
-      DataChecks.anomalyFlags(Tables.events(s, d), AnomalyDays, AnomalyK,
-        AnomalyMinDays)),
-    // robust whole-series twin of q_qa_anomaly (median + MAD flags)
-    "q_mad_anomaly" -> ((s, d) =>
-      DataChecks.madAnomaly(Tables.events(s, d), AnomalyK)),
-    // recency-weighted twin of q_qa_anomaly (1-day half-life EWMA
-    // baseline, integer power-of-two weights, cross-mult decision)
-    "q_ewma_anomaly" -> ((s, d) =>
-      DataChecks.ewmaAnomaly(Tables.events(s, d), AnomalyDays, AnomalyK,
-        AnomalyMinDays)),
-    // robust twin of q_trend: pairwise-median slope, outlier-immune
-    "q_theilsen_trend" -> ((s, d) =>
-      DataChecks.theilSenTrend(Tables.events(s, d))),
-    "q_semantic_dedup" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.semanticDedup(emb, annCentroids(emb, d),
-        SemDedupThreshold)
-    }),
-    "q_mixture" -> ((s, d) =>
-      Curation.mixturePlan(Tables.documents(s, d), MixtureWeights,
-        MixtureBudget)),
-    // sqrt-temperature source smoothing (α=1/2 sampling shares)
-    "q_mixture_temp" -> ((s, d) =>
-      Curation.mixtureTemperature(Tables.documents(s, d))),
-    // soft-dedup 1/n token weighting per source (integer micro-tokens)
-    "q_effective_tokens" -> ((s, d) =>
-      Curation.softDedupTokens(Tables.documents(s, d))),
-    // per-source quality deciles (source-fair quality floor map)
-    "q_quality_norm" -> ((s, d) =>
-      TextAnalysis.qualityNormalize(Tables.documents(s, d))),
-    // ingestion-bucket top-K term charts with prev-bucket rank deltas
-    "q_trending_terms" -> ((s, d) =>
-      TextAnalysis.trendingTerms(Tables.documents(s, d), TrendBuckets,
-        TrendTopK)),
-    // equal-population quality tiers + cumulative curriculum tokens
-    "q_curriculum" -> ((s, d) =>
-      Curation.curriculumPlan(Tables.documents(s, d), CurriculumBuckets)),
-    // priority-weighted water-filling of a token budget over sources
-    "q_token_budget" -> ((s, d) =>
-      Curation.tokenBudgetPlan(Tables.documents(s, d), tokenBudgetWeight,
-        TokenBudgetNum, TokenBudgetDen)),
-    "q_props_health" -> ((s, d) => Analytics.propsHealth(Tables.events(s, d))),
-    "q_search" -> ((s, d) =>
-      TextAnalysis.searchTopK(Tables.documents(s, d), SearchTerms, SearchK)),
-    "q_search_bm25" -> ((s, d) =>
-      TextAnalysis.searchBm25(Tables.documents(s, d), SearchTerms, SearchK)),
-    // MRR/precision@k of the BM25 order vs conjunctive containment
-    "q_search_eval" -> ((s, d) =>
-      TextAnalysis.searchEval(Tables.documents(s, d), EvalQueries, EvalK)),
-    // NDCG@k under graded (term-count) relevance
-    "q_search_ndcg" -> ((s, d) =>
-      TextAnalysis.searchNdcg(Tables.documents(s, d), EvalQueries, EvalK)),
-    "q_qa_orphans" -> ((s, d) =>
-      DataChecks.coverageCheck(Tables.events(s, d),
-        Tables.customer(s, d).where(col("c_custkey") < PanelMaxKey),
-        "user_id", "c_custkey", "event_type")),
-    "q_percentiles" -> ((s, d) =>
-      DataChecks.percentileBands(Tables.events(s, d), "value", "event_type")),
-    "q_winsorize" -> ((s, d) =>
-      DataChecks.winsorize(Tables.events(s, d), "value", "event_type")),
-    "q_basket_pairs" -> ((s, d) =>
-      Temporal.basketPairs(Tables.events(s, d), SessionGapMin)),
-    // directed confidence/lift refinement of the basket support table
-    "q_assoc_rules" -> ((s, d) =>
-      Temporal.assocRules(Tables.events(s, d), SessionGapMin)),
-    // per-entry-type session length quartiles + p95 (grid percentiles)
-    "q_session_duration" -> ((s, d) =>
-      Temporal.sessionDuration(Tables.events(s, d), SessionGapMin)),
-    // Wilson-bounded purchase-session share per entry type
-    "q_session_conversion" -> ((s, d) =>
-      Temporal.sessionConversion(Tables.events(s, d), SessionGapMin,
-        CtrZ)),
-    // session event-count histogram (1..5, 6+) with dual shares
-    "q_session_depth" -> ((s, d) =>
-      Temporal.sessionDepth(Tables.events(s, d), SessionGapMin)),
-    // one-row user activity-span distribution
-    "q_user_lifespan" -> ((s, d) =>
-      Journey.userLifespan(Tables.events(s, d))),
-    // cent-grid value quartiles + p95 per event type
-    "q_value_dist" -> ((s, d) =>
-      DataChecks.valueDist(Tables.events(s, d))),
-    // hourly active-session difference-array curve
-    "q_concurrency" -> ((s, d) =>
-      Temporal.concurrency(Tables.events(s, d), SessionGapMin)),
-    "q_event_gaps" -> ((s, d) =>
-      Temporal.eventGaps(Tables.events(s, d))),
-    // Sparse slice (1-in-997 events) so the daily series actually has
-    // holes for the fill to close.
-    "q_gap_fill" -> ((s, d) =>
-      Temporal.gapFill(Tables.events(s, d)
-        .where(col("event_id") % GapSliceMod === 0))),
-    "q_split" -> ((s, d) =>
-      Curation.hashSplit(Tables.documents(s, d), SampleBuckets,
-        SplitTrainBuckets, SplitValBuckets)),
-    // class-separation QA over the embedding space
-    "q_label_separation" -> ((s, d) =>
-      VectorSearch.labelCentroidSeparation(Tables.embeddings(s, d),
-        EmbeddingDim)),
-    // per-label farthest-from-centroid vectors (mislabel/garbage probe)
-    "q_embed_outliers" -> ((s, d) =>
-      VectorSearch.embedOutliers(Tables.embeddings(s, d),
-        EmbeddingDim, OutlierTopK)),
-    // simplified silhouette / nearest-centroid separation per label
-    "q_silhouette" -> ((s, d) =>
-      VectorSearch.silhouette(Tables.embeddings(s, d), EmbeddingDim)),
-    // schema-drift preflight against a declared contract
-    "q_schema_contract" -> ((s, d) =>
-      DataChecks.schemaContract(Tables.orders(s, d), OrdersContract)),
-    // pre-flight skew/cardinality analysis of the partkey self-join
-    "q_join_skew" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      DataChecks.joinSkewAdvisor(li, li, "l_partkey", "l_partkey",
-        JoinSkewTopK, JoinSkewTarget)
-    }),
-    "q_vector_health" -> ((s, d) =>
-      VectorSearch.vectorHealth(Tables.embeddings(s, d), EmbeddingDim)),
-    "q_embed_quant" -> ((s, d) =>
-      VectorSearch.quantizeReport(Tables.embeddings(s, d), EmbeddingDim)),
-    // Asymmetric-distance search over the int8 codes — SQ's ADC.
-    "q_ann_sq" -> ((s, d) =>
-      VectorSearch.sqTopK(Tables.embeddings(s, d), EmbeddingDim)),
-    "q_mixture_sample" -> ((s, d) =>
-      Curation.materializeMixture(Tables.documents(s, d), MixtureWeights,
-        MixtureBudget, SampleBuckets)),
-    // Eval harness: contains the deliberately-quadratic exact leg, so
-    // like q_embed_neardup it is oracle-gated but not benched — at
-    // scale it runs on a held-out sample.
-    "q_dedup_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      VectorSearch.nearDupRecall(emb, 0.4,
-        corpusCount = Some(embCount(emb, d)))
-    }),
-    "q_active_users" -> ((s, d) =>
-      Journey.activeUsers(Tables.events(s, d), ActiveDays)),
-    // Sketch twin of q_active_users: fixed-state per-day HLL sketches,
-    // WAU = union of the trailing window's sketches. Rows-only gate
-    // (sketch internals are engine-specific); JourneySpec bounds the
-    // estimates against the exact pair.
-    "q_active_users_approx" -> ((s, d) =>
-      Journey.approxActiveUsers(Tables.events(s, d), ActiveDays)),
-    // bound gate: per-day sketch DAU/WAU within 5% of the exact pair
-    "q_active_users_gate" -> ((s, d) =>
-      SketchGates.activeUsersGate(Tables.events(s, d), ActiveDays)),
-    // Same planted hot key as q_skew_salted — the detector that says
-    // the mitigation is needed.
-    "q_skew_report" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(
-        when(col("event_id") % 2 === 0, lit(0L))
-          .otherwise(col("user_id").cast("long")).as("hot_key"))
-      Skew.skewReport(ev, "hot_key", SkewTopN)
-    }),
-    // Sketch twin of q_skew_report (O(k) state vs one row per distinct
-    // key). Rows-only gate (merge order perturbs the estimates);
-    // SkewSpec bounds estimates against the exact detector.
-    "q_skew_report_approx" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(
-        when(col("event_id") % 2 === 0, lit(0L))
-          .otherwise(col("user_id").cast("long")).as("hot_key"))
-      Skew.skewReportApprox(ev, "hot_key", SkewTopN)
-    }),
-    // Count-Min frequency estimates on the hot-key frame — the one
-    // HASH-gated sketch (commutative-sum counters, merge-order free)
-    "q_cms_freq" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(
-        when(col("event_id") % 2 === 0, lit(0L))
-          .otherwise(col("user_id").cast("long")).as("hot_key"))
-      Skew.cmsFreqReport(ev, "hot_key", SkewTopN)
-    }),
-    // bound gate: every Misra-Gries-GUARANTEED key (count > n/(k+1))
-    // present in the summary with its lower-bound estimate in range
-    "q_skew_report_gate" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(
-        when(col("event_id") % 2 === 0, lit(0L))
-          .otherwise(col("user_id").cast("long")).as("hot_key"))
-      SketchGates.skewGate(ev, "hot_key", SkewTopN)
-    }),
-    "q_dedup_best" -> ((s, d) =>
-      TextAnalysis.exactDedupBest(Tables.documents(s, d))),
-    "q_table_diff" -> ((s, d) => {
-      val cust = Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val after = cust.where(col("c_custkey") % DropMod =!= 0)
-        .withColumn("c_acctbal",
-          when(col("c_custkey") % ChangeMod === 0, col("c_acctbal") + 100.0)
-            .otherwise(col("c_acctbal")))
-        .unionByName(cust.where(col("c_custkey") % NewMod === 0)
-          .withColumn("c_custkey", col("c_custkey") + NewKeyOffset))
-      DataChecks.tableDiff(cust, after, "c_custkey",
-        Seq("c_name", "c_acctbal"))
-    }),
-    "q_scd_merge" -> ((s, d) => {
-      val cust = Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val current = cust
-        .withColumn("effective_from", lit("2024-01-01").cast("date"))
-        .withColumn("effective_to", lit(null).cast("date"))
-      val updates = cust.where(col("c_custkey") % ChangeMod === 0)
-        .withColumn("c_acctbal", col("c_acctbal") + 100.0)
-        .unionByName(cust.where(col("c_custkey") % ChangeMod === 1))
-        .unionByName(cust.where(col("c_custkey") % NewMod === 0)
-          .withColumn("c_custkey", col("c_custkey") + NewKeyOffset))
-        .withColumn("eff", lit("2024-06-01").cast("date"))
-      Scd.merge2(current, updates, "c_custkey",
-        Seq("c_name", "c_acctbal"), "eff")
-    }),
-    "q_cdc_apply" -> ((s, d) => {
-      val cust = Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val chg = cust.where(col("c_custkey") % CdcUpdMod === 0)
-        .withColumn("c_acctbal", col("c_acctbal") + 50.0)
-        .withColumn("seq", lit(1L)).withColumn("op", lit("U"))
-        .unionByName(cust.where(col("c_custkey") % CdcDelMod === 0)
-          .withColumn("seq", lit(2L)).withColumn("op", lit("D")))
-        .unionByName(cust.where(col("c_custkey") % CdcInsMod === 0)
-          .withColumn("c_custkey", col("c_custkey") + NewKeyOffset)
-          .withColumn("seq", lit(2L)).withColumn("op", lit("U")))
-        .unionByName(cust.where(col("c_custkey") % CdcResMod === 0)
-          .withColumn("c_acctbal", lit(0.0))
-          .withColumn("seq", lit(3L)).withColumn("op", lit("U")))
-      Scd.applyCdc(cust, chg, "c_custkey", Seq("c_name", "c_acctbal"),
-        "seq", "op")
-    }),
-    // Second aggregation reads ONLY the (type, day) partials — the
-    // incremental-warehouse rollup pattern; exact variance from merged
-    // integer moments.
-    "q_agg_merge" -> ((s, d) =>
-      Analytics.mergeRollup(Analytics.dailyPartials(Tables.events(s, d)))),
-    "q_entity_match" -> ((s, d) => {
-      val clean = Tables.customer(s, d)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"))
-      val dirty = clean.select(col("id"),
-        when(col("id") % 3 === 0,
-          expr("concat(substring(name, 1, 5), 'x', substring(name, 7))"))
-        .when(col("id") % 3 === 1,
-          expr("concat(substring(name, 1, 5), 'xy', substring(name, 8))"))
-        .otherwise(
-          expr("concat(substring(name, 1, length(name) - 1), 'z')"))
-        .as("name"))
-      Entity.resolve(dirty, clean, "id", "name",
-        Entity.blockLenFor(clean.count()), EntityMaxDist)
-    }),
-    "q_langid_eval" -> ((s, d) =>
-      TextAnalysis.langIdEval(Tables.documentsFloored(s, d))),
-    "q_sample_fixed" -> ((s, d) =>
-      Curation.fixedSample(Tables.documents(s, d), FixedPerStratum)),
-    // token-mass-weighted sample (Efraimidis-Spirakis top-k keys)
-    "q_weighted_sample" -> ((s, d) =>
-      Curation.weightedSample(Tables.documents(s, d), WeightedPerStratum)),
-    // domain-grain keep/sample/drop policy off quality+dup+length
-    "q_domain_policy" -> ((s, d) =>
-      Curation.domainPolicy(Tables.documents(s, d))),
-    "q_cluster_best" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      NearDup.clusterBest(docs, NearDup.minhashPairs(docs))
-    }),
-    // Sketch internals are engine-specific -> rows-only gate;
-    // DataChecksSpec bounds the estimates against the exact quartiles.
-    "q_percentiles_approx" -> ((s, d) =>
-      DataChecks.percentileBandsApprox(Tables.events(s, d), "value",
-        "event_type")),
-    // bound gate: KLL quartiles within 5%+1 of the exact cent-grid
-    // quartiles, per dim
-    "q_percentiles_approx_gate" -> ((s, d) =>
-      SketchGates.percentilesGate(Tables.events(s, d), "value",
-        "event_type")),
-    "q_reach_var" -> ((s, d) =>
-      Reach.reachVariance(Tables.media(s, d), "household_id", "projfact",
-        JackknifeGroups)),
-    "q_reach_var_by_type" -> ((s, d) =>
-      Reach.reachVarianceByDim(Tables.media(s, d), "household_id",
-        "etype", "projfact", JackknifeGroups)),
-  )
-
-  /** Shared CTE chain for the repetition oracles: lines + bigrams,
-    * then the sorted run-start formulation of the top-bigram count —
-    * the oracle twin of repetitionSignals' flat-HOF shape (same
-    * greatest(i-1,1) guard, same sentinel append). Expects `t` with
-    * (doc_id, text, toks) in scope; yields `b3` with everything. */
-  private val RepetitionCtes: String =
-    """b AS (SELECT doc_id, toks,
-         list_filter(list_transform(string_split(text, '.'), l -> trim(l)),
-           l -> l <> '') AS lines,
-         CASE WHEN len(toks) >= 2 THEN list_transform(range(1, len(toks)),
-           i -> toks[i] || ' ' || toks[i+1])
-         ELSE CAST([] AS VARCHAR[]) END AS bgs
-         FROM t),
-       b2 AS (SELECT *, list_sort(bgs) AS sbgs FROM b),
-       b3 AS (SELECT *,
-         CASE WHEN len(starts) > 0 THEN
-           list_max(list_transform(range(1, len(starts) + 1),
-             j -> list_append(starts, len(sbgs) + 1)[j + 1] -
-                  list_append(starts, len(sbgs) + 1)[j]))
-         ELSE NULL END AS top_bigram_cnt
-         FROM (SELECT *,
-           CASE WHEN len(sbgs) > 0 THEN
-             list_filter(range(1, len(sbgs) + 1),
-               i -> i = 1 OR sbgs[i] <> sbgs[greatest(i - 1, 1)])
-           ELSE CAST([] AS BIGINT[]) END AS starts FROM b2))"""
-
-  /** Full quality-filter CTE chain (toks → repetition signals → line
-    * shapes → signals `r` → reasons `rr`) — the q_quality_filter
-    * oracle body, factored so the curation-funnel oracle replays the
-    * IDENTICAL filter. Yields `rr` with (doc_id, …signals…, reason). */
-  private lazy val QualityCtes: String =
-    s"""t AS (SELECT doc_id, text, $ToksSql AS toks FROM documents),
-        $RepetitionCtes,
-        rl AS (SELECT doc_id,
-          list_filter(list_transform(string_split(text, chr(10)),
-            l -> trim(l)), l -> l <> '') AS rawlines
-          FROM t),
-        r AS (SELECT b3.doc_id,
-          CAST(len(toks) AS INTEGER) AS token_cnt,
-          CAST(len(list_filter(toks,
-            t -> list_contains(['the','a','and','of','to','is'], t)))
-            AS INTEGER) AS stop_hits,
-          CAST(1 AS DOUBLE) - CAST(len(list_distinct(lines)) AS DOUBLE) /
-            nullif(len(lines), 0) AS dup_line_frac,
-          CAST(top_bigram_cnt AS DOUBLE) /
-            nullif(len(bgs), 0) AS top_bigram_frac,
-          CASE WHEN len(toks) > 0 THEN
-            CAST(list_reduce(list_transform(toks, x -> len(x)),
-              (a, b) -> a + b) AS DOUBLE) / len(toks) END AS mean_word_len,
-          CAST(len(regexp_extract_all(tx.text, '#|\\.\\.\\.')) AS DOUBLE) /
-            nullif(len(toks), 0) AS symbol_word_ratio,
-          CAST(len(list_filter(rawlines, l -> regexp_matches(l, '^[-*]')))
-            AS DOUBLE) / nullif(len(rawlines), 0) AS bullet_line_frac,
-          CAST(len(list_filter(rawlines,
-            l -> regexp_matches(l, '\\.\\.\\.$$'))) AS DOUBLE) /
-            nullif(len(rawlines), 0) AS ellipsis_line_frac
-          FROM b3
-          JOIN (SELECT doc_id, text FROM t) tx ON tx.doc_id = b3.doc_id
-          JOIN rl ON rl.doc_id = b3.doc_id),
-        rr AS (SELECT *, CASE
-          WHEN token_cnt IS NULL THEN 'invalid_text'
-          WHEN token_cnt < 20 THEN 'too_short'
-          WHEN dup_line_frac > CAST(0.3 AS DOUBLE) THEN 'dup_lines'
-          WHEN top_bigram_frac > CAST(0.08 AS DOUBLE) THEN 'repetitive_bigrams'
-          WHEN stop_hits < 1 THEN 'no_stopwords'
-          WHEN mean_word_len < CAST(3.0 AS DOUBLE)
-            OR mean_word_len > CAST(4.8 AS DOUBLE) THEN 'word_length'
-          WHEN symbol_word_ratio > CAST(0.1 AS DOUBLE) THEN 'symbol_heavy'
-          WHEN bullet_line_frac > CAST(0.9 AS DOUBLE) THEN 'bullet_lines'
-          WHEN ellipsis_line_frac > CAST(0.3 AS DOUBLE) THEN 'ellipsis_lines'
-          ELSE 'ok' END AS reason FROM r)"""
-
-  /** Quality-score CTE chain (the TextAnalysis.qualityScore recipe,
-    * factored once) — yields `qsc` with (doc_id, source, text_len,
-    * token_cnt, stop_hits, alpha_ratio, stop_ratio, quality_score).
-    * Shared by q_text_quality and q_quality_cap so the scoring can
-    * never drift between them. */
-  private lazy val QualityScoreCtes: String =
-    s"""tq AS (SELECT doc_id, text, source, $ToksSql AS toks FROM documents),
-        bq AS (SELECT doc_id, source,
-          CAST(len(text) AS INTEGER) AS text_len,
-          CAST(len(toks) AS INTEGER) AS token_cnt,
-          CAST(len(list_filter(toks,
-            t -> list_contains(['the','a','and','of','to','is'], t)))
-            AS INTEGER) AS stop_hits,
-          CAST(len(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) /
-            nullif(len(text), 0) AS alpha_ratio
-        FROM tq),
-        rq AS (SELECT *,
-          CAST(stop_hits AS DOUBLE) / nullif(token_cnt, 0) AS stop_ratio
-        FROM bq),
-        qsc AS (SELECT *,
-          least(CAST(1.0 AS DOUBLE), token_cnt / CAST(100.0 AS DOUBLE)) *
-            (CAST(0.5 AS DOUBLE) + CAST(0.5 AS DOUBLE) * stop_ratio) *
-            alpha_ratio AS quality_score
-        FROM rq)"""
-
-  /** The Morton magic-mask spread ladder as SQL — mirrors
-    * [[graft.operators.Layout.spreadBits]] operation-for-operation
-    * (pure 64-bit shifts/masks, so both engines are bit-exact). */
-  private def spreadSql(v: String): String = {
-    val s8 = s"((($v) | (($v) << 8)) & 16711935)"
-    val s4 = s"((($s8) | (($s8) << 4)) & 252645135)"
-    val s2 = s"((($s4) | (($s4) << 2)) & 858993459)"
-    s"((($s2) | (($s2) << 1)) & 1431655765)"
-  }
-
-  /** DuckDB fragments shared by the text oracles. */
-  private val ToksSql =
-    """list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-       x -> x <> '')"""
-  private val NormSql = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
-  /** Distinct n-word shingles of ToksSql (as `toks`) — the DuckDB twin
-    * of TextFunctions.shingles for any n. */
-  private def shinglesSqlN(n: Int): String = {
-    val cat = (0 until n).map {
-      case 0 => "toks[i]"
-      case j => s"toks[i+$j]"
-    }.mkString(" || ' ' || ")
-    s"""list_distinct(list_transform(range(1, greatest(len(toks) - ${n - 2}, 1)),
-       i -> $cat))"""
-  }
-  /** 3-word shingles of ToksSql (as `toks`). */
-  private val ShinglesSql = shinglesSqlN(3)
-
-  /** DuckDB replay of [[graft.operators.NearDup.dfCapFor]] over an
-    * exploded (doc_id, s) CTE named `<p>e0`: emits `<p>dfs`, `<p>cap`
-    * (the corpus-derived df cap — largest df whose ascending
-    * cumulative pair volume Σ cnt·df(df−1)/2 fits the pair budget,
-    * floored) and the capped explode `<p>e`. The same rule, off the
-    * same histogram, as the engine — the derived knob is part of the
-    * hash gate, not folklore. */
-  private def dfCapCtes(p: String): String =
-    s"""${p}dfs AS (SELECT s, count(*) AS df FROM ${p}e0 GROUP BY s),
-        ${p}cap AS (SELECT greatest(${NearDup.DfCapFloor}, coalesce(
-            max(df) FILTER (WHERE pv <= ${NearDup.DfPairBudget}),
-            ${NearDup.DfCapFloor})) AS df_cap
-          FROM (SELECT df, sum(cnt * (df * (df - 1) // 2))
-              OVER (ORDER BY df) AS pv
-            FROM (SELECT df, count(*) AS cnt FROM ${p}dfs GROUP BY df))),
-        ${p}e AS (SELECT ${p}e0.doc_id, ${p}e0.s FROM ${p}e0
-          JOIN ${p}dfs USING (s)
-          WHERE df <= (SELECT df_cap FROM ${p}cap))"""
-
-  /** DuckDB replay of Curation.chunks(ChunkSize, ChunkStride):
-    * per-doc sliding token windows with md5 fingerprints. */
-  private lazy val ChunksSql =
-    s"""SELECT doc_id, CAST(ix AS INTEGER) AS chunk_ix,
-          CAST(ix * $ChunkStride AS INTEGER) AS start_tok,
-          CAST(len(list_slice(toks, ix * $ChunkStride + 1,
-            ix * $ChunkStride + $ChunkSize)) AS INTEGER) AS n_chunk_toks,
-          md5(array_to_string(list_slice(toks, ix * $ChunkStride + 1,
-            ix * $ChunkStride + $ChunkSize), ' ')) AS chunk_fp
-        FROM (
-          SELECT doc_id, toks, unnest(range(0,
-            CASE WHEN nt <= $ChunkSize THEN 1
-                 ELSE (nt - $ChunkSize + ${ChunkStride - 1}) // $ChunkStride + 1
-            END)) AS ix
-          FROM (SELECT doc_id, toks, len(toks) AS nt
-                FROM (SELECT doc_id, $ToksSql AS toks FROM documents))
-          WHERE nt > 0)"""
-  /** Sequential-fold double dot product of a.embedding/b.embedding. */
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(range(1, len($a.embedding) + 1),
-        i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)),
-        (x, y) -> x + y)"""
-  private val NormedEmbSql =
-    """SELECT vec_id, embedding,
-       sqrt(list_reduce(list_transform(embedding,
-         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS nrm
-       FROM embeddings"""
-
-  /** [[NormedEmbSql]] minus zero-norm vectors — the oracle twin of the
-    * engine's degenerate-vector exclusion in cosineNearDup/srpNearDup
-    * (0/0 cosine is NULL here, NaN in IEEE engines; neither belongs in
-    * a near-dup candidate set). */
-  private val NormedNonzeroEmbSql =
-    s"SELECT * FROM ($NormedEmbSql) WHERE nrm <> 0"
-
-  /** Oracle twin of [[annCentroids]]: the Lloyd-refined centroid CTE
-    * chain — stride seeds (`ctr0`) → nearest-seed assignment (`tasg`,
-    * same (cos DESC, centroid_id) tie-break as assignCells) → the
-    * integer-quantized per-dimension mean (round(x·10⁶) BIGINT sums,
-    * then the fixed CAST(s AS DOUBLE)/n/10⁶ → FLOAT expression — the
-    * trainCentroids contract, order-independent in both engines).
-    * Expects a CTE `e` = [[NormedEmbSql]] in scope; emits `ctr`
-    * (centroid_id, embedding, nrm) exactly where the stride-seed
-    * `ctr` CTE used to sit, so every IVF-family oracle swaps in
-    * place. */
-  private lazy val TrainedCtrCtes: String =
-    s"""ctr0 AS (SELECT vec_id AS centroid_id, embedding, nrm FROM e
-          WHERE vec_id % $CentroidStrideSql = 0),
-        tasg AS (SELECT e.vec_id, e.embedding, ctr0.centroid_id,
-          row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY ${dotSql("e", "ctr0")} / (e.nrm * ctr0.nrm) DESC,
-                     ctr0.centroid_id) AS trk
-          FROM e CROSS JOIN ctr0 WHERE e.nrm <> 0 AND ctr0.nrm <> 0),
-        tgrid AS (SELECT centroid_id, embedding,
-          unnest(range(1, len(embedding) + 1)) AS pos
-          FROM tasg WHERE trk = 1),
-        tmean AS (SELECT centroid_id, pos,
-          CAST(sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000)
-            AS BIGINT)) AS BIGINT) AS s, count(*) AS n
-          FROM tgrid GROUP BY 1, 2),
-        tctr AS (SELECT centroid_id,
-          list(CAST(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0
-            AS FLOAT) ORDER BY pos) AS embedding
-          FROM tmean GROUP BY 1),
-        ctr AS (SELECT centroid_id, embedding,
-          sqrt(list_reduce(list_transform(embedding,
-            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b))
-            AS nrm FROM tctr)"""
-
-  /** Oracle of Curation.mixturePlan under MixtureWeights/MixtureBudget
-    * — shared by q_mixture and q_mixture_sample's epochs leg. */
-  private lazy val MixtureSql = {
-    val wcase = MixtureWeights.keys.toSeq.sorted.map(k =>
-      s"WHEN '$k' THEN ${MixtureWeights(k)}")
-      .mkString("CASE source ", " ", " ELSE 1.0 END")
-    s"""WITH t AS (SELECT source, $ToksSql AS toks FROM documents),
-        g AS (SELECT source, count(*) AS n_docs,
-          CAST(coalesce(sum(len(toks)), 0) AS BIGINT) AS n_tokens
-          FROM t GROUP BY 1),
-        w AS (SELECT source, n_docs, n_tokens, $wcase AS weight,
-          CAST(sum(n_tokens) OVER () AS BIGINT) AS tot_tokens,
-          sum($wcase) OVER () AS tot_weight FROM g),
-        x AS (SELECT source, n_docs, n_tokens,
-          CAST(n_tokens AS DOUBLE) / nullif(tot_tokens, 0) AS avail_share,
-          weight / nullif(tot_weight, 0.0) AS target_share,
-          tot_tokens FROM w)
-        SELECT source, n_docs, n_tokens, avail_share, target_share,
-          CAST(floor((target_share * $MixtureBudget) *
-            CAST(tot_tokens AS DOUBLE)) AS BIGINT) AS target_tokens,
-          CAST(CAST(floor((target_share * $MixtureBudget) *
-            CAST(tot_tokens AS DOUBLE)) AS BIGINT) AS DOUBLE) /
-            nullif(n_tokens, 0) AS epochs
-        FROM x ORDER BY source"""
-  }
-
-  /** Oracle of TextAnalysis.languageId — shared by q_lang_id and the
-    * q_langid_eval confusion matrix. */
-  /** Shared langid scoring CTEs (yields `pred`: doc_id, source, lang,
-    * lang_pred + per-language scores) — q_lang_id and q_lang_mix read
-    * the same chain so the views can never disagree. */
-  private lazy val LangPredCtes = s"""t AS (SELECT doc_id, source, lang, $ToksSql AS toks FROM documents),
-          sc AS (SELECT doc_id, source, lang,
-            CAST(len(list_filter(toks, t -> list_contains(['der','die','und','das','ist','nicht'], t))) AS INTEGER) AS s_de,
-            CAST(len(list_filter(toks, t -> list_contains(['the','a','and','of','to','is'], t))) AS INTEGER) AS s_en,
-            CAST(len(list_filter(toks, t -> list_contains(['el','los','las','y','es','no'], t))) AS INTEGER) AS s_es,
-            CAST(len(list_filter(toks, t -> list_contains(['le','la','et','les','est','pas'], t))) AS INTEGER) AS s_fr,
-            CAST(len(list_filter(toks, t -> list_contains(['de','shi','le','bu','wo','zai'], t))) AS INTEGER) AS s_zh
-          FROM t),
-          m AS (SELECT *, greatest(s_de, s_en, s_es, s_fr, s_zh) AS mx FROM sc),
-          pred AS (SELECT doc_id, source, lang,
-            CASE WHEN mx > 0 AND s_de = mx THEN 'de'
-                 WHEN mx > 0 AND s_en = mx THEN 'en'
-                 WHEN mx > 0 AND s_es = mx THEN 'es'
-                 WHEN mx > 0 AND s_fr = mx THEN 'fr'
-                 WHEN mx > 0 AND s_zh = mx THEN 'zh'
-                 ELSE 'unknown' END AS lang_pred,
-            s_de, s_en, s_es, s_fr, s_zh
-          FROM m)"""
-
-  private lazy val LangIdSql = s"""WITH $LangPredCtes
-          SELECT doc_id, lang, lang_pred, s_de, s_en, s_es, s_fr, s_zh
-          FROM pred ORDER BY doc_id"""
-
-  /** Min-label connected-components CTE chain over the minhash-verified
-    * edge set (expects `ver` in scope, yields `lab`/`sz`) — shared by
-    * q_dedup_clusters and q_cluster_best. */
-  private lazy val ClusterCtes =
-    """edges AS (SELECT d1, d2 FROM ver UNION ALL SELECT d2, d1 FROM ver),
-       reach AS (
-         SELECT doc_id, doc_id AS r FROM documents
-         UNION
-         SELECT e.d2 AS doc_id, reach.r FROM reach
-         JOIN edges e ON e.d1 = reach.doc_id),
-       lab AS (SELECT doc_id, min(r) AS rep_id FROM reach GROUP BY doc_id),
-       sz AS (SELECT rep_id, count(*) AS cluster_size FROM lab
-         GROUP BY rep_id)"""
-
-  /** Oracle of VectorSearch.cosineNearDup at 0.4 — shared by
-    * q_embed_neardup and the q_dedup_recall exact leg. */
-  private lazy val EmbedNearDupSql =
-    s"""WITH e AS ($NormedNonzeroEmbSql),
-        s AS (SELECT a.vec_id AS v1, b.vec_id AS v2,
-          ${dotSql("a", "b")} / (a.nrm * b.nrm) AS c
-          FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        SELECT v1, v2, round(c, 6) AS cos FROM s WHERE c >= 0.4 ORDER BY v1, v2"""
-
-  /** Oracle of VectorSearch.srpNearDup at 0.4 (plane literals, band
-    * bucketing, capped sorted prefixes, exact verify) — shared by
-    * q_embed_lsh and the q_dedup_recall approximate leg. The plane
-    * count is CORPUS-DERIVED on both sides: srpPlanes is
-    * prefix-stable (same seed, same generation order — plane i is
-    * identical whatever the total), so the SQL embeds literals for
-    * the first 64 planes (enough for 4·2^16·64 ≈ 4.2M vectors) and
-    * replays srpParamsFor's integer power-of-two ladder
-    * (`pb.per_band` = smallest p ≥ 2 with n ≤ 64·2^p) to pick how
-    * many it uses and how they band. */
-  /** Shared SRP CTE prefix (plane literals → derived per-band count →
-    * projection bits → band signatures) — the bucketing pipeline both
-    * the q_embed_lsh near-dup oracle and the q_srp_bucket_stats
-    * occupancy-gate oracle replay. */
-  private lazy val SrpBandsCtes = {
-    val planeValues = VectorSearch.srpPlanes(64, 64).zipWithIndex
-      .map { case (arr, i) => s"($i, [${arr.map(_.toInt).mkString(", ")}])" }
-      .mkString(", ")
-    s"""planes(i, vals) AS (VALUES $planeValues),
-        pb AS (SELECT greatest(2, min(p)) AS per_band
-          FROM range(2, 17) t(p)
-          WHERE (SELECT count(*) FROM embeddings) <= 64 * (1 << p)),
-        e AS ($NormedNonzeroEmbSql),
-        bits AS (SELECT e.vec_id, planes.i,
-          CASE WHEN list_reduce(list_transform(range(1, 65),
-            k -> CAST(e.embedding[k] AS DOUBLE) * vals[k]), (x, y) -> x + y) >= 0
-          THEN 1 ELSE 0 END AS bit
-          FROM e CROSS JOIN planes
-          WHERE planes.i < 4 * (SELECT per_band FROM pb)),
-        bands AS (SELECT vec_id, i // (SELECT per_band FROM pb) AS band,
-          string_agg(CAST(bit AS VARCHAR), ',' ORDER BY i) AS sig
-          FROM bits GROUP BY 1, 2)"""
-  }
-
-  private lazy val EmbedLshSql =
-    s"""WITH $SrpBandsCtes,
-        buckets AS (SELECT band, sig,
-          (list_sort(list(vec_id)))[1:${NearDup.DefaultBucketCap}] AS ids
-          FROM bands GROUP BY 1, 2),
-        cand AS (SELECT DISTINCT p[1] AS v1, p[2] AS v2 FROM
-          (SELECT unnest(flatten(list_transform(range(1, len(ids)),
-            i -> list_transform(range(i + 1, len(ids) + 1),
-            j -> [ids[i], ids[j]])))) AS p
-           FROM buckets WHERE len(ids) > 1)),
-        s AS (SELECT v1, v2, ${dotSql("a", "b")} / (a.nrm * b.nrm) AS c
-          FROM cand JOIN e a ON a.vec_id = v1 JOIN e b ON b.vec_id = v2)
-        SELECT v1, v2, round(c, 6) AS cos FROM s WHERE c >= 0.4
-        ORDER BY v1, v2"""
-
-  /** Oracle of VectorSearch.srpBucketStats: the same derived-plane
-    * banding, bucket sizes clamped at the stored-prefix cap, pooled
-    * into a histogram. */
-  private lazy val SrpBucketStatsSql =
-    s"""WITH $SrpBandsCtes,
-        buckets AS (SELECT band, sig,
-          least(count(*), ${NearDup.DefaultBucketCap}) AS bucket_size
-          FROM bands GROUP BY 1, 2)
-        SELECT bucket_size, count(*) AS n_buckets FROM buckets
-        GROUP BY 1 ORDER BY 1"""
-
-  /** Sequential-fold double dot product of the `len`-element subvector
-    * starting after `off` (1-based lists) — the oracle twin of
-    * VectorSearch.pqTopK's slice + graft_dot. */
-  private def dotSubSql(a: String, b: String, off: Int, len: Int): String =
-    s"""list_reduce(list_transform(range(1, ${len + 1}),
-        i -> CAST($a.embedding[i + $off] AS DOUBLE) * CAST($b.embedding[i + $off] AS DOUBLE)),
-        (x, y) -> x + y)"""
-
-  /** L2² between subvectors expanded as dot(a,a)+dot(b,b)-2·dot(a,b) —
-    * the exact expression tree of pqTopK's l2sq. */
-  private def l2SubSql(a: String, b: String, off: Int, len: Int): String =
-    s"""(${dotSubSql(a, a, off, len)} + ${dotSubSql(b, b, off, len)}
-        - CAST(2 AS DOUBLE) * ${dotSubSql(a, b, off, len)})"""
-
-  /** CTE chain replaying the MinHash LSH pipeline through the exact
-    * verification stage (`ver` = (d1 < d2) verified pairs) — shared by
-    * the one-hop q_minhash_dedup oracle and the recursive
-    * connected-components q_dedup_clusters oracle. */
-  private lazy val MinhashVerCtes: String = minhashVerCtes("TRUE")
-
-  /** The q_minhash_recall oracle's sample-modulus derivation — the
-    * SQL twin of [[graft.operators.NearDup.sampleModFor]]. */
-  private val SampleModSql =
-    s"(SELECT greatest(1, CAST(round(count(*) / ${NearDup.RecallSampleTarget}.0) AS BIGINT)) FROM documents)"
-
-  private def minhashVerCtes(docFilter: String): String = {
-    val coefValues = NearDup.minhashCoefficients(32).zipWithIndex
-      .map { case ((a, b), j) => s"($j, $a, $b)" }.mkString(", ")
-    s"""tk AS (SELECT doc_id, $ToksSql AS toks FROM documents
-          WHERE $docFilter),
-        t AS (SELECT doc_id, $ShinglesSql AS sh FROM tk),
-        e AS (SELECT doc_id, unnest(sh) AS s FROM t),
-        h AS (SELECT doc_id,
-          list_reduce(
-            list_prepend(CAST(0 AS BIGINT),
-              list_transform(string_split(s, ''), c -> CAST(ascii(c) AS BIGINT))),
-            (acc, c) -> (acc * 31 + c) % 1099511627776) AS h0
-          FROM e),
-        coef(j, a, b) AS (VALUES $coefValues),
-        perms AS (SELECT doc_id, j,
-          min((h0 * a + b) % 1099511627776) AS mh
-          FROM h CROSS JOIN coef GROUP BY 1, 2),
-        bands AS (SELECT doc_id, j // 2 AS band,
-          string_agg(CAST(mh AS VARCHAR), ',' ORDER BY j) AS band_sig
-          FROM perms GROUP BY 1, 2),
-        buckets AS (SELECT band, band_sig,
-          (list_sort(list(doc_id)))[1:${NearDup.DefaultBucketCap}] AS ids
-          FROM bands GROUP BY 1, 2),
-        cand AS (SELECT DISTINCT p[1] AS d1, p[2] AS d2 FROM
-          (SELECT unnest(flatten(list_transform(range(1, len(ids)),
-            i -> list_transform(range(i + 1, len(ids) + 1),
-            j -> [ids[i], ids[j]])))) AS p
-           FROM buckets WHERE len(ids) > 1)),
-        ver0 AS (SELECT d1, d2,
-          CAST(len(list_intersect(t1.sh, t2.sh)) AS DOUBLE) /
-            len(list_distinct(list_concat(t1.sh, t2.sh))) AS jaccard
-          FROM cand
-          JOIN t t1 ON t1.doc_id = d1 JOIN t t2 ON t2.doc_id = d2),
-        ver AS (SELECT d1, d2 FROM ver0 WHERE jaccard >= 0.5)"""
-  }
-
-  /** CTE chain replaying the PQ encode + ADC stages (`adc` =
-    * (query_id, vec_id, approx_dist), self-pairs excluded) — shared by
-    * the q_ann_pq and q_ann_pq_rerank oracles. */
-  private lazy val PqAdcCtes: String = {
-    val m = 4; val subLen = 16
-    val ds = (0 until m).map(j => s"${l2SubSql("e", "cb", j * subLen, subLen)} AS d$j")
-    val qds = (0 until m).map(j => s"${l2SubSql("q", "cb", j * subLen, subLen)} AS qd$j")
-    val rks = (0 until m).map(j =>
-      s"row_number() OVER (PARTITION BY vec_id ORDER BY d$j, centroid_id) AS r$j")
-    val cs = (0 until m).map(j =>
-      s"max(CASE WHEN r$j = 1 THEN centroid_id END) AS c$j")
-    s"""e AS (SELECT vec_id, embedding FROM embeddings),
-        cb AS (SELECT vec_id AS centroid_id, embedding FROM embeddings
-          WHERE vec_id % $CentroidStrideSql = 0),
-        wd AS (SELECT e.vec_id, cb.centroid_id, ${ds.mkString(", ")}
-          FROM e CROSS JOIN cb),
-        rk AS (SELECT *, ${rks.mkString(", ")} FROM wd),
-        codes AS (SELECT vec_id, ${cs.mkString(", ")} FROM rk GROUP BY vec_id),
-        q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 10),
-        dtab AS (SELECT query_id, centroid_id, ${qds.mkString(", ")}
-          FROM q CROSS JOIN cb),
-        adc AS (SELECT t0.query_id, c.vec_id,
-          t0.qd0 + t1.qd1 + t2.qd2 + t3.qd3 AS approx_dist
-          FROM codes c
-          JOIN dtab t0 ON t0.centroid_id = c.c0
-          JOIN dtab t1 ON t1.query_id = t0.query_id AND t1.centroid_id = c.c1
-          JOIN dtab t2 ON t2.query_id = t0.query_id AND t2.centroid_id = c.c2
-          JOIN dtab t3 ON t3.query_id = t0.query_id AND t3.centroid_id = c.c3
-          WHERE t0.query_id <> c.vec_id)"""
-  }
-
-  /** CTE chain computing the 40-bit simhash fingerprints (`fp` =
-    * (doc_id, simhash)) — shared by the q_simhash signature oracle and
-    * the q_simhash_pairs hamming-bucket oracle. */
-  private val SimhashFpCtes: String =
-    s"""tok AS (SELECT doc_id, unnest(toks) AS w FROM
-          (SELECT doc_id, $ToksSql AS toks FROM documents)),
-        h AS (SELECT doc_id,
-          list_reduce(
-            list_prepend(CAST(0 AS BIGINT),
-              list_transform(string_split(w, ''), c -> CAST(ascii(c) AS BIGINT))),
-            (acc, c) -> (acc * 31 + c) % 1099511627776) AS hv
-          FROM tok),
-        bits AS (SELECT doc_id, j,
-          CASE WHEN ((hv >> j) & 1) = 1 THEN 1 ELSE -1 END AS contrib
-          FROM h CROSS JOIN (SELECT unnest(range(0, 40)) AS j)),
-        sums AS (SELECT doc_id, j, sum(contrib) AS s FROM bits GROUP BY 1, 2),
-        fp AS (SELECT doc_id,
-          CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END)
-            AS BIGINT) AS simhash
-          FROM sums GROUP BY 1)"""
-
-
-  /** q_search_eval oracle: one BM25+relevance leg per query (the
-    * q_search_bm25 CTE chain parameterized by term set), UNION ALL'd.
-    * The rank is the same window-free counting form the engine uses:
-    * 1 + |docs strictly ahead of the best relevant doc|; the
-    * count-over-empty 1 is masked by the n_rel CASE on both sides. */
-  private lazy val searchEvalOracleSql: String = {
-    val legs = EvalQueries.map { case (qid, terms) =>
-      val termList = terms.map(t => s"'$t'").mkString(", ")
-      val relCond = terms.map(t => s"list_contains(toks, '$t')")
-        .mkString(" AND ")
-      s"""SELECT * FROM (
-          WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM tk),
-          st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-            CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-          ex AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-          h AS (SELECT doc_id, term, count(*) AS tf FROM ex
-            WHERE term IN ($termList) GROUP BY 1, 2),
-          dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM h
-            GROUP BY 1),
-          sc AS (SELECT h.doc_id, h.term, h.tf,
-              ln(1.0 + (st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5)) *
-                (h.tf * (1.2 + 1)) /
-                (h.tf + 1.2 * (CAST(1 AS DOUBLE) - 0.75 +
-                  0.75 * dl.dl / st.avgdl)) AS w
-            FROM h JOIN dfq USING (term) JOIN dl USING (doc_id)
-            CROSS JOIN st),
-          ag AS (SELECT doc_id,
-              round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(w ORDER BY term)), (x, y) -> x + y), 6) AS score
-            FROM sc GROUP BY 1),
-          rel AS (SELECT doc_id FROM tk WHERE $relCond),
-          nrel AS (SELECT count(*) AS n_rel FROM rel),
-          best AS (SELECT score, doc_id FROM ag
-            WHERE doc_id IN (SELECT doc_id FROM rel)
-            ORDER BY score DESC, doc_id LIMIT 1),
-          rnk AS (SELECT count(*) + 1 AS r FROM ag CROSS JOIN best b
-            WHERE ag.score > b.score OR
-              (ag.score = b.score AND ag.doc_id < b.doc_id)),
-          tk2 AS (SELECT doc_id FROM ag
-            ORDER BY score DESC, doc_id LIMIT $EvalK),
-          pk AS (SELECT count(*) AS rel_in_k FROM tk2
-            WHERE doc_id IN (SELECT doc_id FROM rel))
-          SELECT '$qid' AS query_id, nrel.n_rel,
-            CASE WHEN nrel.n_rel > 0 THEN rnk.r END AS first_rel_rank,
-            CASE WHEN nrel.n_rel > 0 THEN CAST(1.0 AS DOUBLE) / rnk.r
-              ELSE CAST(0.0 AS DOUBLE) END AS rr,
-            CAST(pk.rel_in_k AS DOUBLE) / $EvalK AS p_at_k
-          FROM nrel CROSS JOIN rnk CROSS JOIN pk)"""
-    }
-    legs.mkString("", "\n          UNION ALL\n          ",
-      "\n          ORDER BY query_id")
-  }
-
-
-  /** q_search_ndcg oracle: per-query graded-relevance legs (grade =
-    * contained-term count) over the same BM25 CTE chain; DCG/IDCG
-    * fold in rank order via the sorted-list reduce. */
-  private lazy val searchNdcgOracleSql: String = {
-    val legs = EvalQueries.map { case (qid, terms) =>
-      val termList = terms.map(t => s"'$t'").mkString(", ")
-      val gradeExpr = terms.map(t => s"CAST(list_contains(toks, '$t') AS BIGINT)")
-        .mkString(" + ")
-      s"""SELECT * FROM (
-          WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM tk),
-          st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-            CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-          ex AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-          h AS (SELECT doc_id, term, count(*) AS tf FROM ex
-            WHERE term IN ($termList) GROUP BY 1, 2),
-          dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM h
-            GROUP BY 1),
-          sc AS (SELECT h.doc_id, h.term, h.tf,
-              ln(1.0 + (st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5)) *
-                (h.tf * (1.2 + 1)) /
-                (h.tf + 1.2 * (CAST(1 AS DOUBLE) - 0.75 +
-                  0.75 * dl.dl / st.avgdl)) AS w
-            FROM h JOIN dfq USING (term) JOIN dl USING (doc_id)
-            CROSS JOIN st),
-          ag AS (SELECT doc_id,
-              round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(w ORDER BY term)), (x, y) -> x + y), 6) AS score
-            FROM sc GROUP BY 1),
-          g AS (SELECT doc_id, $gradeExpr AS grade FROM tk),
-          top AS (SELECT doc_id, row_number()
-              OVER (ORDER BY score DESC, doc_id) AS rk
-            FROM ag ORDER BY score DESC, doc_id LIMIT $EvalK),
-          dcg AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(g.grade / log2(rk + 1) ORDER BY rk)), (x, y) -> x + y)
-              AS dcg
-            FROM top JOIN g USING (doc_id)),
-          ideal AS (SELECT grade, row_number()
-              OVER (ORDER BY grade DESC, doc_id) AS rk
-            FROM g WHERE grade > 0
-            ORDER BY grade DESC, doc_id LIMIT $EvalK),
-          idcg AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(grade / log2(rk + 1) ORDER BY rk)), (x, y) -> x + y)
-              AS idcg FROM ideal),
-          ng AS (SELECT count(*) AS n_graded FROM g WHERE grade > 0)
-          SELECT '$qid' AS query_id, ng.n_graded, dcg.dcg, idcg.idcg,
-            dcg.dcg / nullif(idcg.idcg, CAST(0.0 AS DOUBLE)) AS ndcg
-          FROM ng CROSS JOIN dcg CROSS JOIN idcg)"""
-    }
-    legs.mkString("", "\n          UNION ALL\n          ",
-      "\n          ORDER BY query_id")
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity), 2) AS sum_qty,
-         round(sum(l_extendedprice), 2) AS sum_base_price,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-         round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)
-           AS sum_charge,
-         round(sum(l_quantity) / count(*), 6) AS avg_qty,
-         round(sum(l_extendedprice) / count(*), 6) AS avg_price,
-         round(sum(l_discount) / count(*), 6) AS avg_disc,
-         count(*) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_returned_items" ->
-      s"""WITH agg AS (SELECT o_custkey,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-            count(*) AS n_items
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          WHERE l_returnflag = 'R'
-            AND o_orderdate >= TIMESTAMP '$Q10Start'
-            AND o_orderdate < TIMESTAMP '$Q10End'
-          GROUP BY 1)
-          SELECT c_custkey AS custkey, c_name AS name, n_name AS nation,
-            revenue, n_items
-          FROM agg JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          ORDER BY revenue DESC, custkey LIMIT $Q10TopK""",
-    "q_local_volume" ->
-      s"""SELECT n_name,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-            count(*) AS n_items
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-            AND c_nationkey = s_nationkey
-          JOIN nation ON s_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-          WHERE r_name = '$Q5Region'
-            AND o_orderdate >= TIMESTAMP '$Q5YearStart'
-            AND o_orderdate < TIMESTAMP '$Q5YearEnd'
-          GROUP BY 1 ORDER BY revenue DESC, n_name""",
-    "q_order_priority" ->
-      s"""SELECT o_orderpriority, count(*) AS n_orders
-          FROM orders
-          WHERE o_orderdate >= TIMESTAMP '$Q4Start'
-            AND o_orderdate < TIMESTAMP '$Q4End'
-            AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey
-                AND date_diff('day', o_orderdate, l_shipdate) > $Q4LateDays)
-          GROUP BY 1 ORDER BY 1""",
-    "q_revenue_forecast" ->
-      s"""SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue_delta,
-            count(*) AS n_lines
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '$Q6YearStart'
-            AND l_shipdate < TIMESTAMP '$Q6YearEnd'
-            AND l_discount >= $Q6DiscLo AND l_discount <= $Q6DiscHi
-            AND l_quantity < $Q6MaxQty""",
-    "q_nation_trade" ->
-      s"""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-            CAST(year(l_shipdate) AS INTEGER) AS l_year,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-            count(*) AS n_lines
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation sn ON s_nationkey = sn.n_nationkey
-          JOIN nation cn ON c_nationkey = cn.n_nationkey
-          WHERE (sn.n_name = '$Q7NationA' AND cn.n_name = '$Q7NationB')
-             OR (sn.n_name = '$Q7NationB' AND cn.n_name = '$Q7NationA')
-          GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "q_market_share" ->
-      s"""SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-            round(sum(CASE WHEN n_name = '$Q8SuppNation'
-              THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END), 2)
-              AS target_rev,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_rev,
-            round(sum(CASE WHEN n_name = '$Q8SuppNation'
-              THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END), 2)
-              / round(sum(l_extendedprice * (1 - l_discount)), 2) AS mkt_share
-          FROM lineitem
-          JOIN part ON l_partkey = p_partkey
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN nation ON s_nationkey = n_nationkey
-          WHERE p_type = '$Q8PartType'
-            AND o_custkey IN (SELECT c_custkey FROM customer
-              JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
-              WHERE r_name = '$Q8CustRegion')
-          GROUP BY 1 ORDER BY 1""",
-    "q_product_profit" ->
-      s"""SELECT n_name AS nation,
-            CAST(year(o_orderdate) AS INTEGER) AS o_year,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS profit,
-            count(*) AS n_lines
-          FROM lineitem
-          JOIN part ON l_partkey = p_partkey
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN nation ON s_nationkey = n_nationkey
-          WHERE p_type = '$Q9PartType'
-          GROUP BY 1, 2 ORDER BY 1, 2 DESC""",
-    "q_priority_delay" ->
-      s"""SELECT CASE WHEN date_diff('day', o_orderdate, l_shipdate)
-              > $Q12LateDays THEN 'LATE' ELSE 'ONTIME' END AS delay_band,
-            count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH'))
-              AS high_line_count,
-            count(*) FILTER (WHERE coalesce(o_orderpriority, '')
-              NOT IN ('1-URGENT', '2-HIGH')) AS low_line_count
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          WHERE l_shipdate >= TIMESTAMP '$Q12Start'
-            AND l_shipdate < TIMESTAMP '$Q12End'
-          GROUP BY 1 ORDER BY 1""",
-    "q_cust_order_dist" ->
-      s"""SELECT c_count, count(*) AS custdist FROM (
-            SELECT c_custkey, count(o_custkey) AS c_count
-            FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-              AND o_orderpriority <> '$Q13ExcludePriority'
-            GROUP BY 1) t
-          GROUP BY 1 ORDER BY custdist DESC, c_count DESC""",
-    "q_promo_share" ->
-      s"""SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
-            round(sum(CASE WHEN p_type = '$Q14PromoType'
-              THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END), 2)
-              AS promo_rev,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_rev,
-            100.0 * round(sum(CASE WHEN p_type = '$Q14PromoType'
-              THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END), 2)
-              / round(sum(l_extendedprice * (1 - l_discount)), 2) AS promo_pct
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          WHERE l_shipdate >= TIMESTAMP '$Q14Start'
-            AND l_shipdate < TIMESTAMP '$Q14End'
-          GROUP BY 1 ORDER BY 1""",
-    "q_top_supplier" ->
-      s"""WITH rev AS (
-            SELECT l_suppkey,
-              round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '$Q15Start'
-              AND l_shipdate < TIMESTAMP '$Q15End'
-            GROUP BY 1)
-          SELECT s_suppkey, s_name, total_revenue
-          FROM rev JOIN supplier ON l_suppkey = s_suppkey
-          WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-          ORDER BY s_suppkey""",
-    "q_supplier_variety" ->
-      s"""SELECT p_brand, p_type,
-            CAST(floor(p_size / $Q16SizeBand) * $Q16SizeBand AS INTEGER)
-              AS size_band,
-            count(DISTINCT l_suppkey) AS supplier_cnt
-          FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-          JOIN part ON l_partkey = p_partkey
-          WHERE p_brand <> '$Q16ExcludeBrand'
-          GROUP BY 1, 2, 3
-          ORDER BY supplier_cnt DESC, p_brand, p_type, size_band""",
-    "q_disjunctive_rev" ->
-      s"""SELECT CASE
-            WHEN p_brand = '${Q19Brands(0)}' AND p_size BETWEEN 1 AND 10
-              AND l_quantity BETWEEN 1 AND 15 THEN 'clause_1'
-            WHEN p_brand = '${Q19Brands(1)}' AND p_size BETWEEN 11 AND 25
-              AND l_quantity BETWEEN 10 AND 25 THEN 'clause_2'
-            ELSE 'clause_3' END AS clause,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-            count(*) AS n_lines
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          WHERE (p_brand = '${Q19Brands(0)}' AND p_size BETWEEN 1 AND 10
-              AND l_quantity BETWEEN 1 AND 15)
-             OR (p_brand = '${Q19Brands(1)}' AND p_size BETWEEN 11 AND 25
-              AND l_quantity BETWEEN 10 AND 25)
-             OR (p_brand = '${Q19Brands(2)}' AND p_size BETWEEN 26 AND 50
-              AND l_quantity BETWEEN 20 AND 35)
-          GROUP BY 1 ORDER BY 1""",
-    "q_dead_stock" ->
-      """WITH rev AS (SELECT l_partkey,
-            CAST(floor(sum(CAST(l_extendedprice * (1 - l_discount)
-              AS DOUBLE)) * 100 + 0.5) AS BIGINT) AS rev_c
-          FROM lineitem GROUP BY 1),
-          dead AS (SELECT count(*) AS n_dead_parts FROM part
-            WHERE p_partkey NOT IN (SELECT l_partkey FROM rev))
-          SELECT CAST(length(CAST(rev_c AS VARCHAR)) AS BIGINT)
-              AS rev_digits,
-            count(*) AS n_parts,
-            CAST(sum(rev_c) AS DOUBLE) / 100.0 AS total_rev,
-            (SELECT n_dead_parts FROM dead) AS n_dead_parts
-          FROM rev GROUP BY 1 ORDER BY 1""",
-    "q_repurchase" ->
-      """WITH g AS (SELECT o_custkey,
-            CAST(date_diff('day', lag(o_orderdate) OVER (
-              PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-              o_orderdate) AS BIGINT) AS gap
-          FROM orders)
-          SELECT c_mktsegment, count(*) AS n_gaps,
-            quantile_cont(gap, 0.25) AS p25_days,
-            quantile_cont(gap, 0.5) AS p50_days,
-            quantile_cont(gap, 0.75) AS p75_days
-          FROM g JOIN customer ON o_custkey = c_custkey
-          WHERE gap IS NOT NULL
-          GROUP BY 1 ORDER BY 1""",
-    // Kaplan-Meier product-limit curve: integer at-risk cumsums off
-    // the (segment, gap) grid; the survival product folds each
-    // segment's (1 - d/n) terms in ascending gap order from an exact
-    // 1.0 (list_reduce over an ORDER BY list here, the sorted-array
-    // aggregate engine side) so S(t) is multiplication-order-exact
-    "q_km_survival" ->
-      """WITH o2 AS (SELECT o_custkey,
-            list_sort(list(o_orderdate)) AS ds FROM orders GROUP BY 1),
-          mx AS (SELECT max(o_orderdate) AS maxd FROM orders),
-          subj AS (SELECT o_custkey,
-            CASE WHEN len(ds) >= 2
-              THEN CAST(date_diff('day', ds[1], ds[2]) AS BIGINT)
-              ELSE CAST(date_diff('day', ds[1], maxd) AS BIGINT)
-            END AS gap,
-            CASE WHEN len(ds) >= 2 THEN 1 ELSE 0 END AS ev
-          FROM o2, mx),
-          sg AS (SELECT c_mktsegment AS segment, gap, ev
-            FROM subj JOIN customer ON c_custkey = o_custkey),
-          g AS (SELECT segment, gap, CAST(sum(ev) AS BIGINT) AS d,
-              CAST(count(*) - sum(ev) AS BIGINT) AS cns
-            FROM sg GROUP BY 1, 2),
-          w AS (SELECT *,
-            CAST(sum(d + cns) OVER (PARTITION BY segment) AS BIGINT)
-            - coalesce(CAST(sum(d + cns) OVER (PARTITION BY segment
-                ORDER BY gap ROWS BETWEEN UNBOUNDED PRECEDING AND
-                1 PRECEDING) AS BIGINT), 0) AS n_risk
-          FROM g),
-          e AS (SELECT segment, gap, d, n_risk,
-            CAST(1.0 AS DOUBLE) - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)
-              AS term
-          FROM w WHERE d > 0),
-          arr AS (SELECT segment,
-            list(struct_pack(g := gap, t := term) ORDER BY gap) AS a
-          FROM e GROUP BY 1)
-          SELECT e.segment, gap AS gap_days, d AS n_events,
-            n_risk AS n_at_risk,
-            list_reduce(list_prepend(CAST(1.0 AS DOUBLE),
-              list_transform(list_filter(a, x -> x.g <= gap), x -> x.t)),
-              (acc, x) -> acc * x) AS survival
-          FROM e JOIN arr USING (segment) ORDER BY 1, 2""",
-    // date-grain midpoint (lo + days//2), per-half customer counts,
-    // full outer join, banding CASE, grid-sized share window
-    "q_segment_migration" ->
-      """WITH mm AS (SELECT CAST(min(o_orderdate) AS DATE) AS lo,
-            CAST(max(o_orderdate) AS DATE) AS hi FROM orders),
-          md AS (SELECT lo + CAST(date_diff('day', lo, hi) // 2
-              AS INTEGER) AS mid
-            FROM mm),
-          h1 AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n1
-            FROM orders, md WHERE CAST(o_orderdate AS DATE) <= mid
-            GROUP BY o_custkey),
-          h2 AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n2
-            FROM orders, md WHERE CAST(o_orderdate AS DATE) > mid
-            GROUP BY o_custkey),
-          j AS (SELECT
-              CASE WHEN n1 IS NULL THEN 'absent' WHEN n1 = 1 THEN 'light'
-                WHEN n1 <= 4 THEN 'regular' ELSE 'heavy' END AS band_h1,
-              CASE WHEN n2 IS NULL THEN 'absent' WHEN n2 = 1 THEN 'light'
-                WHEN n2 <= 4 THEN 'regular' ELSE 'heavy' END AS band_h2
-            FROM h1 FULL OUTER JOIN h2 USING (o_custkey)),
-          g AS (SELECT band_h1, band_h2, CAST(count(*) AS BIGINT)
-              AS n_customers
-            FROM j GROUP BY band_h1, band_h2)
-          SELECT band_h1, band_h2, n_customers,
-            CAST(n_customers AS DOUBLE) /
-              CAST(sum(n_customers) OVER (PARTITION BY band_h1)
-                AS DOUBLE) AS share_of_h1
-          FROM g ORDER BY band_h1, band_h2""",
-    "q_supplier_risk" ->
-      """WITH rev AS (SELECT l_suppkey,
-            CAST(floor(sum(CAST(l_extendedprice * (1 - l_discount)
-              AS DOUBLE)) * 100 + 0.5) AS BIGINT) AS rev_c
-          FROM lineitem GROUP BY 1)
-          SELECT s_nationkey, count(*) AS n_suppliers,
-            count(*) FILTER (WHERE s_acctbal < 0) AS n_risky,
-            CAST(sum(rev_c) AS DOUBLE) / 100.0 AS total_rev,
-            CAST(coalesce(sum(rev_c) FILTER (WHERE s_acctbal < 0), 0)
-              AS DOUBLE) / 100.0 AS risky_rev,
-            CAST(coalesce(sum(rev_c) FILTER (WHERE s_acctbal < 0), 0)
-              AS DOUBLE) / sum(rev_c) AS exposure_share
-          FROM rev JOIN supplier ON l_suppkey = s_suppkey
-          GROUP BY 1 ORDER BY 1""",
-    "q_price_realization" ->
-      """WITH lp AS (SELECT p_brand, count(*) AS n_parts,
-            CAST(sum(CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS list_c
-          FROM part GROUP BY 1),
-          rl AS (SELECT p_brand, count(*) AS n_lines,
-            sum(l_quantity) AS sum_qty,
-            CAST(floor(sum(CAST(l_extendedprice * (1 - l_discount)
-              AS DOUBLE)) * 100 + 0.5) AS BIGINT) AS rev_c
-          FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1)
-          SELECT rl.p_brand, n_lines,
-            CAST(rev_c AS DOUBLE) / 100.0 / sum_qty
-              AS realized_unit_price,
-            CAST(list_c AS DOUBLE) / 100.0 / n_parts AS mean_list_price,
-            (CAST(rev_c AS DOUBLE) / 100.0 / sum_qty) /
-              (CAST(list_c AS DOUBLE) / 100.0 / n_parts)
-              AS realization_ratio
-          FROM rl JOIN lp USING (p_brand) ORDER BY p_brand""",
-    "q_line_position" ->
-      """SELECT l_linenumber, count(*) AS n_lines,
-          sum(l_quantity) / count(*) AS mean_qty,
-          round(sum(l_extendedprice), 2) / count(*) AS mean_price
-          FROM lineitem GROUP BY 1 ORDER BY 1""",
-    // per-line cent rounding BEFORE the sum (order-independent), one
-    // header rounding, bigint diffs
-    "q_reconcile" ->
-      s"""WITH calc AS (SELECT l_orderkey,
-            CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) *
-              (1.0 + l_tax) * 100 + 0.5) AS BIGINT)) AS BIGINT)
-              AS calc_cents,
-            count(*) AS n_lines
-          FROM lineitem GROUP BY 1),
-          j AS (SELECT o_orderstatus, calc.n_lines IS NULL AS no_lines,
-            coalesce(calc.calc_cents, 0) -
-              CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS diff
-          FROM orders LEFT JOIN calc ON o_orderkey = l_orderkey)
-          SELECT o_orderstatus, count(*) AS n_orders,
-            CAST(sum(CASE WHEN no_lines THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_no_lines,
-            CAST(sum(CASE WHEN NOT no_lines AND abs(diff) > $ReconTolCents
-              THEN 1 ELSE 0 END) AS BIGINT) AS n_mismatch,
-            max(CASE WHEN NOT no_lines THEN abs(diff) END)
-              AS max_abs_diff_cents,
-            CAST(sum(CASE WHEN NOT no_lines THEN diff ELSE 0 END)
-              AS BIGINT) AS net_diff_cents
-          FROM j GROUP BY 1 ORDER BY 1""",
-    "q_supplier_hhi" ->
-      """WITH rev AS (SELECT l_suppkey,
-            CAST(floor(sum(CAST(l_extendedprice * (1 - l_discount)
-              AS DOUBLE)) + 0.5) AS BIGINT) AS rev_d
-          FROM lineitem GROUP BY 1)
-          SELECT s_nationkey, count(*) AS n_suppliers,
-            CAST(sum(rev_d) AS DOUBLE) AS total_rev,
-            (CAST(sum(rev_d * rev_d) AS DOUBLE) * 10000.0) /
-              (CAST(sum(rev_d) AS DOUBLE) * sum(rev_d)) AS hhi_points
-          FROM rev JOIN supplier ON l_suppkey = s_suppkey
-          GROUP BY 1 ORDER BY 1""",
-    "q_discount_lift" ->
-      """WITH agg AS (SELECT p_brand, l_discount > 0.0 AS disc,
-            count(*) AS n, sum(l_quantity) AS sq
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY 1, 2),
-          d AS (SELECT p_brand, n AS n_disc, sq / n AS avg_qty_disc
-            FROM agg WHERE disc),
-          nd AS (SELECT p_brand, n AS n_nodisc, sq / n AS avg_qty_nodisc
-            FROM agg WHERE NOT disc)
-          SELECT d.p_brand, n_disc, n_nodisc, avg_qty_disc,
-            avg_qty_nodisc,
-            avg_qty_disc / avg_qty_nodisc AS qty_lift
-          FROM d JOIN nd USING (p_brand) ORDER BY p_brand""",
-    "q_hourly_profile" ->
-      """WITH hg AS (SELECT event_type, CAST(hour(ts) AS INTEGER) AS hr,
-            count(*) AS n FROM events GROUP BY 1, 2),
-          tot AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS n_type
-            FROM hg GROUP BY 1),
-          pk AS (SELECT event_type,
-              CAST(min(hr) FILTER (WHERE n = mxn) AS INTEGER)
-                AS peak_hour
-            FROM (SELECT *, max(n) OVER (PARTITION BY event_type)
-              AS mxn FROM hg) t GROUP BY 1)
-          SELECT hg.event_type, hr, n,
-            CAST(n AS DOUBLE) / n_type AS share, peak_hour
-          FROM hg JOIN tot USING (event_type) JOIN pk USING (event_type)
-          ORDER BY 1, 2""",
-    "q_gini" ->
-      """WITH rev AS (SELECT o_custkey,
-            CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS rev_c
-          FROM orders GROUP BY 1),
-          j AS (SELECT c_nationkey, o_custkey, rev_c
-            FROM rev JOIN customer ON o_custkey = c_custkey),
-          rnk AS (SELECT *, CAST(row_number() OVER (
-            PARTITION BY c_nationkey ORDER BY rev_c, o_custkey)
-            AS BIGINT) AS rk FROM j)
-          SELECT c_nationkey, count(*) AS n_custs,
-            CAST(sum(rev_c) AS DOUBLE) / 100.0 AS total_rev,
-            (2.0 * sum(rk * rev_c)) /
-              (CAST(count(*) AS DOUBLE) * sum(rev_c)) -
-              CAST(count(*) + 1 AS DOUBLE) / count(*) AS gini
-          FROM rnk GROUP BY 1 ORDER BY 1""",
-    // ntile over the deterministic (rev, custkey) order; shares are
-    // one double division off bigint cent sums per decile row
-    "q_ltv_deciles" ->
-      """WITH rev AS (SELECT o_custkey,
-            CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS rev_c
-          FROM orders GROUP BY 1),
-          j AS (SELECT c_mktsegment AS segment, o_custkey, rev_c
-            FROM rev JOIN customer ON o_custkey = c_custkey),
-          dd AS (SELECT segment, rev_c, ntile(10) OVER (
-            PARTITION BY segment ORDER BY rev_c, o_custkey) AS decile
-          FROM j),
-          g AS (SELECT segment, decile,
-            CAST(count(*) AS BIGINT) AS n_custs,
-            CAST(sum(rev_c) AS BIGINT) AS rev_cents
-          FROM dd GROUP BY 1, 2)
-          SELECT segment, decile, n_custs,
-            CAST(rev_cents AS DOUBLE) / 100.0 AS revenue,
-            CAST(rev_cents AS DOUBLE) /
-              CAST(sum(rev_cents) OVER (PARTITION BY segment) AS DOUBLE)
-              AS rev_share,
-            CAST(sum(rev_cents) OVER (PARTITION BY segment
-                ORDER BY decile) AS DOUBLE) /
-              CAST(sum(rev_cents) OVER (PARTITION BY segment) AS DOUBLE)
-              AS cum_share
-          FROM g ORDER BY 1, 2""",
-    // integer moments (HUGEINT here, DECIMAL(38,0) engine side), the
-    // slope a fixed-shape double expression over per-moment casts
-    "q_discount_elasticity" ->
-      """WITH base AS (SELECT p_brand,
-            CAST(round(l_discount * 100) AS BIGINT) AS x,
-            CAST(round(l_quantity) AS BIGINT) AS y
-          FROM lineitem JOIN part ON l_partkey = p_partkey),
-          m AS (SELECT p_brand, CAST(count(*) AS BIGINT) AS n_lines,
-            sum(x) AS sx, sum(y) AS sy,
-            sum(x * x) AS sxx, sum(x * y) AS sxy
-          FROM base GROUP BY 1)
-          SELECT p_brand, n_lines,
-            CAST(sy AS DOUBLE) / CAST(n_lines AS DOUBLE) AS avg_qty,
-            (CAST(n_lines AS DOUBLE) * CAST(sxy AS DOUBLE) -
-              CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-              nullif(CAST(n_lines AS DOUBLE) * CAST(sxx AS DOUBLE) -
-                CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), CAST(0.0 AS DOUBLE))
-              AS qty_slope_per_pt
-          FROM m ORDER BY 1""",
-    "q_revenue_growth" ->
-      """WITH q AS (SELECT n_name,
-            CAST(date_trunc('quarter', o_orderdate) AS DATE) AS quarter,
-            CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS rev_c,
-            count(*) AS n_orders
-          FROM orders JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          GROUP BY 1, 2)
-          SELECT n_name, quarter,
-            CAST(rev_c AS DOUBLE) / 100.0 AS revenue, n_orders,
-            CAST(rev_c - lag(rev_c) OVER w AS DOUBLE) /
-              nullif(lag(rev_c) OVER w, 0) AS qoq_growth
-          FROM q WINDOW w AS (PARTITION BY n_name ORDER BY quarter)
-          ORDER BY n_name, quarter""",
-    "q_revenue_by_nation" ->
-      """SELECT n_name, round(sum(o_totalprice), 2) AS revenue,
-         count(*) AS num_orders
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY 1 ORDER BY revenue DESC, n_name""",
-    "q_top_orders_per_cust" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-         SELECT o_custkey, o_orderkey, o_totalprice,
-         CAST(row_number() OVER (PARTITION BY o_custkey
-           ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rk
-         FROM orders) t WHERE rk <= 3 ORDER BY o_custkey, rk""",
-    "q_topk_orders" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-         SELECT o_custkey, o_orderkey, o_totalprice,
-         CAST(row_number() OVER (PARTITION BY o_custkey
-           ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rk
-         FROM orders) t WHERE rk <= 3 ORDER BY o_custkey, rk""",
-    "q_bloom_join" ->
-      s"""SELECT c_nationkey, count(*) AS n_orders,
-          round(sum(o_totalprice), 2) AS revenue
-          FROM orders JOIN customer ON o_custkey = c_custkey
-          WHERE c_nationkey < $BloomJoinMaxNation
-          GROUP BY 1 ORDER BY 1""",
-    "q_event_windows" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
-         event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_reach_overall" ->
-      s"""WITH dd AS (SELECT DISTINCT user_id AS household_id,
-          $ProjfactSql AS projfact FROM events)
-          SELECT 'all' AS dimension, '' AS value,
-          round(sum(projfact)) AS count, round(sum(projfact)) AS "unique",
-          round(sum(projfact)) - round(sum(projfact)) AS duplicates FROM dd""",
-    "q_reach_by_type" ->
-      s"""WITH m AS (SELECT DISTINCT user_id AS household_id,
-          event_type AS value, $ProjfactSql AS projfact FROM events),
-          c AS (SELECT *, count(*) OVER (PARTITION BY household_id) AS cnt FROM m),
-          g AS (SELECT value, round(sum(projfact)) AS count,
-            round(sum(CASE WHEN cnt > 1 THEN 0.0 ELSE projfact END)) AS "unique"
-            FROM c GROUP BY value)
-          SELECT 'etype' AS dimension, value, count, "unique",
-          count - "unique" AS duplicates FROM g ORDER BY count DESC, value""",
-    "q_frequency" ->
-      s"""WITH hh AS (SELECT user_id, count(*) AS frequency,
-          max($ProjfactSql) AS projfact FROM events
-          WHERE event_id % 37 = 0 GROUP BY user_id),
-          capped AS (SELECT CASE WHEN frequency >= 10 THEN 10 ELSE frequency END
-            AS frequency, projfact FROM hh),
-          g AS (SELECT frequency, sum(projfact) AS raw FROM capped GROUP BY frequency)
-          SELECT frequency, CAST(round(raw) AS BIGINT) AS proj_hh,
-          raw / sum(raw) OVER () AS pct_hh FROM g ORDER BY frequency""",
-    "q_frequency_dedup" ->
-      s"""WITH m AS (SELECT DISTINCT user_id, event_type,
-          $ProjfactSql AS projfact FROM events
-          WHERE event_id % (user_id + 2) = 0),
-          hh AS (SELECT user_id, count(*) AS frequency, max(projfact) AS projfact
-            FROM m GROUP BY 1),
-          capped AS (SELECT CASE WHEN frequency >= 10 THEN 10 ELSE frequency END
-            AS frequency, projfact FROM hh),
-          g AS (SELECT frequency, sum(projfact) AS raw FROM capped GROUP BY 1)
-          SELECT frequency, CAST(round(raw) AS BIGINT) AS proj_hh,
-          raw / sum(raw) OVER () AS pct_hh FROM g ORDER BY frequency""",
-    "q_friendly_rename" ->
-      s"""WITH m AS (SELECT DISTINCT user_id AS household_id,
-          event_type AS value, $ProjfactSql AS projfact FROM events),
-          c AS (SELECT *, count(*) OVER (PARTITION BY household_id) AS cnt FROM m),
-          g AS (SELECT value, round(sum(projfact)) AS count,
-            round(sum(CASE WHEN cnt > 1 THEN 0.0 ELSE projfact END)) AS "unique"
-            FROM c GROUP BY value),
-          r AS (SELECT 'etype' AS dimension, value, count, "unique",
-            count - "unique" AS duplicates FROM g),
-          hier AS (SELECT n_name AS dimension, 'Nation ' || n_name AS friendly_name
-            FROM nation
-            UNION ALL SELECT DISTINCT event_type, upper(event_type) FROM events),
-          hd AS (SELECT lower(dimension) AS dim_key,
-            min(friendly_name) AS friendly_name FROM hier GROUP BY 1)
-          SELECT r.dimension, coalesce(h.friendly_name, r.value) AS value,
-            r.count, r."unique", r.duplicates
-          FROM r LEFT JOIN hd h ON lower(r.value) = h.dim_key
-          ORDER BY r.count DESC, value""",
-    "q_pairwise_matrix" ->
-      s"""WITH p AS (SELECT user_id, $ProjfactSql AS projfact,
-          CAST(max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-          CAST(max(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
-          CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-          CAST(max(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-          CAST(max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS "view"
-          FROM events WHERE event_id % 23 = 0 GROUP BY 1, 2)
-          SELECT click, error, purchase, signup, "view",
-          round(sum(projfact)) AS count FROM p GROUP BY 1, 2, 3, 4, 5
-          ORDER BY count DESC, click, error, purchase, signup, "view"""",
-    "q_pairwise_pairs" ->
-      s"""WITH m AS (SELECT DISTINCT user_id AS household_id,
-          event_type AS value, $ProjfactSql AS projfact FROM events),
-          pairs AS (SELECT a.value AS media_type_1, b.value AS media_type_2,
-            sum(a.projfact) AS overlap_raw FROM m a
-            JOIN m b ON a.household_id = b.household_id AND a.value < b.value
-            GROUP BY 1, 2),
-          t AS (SELECT value, sum(projfact) AS cnt FROM m GROUP BY 1)
-          SELECT media_type_1, media_type_2,
-          round(overlap_raw) AS overlapping_households,
-          overlap_raw / t1.cnt AS pct_of_media_type_1,
-          overlap_raw / t2.cnt AS pct_of_media_type_2
-          FROM pairs JOIN t t1 ON t1.value = media_type_1
-          JOIN t t2 ON t2.value = media_type_2
-          ORDER BY overlapping_households DESC, media_type_1, media_type_2""",
-    "q_reach_multi" ->
-      s"""WITH m1 AS (SELECT DISTINCT user_id AS household_id,
-          event_type AS value, $ProjfactSql AS projfact FROM events),
-          c1 AS (SELECT *, count(*) OVER (PARTITION BY household_id) AS cnt FROM m1),
-          g1 AS (SELECT 'etype' AS dimension, value,
-            round(sum(projfact)) AS count,
-            round(sum(CASE WHEN cnt > 1 THEN 0.0 ELSE projfact END)) AS "unique"
-            FROM c1 GROUP BY value),
-          m2 AS (SELECT DISTINCT user_id AS household_id,
-            CAST(CAST(date_trunc('week', ts) AS DATE) AS VARCHAR) AS value,
-            $ProjfactSql AS projfact FROM events),
-          c2 AS (SELECT *, count(*) OVER (PARTITION BY household_id) AS cnt FROM m2),
-          g2 AS (SELECT 'week_s' AS dimension, value,
-            round(sum(projfact)) AS count,
-            round(sum(CASE WHEN cnt > 1 THEN 0.0 ELSE projfact END)) AS "unique"
-            FROM c2 GROUP BY value),
-          u AS (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
-          SELECT dimension, value, count, "unique", count - "unique" AS duplicates
-          FROM u ORDER BY dimension, count DESC, value""",
-    "q_reach_week" ->
-      s"""WITH m AS (SELECT user_id AS household_id,
-          CAST(date_trunc('week', ts) AS DATE) AS week,
-          $ProjfactSql AS projfact FROM events WHERE event_id % 101 = 0),
-          fw AS (SELECT household_id, min(week) AS week, max(projfact) AS projfact
-            FROM m GROUP BY 1),
-          pw AS (SELECT week, round(sum(projfact)) AS counts FROM fw GROUP BY 1)
-          SELECT week, counts, sum(counts) OVER (ORDER BY week
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_sum
-          FROM pw ORDER BY week""",
-    "q_projection_ratio" ->
-      s"""WITH g AS (SELECT event_type AS etype,
-          CAST(count(*) AS DOUBLE) AS exposures,
-          sum($ProjfactSql) AS proj_num FROM events GROUP BY 1),
-          u AS (SELECT * FROM g UNION ALL
-            SELECT 'all', sum(exposures), sum(proj_num) FROM g)
-          SELECT etype, exposures / proj_num AS ratio FROM u ORDER BY etype""",
-    "q_value_mapping" ->
-      """WITH v AS (SELECT DISTINCT p_brand AS value FROM part),
-         vm AS (SELECT value, CAST(dense_rank() OVER (ORDER BY value) AS BIGINT)
-           AS val_id FROM v)
-         SELECT p_partkey AS id, 'partid' AS id_type, lower(p_type) AS key,
-         p.p_brand AS value, val_id FROM part p JOIN vm ON vm.value = p.p_brand
-         ORDER BY id""",
-    "q_media_projection" ->
-      s"""WITH m AS (SELECT user_id AS household_id, event_type AS etype,
-          CAST(ts AS DATE) AS date, $ProjfactSql AS projfact FROM events),
-          proj AS (SELECT DISTINCT household_id, projfact FROM m),
-          ratio AS (SELECT DISTINCT etype,
-            CAST(1.0 AS DOUBLE) + CAST(len(etype) AS DOUBLE) / 2 AS ratio FROM m),
-          j AS (SELECT mm.household_id, mm.date, mm.etype, p.projfact
-            FROM m mm JOIN proj p USING (household_id)),
-          r AS (SELECT j.*, j.projfact * ratio.ratio AS pf2
-            FROM j JOIN ratio USING (etype))
-          SELECT date, round(sum(pf2), 1) AS proj_sum, count(*) AS n
-          FROM r GROUP BY 1 ORDER BY 1""",
-    "q_before_after" ->
-      s"""${beforeAfterCtes(13, 7, exposedOnly = false)},
-          summed AS (
-            SELECT bef_aft, hh_exposed, sum(volume_tgt) AS volume_tgt,
-              sum(volume_cat) AS volume_cat, sum(volume_cat_bb) AS volume_cat_bb,
-              CAST(sum(bwgt) AS BIGINT) AS bwgt, CAST(sum(cwgt) AS BIGINT) AS cwgt,
-              CAST(sum(cwgt_bb) AS BIGINT) AS cwgt_bb,
-              sum(brand_wgt) AS brand_wgt, sum(category_wgt) AS category_wgt,
-              sum(category_wgt_bb) AS category_wgt_bb,
-              CAST(sum(wgt) AS BIGINT) AS wgt,
-              count(bwgt) AS bwgt_cnt, count(cwgt) AS cwgt_cnt,
-              count(cwgt_bb) AS cwgt_bb_cnt
-            FROM wts2 GROUP BY 1, 2)
-          SELECT hh_exposed, bef_aft, volume_tgt, volume_cat,
-            volume_tgt / nullif(volume_cat, 0) AS ratio,
-            brand_wgt / nullif(bwgt / nullif(bwgt_cnt, 0), 0) AS brand_wgt,
-            category_wgt / nullif(cwgt / nullif(cwgt_cnt, 0), 0) AS category_wgt,
-            (brand_wgt / nullif(bwgt / nullif(bwgt_cnt, 0), 0)) /
-              nullif(category_wgt / nullif(cwgt / nullif(cwgt_cnt, 0), 0), 0)
-              AS weighted_ratio,
-            bwgt_cnt, cwgt_cnt,
-            CAST(bwgt_cnt AS DOUBLE) / nullif(cwgt_cnt, 0) AS i_ratio,
-            volume_cat_bb, volume_tgt / nullif(volume_cat_bb, 0) AS ratio_bb,
-            category_wgt_bb / nullif(cwgt_bb / nullif(cwgt_bb_cnt, 0), 0)
-              AS category_wgt_bb,
-            (brand_wgt / nullif(bwgt / nullif(bwgt_cnt, 0), 0)) /
-              nullif(category_wgt_bb / nullif(cwgt_bb / nullif(cwgt_bb_cnt, 0), 0), 0)
-              AS weighted_ratio_bb,
-            cwgt_bb_cnt,
-            CAST(bwgt_cnt AS DOUBLE) / nullif(cwgt_bb_cnt, 0) AS i_ratio_bb, wgt
-          FROM summed ORDER BY hh_exposed, bef_aft DESC""",
-    "q_welch" ->
-      """WITH c AS (SELECT event_type,
-            CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL),
-          m AS (SELECT event_type, count(*) AS n,
-            CAST(sum(c) AS BIGINT) AS s, CAST(sum(c * c) AS BIGINT) AS ss
-          FROM c GROUP BY 1),
-          mm AS (SELECT *, CAST(s AS DOUBLE) / n AS mean_c,
-            (CAST(ss AS DOUBLE) / n -
-              (CAST(s AS DOUBLE) / n) * (CAST(s AS DOUBLE) / n)) *
-              (CAST(n AS DOUBLE) / (n - 1)) AS var_c
-          FROM m)
-          SELECT a.event_type AS type_a, b.event_type AS type_b,
-            a.n AS n_a, b.n AS n_b,
-            a.mean_c / 100.0 AS mean_a, b.mean_c / 100.0 AS mean_b,
-            (a.mean_c - b.mean_c) /
-              sqrt(a.var_c / a.n + b.var_c / b.n) AS t_stat,
-            ((a.var_c / a.n + b.var_c / b.n) *
-              (a.var_c / a.n + b.var_c / b.n)) /
-              ((a.var_c / a.n) * (a.var_c / a.n) / (a.n - 1) +
-               (b.var_c / b.n) * (b.var_c / b.n) / (b.n - 1)) AS welch_df,
-            abs((a.mean_c - b.mean_c) /
-              sqrt(a.var_c / a.n + b.var_c / b.n)) > 1.96 AS significant
-          FROM mm a JOIN mm b ON a.event_type < b.event_type
-          ORDER BY 1, 2""",
-    "q_contingency" ->
-      s"""${beforeAfterCtes(6, 7, exposedOnly = true)},
-          hh AS (
-            SELECT bef_aft, household_id, sum(volume_tgt) AS vt,
-              sum(volume_cat) AS vc
-            FROM wts2 GROUP BY 1, 2),
-          pv AS (
-            SELECT household_id,
-              coalesce(sum(CASE WHEN bef_aft = 'before' THEN vt END), 0) AS bvt,
-              coalesce(sum(CASE WHEN bef_aft = 'before' THEN vc END), 0) AS bvc,
-              coalesce(sum(CASE WHEN bef_aft = 'after' THEN vt END), 0) AS avt,
-              coalesce(sum(CASE WHEN bef_aft = 'after' THEN vc END), 0) AS avc
-            FROM hh GROUP BY 1)
-          SELECT CASE WHEN bvt > 0 THEN 1 ELSE 0 END AS bb,
-            CASE WHEN bvc > bvt THEN 1 ELSE 0 END AS bc,
-            CASE WHEN avt > 0 THEN 1 ELSE 0 END AS ab,
-            CASE WHEN avc > avt THEN 1 ELSE 0 END AS ac,
-            count(*) AS count
-          FROM pv GROUP BY 1, 2, 3, 4 ORDER BY 1, 2, 3, 4""",
-    "q_qa_daily" ->
-      """WITH l AS (SELECT event_type, CAST(ts AS DATE) AS date, count(*) AS exe_imp
-         FROM events GROUP BY 1, 2),
-         a AS (SELECT event_type, CAST(ts AS DATE) AS date, count(*) AS impressions
-         FROM events WHERE event_id % 20 <> 0 GROUP BY 1, 2)
-         SELECT event_type, date, exe_imp, impressions,
-         impressions - exe_imp AS diff,
-         CAST(impressions - exe_imp AS DOUBLE) / nullif(impressions, 0) AS pct_diff
-         FROM l FULL JOIN a USING (event_type, date)
-         ORDER BY event_type, date""",
-    "q_qa_multigroup" -> {
-      val dims = Seq("event_type", "site")
-      val blocks =
-        (dims.map(d => qaBlockSql(d, "log", "ad", "'whole period'", d, byDate = false)) :+
-          qaBlockSql("date", "log", "ad", "CAST(date AS VARCHAR)", "date", byDate = false)) ++
-          dims.map(d => qaBlockSql(d, "logt", "adt", "'7 days'", d, byDate = false)) ++
-          dims.map(d => qaBlockSql(d, "logt", "adt", "CAST(date AS VARCHAR)",
-            s"$d date", byDate = true))
-      s"""WITH log AS (SELECT event_type, CAST(user_id % 5 AS VARCHAR) AS site,
-            CAST(ts AS DATE) AS date, CAST(user_id % 10 AS VARCHAR) AS conf
-            FROM events),
-          ad AS (SELECT event_type, CAST(user_id % 5 AS VARCHAR) AS site,
-            CAST(ts AS DATE) AS date, CAST(user_id % 10 AS VARCHAR) AS conf
-            FROM events WHERE event_id % 20 <> 0),
-          b AS (SELECT max(date) AS max_d FROM log),
-          logt AS (SELECT log.* FROM log CROSS JOIN b
-            WHERE date_diff('day', date, max_d) < 7),
-          adt AS (SELECT ad.* FROM ad CROSS JOIN b
-            WHERE date_diff('day', ad.date, max_d) < 7)
-          SELECT * FROM (${blocks.mkString("\n UNION ALL \n")})
-          ORDER BY dimension, date, value"""
-    },
-    "q_qa_flags" ->
-      s"""WITH l AS (SELECT event_type, CAST(ts AS DATE) AS date,
-           count(*) AS exe_imp FROM events GROUP BY 1, 2),
-         a AS (SELECT event_type, CAST(ts AS DATE) AS date,
-           count(*) AS impressions FROM events WHERE event_id % 20 <> 0
-           GROUP BY 1, 2),
-         q AS (SELECT event_type, date, exe_imp, impressions,
-           impressions - exe_imp AS diff,
-           CAST(impressions - exe_imp AS DOUBLE) / nullif(impressions, 0)
-             AS pct_diff
-           FROM l FULL JOIN a USING (event_type, date))
-         SELECT *, abs(pct_diff) AS abs_pct_diff,
-           CAST($QaTolerance AS DOUBLE) AS tolerance
-         FROM q WHERE abs(pct_diff) > CAST($QaTolerance AS DOUBLE)
-         ORDER BY event_type, date""",
-    "q_qa_hourshift" ->
-      """WITH s AS (SELECT CAST(ts - INTERVAL 6 HOUR AS DATE) AS date FROM events),
-         b AS (SELECT max(date) AS max_d FROM s)
-         SELECT date, count(*) AS exe_imp FROM s CROSS JOIN b
-         WHERE date_diff('day', date, max_d) < 7
-         GROUP BY date ORDER BY date""",
-    "q_qa_meta" ->
-      """WITH d AS (SELECT DISTINCT event_type, CAST(user_id % 10 AS VARCHAR) AS conf
-         FROM events)
-         SELECT event_type, string_agg(conf, ' ' ORDER BY conf) AS meta
-         FROM d GROUP BY 1 ORDER BY 1""",
-    "q_friendly_join" ->
-      """WITH ka AS (SELECT p_partkey AS id_value, 'partid' AS id_type,
-           lower(p_type) AS key, p_brand AS value FROM part),
-         vm AS (SELECT value, CAST(dense_rank() OVER (ORDER BY value) AS BIGINT)
-           AS val_id FROM (SELECT DISTINCT p_brand AS value FROM part)),
-         ka2 AS (SELECT ka.id_value, ka.id_type, ka.key, ka.value, vm.val_id,
-           'dig' AS etype2 FROM ka JOIN vm ON vm.value = ka.value),
-         dm AS (SELECT 'partid' AS dimension,
-           CASE WHEN p_partkey % 9 = 0 THEN p_partkey + 1000000
-                ELSE p_partkey END AS label,
-           'dig' AS etype, p_partkey + 100000 AS id
-           FROM part WHERE p_partkey % 3 = 0)
-         SELECT dm.etype, coalesce(ka2.key, dm.dimension) AS key, dm.dimension,
-           dm.label, dm.id, ka2.value, coalesce(ka2.val_id, dm.id) AS val_id
-         FROM ka2 RIGHT JOIN dm ON dm.dimension = ka2.id_type
-           AND dm.label = ka2.id_value AND dm.etype = ka2.etype2
-         ORDER BY id, val_id""",
-    "q_lang_id" -> LangIdSql,
-    // shared LangPred CTEs; counts replay q_token_count's tokenizers
-    "q_fertility" ->
-      s"""WITH $LangPredCtes,
-          st AS (SELECT p.lang_pred,
-              CAST(len(t.toks) AS INTEGER) AS wst,
-              CAST(len(regexp_extract_all(d.text, '[a-z]+|[0-9]+'))
-                AS INTEGER) AS ret,
-              CAST(len(d.text) AS INTEGER) AS nch
-            FROM pred p JOIN t ON t.doc_id = p.doc_id
-              JOIN documents d ON d.doc_id = p.doc_id)
-          SELECT lang_pred, count(*) AS n_docs,
-            CAST(sum(wst) AS BIGINT) AS ws_tokens,
-            CAST(sum(ret) AS BIGINT) AS re_tokens,
-            CAST(sum(nch) AS BIGINT) AS n_chars,
-            CAST(sum(ret) AS DOUBLE) / nullif(CAST(sum(wst) AS BIGINT), 0)
-              AS fertility,
-            CAST(sum(nch) AS DOUBLE) / nullif(CAST(sum(ret) AS BIGINT), 0)
-              AS chars_per_token
-          FROM st GROUP BY 1 ORDER BY 1""",
-    "q_lang_mix" ->
-      s"""WITH $LangPredCtes,
-          cnt AS (SELECT source, lang_pred, count(*) AS n FROM pred
-            GROUP BY 1, 2),
-          tot AS (SELECT source, CAST(sum(n) AS BIGINT) AS n_src
-            FROM cnt GROUP BY 1),
-          sh AS (SELECT cnt.source, lang_pred, n,
-              CAST(n AS DOUBLE) / n_src AS share
-            FROM cnt JOIN tot USING (source)),
-          ent AS (SELECT source,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(-(share * ln(share)) ORDER BY lang_pred)),
-                (x, y) -> x + y) AS source_entropy
-            FROM sh GROUP BY 1)
-          SELECT sh.source, lang_pred, n, share, source_entropy
-          FROM sh JOIN ent USING (source) ORDER BY 1, 2""",
-    "q_text_quality" ->
-      s"""WITH $QualityScoreCtes
-          SELECT doc_id, text_len, token_cnt, stop_hits, alpha_ratio,
-            stop_ratio, quality_score
-          FROM qsc ORDER BY doc_id""",
-    // Same id-grid buckets as q_heaps, same ordered-fold OLS moments;
-    // scores quantize to integer micro-units before the bucket sum so
-    // the per-bucket mean is shuffle-order-exact
-    "q_quality_trend" ->
-      s"""WITH $QualityScoreCtes,
-          mb AS (SELECT min(doc_id) AS min_id, max(doc_id) AS max_id
-            FROM documents),
-          qb AS (SELECT ((doc_id - min_id) * $QualityTrendBuckets)
-              // (max_id - min_id + 1) + 1 AS bucket,
-              CAST(floor(quality_score * 1000000 + 0.5) AS BIGINT) AS qm
-            FROM qsc CROSS JOIN mb WHERE quality_score IS NOT NULL),
-          per AS (SELECT bucket, count(*) AS n_docs,
-              CAST(sum(qm) AS BIGINT) AS s FROM qb GROUP BY 1),
-          pm AS (SELECT bucket, n_docs,
-              CAST(s AS DOUBLE) / n_docs / 1000000.0 AS mean_quality
-            FROM per),
-          mm AS (SELECT CAST(count(*) AS BIGINT) AS kk,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(CAST(bucket AS DOUBLE) ORDER BY bucket)),
-                (x, y) -> x + y) AS sx,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(mean_quality ORDER BY bucket)), (x, y) -> x + y) AS sy,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(CAST(bucket AS DOUBLE) * mean_quality
-                  ORDER BY bucket)), (x, y) -> x + y) AS sxy,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(CAST(bucket AS DOUBLE) * CAST(bucket AS DOUBLE)
-                  ORDER BY bucket)), (x, y) -> x + y) AS sxx,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(mean_quality * mean_quality ORDER BY bucket)),
-                (x, y) -> x + y) AS syy
-            FROM pm),
-          f1 AS (SELECT *, (kk * sxy - sx * sy) / (kk * sxx - sx * sx)
-              AS slope FROM mm),
-          f2 AS (SELECT slope, (sy - slope * sx) / kk AS intercept,
-              ((kk * sxy - sx * sy) * (kk * sxy - sx * sy)) /
-                ((kk * sxx - sx * sx) * (kk * syy - sy * sy)) AS r2
-            FROM f1)
-          SELECT bucket AS checkpoint, CAST(n_docs AS BIGINT) AS n_docs,
-            mean_quality, slope, intercept, r2
-          FROM pm CROSS JOIN f2 ORDER BY 1""",
-    "q_token_count" ->
-      s"""SELECT doc_id,
-          CAST(len($ToksSql) AS INTEGER) AS ws_tokens,
-          CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+')) AS INTEGER) AS re_tokens,
-          CAST(len(text) AS INTEGER) AS n_chars_calc
-          FROM documents ORDER BY doc_id""",
-    "q_fingerprint" ->
-      s"""SELECT doc_id, md5($NormSql) AS fingerprint,
-          CAST(len($NormSql) AS INTEGER) AS norm_len
-          FROM documents ORDER BY doc_id""",
-    "q_repetition" ->
-      s"""WITH t AS (SELECT doc_id, text, $ToksSql AS toks FROM documents),
-          $RepetitionCtes
-          SELECT doc_id,
-            CAST(len(lines) AS INTEGER) AS n_lines,
-            CAST(1 AS DOUBLE) - CAST(len(list_distinct(lines)) AS DOUBLE) /
-              nullif(len(lines), 0) AS dup_line_frac,
-            CAST(1 AS DOUBLE) - CAST(len(list_distinct(toks)) AS DOUBLE) /
-              nullif(len(toks), 0) AS dup_word_frac,
-            CAST(top_bigram_cnt AS DOUBLE) /
-              nullif(len(bgs), 0) AS top_bigram_frac
-          FROM b3 ORDER BY doc_id""",
-    "q_quality_filter" ->
-      s"""WITH $QualityCtes
-          SELECT doc_id, CAST(reason = 'ok' AS INTEGER) AS keep, reason,
-            token_cnt, dup_line_frac, top_bigram_frac, stop_hits,
-            mean_word_len, symbol_word_ratio, bullet_line_frac,
-            ellipsis_line_frac
-          FROM rr ORDER BY doc_id""",
-    "q_dedup_exact" ->
-      s"""WITH f AS (SELECT doc_id, md5($NormSql) AS fingerprint FROM documents),
-          r AS (SELECT doc_id, fingerprint,
-            min(doc_id) OVER (PARTITION BY fingerprint) AS rep_id FROM f)
-          SELECT doc_id, fingerprint, rep_id,
-            CAST(doc_id <> rep_id AS INTEGER) AS is_dup
-          FROM r ORDER BY doc_id""",
-    // NULL-score docs band as NULL via the explicit CASE — both
-    // engines' `least` skips NULLs and would silently put empty docs
-    // in the TOP band
-    "q_quality_dup_calib" ->
-      s"""WITH $QualityScoreCtes,
-          f AS (SELECT doc_id, md5($NormSql) AS fingerprint FROM documents),
-          r AS (SELECT doc_id, CASE WHEN doc_id <> min(doc_id)
-              OVER (PARTITION BY fingerprint) THEN 1 ELSE 0 END AS is_dup
-            FROM f),
-          bd AS (SELECT doc_id, CASE WHEN quality_score IS NULL THEN NULL
-              ELSE CAST(least(floor(quality_score * 10), 9) AS INTEGER)
-            END AS quality_band FROM qsc)
-          SELECT quality_band, count(*) AS n_docs,
-            CAST(sum(is_dup) AS BIGINT) AS n_dups,
-            CAST(sum(is_dup) AS DOUBLE) / count(*) AS dup_rate
-          FROM bd JOIN r USING (doc_id)
-          GROUP BY 1 ORDER BY 1""",
-    // exact Mann-Whitney AUC off the micro-quantized score histogram:
-    // integer U-statistic terms (HUGEINT here, DECIMAL(38,0) engine
-    // side), midrank tie half-credit, one division at the end
-    "q_dup_auc" ->
-      s"""WITH $QualityScoreCtes,
-          f AS (SELECT doc_id, md5($NormSql) AS fingerprint FROM documents),
-          r AS (SELECT doc_id, CASE WHEN doc_id <> min(doc_id)
-              OVER (PARTITION BY fingerprint) THEN 1 ELSE 0 END AS is_dup
-            FROM f),
-          lb AS (SELECT qsc.source,
-              CAST(floor(quality_score * 1000000) AS BIGINT) AS sq, is_dup
-            FROM qsc JOIN r USING (doc_id)
-            WHERE quality_score IS NOT NULL),
-          g AS (SELECT source, sq, CAST(sum(is_dup) AS BIGINT) AS n1,
-              CAST(count(*) - sum(is_dup) AS BIGINT) AS n0
-            FROM lb GROUP BY 1, 2),
-          w AS (SELECT *, coalesce(CAST(sum(n0) OVER (PARTITION BY source
-              ORDER BY sq ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              AS BIGINT), 0) AS cum0 FROM g)
-          SELECT source, CAST(sum(n1) AS BIGINT) AS n_dup,
-            CAST(sum(n0) AS BIGINT) AS n_uniq,
-            CAST(2 * sum(n1 * cum0) + sum(n1 * n0) AS DOUBLE) /
-              CAST(nullif(2 * sum(n1) * sum(n0), 0) AS DOUBLE) AS dup_auc
-          FROM w GROUP BY 1 ORDER BY 1""",
-    "q_ngram_jaccard" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          t AS (SELECT doc_id, $ShinglesSql AS sh FROM tk),
-          e0 AS (SELECT doc_id, unnest(sh) AS s FROM t),
-          ${dfCapCtes("")},
-          c AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS cnt
-            FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-          sz AS (SELECT doc_id, len(sh) AS n FROM t),
-          j AS (SELECT d1, d2,
-            CAST(cnt AS DOUBLE) / (s1.n + s2.n - cnt) AS jaccard
-            FROM c JOIN sz s1 ON s1.doc_id = d1 JOIN sz s2 ON s2.doc_id = d2)
-          SELECT d1, d2, jaccard,
-            CAST((SELECT df_cap FROM cap) AS BIGINT) AS df_cap
-          FROM j WHERE jaccard >= 0.3 ORDER BY d1, d2""",
-    // q_ngram_jaccard's pair frame (same derived df cap) rolled up to
-    // the unordered (source, source) grain
-    "q_dup_sources" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          t AS (SELECT doc_id, $ShinglesSql AS sh FROM tk),
-          e0 AS (SELECT doc_id, unnest(sh) AS s FROM t),
-          ${dfCapCtes("")},
-          c AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS cnt
-            FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-          sz AS (SELECT doc_id, len(sh) AS n FROM t),
-          j AS (SELECT d1, d2 FROM c
-            JOIN sz s1 ON s1.doc_id = d1 JOIN sz s2 ON s2.doc_id = d2
-            WHERE CAST(cnt AS DOUBLE) / (s1.n + s2.n - cnt) >= 0.3),
-          m AS (SELECT least(da.source, db.source) AS source_a,
-              greatest(da.source, db.source) AS source_b
-            FROM j JOIN documents da ON da.doc_id = d1
-              JOIN documents db ON db.doc_id = d2),
-          tot AS (SELECT count(*) AS n_total FROM m)
-          SELECT source_a, source_b, count(*) AS n_pairs,
-            (SELECT CAST(n_total AS BIGINT) FROM tot) AS n_total,
-            CAST(count(*) AS DOUBLE) / (SELECT n_total FROM tot)
-              AS pair_share
-          FROM m GROUP BY 1, 2 ORDER BY 1, 2""",
-    // Same inverted-index CTEs as q_ngram_jaccard; each threshold
-    // qualifies pairs by integer cross-multiplication (no division
-    // anywhere), so the replay is bit-exact by construction.
-    "q_dedup_sweep" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          t AS (SELECT doc_id, $ShinglesSql AS sh FROM tk),
-          e0 AS (SELECT doc_id, unnest(sh) AS s FROM t),
-          ${dfCapCtes("")},
-          c AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS cnt
-            FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-          sz AS (SELECT doc_id, len(sh) AS n FROM t),
-          p AS (SELECT d1, d2, cnt, s1.n + s2.n - cnt AS den
-            FROM c JOIN sz s1 ON s1.doc_id = d1 JOIN sz s2 ON s2.doc_id = d2),
-          th AS (SELECT unnest([${SweepThresholdsPm.mkString(", ")}])
-            AS threshold_pm),
-          q AS (SELECT threshold_pm, d2 FROM p JOIN th
-            ON cnt * 1000 >= threshold_pm * den)
-          SELECT threshold_pm, count(*) AS n_pairs,
-            count(DISTINCT d2) AS n_docs_dropped,
-            CAST((SELECT df_cap FROM cap) AS BIGINT) AS df_cap
-          FROM q GROUP BY 1 ORDER BY 1""",
-    // Seed md5 is bit-identical across engines, so membership, island
-    // merging and span extents replay exactly; sum() OVER (ORDER BY
-    // pos) has identical RANGE framing in both engines on unique pos.
-    "q_span_dedup" ->
-      s"""WITH $spanCtes
-          SELECT doc_id, CAST(span_start AS INT) AS span_start,
-            CAST(span_end AS INT) AS span_end,
-            CAST(span_end - span_start AS INT) AS span_len, n_seeds
-          FROM sp ORDER BY doc_id, span_start""",
-    // The apply step: positional anti-filter of each doc's tokens
-    // against its own spans, then one ordered string_agg — the SQL
-    // twin of the engine's row-local positional filter.
-    "q_span_strip" ->
-      s"""WITH $spanCtes,
-          ns AS (SELECT doc_id, CAST(count(*) AS INT) AS n_spans
-            FROM sp GROUP BY doc_id),
-          pos AS (SELECT doc_id, toks,
-              unnest(generate_series(1, len(toks))) AS i FROM tk),
-          posv AS (SELECT doc_id, i, toks[i] AS tok FROM pos),
-          kept AS (SELECT p.doc_id, p.i, p.tok FROM posv p
-            WHERE NOT EXISTS (SELECT 1 FROM sp
-              WHERE sp.doc_id = p.doc_id
-                AND p.i - 1 >= sp.span_start AND p.i - 1 < sp.span_end)),
-          ka AS (SELECT doc_id, count(*) AS n_kept,
-              string_agg(tok, ' ' ORDER BY i) AS clean_text
-            FROM kept GROUP BY doc_id),
-          sz AS (SELECT doc_id, len(toks) AS n_toks FROM tk)
-          SELECT sz.doc_id, coalesce(ns.n_spans, 0) AS n_spans,
-            CAST(sz.n_toks AS INT) AS n_toks,
-            CAST(sz.n_toks - coalesce(ka.n_kept, 0) AS INT)
-              AS toks_removed,
-            coalesce(ka.clean_text, '') AS clean_text
-          FROM sz LEFT JOIN ns USING (doc_id) LEFT JOIN ka USING (doc_id)
-          ORDER BY sz.doc_id""",
-    // Novelty = corpus-unique seed fraction; integer counts, one
-    // final division, NULL for docs below the seed floor.
-    "q_novelty" ->
-      s"""WITH $spanSeedCtes,
-          d AS (SELECT sk, min(doc_id) = max(doc_id) AS uniq
-            FROM s GROUP BY sk),
-          sc AS (SELECT s.doc_id, count(*) AS n_seeds,
-              CAST(sum(CAST(d.uniq AS INT)) AS BIGINT) AS n_unique
-            FROM s JOIN d USING (sk) GROUP BY s.doc_id)
-          SELECT t.doc_id, coalesce(sc.n_seeds, 0) AS n_seeds,
-            coalesce(sc.n_unique, 0) AS n_unique,
-            CAST(sc.n_unique AS DOUBLE) / sc.n_seeds AS novelty
-          FROM (SELECT doc_id FROM documents) t LEFT JOIN sc USING (doc_id)
-          ORDER BY t.doc_id""",
-    // Replays BOTH legs: the minhash chain (ver, threshold 0.5 pinned
-    // in MinhashVerCtes) and the exact df-capped index at 0.5 — both
-    // restricted to the SAME corpus-derived doc sample the engine
-    // evaluates (full corpus at gate SFs, ~RecallSampleTarget docs
-    // above them).
-    "q_minhash_recall" ->
-      s"""WITH ${minhashVerCtes(s"doc_id % $SampleModSql = 0")},
-          je0 AS (SELECT doc_id, unnest(sh) AS s FROM t),
-          ${dfCapCtes("j")},
-          jc AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS cnt
-            FROM je a JOIN je b ON a.s = b.s AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-          jsz AS (SELECT doc_id, len(sh) AS n FROM t),
-          ex AS (SELECT d1, d2 FROM jc
-            JOIN jsz s1 ON s1.doc_id = d1 JOIN jsz s2 ON s2.doc_id = d2
-            WHERE CAST(cnt AS DOUBLE) / (s1.n + s2.n - cnt) >= 0.5),
-          fo AS (SELECT
-            CASE WHEN ex.d1 IS NOT NULL THEN 1 ELSE 0 END AS in_exact,
-            CASE WHEN ver.d1 IS NOT NULL THEN 1 ELSE 0 END AS in_approx
-            FROM ex FULL OUTER JOIN ver
-              ON ex.d1 = ver.d1 AND ex.d2 = ver.d2)
-          SELECT CAST(coalesce(sum(in_exact), 0) AS BIGINT) AS n_exact,
-            CAST(coalesce(sum(in_approx), 0) AS BIGINT) AS n_approx,
-            CAST(coalesce(sum(in_exact * in_approx), 0) AS BIGINT) AS n_both,
-            CAST(coalesce(sum(in_exact * in_approx), 0) AS DOUBLE) /
-              nullif(CAST(coalesce(sum(in_approx), 0) AS BIGINT), 0)
-              AS precision,
-            CAST(coalesce(sum(in_exact * in_approx), 0) AS DOUBLE) /
-              nullif(CAST(coalesce(sum(in_exact), 0) AS BIGINT), 0)
-              AS recall
-          FROM fo""",
-    // Observed-vs-theoretical banding curve: the exact df-capped pairs
-    // at 0.3 bucketed by jaccard decile, flagged by membership in the
-    // SAME capped candidate set (`cand` from the minhash chain); the
-    // theoretical leg is the exact squaring chain (x1=1-s², then four
-    // squarings → x16), never pow() — libm last-ulp behavior differs.
-    "q_lsh_curve" ->
-      s"""WITH ${minhashVerCtes(s"doc_id % $SampleModSql = 0")},
-          je0 AS (SELECT doc_id, unnest(sh) AS s FROM t),
-          ${dfCapCtes("j")},
-          jc AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS cnt
-            FROM je a JOIN je b ON a.s = b.s AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-          jsz AS (SELECT doc_id, len(sh) AS n FROM t),
-          ex AS (SELECT d1, d2,
-            CAST(cnt AS DOUBLE) / (s1.n + s2.n - cnt) AS jaccard FROM jc
-            JOIN jsz s1 ON s1.doc_id = d1 JOIN jsz s2 ON s2.doc_id = d2
-            WHERE CAST(cnt AS DOUBLE) / (s1.n + s2.n - cnt) >= 0.3),
-          fo AS (SELECT
-            least(CAST(floor(ex.jaccard * 10) AS INT), 9) AS jaccard_bucket,
-            CASE WHEN c.d1 IS NOT NULL THEN 1 ELSE 0 END AS in_cand
-            FROM ex LEFT JOIN cand c ON c.d1 = ex.d1 AND c.d2 = ex.d2),
-          g AS (SELECT jaccard_bucket, CAST(count(*) AS BIGINT) AS n_pairs,
-            CAST(sum(in_cand) AS BIGINT) AS n_candidates FROM fo GROUP BY 1),
-          g2 AS (SELECT *, CAST(jaccard_bucket * 2 + 1 AS DOUBLE) / 20.0
-            AS s_mid FROM g),
-          g3 AS (SELECT *, 1.0 - s_mid * s_mid AS x1 FROM g2),
-          g4 AS (SELECT *, (x1 * x1) * (x1 * x1) AS x4 FROM g3)
-          SELECT jaccard_bucket, n_pairs, n_candidates,
-            CAST(n_candidates AS DOUBLE) / n_pairs AS candidate_rate,
-            s_mid, 1.0 - (x4 * x4) * (x4 * x4) AS expected_rate
-          FROM g4 ORDER BY jaccard_bucket""",
-    // Sketch-accuracy calibration: per exact-jaccard decile the mean
-    // coordinate-agreement estimate (Σ matches / (n·32), integer
-    // numerator) vs the micro-quantized exact mean and the bias.
-    "q_minhash_est" ->
-      s"""WITH ${minhashVerCtes(s"doc_id % $SampleModSql = 0")},
-          je0 AS (SELECT doc_id, unnest(sh) AS s FROM t),
-          ${dfCapCtes("j")},
-          jc AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS cnt
-            FROM je a JOIN je b ON a.s = b.s AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-          jsz AS (SELECT doc_id, len(sh) AS n FROM t),
-          ex AS (SELECT d1, d2,
-            CAST(cnt AS DOUBLE) / (s1.n + s2.n - cnt) AS jaccard FROM jc
-            JOIN jsz s1 ON s1.doc_id = d1 JOIN jsz s2 ON s2.doc_id = d2
-            WHERE CAST(cnt AS DOUBLE) / (s1.n + s2.n - cnt) >= 0.3),
-          mm AS (SELECT ex.d1, ex.d2, ex.jaccard,
-            CAST(sum(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS BIGINT)
-              AS matches
-            FROM ex JOIN perms a ON a.doc_id = ex.d1
-            JOIN perms b ON b.doc_id = ex.d2 AND b.j = a.j
-            GROUP BY 1, 2, 3),
-          fo AS (SELECT
-            least(CAST(floor(jaccard * 10) AS INT), 9) AS jaccard_bucket,
-            matches, CAST(round(jaccard * 1000000) AS BIGINT) AS jq FROM mm),
-          g AS (SELECT jaccard_bucket, CAST(count(*) AS BIGINT) AS n_pairs,
-            CAST(sum(matches) AS BIGINT) AS sm, CAST(sum(jq) AS BIGINT) AS sj
-            FROM fo GROUP BY 1)
-          SELECT jaccard_bucket, n_pairs,
-            CAST(sm AS DOUBLE) / CAST(n_pairs * 32 AS DOUBLE) AS mean_est,
-            CAST(sj AS DOUBLE) / CAST(n_pairs AS DOUBLE) / 1000000.0
-              AS mean_exact,
-            CAST(sm AS DOUBLE) / CAST(n_pairs * 32 AS DOUBLE)
-              - CAST(sj AS DOUBLE) / CAST(n_pairs AS DOUBLE) / 1000000.0
-              AS bias
-          FROM g ORDER BY jaccard_bucket""",
-    "q_containment" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          t AS (SELECT doc_id, $ShinglesSql AS sh FROM tk),
-          e0 AS (SELECT doc_id, unnest(sh) AS s FROM t),
-          ${dfCapCtes("")},
-          c AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS cnt
-            FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-          sz AS (SELECT doc_id, len(sh) AS n FROM t),
-          j AS (SELECT d1, d2,
-            CAST(cnt AS DOUBLE) / least(s1.n, s2.n) AS containment
-            FROM c JOIN sz s1 ON s1.doc_id = d1 JOIN sz s2 ON s2.doc_id = d2)
-          SELECT d1, d2, containment,
-            CAST((SELECT df_cap FROM cap) AS BIGINT) AS df_cap
-          FROM j WHERE containment >= $ContainmentThreshold
-          ORDER BY d1, d2""",
-    "q_decontam" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          t AS (SELECT doc_id, ${shinglesSqlN(DecontamN)} AS sh FROM tk),
-          ev AS (SELECT DISTINCT unnest(sh) AS s FROM t
-            WHERE doc_id % $DecontamEvalMod = $DecontamEvalRem),
-          tr AS (SELECT doc_id, unnest(sh) AS s FROM t
-            WHERE doc_id % $DecontamEvalMod <> $DecontamEvalRem),
-          hit AS (SELECT doc_id, count(*) AS n_overlap
-            FROM tr JOIN ev USING (s) GROUP BY 1),
-          sz AS (SELECT doc_id, len(sh) AS n_sh FROM t)
-          SELECT doc_id, n_overlap, n_sh,
-            CAST(n_overlap AS DOUBLE) / n_sh AS overlap_frac
-          FROM hit JOIN sz USING (doc_id) ORDER BY doc_id""",
-    "q_stratified_sample" ->
-      s"""SELECT doc_id, lang, source, bucket FROM (
-            SELECT *, ${sampleBucketSql("doc_id")} AS bucket
-            FROM documents)
-          WHERE bucket < $SampleCaseSql
-          ORDER BY doc_id""",
-    "q_blocklist" -> {
-      val list = BlocklistTerms.map(t => s"'$t'").mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          b AS (SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_toks,
-            list_filter(toks, t -> list_contains([$list], t)) AS ha FROM tk)
-          SELECT doc_id, n_toks, CAST(len(ha) AS INTEGER) AS bl_hits,
-            ha[1] AS first_term,
-            CAST(len(ha) AS DOUBLE) / nullif(n_toks, 0) AS bl_frac,
-            CAST(len(ha) AS DOUBLE) / nullif(n_toks, 0) <= $BlocklistMaxFrac
-              AS kept
-          FROM b ORDER BY doc_id"""
-    },
-    // The automaton's mask replayed as a sum of contains-flags (bit i
-    // = phrase i), then the same integer bit arithmetic for the
-    // derived columns on both sides.
-    "q_canary_scan" -> {
-      val maskSql = CanaryPhrases.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN contains(text, '$p') THEN ${1L << i} ELSE 0 END)"
-      }.mkString(" + ")
-      s"""WITH m AS (SELECT doc_id, CAST($maskSql AS BIGINT) AS mask
-            FROM documents)
-          SELECT doc_id, mask, CAST(bit_count(mask) AS INT) AS n_pats,
-            CASE WHEN mask <> 0
-              THEN CAST(bit_count((mask & -mask) - 1) AS INT) END
-              AS first_idx
-          FROM m ORDER BY doc_id"""
-    },
-    "q_chunks" -> (ChunksSql + " ORDER BY doc_id, chunk_ix"),
-    "q_chunk_dedup" ->
-      s"""WITH c AS ($ChunksSql)
-          SELECT chunk_fp, count(*) AS n_occ,
-            count(DISTINCT doc_id) AS n_docs, min(doc_id) AS first_doc
-          FROM c GROUP BY chunk_fp HAVING count(*) > 1 ORDER BY chunk_fp""",
-    "q_profile" -> {
-      // replays profile's per-column shape: stats derived from the
-      // per-value counts, incl. the value-weighted mean
-      def legSql(c: String, isNum: Boolean): String = {
-        val typed =
-          if (isNum)
-            s"""CAST(min($c) AS DOUBLE) AS min_num,
-                CAST(max($c) AS DOUBLE) AS max_num,
-                round(CAST(sum($c * cnt) AS DOUBLE) /
-                  CAST(sum(CASE WHEN $c IS NOT NULL THEN cnt END) AS DOUBLE), 2)
-                  AS mean,
-                (SELECT quantile_cont($c, 0.5) FROM lineitem) AS p50,
-                CAST(NULL AS VARCHAR) AS min_str,
-                CAST(NULL AS VARCHAR) AS max_str"""
-          else
-            s"""CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
-                CAST(NULL AS DOUBLE) AS mean, CAST(NULL AS DOUBLE) AS p50,
-                CAST(min($c) AS VARCHAR) AS min_str,
-                CAST(max($c) AS VARCHAR) AS max_str"""
-        s"""SELECT '$c' AS col_name, CAST(sum(cnt) AS BIGINT) AS n_rows,
-            CAST(coalesce(sum(CASE WHEN $c IS NULL THEN cnt END), 0) AS BIGINT)
-              AS n_nulls,
-            count($c) AS n_distinct, $typed
-            FROM (SELECT $c, count(*) AS cnt FROM lineitem GROUP BY $c)"""
-      }
-      val blocks = ProfileNumCols.map(legSql(_, isNum = true)) ++
-        ProfileStrCols.map(legSql(_, isNum = false))
-      s"""SELECT * FROM (${blocks.mkString(" UNION ALL ")}) ORDER BY col_name"""
-    },
-    "q_pack" ->
-      s"""WITH c AS ($ChunksSql)
-          SELECT doc_id, chunk_ix, start_tok, n_chunk_toks, chunk_fp,
-            CAST((sum(n_chunk_toks) OVER w - n_chunk_toks)
-              // $PackContextLen AS BIGINT) AS bin_id,
-            CAST((sum(n_chunk_toks) OVER w - n_chunk_toks)
-              % $PackContextLen AS BIGINT) AS bin_offset
-          FROM c
-          WINDOW w AS (ORDER BY doc_id, chunk_ix
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          ORDER BY doc_id, chunk_ix""",
-    // The q_pack prefix-sum chain rolled to bins, then the docs-per-
-    // bin grid; a straddle = chunk whose tokens cross its bin's end.
-    "q_pack_frag" ->
-      s"""WITH c AS ($ChunksSql),
-          p AS (SELECT doc_id, n_chunk_toks,
-            CAST((sum(n_chunk_toks) OVER w - n_chunk_toks)
-              // $PackContextLen AS BIGINT) AS bin_id,
-            CAST((sum(n_chunk_toks) OVER w - n_chunk_toks)
-              % $PackContextLen AS BIGINT) AS bin_offset
-            FROM c
-            WINDOW w AS (ORDER BY doc_id, chunk_ix
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-          pb AS (SELECT bin_id, CAST(count(*) AS BIGINT) AS n_chunks,
-            CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-            CAST(sum(CASE WHEN bin_offset + n_chunk_toks
-              > $PackContextLen THEN 1 ELSE 0 END) AS BIGINT) AS n_straddle
-            FROM p GROUP BY 1),
-          tot AS (SELECT CAST(count(*) AS BIGINT) AS total_bins FROM pb)
-          SELECT n_docs, CAST(count(*) AS BIGINT) AS n_bins,
-            CAST(sum(n_chunks) AS BIGINT) AS n_chunks,
-            CAST(sum(n_straddle) AS BIGINT) AS n_straddle,
-            CAST(count(*) AS DOUBLE) /
-              (SELECT CAST(total_bins AS DOUBLE) FROM tot) AS bin_share
-          FROM pb GROUP BY 1 ORDER BY n_docs""",
-    "q_curation_funnel" -> {
-      val list = BlocklistTerms.map(t => s"'$t'").mkString(", ")
-      s"""WITH $QualityCtes,
-          ntok AS (SELECT doc_id, len(toks) AS n FROM t),
-          qk AS (SELECT doc_id FROM rr WHERE reason = 'ok'),
-          bk AS (SELECT doc_id FROM (
-            SELECT doc_id, CAST(len(list_filter(toks,
-              tk -> list_contains([$list], tk))) AS DOUBLE) /
-              nullif(len(toks), 0) AS f FROM t)
-            WHERE f <= $BlocklistMaxFrac),
-          s2 AS (SELECT qk.doc_id FROM qk JOIN bk USING (doc_id)),
-          dd AS (SELECT s2.doc_id,
-            md5($NormSql) AS fp, d.lang
-            FROM s2 JOIN documents d USING (doc_id)),
-          s3 AS (SELECT doc_id, lang FROM (
-            SELECT *, min(doc_id) OVER (PARTITION BY fp) AS rep FROM dd)
-            WHERE doc_id = rep),
-          s4 AS (SELECT doc_id FROM s3
-            WHERE ${sampleBucketSql("doc_id")} < $SampleCaseSql)
-          SELECT * FROM (
-            SELECT 0 AS stage_ix, 'raw' AS stage, count(*) AS n_docs,
-              CAST(coalesce(sum(n), 0) AS BIGINT) AS n_tokens FROM ntok
-            UNION ALL SELECT 1, 'quality', count(*),
-              CAST(coalesce(sum(n), 0) AS BIGINT)
-              FROM qk JOIN ntok USING (doc_id)
-            UNION ALL SELECT 2, 'blocklist', count(*),
-              CAST(coalesce(sum(n), 0) AS BIGINT)
-              FROM s2 JOIN ntok USING (doc_id)
-            UNION ALL SELECT 3, 'dedup', count(*),
-              CAST(coalesce(sum(n), 0) AS BIGINT)
-              FROM s3 JOIN ntok USING (doc_id)
-            UNION ALL SELECT 4, 'sample', count(*),
-              CAST(coalesce(sum(n), 0) AS BIGINT)
-              FROM s4 JOIN ntok USING (doc_id))
-          ORDER BY stage_ix"""
-    },
-    "q_corpus_card" ->
-      s"""WITH $LangPredCtes, $QualityScoreCtes,
-          b AS (SELECT doc_id, source,
-              CAST(len($ToksSql) AS BIGINT) AS n_toks,
-              md5($NormSql) AS fp
-            FROM documents),
-          agg AS (SELECT count(*) AS n_docs,
-              CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-              count(DISTINCT source) AS n_sources,
-              count(DISTINCT fp) AS n_fp
-            FROM b),
-          q AS (SELECT round(sum(quality_score), 6) AS sum_quality
-            FROM qsc),
-          u AS (SELECT count(*) FILTER (WHERE lang_pred = 'unknown')
-            AS n_unknown FROM pred)
-          SELECT agg.n_docs, agg.n_tokens, agg.n_sources,
-            CAST(agg.n_tokens AS DOUBLE) / agg.n_docs AS mean_doc_tokens,
-            CAST(1.0 AS DOUBLE) - CAST(agg.n_fp AS DOUBLE) / agg.n_docs
-              AS exact_dup_frac,
-            q.sum_quality / agg.n_docs AS mean_quality,
-            CAST(u.n_unknown AS DOUBLE) / agg.n_docs AS unknown_lang_frac
-          FROM agg CROSS JOIN q CROSS JOIN u""",
-    "q_zipf" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          e AS (SELECT unnest(toks) AS term FROM tk),
-          f AS (SELECT term, count(*) AS n_occ FROM e GROUP BY 1),
-          nv AS (SELECT count(*) AS n_vocab FROM f),
-          top AS (SELECT * FROM f ORDER BY n_occ DESC, term
-            LIMIT $ZipfTopK),
-          rnk AS (SELECT *, row_number()
-            OVER (ORDER BY n_occ DESC, term) AS rank FROM top),
-          pts AS (SELECT ln(rank) AS lx, ln(n_occ) AS ly FROM rnk),
-          mm AS (SELECT CAST(count(*) AS BIGINT) AS k,
-            sum(lx) AS sx, sum(ly) AS sy, sum(lx * ly) AS sxy,
-            sum(lx * lx) AS sxx, sum(ly * ly) AS syy FROM pts)
-          SELECT nv.n_vocab, mm.k AS n_top_terms,
-            -(mm.k * mm.sxy - mm.sx * mm.sy) /
-              (mm.k * mm.sxx - mm.sx * mm.sx) AS zipf_alpha,
-            ((mm.k * mm.sxy - mm.sx * mm.sy) *
-              (mm.k * mm.sxy - mm.sx * mm.sy)) /
-              ((mm.k * mm.sxx - mm.sx * mm.sx) *
-                (mm.k * mm.syy - mm.sy * mm.sy)) AS r2
-          FROM mm CROSS JOIN nv""",
-    // Same id-grid bucket rule as the engine (row-local off min/max
-    // ids, integer floor division); the OLS moments fold in lx order
-    // so the ≤B-point double sums are order-independent on both sides
-    "q_heaps" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          mb AS (SELECT min(doc_id) AS min_id, max(doc_id) AS max_id
-            FROM documents),
-          bt AS (SELECT ((doc_id - min_id) * $HeapsCheckpoints)
-              // (max_id - min_id + 1) + 1 AS bucket, toks
-            FROM tk CROSS JOIN mb),
-          tb AS (SELECT bucket, CAST(sum(len(toks)) AS BIGINT) AS tb
-            FROM bt GROUP BY 1),
-          tm AS (SELECT term, min(bucket) AS bucket FROM
-            (SELECT bucket, unnest(toks) AS term FROM bt) GROUP BY term),
-          fb AS (SELECT bucket, count(*) AS nw FROM tm GROUP BY 1),
-          sp AS (SELECT unnest(range(1, $HeapsCheckpoints + 1)) AS bucket),
-          cm AS (SELECT sp.bucket, coalesce(tb.tb, 0) AS tb,
-              coalesce(fb.nw, 0) AS nw
-            FROM sp LEFT JOIN tb USING (bucket) LEFT JOIN fb USING (bucket)),
-          cc AS (SELECT bucket,
-              CAST(sum(tb) OVER (ORDER BY bucket) AS BIGINT) AS cum_tokens,
-              CAST(sum(nw) OVER (ORDER BY bucket) AS BIGINT) AS cum_vocab
-            FROM cm),
-          cf AS (SELECT * FROM cc WHERE cum_tokens > 0),
-          pts AS (SELECT ln(CAST(cum_tokens AS DOUBLE)) AS lx,
-              ln(CAST(cum_vocab AS DOUBLE)) AS ly FROM cf),
-          mm AS (SELECT CAST(count(*) AS BIGINT) AS kk,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(lx ORDER BY lx)), (x, y) -> x + y) AS sx,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(ly ORDER BY lx)), (x, y) -> x + y) AS sy,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(lx * ly ORDER BY lx)), (x, y) -> x + y) AS sxy,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(lx * lx ORDER BY lx)), (x, y) -> x + y) AS sxx,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(ly * ly ORDER BY lx)), (x, y) -> x + y) AS syy
-            FROM pts),
-          f1 AS (SELECT *, (kk * sxy - sx * sy) / (kk * sxx - sx * sx)
-              AS heaps_beta FROM mm),
-          f2 AS (SELECT heaps_beta,
-              (sy - heaps_beta * sx) / kk AS heaps_lnk,
-              ((kk * sxy - sx * sy) * (kk * sxy - sx * sy)) /
-                ((kk * sxx - sx * sx) * (kk * syy - sy * sy)) AS r2
-            FROM f1)
-          SELECT bucket AS checkpoint, cum_tokens, cum_vocab,
-            heaps_beta, heaps_lnk, r2
-          FROM cf CROSS JOIN f2 ORDER BY 1""",
-    "q_vocab" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          e AS (SELECT doc_id, unnest(toks) AS term FROM tk)
-          SELECT term, count(*) AS n_occ, count(DISTINCT doc_id) AS n_docs
-          FROM e GROUP BY term
-          ORDER BY n_occ DESC, term LIMIT $VocabTopN""",
-    // Pair construction identical to the repetition oracle's bigram
-    // CTE (1-based range over toks).
-    "q_bpe_pairs" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          p AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
-              list_transform(range(1, len(toks)),
-                i -> toks[i] || ' ' || toks[i + 1])
-            ELSE CAST([] AS VARCHAR[]) END) AS pair FROM t)
-          SELECT pair, count(*) AS n_occ,
-            count(DISTINCT doc_id) AS n_docs
-          FROM p GROUP BY pair
-          ORDER BY n_occ DESC, pair LIMIT $BpeTopN""",
-    // the merge loop replayed round-by-round: each unrolled step's
-    // 1-row argmax is that round's merge, ties (w desc, a, b)
-    "q_bpe_train" -> {
-      val out = (0 until BpeMerges).map { k =>
-        s"""SELECT $k AS merge_ix, a AS "left", b AS "right",
-            a || b AS merged, w AS pair_weight FROM m$k"""
-      }.mkString("\n          UNION ALL ")
-      s"""WITH $BpeVocabCtes
-          $out
-          ORDER BY merge_ix"""
-    },
-    // deploy step: the final unrolled vocab's symbol counts joined
-    // back into the token stream at term grain
-    "q_bpe_apply" ->
-      s"""WITH $BpeVocabCtes,
-          enc AS (SELECT term,
-            len(regexp_extract_all(symstr, '\\[([^\\]]+)\\]', 1)) AS n_sym
-            FROM v$BpeMerges),
-          tk AS (SELECT doc_id, unnest($ToksSql) AS term FROM documents)
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-            CAST(sum(n_sym) AS BIGINT) AS n_symbols,
-            CAST(sum(n_sym) AS DOUBLE) / count(*) AS symbols_per_token
-          FROM tk JOIN enc USING (term)
-          GROUP BY doc_id ORDER BY doc_id""",
-    "q_curriculum" ->
-      s"""WITH $QualityScoreCtes,
-          r AS (SELECT doc_id, token_cnt,
-            coalesce(quality_score, -1.0) AS qs FROM qsc),
-          rk2 AS (SELECT *, row_number()
-              OVER (ORDER BY qs DESC, doc_id) AS rn,
-            count(*) OVER () AS n FROM r),
-          bk AS (SELECT *,
-            CAST((rn - 1) * $CurriculumBuckets // n AS INTEGER) + 1
-              AS bucket FROM rk2),
-          agg AS (SELECT bucket, count(*) AS n_docs,
-            CAST(sum(token_cnt) AS BIGINT) AS n_tokens,
-            min(qs) AS min_score, max(qs) AS max_score
-          FROM bk GROUP BY 1)
-          SELECT bucket, n_docs, n_tokens, min_score, max_score,
-            CAST(sum(n_tokens) OVER (ORDER BY bucket
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_tokens
-          FROM agg ORDER BY bucket""",
-    "q_token_budget" ->
-      s"""WITH $QualityScoreCtes,
-          av AS (SELECT source, CAST(sum(token_cnt) AS BIGINT) AS avail,
-            CAST(CASE WHEN CAST(regexp_extract(source, '([0-9]+)$$', 1)
-                AS INTEGER) % 2 = 0 THEN 2 ELSE 1 END AS BIGINT) AS weight
-          FROM qsc GROUP BY 1),
-          tot AS (SELECT CAST(sum(avail) AS BIGINT) AS tot_a,
-            CAST(sum(weight) AS BIGINT) AS tot_w FROM av),
-          rk3 AS (SELECT av.*, tot.tot_a, tot.tot_w,
-            CAST((tot.tot_a * $TokenBudgetNum) // $TokenBudgetDen
-              AS BIGINT) AS budget,
-            CAST(sum(avail) OVER wf AS BIGINT) AS cum_a,
-            CAST(sum(weight) OVER wf AS BIGINT) AS cum_w
-          FROM av CROSS JOIN tot
-          WINDOW wf AS (ORDER BY CAST(avail AS DOUBLE) / weight, avail,
-            source ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-          ck AS (SELECT *, avail * (tot_w - cum_w) <=
-            weight * (budget - cum_a) AS capped FROM rk3),
-          lvl AS (SELECT
-            CAST(coalesce(max(cum_a) FILTER (WHERE capped), 0)
-              AS BIGINT) AS capped_a,
-            CAST(coalesce(max(cum_w) FILTER (WHERE capped), 0)
-              AS BIGINT) AS capped_w FROM ck),
-          fin AS (SELECT source, avail, weight, budget, capped,
-            CAST(CASE WHEN capped THEN avail
-              ELSE weight * (budget - capped_a) // (tot_w - capped_w)
-              END AS BIGINT) AS allocated
-          FROM ck CROSS JOIN lvl)
-          SELECT *, CAST(allocated AS DOUBLE) / nullif(avail, 0)
-            AS fill_frac
-          FROM fin ORDER BY source""",
-    "q_quality_cap" ->
-      s"""WITH $QualityScoreCtes,
-          rk AS (SELECT doc_id, source, quality_score,
-            CAST(row_number() OVER (PARTITION BY source
-              ORDER BY quality_score DESC NULLS LAST, doc_id) AS INTEGER) AS rk
-          FROM qsc)
-          SELECT doc_id, source, quality_score, rk FROM rk
-          WHERE rk <= $QualityPerSource ORDER BY source, rk""",
-    // bucket-size histogram off the same band CTEs; the stored size
-    // is cap-truncated exactly like the engine's sorted-prefix slice
-    "q_dedup_index_stats" ->
-      s"""WITH $MinhashVerCtes,
-          bsz AS (SELECT band, band_sig, count(*) AS sz
-            FROM bands GROUP BY 1, 2)
-          SELECT CAST(least(sz, ${NearDup.DefaultBucketCap}) AS INTEGER)
-              AS bucket_size,
-            count(*) AS n_buckets
-          FROM bsz GROUP BY 1 ORDER BY 1""",
-    "q_dedup_incremental" ->
-      s"""WITH $MinhashVerCtes,
-          nw AS (SELECT doc_id FROM documents
-            WHERE doc_id % $IncrementMod = $IncrementRem),
-          fp AS (SELECT doc_id, md5($NormSql) AS f FROM documents),
-          cfp AS (SELECT f, min(doc_id) AS exact_match FROM fp
-            WHERE doc_id % $IncrementMod <> $IncrementRem GROUP BY f),
-          ex AS (SELECT fp.doc_id, cfp.exact_match
-            FROM fp JOIN nw USING (doc_id) LEFT JOIN cfp USING (f)),
-          nr AS (SELECT doc_id, min(c) AS near_match FROM (
-            SELECT d1 AS doc_id, d2 AS c FROM ver
-              WHERE d1 % $IncrementMod = $IncrementRem
-                AND d2 % $IncrementMod <> $IncrementRem
-            UNION ALL SELECT d2, d1 FROM ver
-              WHERE d2 % $IncrementMod = $IncrementRem
-                AND d1 % $IncrementMod <> $IncrementRem) GROUP BY doc_id)
-          SELECT nw.doc_id, ex.exact_match, nr.near_match,
-            (ex.exact_match IS NULL AND nr.near_match IS NULL) AS is_new
-          FROM nw LEFT JOIN ex USING (doc_id) LEFT JOIN nr USING (doc_id)
-          ORDER BY nw.doc_id""",
-    // the index-vs-live fingerprint-set diff: one full-outer join on
-    // the md5, one global row; thresholds ride as literal columns
-    "q_index_staleness" ->
-      s"""WITH cur AS (SELECT DISTINCT md5($NormSql) AS fp FROM documents),
-          idx AS (SELECT DISTINCT md5($NormSql) AS fp FROM documents
-            WHERE doc_id % $IncrementMod <> $IncrementRem),
-          j AS (SELECT c.fp AS cfp, i.fp AS ifp
-            FROM cur c FULL JOIN idx i ON c.fp = i.fp),
-          g AS (SELECT CAST(count(ifp) AS BIGINT) AS n_index_fp,
-              CAST(count(cfp) AS BIGINT) AS n_corpus_fp,
-              CAST(count(*) FILTER (WHERE cfp IS NOT NULL AND ifp IS NULL)
-                AS BIGINT) AS n_new_fp,
-              CAST(count(*) FILTER (WHERE ifp IS NOT NULL AND cfp IS NULL)
-                AS BIGINT) AS n_gone_fp
-            FROM j),
-          r AS (SELECT *,
-              CAST(n_new_fp AS DOUBLE) / nullif(n_corpus_fp, 0)
-                AS new_frac,
-              CAST(n_gone_fp AS DOUBLE) / nullif(n_index_fp, 0)
-                AS gone_frac,
-              CAST(${NearDup.StaleNewFracMax} AS DOUBLE) AS max_new_frac,
-              CAST(${NearDup.StaleGoneFracMax} AS DOUBLE) AS max_gone_frac
-            FROM g)
-          SELECT *, (coalesce(new_frac > max_new_frac, FALSE)
-            OR coalesce(gone_frac > max_gone_frac, FALSE)) AS stale
-          FROM r""",
-    // the banding chain's complement: collided but verified below
-    // threshold, ranked hardest-first per anchor and cut at the
-    // per-anchor cap (the output-linear training shape). Replays the
-    // engine's PRE-VERIFY cap too: only the top HardNegPreVerifyCap
-    // candidates per anchor — ranked by band-collision count, d2
-    // ties — reach the exact verify (the verify-work-linear shape)
-    "q_hard_negatives" ->
-      s"""WITH $MinhashVerCtes,
-          candn AS (SELECT p[1] AS d1, p[2] AS d2, count(*) AS n_bands
-            FROM (SELECT unnest(flatten(list_transform(range(1, len(ids)),
-              i -> list_transform(range(i + 1, len(ids) + 1),
-              j -> [ids[i], ids[j]])))) AS p
-             FROM buckets WHERE len(ids) > 1) GROUP BY 1, 2),
-          pv AS (SELECT d1, d2 FROM (SELECT d1, d2,
-              row_number() OVER (PARTITION BY d1
-                ORDER BY n_bands DESC, d2) AS prk
-            FROM candn) WHERE prk <= ${NearDup.HardNegPreVerifyCap}),
-          verh AS (SELECT d1, d2,
-            CAST(len(list_intersect(t1.sh, t2.sh)) AS DOUBLE) /
-              len(list_distinct(list_concat(t1.sh, t2.sh))) AS jaccard
-            FROM pv
-            JOIN t t1 ON t1.doc_id = d1 JOIN t t2 ON t2.doc_id = d2),
-          hn AS (SELECT d1, d2, jaccard,
-              row_number() OVER (PARTITION BY d1
-                ORDER BY jaccard DESC, d2) AS rank
-            FROM verh WHERE jaccard < 0.5)
-          SELECT d1, d2, jaccard, CAST(rank AS INTEGER) AS rank,
-            ${NearDup.HardNegPreVerifyCap} AS pre_cap
-          FROM hn WHERE rank <= ${NearDup.HardNegPerAnchor}
-          ORDER BY d1, rank""",
-    "q_minhash_dedup" ->
-      s"""WITH $MinhashVerCtes,
-          p AS (SELECT d1 AS doc_id, d2 AS partner FROM ver
-            UNION ALL SELECT d2, d1 FROM ver)
-          SELECT d.doc_id,
-            coalesce(least(min(p.partner), d.doc_id), d.doc_id) AS rep_id,
-            count(p.partner) AS n_dups
-          FROM documents d LEFT JOIN p USING (doc_id)
-          GROUP BY d.doc_id ORDER BY d.doc_id""",
-    "q_dedup_clusters" ->
-      s"""WITH RECURSIVE $MinhashVerCtes,
-          $ClusterCtes
-          SELECT lab.doc_id, lab.rep_id, sz.cluster_size
-          FROM lab JOIN sz USING (rep_id) ORDER BY lab.doc_id""",
-    "q_simhash" ->
-      s"""WITH $SimhashFpCtes
-          SELECT doc_id, simhash,
-            simhash & 1023 AS b0, (simhash >> 10) & 1023 AS b1,
-            (simhash >> 20) & 1023 AS b2, (simhash >> 30) & 1023 AS b3
-          FROM fp ORDER BY doc_id""",
-    "q_simhash_pairs" ->
-      s"""WITH $SimhashFpCtes,
-          bands AS (SELECT doc_id, b,
-            CASE b WHEN 0 THEN simhash & 1023
-                   WHEN 1 THEN (simhash >> 10) & 1023
-                   WHEN 2 THEN (simhash >> 20) & 1023
-                   ELSE (simhash >> 30) & 1023 END AS key
-            FROM fp CROSS JOIN (SELECT unnest(range(0, 4)) AS b)),
-          buckets AS (SELECT b, key,
-            (list_sort(list(doc_id)))[1:${NearDup.DefaultBucketCap}] AS ids
-            FROM bands GROUP BY 1, 2),
-          cand AS (SELECT DISTINCT p[1] AS d1, p[2] AS d2 FROM
-            (SELECT unnest(flatten(list_transform(range(1, len(ids)),
-              i -> list_transform(range(i + 1, len(ids) + 1),
-              j -> [ids[i], ids[j]])))) AS p
-             FROM buckets WHERE len(ids) > 1))
-          SELECT d1, d2,
-            CAST(bit_count(xor(f1.simhash, f2.simhash)) AS INTEGER) AS hamming
-          FROM cand JOIN fp f1 ON f1.doc_id = d1 JOIN fp f2 ON f2.doc_id = d2
-          WHERE bit_count(xor(f1.simhash, f2.simhash)) <= 3
-          ORDER BY d1, d2""",
-    "q_embed_neardup" -> EmbedNearDupSql,
-    "q_embed_lsh" -> EmbedLshSql,
-    "q_srp_bucket_stats" -> SrpBucketStatsSql,
-    "q_ann_topk" ->
-      s"""WITH e AS ($NormedEmbSql),
-          q AS (SELECT * FROM e WHERE vec_id < 10),
-          s AS (SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-            ${dotSql("q", "e")} / (q.nrm * e.nrm) AS c
-            FROM q JOIN e ON q.vec_id <> e.vec_id),
-          r AS (SELECT query_id, neighbor_id,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS INTEGER) AS "rank",
-            round(c, 6) AS cos FROM s)
-          SELECT query_id, neighbor_id, "rank", cos FROM r
-          WHERE "rank" <= 5 ORDER BY query_id, "rank"""",
-    // q_ann_topk with the label predicate in the candidate JOIN —
-    // pre-filtering, so each query draws its full k from its stratum
-    "q_ann_filtered" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding,
-            sqrt(list_reduce(list_transform(embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-              (a, b) -> a + b)) AS nrm
-          FROM embeddings),
-          q AS (SELECT * FROM e WHERE vec_id < 10),
-          s AS (SELECT q.vec_id AS query_id, q.label,
-            e.vec_id AS neighbor_id,
-            ${dotSql("q", "e")} / (q.nrm * e.nrm) AS c
-            FROM q JOIN e ON q.label = e.label AND q.vec_id <> e.vec_id),
-          r AS (SELECT query_id, label, neighbor_id,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS INTEGER) AS "rank",
-            round(c, 6) AS cos FROM s)
-          SELECT query_id, label, neighbor_id, "rank", cos FROM r
-          WHERE "rank" <= 5 ORDER BY query_id, "rank"""",
-    // both legs at rank <= 3 with identical tie-breaks, full-outer
-    // joined per (query, neighbor), rolled up per query
-    "q_ann_recall" ->
-      s"""WITH e AS ($NormedEmbSql),
-          $TrainedCtrCtes,
-          asg AS (SELECT e.vec_id, e.embedding, e.nrm, ctr.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-              ORDER BY ${dotSql("e", "ctr")} / (e.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS rk
-            FROM e CROSS JOIN ctr WHERE e.nrm <> 0 AND ctr.nrm <> 0),
-          a2 AS (SELECT vec_id, embedding, nrm, centroid_id FROM asg
-            WHERE rk = 1),
-          q AS (SELECT vec_id AS query_id, embedding, nrm, centroid_id
-            FROM a2 WHERE vec_id < 10),
-          s AS (SELECT query_id, a2.vec_id AS neighbor_id,
-            ${dotSql("q", "a2")} / (q.nrm * a2.nrm) AS c
-            FROM q JOIN a2 USING (centroid_id) WHERE query_id <> a2.vec_id),
-          r AS (SELECT query_id, neighbor_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS rk FROM s),
-          ap AS (SELECT query_id, neighbor_id FROM r WHERE rk <= 3),
-          bq AS (SELECT * FROM e WHERE vec_id < 10),
-          bs AS (SELECT bq.vec_id AS query_id, e.vec_id AS neighbor_id,
-            ${dotSql("bq", "e")} / (bq.nrm * e.nrm) AS c
-            FROM bq JOIN e ON bq.vec_id <> e.vec_id),
-          br AS (SELECT query_id, neighbor_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS rk FROM bs),
-          ex AS (SELECT query_id, neighbor_id FROM br WHERE rk <= 3),
-          fo AS (SELECT coalesce(ex.query_id, ap.query_id) AS query_id,
-            CASE WHEN ex.query_id IS NOT NULL THEN 1 ELSE 0 END AS in_exact,
-            CASE WHEN ap.query_id IS NOT NULL THEN 1 ELSE 0 END AS in_approx
-            FROM ex FULL OUTER JOIN ap
-              ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id)
-          SELECT query_id,
-            CAST(sum(in_exact) AS BIGINT) AS n_exact,
-            CAST(sum(in_approx) AS BIGINT) AS n_approx,
-            CAST(sum(in_exact * in_approx) AS BIGINT) AS n_both,
-            CAST(sum(in_exact * in_approx) AS DOUBLE) /
-              nullif(CAST(sum(in_exact) AS BIGINT), 0) AS recall
-          FROM fo GROUP BY query_id ORDER BY query_id""",
-    "q_ann_ivf" ->
-      s"""WITH e AS ($NormedEmbSql),
-          $TrainedCtrCtes,
-          asg AS (SELECT e.vec_id, e.embedding, e.nrm, ctr.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-              ORDER BY ${dotSql("e", "ctr")} / (e.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS rk
-            FROM e CROSS JOIN ctr WHERE e.nrm <> 0 AND ctr.nrm <> 0),
-          a2 AS (SELECT vec_id, embedding, nrm, centroid_id FROM asg WHERE rk = 1),
-          q AS (SELECT vec_id AS query_id, embedding, nrm, centroid_id FROM a2
-            WHERE vec_id < 10),
-          s AS (SELECT query_id, a2.vec_id AS neighbor_id,
-            ${dotSql("q", "a2")} / (q.nrm * a2.nrm) AS c
-            FROM q JOIN a2 USING (centroid_id) WHERE query_id <> a2.vec_id),
-          r AS (SELECT query_id, neighbor_id,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS INTEGER) AS "rank",
-            round(c, 6) AS cos FROM s)
-          SELECT query_id, neighbor_id, "rank", cos FROM r
-          WHERE "rank" <= 3 ORDER BY query_id, "rank"""",
-    "q_ann_ivf_p2" ->
-      s"""WITH e AS ($NormedEmbSql),
-          $TrainedCtrCtes,
-          asg AS (SELECT e.vec_id, e.embedding, e.nrm, ctr.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-              ORDER BY ${dotSql("e", "ctr")} / (e.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS rk
-            FROM e CROSS JOIN ctr WHERE e.nrm <> 0 AND ctr.nrm <> 0),
-          a2 AS (SELECT vec_id, embedding, nrm, centroid_id FROM asg WHERE rk = 1),
-          q AS (SELECT vec_id AS query_id, embedding, nrm FROM a2
-            WHERE vec_id < 10),
-          qc AS (SELECT query_id, ctr.centroid_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY ${dotSql("q", "ctr")} / (q.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS crk
-            FROM q CROSS JOIN ctr WHERE q.nrm * ctr.nrm <> 0),
-          qcells AS (SELECT query_id, centroid_id FROM qc WHERE crk <= 2),
-          s AS (SELECT query_id, a2.vec_id AS neighbor_id,
-            ${dotSql("q", "a2")} / (q.nrm * a2.nrm) AS c
-            FROM qcells JOIN q USING (query_id) JOIN a2 USING (centroid_id)
-            WHERE query_id <> a2.vec_id),
-          r AS (SELECT query_id, neighbor_id,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS INTEGER) AS "rank",
-            round(c, 6) AS cos FROM s)
-          SELECT query_id, neighbor_id, "rank", cos FROM r
-          WHERE "rank" <= 3 ORDER BY query_id, "rank"""",
-    "q_ann_pq" ->
-      s"""WITH $PqAdcCtes,
-          r2 AS (SELECT query_id, vec_id AS neighbor_id,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY approx_dist, vec_id) AS INTEGER) AS "rank",
-            round(approx_dist, 6) AS approx_dist FROM adc)
-          SELECT query_id, neighbor_id, "rank", approx_dist FROM r2
-          WHERE "rank" <= 5 ORDER BY query_id, "rank"""",
-    "q_ann_pq_rerank" ->
-      s"""WITH $PqAdcCtes,
-          shortlist AS (SELECT query_id, vec_id FROM
-            (SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
-               ORDER BY approx_dist, vec_id) AS arank FROM adc)
-            WHERE arank <= 20),
-          en AS ($NormedNonzeroEmbSql),
-          qn AS (SELECT vec_id AS query_id, embedding, nrm FROM en
-            WHERE vec_id < 10),
-          s AS (SELECT sl.query_id, sl.vec_id AS neighbor_id,
-            ${dotSql("q", "e")} / (q.nrm * e.nrm) AS c
-            FROM shortlist sl JOIN qn q ON q.query_id = sl.query_id
-            JOIN en e ON e.vec_id = sl.vec_id),
-          rr AS (SELECT query_id, neighbor_id,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS INTEGER) AS "rank",
-            round(c, 6) AS cos FROM s)
-          SELECT query_id, neighbor_id, "rank", cos FROM rr
-          WHERE "rank" <= 5 ORDER BY query_id, "rank"""",
-    // IVFADC: the PqAdcCtes chain with (a) the corpus restricted to
-    // cell-assigned (nonzero-norm) vectors and (b) the ADC join gated
-    // by each query's nprobe=2 trained-centroid cells
-    "q_ann_ivfpq" -> {
-      val m = 4; val subLen = 16
-      val ds = (0 until m).map(j =>
-        s"${l2SubSql("a2", "cb", j * subLen, subLen)} AS d$j")
-      val qds = (0 until m).map(j =>
-        s"${l2SubSql("q", "cb", j * subLen, subLen)} AS qd$j")
-      val rks = (0 until m).map(j =>
-        s"row_number() OVER (PARTITION BY vec_id ORDER BY d$j, centroid_id) AS r$j")
-      val cs = (0 until m).map(j =>
-        s"max(CASE WHEN r$j = 1 THEN centroid_id END) AS c$j")
-      s"""WITH e AS ($NormedEmbSql),
-          $TrainedCtrCtes,
-          asg AS (SELECT e.vec_id, e.embedding, e.nrm, ctr.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-              ORDER BY ${dotSql("e", "ctr")} / (e.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS rk
-            FROM e CROSS JOIN ctr WHERE e.nrm <> 0 AND ctr.nrm <> 0),
-          a2 AS (SELECT vec_id, embedding, nrm, centroid_id AS cell
-            FROM asg WHERE rk = 1),
-          cb AS (SELECT vec_id AS centroid_id, embedding FROM embeddings
-            WHERE vec_id % $CentroidStrideSql = 0),
-          wd AS (SELECT a2.vec_id, a2.cell, cb.centroid_id,
-            ${ds.mkString(", ")} FROM a2 CROSS JOIN cb),
-          rk2 AS (SELECT *, ${rks.mkString(", ")} FROM wd),
-          codes AS (SELECT vec_id, cell, ${cs.mkString(", ")} FROM rk2
-            GROUP BY vec_id, cell),
-          q AS (SELECT vec_id AS query_id, embedding, nrm FROM a2
-            WHERE vec_id < 10),
-          qc AS (SELECT query_id, ctr.centroid_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY ${dotSql("q", "ctr")} / (q.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS crk
-            FROM q CROSS JOIN ctr WHERE q.nrm * ctr.nrm <> 0),
-          qcells AS (SELECT query_id, centroid_id AS cell FROM qc
-            WHERE crk <= 2),
-          dtab AS (SELECT query_id, centroid_id, ${qds.mkString(", ")}
-            FROM q CROSS JOIN cb),
-          adc AS (SELECT qs.query_id, c.vec_id,
-            t0.qd0 + t1.qd1 + t2.qd2 + t3.qd3 AS approx_dist
-            FROM qcells qs
-            JOIN codes c ON c.cell = qs.cell
-            JOIN dtab t0 ON t0.query_id = qs.query_id AND t0.centroid_id = c.c0
-            JOIN dtab t1 ON t1.query_id = qs.query_id AND t1.centroid_id = c.c1
-            JOIN dtab t2 ON t2.query_id = qs.query_id AND t2.centroid_id = c.c2
-            JOIN dtab t3 ON t3.query_id = qs.query_id AND t3.centroid_id = c.c3
-            WHERE qs.query_id <> c.vec_id),
-          r2 AS (SELECT query_id, vec_id AS neighbor_id,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY approx_dist, vec_id) AS INTEGER) AS "rank",
-            round(approx_dist, 6) AS approx_dist FROM adc)
-          SELECT query_id, neighbor_id, "rank", approx_dist FROM r2
-          WHERE "rank" <= 5 ORDER BY query_id, "rank""""
-    },
-    "q_skew_salted" ->
-      """SELECT CASE WHEN event_id % 2 = 0 THEN 0
-                ELSE CAST(user_id AS BIGINT) END AS hot_key,
-         CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS sum_v
-         FROM events GROUP BY 1 ORDER BY hot_key""",
-    // Mirrors Multimodal.ImageCodec: the engine really encodes and
-    // decodes a PNG per doc; the oracle replays the closed-form
-    // geometry (width/height from doc_id, 1 gray band) and the
-    // checkerboard pixel sum (cells with (x+y) odd in a w×h grid =
-    // wh//2; an odd doc_id phase-flips to the complement).
-    "q_multimodal_audio" ->
-      """SELECT doc_id,
-          CAST(CASE WHEN doc_id % 2 = 0 THEN 8000 ELSE 16000 END
-            AS BIGINT) AS sample_rate,
-          CAST(doc_id % 400 + 100 AS BIGINT) AS n_samples,
-          (doc_id % 400 + 100) * 1000000 //
-            (CASE WHEN doc_id % 2 = 0 THEN 8000 ELSE 16000 END)
-            AS duration_us,
-          CAST((doc_id % 100 + 1) * 250 AS BIGINT) AS peak_abs,
-          CAST((doc_id % 100 + 1) * 250 AS DOUBLE) AS rms
-          FROM documents ORDER BY doc_id""",
-    "q_multimodal_meta" ->
-      """WITH g AS (SELECT doc_id,
-           (doc_id % 48) + 16 AS width, (doc_id % 32) + 16 AS height
-         FROM documents)
-         SELECT doc_id, 'png' AS format, width, height,
-           CAST(1 AS BIGINT) AS bands,
-           255 * (CASE WHEN doc_id % 2 = 0 THEN (width * height) // 2
-                  ELSE width * height - (width * height) // 2 END) AS px_sum
-         FROM g ORDER BY doc_id""",
-    "q_multimodal_frames" ->
-      s"""WITH b AS (SELECT doc_id,
-            CAST(octet_length(encode(text)) AS INTEGER) AS byte_len
-          FROM documents),
-          m AS (SELECT doc_id,
-            CASE WHEN byte_len % 3 = 0 THEN 'jpeg'
-                 WHEN byte_len % 3 = 1 THEN 'png'
-                 ELSE 'webp' END AS format,
-            byte_len % 30 + 1 AS n_frames
-          FROM b)
-          SELECT doc_id, format, n_frames,
-            CAST(unnest(list_slice(range(0, n_frames, $FrameStride),
-              1, $MaxFrames)) AS INTEGER) AS frame_ix
-          FROM m ORDER BY doc_id, frame_ix""",
-    // events.ts is parquet timestamp[ns]; the temporal oracles CAST to
-    // microsecond TIMESTAMP up front so gap arithmetic and equality
-    // match the engine (GraftSession reads the same column as micros).
-    "q_bounce_rate" -> {
-      val z2 = CtrZ * CtrZ
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS session_ix FROM s),
-          r AS (SELECT user_id, session_ix, event_type, row_number()
-              OVER (PARTITION BY user_id, session_ix
-                ORDER BY tu, event_id) AS rn FROM x),
-          ses AS (SELECT user_id, session_ix, count(*) AS n_events
-            FROM x GROUP BY 1, 2),
-          entry AS (SELECT user_id, session_ix, event_type AS entry_type
-            FROM r WHERE rn = 1),
-          a AS (SELECT entry_type, count(*) AS n_sessions,
-              count(*) FILTER (WHERE n_events = 1) AS n_bounces
-            FROM ses JOIN entry USING (user_id, session_ix) GROUP BY 1),
-          pr AS (SELECT *, CAST(n_bounces AS DOUBLE) / n_sessions AS p
-            FROM a)
-          SELECT entry_type, n_sessions, n_bounces, p AS bounce_rate,
-            (p + $z2 / (CAST(n_sessions AS DOUBLE) * 2) - $CtrZ *
-              sqrt(p * (1.0 - p) / CAST(n_sessions AS DOUBLE) +
-                $z2 / (CAST(n_sessions AS DOUBLE) *
-                  CAST(n_sessions AS DOUBLE) * 4))) /
-            (1.0 + $z2 / CAST(n_sessions AS DOUBLE)) AS wilson_lb
-          FROM pr ORDER BY entry_type""" },
-    "q_return_rate" -> {
-      val z2 = CtrZ * CtrZ
-      s"""WITH a AS (SELECT p_brand, count(*) AS n_lines,
-            count(*) FILTER (WHERE l_returnflag = 'R') AS n_returned
-          FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1),
-          pr AS (SELECT *, CAST(n_returned AS DOUBLE) / n_lines AS p
-            FROM a)
-          SELECT p_brand, n_lines, n_returned, p AS return_rate,
-            (p + $z2 / (CAST(n_lines AS DOUBLE) * 2) - $CtrZ *
-              sqrt(p * (1.0 - p) / CAST(n_lines AS DOUBLE) +
-                $z2 / (CAST(n_lines AS DOUBLE) *
-                  CAST(n_lines AS DOUBLE) * 4))) /
-            (1.0 + $z2 / CAST(n_lines AS DOUBLE)) AS wilson_lb
-          FROM pr ORDER BY p_brand""" },
-    "q_sessionize" ->
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            value, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS session_ix FROM s)
-          SELECT user_id, session_ix, min(ts) AS session_start,
-            max(ts) AS session_end, count(*) AS n_events,
-            round(sum(value), 2) AS total_value
-          FROM x GROUP BY 1, 2 ORDER BY 1, 2""",
-    // Same session CTEs as q_sessionize, carrying event_type; pairs
-    // from the sorted distinct type set (1-based list ranges).
-    "q_basket_pairs" ->
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS session_ix FROM s),
-          sets AS (SELECT user_id, session_ix,
-            list_sort(list_distinct(list(event_type))) AS types
-            FROM x GROUP BY 1, 2),
-          tot AS (SELECT count(*) AS n_sessions FROM sets),
-          p AS (SELECT unnest(flatten(list_transform(
-              range(1, len(types)),
-              i -> list_transform(range(i + 1, len(types) + 1),
-                j -> [types[i], types[j]])))) AS pr
-            FROM sets WHERE len(types) >= 2)
-          SELECT pr[1] AS t1, pr[2] AS t2, count(*) AS n_co,
-            tot.n_sessions,
-            CAST(count(*) AS DOUBLE) / tot.n_sessions AS support
-          FROM p CROSS JOIN tot GROUP BY 1, 2, tot.n_sessions
-          ORDER BY 1, 2""",
-    // Session CTEs + rn=1 entry type; integer-second durations on the
-    // (entry_type × dur_s) grid, quantile_cont per the gaps contract.
-    "q_session_duration" ->
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS session_ix FROM s),
-          r AS (SELECT user_id, session_ix, event_type, row_number()
-              OVER (PARTITION BY user_id, session_ix
-                ORDER BY tu, event_id) AS rn FROM x),
-          ses AS (SELECT user_id, session_ix,
-            (max(tu) - min(tu)) // 1000000 AS dur_s
-            FROM x GROUP BY 1, 2),
-          entry AS (SELECT user_id, session_ix, event_type AS entry_type
-            FROM r WHERE rn = 1),
-          q AS (SELECT entry_type, count(*) AS n_sessions,
-            CAST(sum(dur_s) AS BIGINT) AS sum_s,
-            quantile_cont(dur_s, [0.25, 0.5, 0.75, 0.95]) AS ps
-          FROM ses JOIN entry USING (user_id, session_ix) GROUP BY 1)
-          SELECT entry_type, n_sessions,
-            CAST(sum_s AS DOUBLE) / n_sessions AS mean_s,
-            ps[1] AS p25_s, ps[2] AS p50_s, ps[3] AS p75_s,
-            ps[4] AS p95_s
-          FROM q ORDER BY entry_type""",
-    // Session CTEs + per-session counts onto the clamped depth grid.
-    "q_session_depth" ->
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS session_ix FROM s),
-          ses AS (SELECT user_id, session_ix, count(*) AS ne
-            FROM x GROUP BY 1, 2),
-          g AS (SELECT CAST(least(ne, 6) AS BIGINT) AS depth_bucket,
-            count(*) AS n_sessions, CAST(sum(ne) AS BIGINT) AS n_events
-          FROM ses GROUP BY 1)
-          SELECT depth_bucket, n_sessions, n_events,
-            CAST(n_sessions AS DOUBLE) / sum(n_sessions) OVER ()
-              AS session_share,
-            CAST(n_events AS DOUBLE) / sum(n_events) OVER ()
-              AS event_share
-          FROM g ORDER BY depth_bucket""",
-    // User-grain span + the grid-percentile contract, one output row.
-    "q_user_lifespan" ->
-      """WITH u AS (SELECT user_id,
-            CAST(date_diff('day', min(CAST(ts AS DATE)),
-              max(CAST(ts AS DATE))) AS BIGINT) AS span
-          FROM events GROUP BY 1),
-          q AS (SELECT count(*) AS n_users,
-            CAST(sum(span) AS BIGINT) AS sum_span,
-            CAST(count(*) FILTER (WHERE span = 0) AS BIGINT)
-              AS n_single_day,
-            quantile_cont(span, [0.25, 0.5, 0.75, 0.95]) AS ps
-          FROM u)
-          SELECT n_users,
-            CAST(sum_span AS DOUBLE) / n_users AS mean_days,
-            CAST(n_single_day AS DOUBLE) / n_users AS single_day_share,
-            ps[1] AS p25_days, ps[2] AS p50_days, ps[3] AS p75_days,
-            ps[4] AS p95_days
-          FROM q""",
-    // Session CTEs + rn=1 entry + bool_max convert flag; Wilson chain
-    // in engine operation order.
-    "q_session_conversion" -> {
-      val z2 = CtrZ * CtrZ
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS session_ix FROM s),
-          r AS (SELECT user_id, session_ix, event_type, row_number()
-              OVER (PARTITION BY user_id, session_ix
-                ORDER BY tu, event_id) AS rn FROM x),
-          ses AS (SELECT user_id, session_ix,
-            max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS converted
-            FROM x GROUP BY 1, 2),
-          entry AS (SELECT user_id, session_ix, event_type AS entry_type
-            FROM r WHERE rn = 1),
-          a AS (SELECT entry_type, count(*) AS n_sessions,
-              count(*) FILTER (WHERE converted = 1) AS n_converting
-            FROM ses JOIN entry USING (user_id, session_ix) GROUP BY 1),
-          pr AS (SELECT *, CAST(n_converting AS DOUBLE) / n_sessions
-              AS p FROM a)
-          SELECT entry_type, n_sessions, n_converting,
-            p AS conversion_rate,
-            (p + $z2 / (CAST(n_sessions AS DOUBLE) * 2) - $CtrZ *
-              sqrt(p * (1.0 - p) / CAST(n_sessions AS DOUBLE) +
-                $z2 / (CAST(n_sessions AS DOUBLE) *
-                  CAST(n_sessions AS DOUBLE) * 4))) /
-            (1.0 + $z2 / CAST(n_sessions AS DOUBLE)) AS wilson_lb
-          FROM pr ORDER BY entry_type""" },
-    // Cent grid + quantile_cont (the gaps contract) + exact mean.
-    "q_value_dist" ->
-      """WITH c AS (SELECT event_type,
-            CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-          q AS (SELECT event_type, count(*) AS n_events,
-            CAST(sum(cents) AS BIGINT) AS sum_c,
-            quantile_cont(cents, [0.25, 0.5, 0.75, 0.95]) AS ps
-          FROM c GROUP BY 1)
-          SELECT event_type, n_events,
-            CAST(sum_c AS DOUBLE) / n_events / 100.0 AS mean_value,
-            ps[1] / 100.0 AS p25, ps[2] / 100.0 AS p50,
-            ps[3] / 100.0 AS p75, ps[4] / 100.0 AS p95
-          FROM q ORDER BY event_type""",
-    // Session min/max → hour deltas → dense hour spine → running sums;
-    // active = cum(started) − cum(ended) + ended(h).
-    "q_concurrency" ->
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS session_ix FROM s),
-          ses AS (SELECT user_id, session_ix, min(ts) AS st, max(ts) AS en
-            FROM x GROUP BY 1, 2),
-          sh AS (SELECT date_trunc('hour', st) AS hs,
-            date_trunc('hour', en) AS he FROM ses),
-          stt AS (SELECT hs AS hour, count(*) AS nn FROM sh GROUP BY 1),
-          enn AS (SELECT he AS hour, count(*) AS nn FROM sh GROUP BY 1),
-          sp AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR))
-              AS hour
-            FROM (SELECT min(hs) AS lo, max(he) AS hi FROM sh)),
-          g AS (SELECT sp.hour,
-            CAST(coalesce(stt.nn, 0) AS BIGINT) AS n_started,
-            CAST(coalesce(enn.nn, 0) AS BIGINT) AS n_ended
-          FROM sp LEFT JOIN stt ON sp.hour = stt.hour
-          LEFT JOIN enn ON sp.hour = enn.hour)
-          SELECT hour, n_started, n_ended,
-            CAST(sum(n_started) OVER w - sum(n_ended) OVER w + n_ended
-              AS BIGINT) AS active_sessions
-          FROM g WINDOW w AS (ORDER BY hour
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          ORDER BY hour""",
-    // Same session CTE chain; item counts + both pair directions, and
-    // lift multiplies count-DOUBLES (the engine's overflow-proof form).
-    "q_assoc_rules" ->
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS session_ix FROM s),
-          sets AS (SELECT user_id, session_ix,
-            list_sort(list_distinct(list(event_type))) AS types
-            FROM x GROUP BY 1, 2),
-          tot AS (SELECT count(*) AS n_sessions FROM sets),
-          iu AS (SELECT unnest(types) AS t FROM sets),
-          items AS (SELECT t, count(*) AS n_item FROM iu GROUP BY 1),
-          p AS (SELECT unnest(flatten(list_transform(
-              range(1, len(types)),
-              i -> list_transform(range(i + 1, len(types) + 1),
-                j -> [types[i], types[j]])))) AS pr
-            FROM sets WHERE len(types) >= 2),
-          co AS (SELECT pr[1] AS t1, pr[2] AS t2, count(*) AS n_co
-            FROM p GROUP BY 1, 2),
-          d AS (SELECT t1 AS antecedent, t2 AS consequent, n_co FROM co
-            UNION ALL
-            SELECT t2 AS antecedent, t1 AS consequent, n_co FROM co)
-          SELECT d.antecedent, d.consequent, d.n_co,
-            a.n_item AS n_ante, c.n_item AS n_cons, tot.n_sessions,
-            CAST(d.n_co AS DOUBLE) / tot.n_sessions AS support,
-            CAST(d.n_co AS DOUBLE) / a.n_item AS confidence,
-            (CAST(d.n_co AS DOUBLE) * CAST(tot.n_sessions AS DOUBLE)) /
-              (CAST(a.n_item AS DOUBLE) * CAST(c.n_item AS DOUBLE)) AS lift
-          FROM d
-          JOIN items a ON d.antecedent = a.t
-          JOIN items c ON d.consequent = c.t
-          CROSS JOIN tot
-          ORDER BY 1, 2""",
-    // Integer-microsecond gaps, dyadic quartiles on the integer grid
-    // (the q_percentiles contract), one /1e6 display division.
-    "q_event_gaps" ->
-      """WITH e AS (SELECT event_type, user_id, CAST(ts AS TIMESTAMP) AS ts,
-            event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          g AS (SELECT event_type, tu - lag(tu) OVER (
-              PARTITION BY user_id, event_type ORDER BY ts, event_id)
-              AS gap FROM e),
-          f AS (SELECT event_type, gap FROM g WHERE gap IS NOT NULL),
-          q AS (SELECT event_type, count(*) AS n_gaps,
-            CAST(sum(gap) AS BIGINT) AS sum_gap,
-            quantile_cont(gap, [0.25, 0.5, 0.75]) AS ps
-          FROM f GROUP BY 1)
-          SELECT event_type, n_gaps,
-            CAST(sum_gap AS DOUBLE) / n_gaps / 1000000.0 AS mean_gap_s,
-            ps[1] / 1000000.0 AS p25_s, ps[2] / 1000000.0 AS p50_s,
-            ps[3] / 1000000.0 AS p75_s
-          FROM q ORDER BY event_type""",
-    // Order-grain sorted brand sets; the basket pair/item/total CTE
-    // chain on the sales fact, lift over count-DOUBLES.
-    "q_brand_affinity" ->
-      """WITH ob AS (SELECT l_orderkey,
-            list_sort(list_distinct(list(p_brand))) AS brands
-          FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1),
-          tot AS (SELECT count(*) AS n_orders FROM ob),
-          iu AS (SELECT unnest(brands) AS b FROM ob),
-          items AS (SELECT b, count(*) AS n_item FROM iu GROUP BY 1),
-          p AS (SELECT unnest(flatten(list_transform(
-              range(1, len(brands)),
-              i -> list_transform(range(i + 1, len(brands) + 1),
-                j -> [brands[i], brands[j]])))) AS pr
-            FROM ob WHERE len(brands) >= 2),
-          co AS (SELECT pr[1] AS b1, pr[2] AS b2, count(*) AS n_co
-            FROM p GROUP BY 1, 2)
-          SELECT co.b1, co.b2, co.n_co, a.n_item AS n_b1,
-            c.n_item AS n_b2, tot.n_orders,
-            CAST(co.n_co AS DOUBLE) / tot.n_orders AS support,
-            (CAST(co.n_co AS DOUBLE) * CAST(tot.n_orders AS DOUBLE)) /
-              (CAST(a.n_item AS DOUBLE) * CAST(c.n_item AS DOUBLE))
-              AS lift
-          FROM co JOIN items a ON co.b1 = a.b
-          JOIN items c ON co.b2 = c.b CROSS JOIN tot
-          ORDER BY 1, 2""",
-    // Integer-threshold latency bands + the Wilson chain in the exact
-    // engine operation order (the q_return_rate replay).
-    "q_late_returns" -> {
-      val z2 = CtrZ * CtrZ
-      s"""WITH l AS (SELECT date_diff('day', CAST(o_orderdate AS DATE),
-              CAST(l_shipdate AS DATE)) AS lag_days, l_returnflag
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-          j AS (SELECT CASE WHEN lag_days <= 7 THEN 0
-              WHEN lag_days <= 30 THEN 1 WHEN lag_days <= 90 THEN 2
-              ELSE 3 END AS band_ix,
-            CASE WHEN lag_days <= 7 THEN '0-7'
-              WHEN lag_days <= 30 THEN '8-30'
-              WHEN lag_days <= 90 THEN '31-90'
-              ELSE '90+' END AS band, l_returnflag FROM l),
-          a AS (SELECT band_ix, band, count(*) AS n_lines,
-            count(*) FILTER (WHERE l_returnflag = 'R') AS n_returned
-          FROM j GROUP BY 1, 2),
-          pr AS (SELECT *, CAST(n_returned AS DOUBLE) / n_lines AS p
-            FROM a)
-          SELECT band_ix, band, n_lines, n_returned, p AS return_rate,
-            (p + $z2 / (CAST(n_lines AS DOUBLE) * 2) - $CtrZ *
-              sqrt(p * (1.0 - p) / CAST(n_lines AS DOUBLE) +
-                $z2 / (CAST(n_lines AS DOUBLE) *
-                  CAST(n_lines AS DOUBLE) * 4))) /
-            (1.0 + $z2 / CAST(n_lines AS DOUBLE)) AS wilson_lb
-          FROM pr ORDER BY band_ix""" },
-    // (quarter, priority) grid + three window-sum shares; drift
-    // recomputes the same expressions.
-    "q_priority_mix" ->
-      """WITH g AS (SELECT
-            CAST(date_trunc('quarter', o_orderdate) AS DATE) AS quarter,
-            coalesce(o_orderpriority, '') AS priority,
-            count(*) AS n_orders
-          FROM orders GROUP BY 1, 2)
-          SELECT quarter, priority, n_orders,
-            CAST(n_orders AS DOUBLE) /
-              sum(n_orders) OVER (PARTITION BY quarter) AS quarter_share,
-            CAST(sum(n_orders) OVER (PARTITION BY priority) AS DOUBLE) /
-              sum(n_orders) OVER () AS overall_share,
-            CAST(n_orders AS DOUBLE) /
-              sum(n_orders) OVER (PARTITION BY quarter) -
-              CAST(sum(n_orders) OVER (PARTITION BY priority) AS DOUBLE) /
-                sum(n_orders) OVER () AS drift
-          FROM g ORDER BY quarter, priority""",
-    // Quarter grid + row_number index + qi-ORDERED list folds; slope
-    // and r2 attach as cross-joined constants, nullif-guarded.
-    "q_aov_trend" ->
-      """WITH g AS (SELECT
-            CAST(date_trunc('quarter', o_orderdate) AS DATE) AS quarter,
-            count(*) AS n_orders,
-            CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS sum_c
-          FROM orders GROUP BY 1),
-          q AS (SELECT *, CAST(sum_c AS DOUBLE) / n_orders / 100.0
-              AS aov,
-            CAST(row_number() OVER (ORDER BY quarter) AS DOUBLE) AS qi
-          FROM g),
-          m AS (SELECT count(*) AS k,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(qi ORDER BY qi)), (x, y) -> x + y) AS sx,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(aov ORDER BY qi)), (x, y) -> x + y) AS sy,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(qi * aov ORDER BY qi)), (x, y) -> x + y) AS sxy,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(qi * qi ORDER BY qi)), (x, y) -> x + y) AS sxx,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(aov * aov ORDER BY qi)), (x, y) -> x + y) AS syy
-          FROM q),
-          f AS (SELECT
-            (k * sxy - sx * sy) / nullif(k * sxx - sx * sx, 0.0)
-              AS slope_per_quarter,
-            ((k * sxy - sx * sy) * (k * sxy - sx * sy)) /
-              nullif((k * sxx - sx * sx) * (k * syy - sy * sy), 0.0)
-              AS r2
-          FROM m)
-          SELECT quarter, n_orders, aov, slope_per_quarter, r2
-          FROM q CROSS JOIN f ORDER BY quarter""",
-    // Class-stripped length counts (alpha on LOWERCASED text, the
-    // explicit whitespace class), exact sums, guarded shares.
-    "q_char_profile" ->
-      """WITH d AS (SELECT source,
-            CAST(length(text) AS BIGINT) AS t,
-            CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-              AS BIGINT) AS a,
-            CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-              AS BIGINT) AS d2,
-            CAST(length(regexp_replace(text, '[^ \t\n\r]', '', 'g'))
-              AS BIGINT) AS s
-          FROM documents),
-          g AS (SELECT source, count(*) AS n_docs,
-            CAST(sum(t) AS BIGINT) AS n_chars,
-            CAST(sum(a) AS BIGINT) AS n_alpha,
-            CAST(sum(d2) AS BIGINT) AS n_digit,
-            CAST(sum(s) AS BIGINT) AS n_space
-          FROM d GROUP BY 1)
-          SELECT source, n_docs, n_chars, n_alpha, n_digit, n_space,
-            n_chars - n_alpha - n_digit - n_space AS n_other,
-            CAST(n_alpha AS DOUBLE) /
-              CAST(greatest(n_chars, 1) AS DOUBLE) AS alpha_share,
-            CAST(n_digit AS DOUBLE) /
-              CAST(greatest(n_chars, 1) AS DOUBLE) AS digit_share,
-            CAST(n_chars - n_alpha - n_digit - n_space AS DOUBLE) /
-              CAST(greatest(n_chars, 1) AS DOUBLE) AS other_share
-          FROM g ORDER BY source""",
-    // Clamped length grid; share + running share off window sums.
-    "q_token_lengths" ->
-      s"""WITH tk AS (SELECT $ToksSql AS toks FROM documents),
-          e AS (SELECT unnest(toks) AS term FROM tk),
-          g AS (SELECT CAST(least(length(term), 16) AS BIGINT)
-              AS len_bucket, count(*) AS n_tokens
-            FROM e GROUP BY 1)
-          SELECT len_bucket, n_tokens,
-            CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER () AS share,
-            CAST(sum(n_tokens) OVER (ORDER BY len_bucket
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS DOUBLE) / sum(n_tokens) OVER () AS cum_share
-          FROM g ORDER BY len_bucket""",
-    // Fingerprint-size groups (>=2) onto the magnitude grid.
-    "q_dup_cluster_hist" ->
-      s"""WITH f AS (SELECT md5($NormSql) AS fp FROM documents),
-          g AS (SELECT fp, count(*) AS sz FROM f GROUP BY 1
-            HAVING count(*) >= 2)
-          SELECT CAST(length(CAST(sz AS VARCHAR)) AS BIGINT)
-              AS size_digits,
-            count(*) AS n_clusters, CAST(sum(sz) AS BIGINT) AS n_docs,
-            CAST(sum(sz) - count(*) AS BIGINT) AS n_redundant,
-            min(sz) AS min_size, max(sz) AS max_size
-          FROM g GROUP BY 1 ORDER BY 1""",
-    // isodow = Spark weekday()+1; 168-cell grid, dual window shares.
-    "q_traffic_heatmap" ->
-      """WITH g AS (SELECT CAST(isodow(ts) AS INTEGER) AS iso_weekday,
-            CAST(hour(ts) AS INTEGER) AS hod, count(*) AS n_events
-          FROM events GROUP BY 1, 2)
-          SELECT iso_weekday, hod, n_events,
-            CAST(n_events AS DOUBLE) / sum(n_events) OVER ()
-              AS total_share,
-            CAST(n_events AS DOUBLE) /
-              sum(n_events) OVER (PARTITION BY iso_weekday)
-              AS weekday_share
-          FROM g ORDER BY iso_weekday, hod""",
-    // HUGEINT moments, double-combined variance (comovement form),
-    // micro-day quantized rank cut with suppkey tie-break.
-    "q_supplier_consistency" ->
-      s"""WITH m AS (SELECT l_suppkey, count(*) AS n_lines,
-            CAST(sum(lag_days) AS BIGINT) AS s1,
-            sum(lag_days * lag_days) AS s2
-          FROM (SELECT l_suppkey,
-              CAST(date_diff('day', CAST(o_orderdate AS DATE),
-                CAST(l_shipdate AS DATE)) AS BIGINT) AS lag_days
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-          GROUP BY 1 HAVING count(*) >= 2)
-          SELECT l_suppkey, n_lines,
-            CAST(s1 AS DOUBLE) / n_lines AS mean_lag_days,
-            CAST(floor(sqrt(((CAST(n_lines AS DOUBLE) *
-                CAST(s2 AS DOUBLE)) -
-                (CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))) /
-              (CAST(n_lines AS DOUBLE) *
-                CAST(n_lines - 1 AS DOUBLE))) * 1000000.0 + 0.5)
-              AS BIGINT) AS stddev_micro
-          FROM m ORDER BY stddev_micro DESC, l_suppkey
-          LIMIT $ConsistencyTopK""",
-    // Rank-weighted integer Gini (the giniByNation form) over the
-    // sources grid, two mirrored double divisions.
-    "q_source_gini" ->
-      s"""WITH tk AS (SELECT source, len($ToksSql) AS n_toks
-            FROM documents),
-          s AS (SELECT source, count(*) AS nd,
-            CAST(sum(n_toks) AS BIGINT) AS nt FROM tk GROUP BY 1),
-          r AS (SELECT *,
-            row_number() OVER (ORDER BY nd, source) AS rd,
-            row_number() OVER (ORDER BY nt, source) AS rt FROM s)
-          SELECT CAST(count(*) AS BIGINT) AS n_sources,
-            (2.0 * sum(rd * nd)) /
-              (CAST(count(*) AS DOUBLE) * sum(nd)) -
-              CAST(count(*) + 1 AS DOUBLE) / count(*) AS gini_docs,
-            (2.0 * sum(rt * nt)) /
-              (CAST(count(*) AS DOUBLE) * sum(nt)) -
-              CAST(count(*) + 1 AS DOUBLE) / count(*) AS gini_tokens,
-            CAST(max(nd) AS DOUBLE) / CAST(sum(nd) AS DOUBLE)
-              AS top_doc_share,
-            CAST(max(nt) AS DOUBLE) / CAST(sum(nt) AS DOUBLE)
-              AS top_token_share
-          FROM r""",
-    // Telescoped cadence (sum of gaps = last − first) and the integer
-    // cross-multiplied risk test; frontier is a scalar-subquery max.
-    "q_churn_risk" ->
-      """WITH o AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS day
-            FROM orders),
-          fr AS (SELECT max(day) AS f FROM o),
-          per AS (SELECT o_custkey, count(*) AS n_orders,
-            min(day) AS first_day, max(day) AS last_day
-          FROM o GROUP BY 1 HAVING count(*) >= 2),
-          r AS (SELECT o_custkey, CASE WHEN
-              CAST(date_diff('day', last_day, f) AS BIGINT) *
-                (n_orders - 1) >
-              CAST(date_diff('day', first_day, last_day) AS BIGINT) * 2
-            THEN 1 ELSE 0 END AS at_risk FROM per CROSS JOIN fr),
-          j AS (SELECT c_mktsegment, at_risk FROM r
-            JOIN customer ON o_custkey = c_custkey)
-          SELECT c_mktsegment, count(*) AS n_repeat_customers,
-            CAST(count(*) FILTER (WHERE at_risk = 1) AS BIGINT)
-              AS n_at_risk,
-            CAST(count(*) FILTER (WHERE at_risk = 1) AS DOUBLE) /
-              CAST(count(*) AS DOUBLE) AS at_risk_share
-          FROM j GROUP BY 1 ORDER BY 1""",
-    // One aggregate computes both counts; expected/χ² fixed-shape
-    // doubles off grid-window totals, nullif-guarded.
-    "q_sample_bias" ->
-      s"""WITH per AS (SELECT event_type,
-            CAST(count(*) AS BIGINT) AS n_full,
-            CAST(count(*) FILTER (WHERE event_id % $SampleBiasMod = 0)
-              AS BIGINT) AS n_sampled
-          FROM events GROUP BY 1),
-          w AS (SELECT *, CAST(n_full AS DOUBLE) *
-            CAST(sum(n_sampled) OVER () AS DOUBLE) /
-            CAST(sum(n_full) OVER () AS DOUBLE) AS expected_sampled
-          FROM per),
-          c AS (SELECT *,
-            (CAST(n_sampled AS DOUBLE) - expected_sampled) *
-            (CAST(n_sampled AS DOUBLE) - expected_sampled) /
-            nullif(expected_sampled, 0.0) AS contrib FROM w)
-          SELECT event_type, n_full, n_sampled, expected_sampled,
-            contrib,
-            CASE WHEN contrib > $SampleBiasCritical THEN 1 ELSE 0 END
-              AS suspect
-          FROM c ORDER BY event_type""",
-    // Min-day cohort + row-local first-week window; exact cent sums.
-    "q_cohort_value" ->
-      """WITH ue AS (SELECT user_id, CAST(ts AS DATE) AS day,
-            CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-          f AS (SELECT user_id, min(day) AS cohort_day FROM ue
-            GROUP BY 1),
-          j AS (SELECT f.cohort_day, ue.user_id, ue.cents FROM ue
-            JOIN f USING (user_id)
-            WHERE date_diff('day', f.cohort_day, ue.day) < 7)
-          SELECT cohort_day,
-            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-            count(*) AS n_events,
-            CAST(sum(cents) AS BIGINT) AS first_week_cents,
-            CAST(sum(cents) AS DOUBLE) / count(DISTINCT user_id)
-              AS cents_per_user
-          FROM j GROUP BY 1 ORDER BY 1""",
-    // (user, day) distinct + min-day cohort + horizon filter onto the
-    // day grid; left join keeps zero-retention cohorts with 0 counts.
-    "q_retention_days" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-            FROM events),
-          f AS (SELECT user_id, min(day) AS cohort_day FROM ud
-            GROUP BY 1),
-          co AS (SELECT cohort_day, count(*) AS n_users FROM f
-            GROUP BY 1),
-          r AS (SELECT f.cohort_day,
-            CAST(sum(CASE WHEN date_diff('day', f.cohort_day, ud.day) = 1
-              THEN 1 ELSE 0 END) AS BIGINT) AS d1,
-            CAST(sum(CASE WHEN date_diff('day', f.cohort_day, ud.day) = 7
-              THEN 1 ELSE 0 END) AS BIGINT) AS d7,
-            CAST(sum(CASE WHEN date_diff('day', f.cohort_day, ud.day) = 30
-              THEN 1 ELSE 0 END) AS BIGINT) AS d30
-          FROM ud JOIN f USING (user_id)
-          WHERE date_diff('day', f.cohort_day, ud.day) IN (1, 7, 30)
-          GROUP BY 1)
-          SELECT co.cohort_day, co.n_users,
-            coalesce(d1, 0) AS d1, coalesce(d7, 0) AS d7,
-            coalesce(d30, 0) AS d30,
-            CAST(coalesce(d1, 0) AS DOUBLE) / co.n_users AS r1,
-            CAST(coalesce(d7, 0) AS DOUBLE) / co.n_users AS r7,
-            CAST(coalesce(d30, 0) AS DOUBLE) / co.n_users AS r30
-          FROM co LEFT JOIN r ON co.cohort_day = r.cohort_day
-          ORDER BY co.cohort_day""",
-    // Quarter grid with conditional cent sums; two final divisions.
-    "q_return_trend" ->
-      """WITH l AS (SELECT
-            CAST(date_trunc('quarter', l_shipdate) AS DATE) AS quarter,
-            CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
-            CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS ret
-          FROM lineitem)
-          SELECT quarter, count(*) AS n_lines,
-            CAST(count(*) FILTER (WHERE ret = 1) AS BIGINT)
-              AS n_returned,
-            CAST(sum(cents) AS BIGINT) AS total_cents,
-            CAST(sum(CASE WHEN ret = 1 THEN cents ELSE 0 END)
-              AS BIGINT) AS returned_cents,
-            CAST(count(*) FILTER (WHERE ret = 1) AS DOUBLE) / count(*)
-              AS return_rate,
-            CAST(sum(CASE WHEN ret = 1 THEN cents ELSE 0 END)
-                AS DOUBLE) /
-              CAST(sum(cents) AS DOUBLE) AS revenue_share
-          FROM l GROUP BY quarter ORDER BY quarter""",
-    // (user, week) cents + zero-cent ghosts at week+7 merged at the
-    // same grain; per-user lag chain, the engine's CASE order, churn
-    // carries prev_cents.
-    "q_revenue_accounting" ->
-      """WITH uw AS (SELECT user_id,
-            CAST(date_trunc('week', ts) AS DATE) AS week,
-            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-              AS cents
-          FROM events GROUP BY 1, 2),
-          al AS (SELECT user_id, week, CAST(sum(cents) AS BIGINT)
-              AS cents
-            FROM (SELECT user_id, week, cents FROM uw
-              UNION ALL
-              SELECT user_id, CAST(week + INTERVAL 7 DAY AS DATE),
-                CAST(0 AS BIGINT) FROM uw)
-            GROUP BY 1, 2),
-          lg AS (SELECT *, lag(week) OVER w AS prev_week,
-              lag(cents) OVER w AS prev_cents
-            FROM al WINDOW w AS (PARTITION BY user_id ORDER BY week)),
-          c AS (SELECT week, cents, prev_cents,
-            CASE WHEN cents = 0 THEN 'churned'
-              WHEN prev_week IS NULL THEN 'new'
-              WHEN date_diff('day', prev_week, week) = 7
-                  AND prev_cents > 0 THEN
-                CASE WHEN cents > prev_cents THEN 'expansion'
-                  WHEN cents < prev_cents THEN 'contraction'
-                  ELSE 'flat' END
-              ELSE 'resurrected' END AS category
-          FROM lg)
-          SELECT week, category, count(*) AS n_users,
-            CAST(sum(CASE WHEN category = 'churned' THEN prev_cents
-              ELSE cents END) AS BIGINT) AS cents
-          FROM c WHERE cents > 0 OR prev_cents > 0
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-    // Integer discount points band + the Wilson chain in engine order.
-    "q_discount_returns" -> {
-      val z2 = CtrZ * CtrZ
-      s"""WITH l AS (SELECT CAST(round(l_discount * 100) AS INTEGER)
-              AS bp, l_returnflag FROM lineitem),
-          j AS (SELECT CASE WHEN bp = 0 THEN 0 WHEN bp <= 5 THEN 1
-              ELSE 2 END AS band_ix,
-            CASE WHEN bp = 0 THEN 'none' WHEN bp <= 5 THEN 'light_1_5'
-              ELSE 'deep_6_plus' END AS band, l_returnflag FROM l),
-          a AS (SELECT band_ix, band, count(*) AS n_lines,
-            count(*) FILTER (WHERE l_returnflag = 'R') AS n_returned
-          FROM j GROUP BY 1, 2),
-          pr AS (SELECT *, CAST(n_returned AS DOUBLE) / n_lines AS p
-            FROM a)
-          SELECT band_ix, band, n_lines, n_returned, p AS return_rate,
-            (p + $z2 / (CAST(n_lines AS DOUBLE) * 2) - $CtrZ *
-              sqrt(p * (1.0 - p) / CAST(n_lines AS DOUBLE) +
-                $z2 / (CAST(n_lines AS DOUBLE) *
-                  CAST(n_lines AS DOUBLE) * 4))) /
-            (1.0 + $z2 / CAST(n_lines AS DOUBLE)) AS wilson_lb
-          FROM pr ORDER BY band_ix""" },
-    // 24-row hour grid + the Wilson chain in engine operation order.
-    "q_error_share" -> {
-      val z2 = CtrZ * CtrZ
-      s"""WITH a AS (SELECT CAST(hour(ts) AS INTEGER) AS hod,
-            count(*) AS n_events,
-            count(*) FILTER (WHERE event_type = 'error') AS n_errors
-          FROM events GROUP BY 1),
-          pr AS (SELECT *, CAST(n_errors AS DOUBLE) / n_events AS p
-            FROM a)
-          SELECT hod, n_events, n_errors, p AS error_share,
-            (p + $z2 / (CAST(n_events AS DOUBLE) * 2) - $CtrZ *
-              sqrt(p * (1.0 - p) / CAST(n_events AS DOUBLE) +
-                $z2 / (CAST(n_events AS DOUBLE) *
-                  CAST(n_events AS DOUBLE) * 4))) /
-            (1.0 + $z2 / CAST(n_events AS DOUBLE)) AS wilson_lb
-          FROM pr ORDER BY hod""" },
-    // Decimal-magnitude buckets (the deg_digits idiom); shares off
-    // unpartitioned window sums over the ≤20-row grid.
-    "q_engagement_dist" ->
-      """WITH per AS (SELECT user_id, count(*) AS ne FROM events
-            GROUP BY 1),
-          b AS (SELECT CAST(length(CAST(ne AS VARCHAR)) AS BIGINT)
-              AS digits,
-            count(*) AS n_users, CAST(sum(ne) AS BIGINT) AS n_events
-          FROM per GROUP BY 1)
-          SELECT digits, n_users, n_events,
-            CAST(n_users AS DOUBLE) / sum(n_users) OVER ()
-              AS user_share,
-            CAST(n_events AS DOUBLE) / sum(n_events) OVER ()
-              AS event_share
-          FROM b ORDER BY digits""",
-    // Customer min-quarter CTE + conditional cent sums; the share is
-    // one double division of exact bigint totals.
-    "q_new_returning" ->
-      """WITH o AS (SELECT o_custkey,
-            CAST(date_trunc('quarter', o_orderdate) AS DATE) AS quarter,
-            CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-          FROM orders),
-          f AS (SELECT o_custkey, min(quarter) AS fq FROM o GROUP BY 1),
-          j AS (SELECT o.quarter,
-            CASE WHEN o.quarter = f.fq THEN 1 ELSE 0 END AS is_new, cents
-          FROM o JOIN f USING (o_custkey))
-          SELECT quarter,
-            CAST(count(*) FILTER (WHERE is_new = 1) AS BIGINT)
-              AS n_new_orders,
-            CAST(count(*) FILTER (WHERE is_new = 0) AS BIGINT)
-              AS n_ret_orders,
-            CAST(sum(CASE WHEN is_new = 1 THEN cents ELSE 0 END)
-              AS BIGINT) AS rev_new_cents,
-            CAST(sum(CASE WHEN is_new = 0 THEN cents ELSE 0 END)
-              AS BIGINT) AS rev_ret_cents,
-            CAST(sum(CASE WHEN is_new = 1 THEN cents ELSE 0 END)
-                AS DOUBLE) /
-              CAST(sum(cents) AS DOUBLE) AS new_rev_share
-          FROM j GROUP BY quarter ORDER BY quarter""",
-    // (part, quarter) integer unit prices via (2c+q)//(2q) round-half-
-    // up; Laspeyres sums are HUGEINT products (engine: DECIMAL(38,0)).
-    "q_price_index" ->
-      """WITH pq AS (SELECT l_partkey,
-            CAST(date_trunc('quarter', l_shipdate) AS DATE) AS quarter,
-            CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-              AS BIGINT) AS c,
-            CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
-          FROM lineitem GROUP BY 1, 2),
-          pp AS (SELECT *, (2 * c + q) // (2 * q) AS p_cents FROM pq),
-          bq AS (SELECT min(quarter) AS g FROM pp),
-          base AS (SELECT l_partkey, p_cents AS p0, q AS q0
-            FROM pp, bq WHERE quarter = g),
-          j AS (SELECT p_brand, pp.quarter,
-            pp.p_cents * base.q0 AS num, base.p0 * base.q0 AS den
-          FROM pp JOIN base USING (l_partkey)
-          JOIN part ON l_partkey = p_partkey)
-          SELECT p_brand, quarter, CAST(count(*) AS BIGINT) AS n_parts,
-            CAST(sum(num) AS DOUBLE) / CAST(sum(den) AS DOUBLE) * 100.0
-              AS index_pts
-          FROM j GROUP BY 1, 2 ORDER BY 1, 2""",
-    // Difference-array replay: two day-grain delta CTEs, dense spine,
-    // two running sums on the |days| grid.
-    "q_backlog" ->
-      """WITH cl AS (SELECT l_orderkey,
-            max(CAST(l_shipdate AS DATE)) AS close_day
-          FROM lineitem GROUP BY 1),
-          iv AS (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS open_day,
-            close_day
-          FROM orders JOIN cl ON o_orderkey = l_orderkey),
-          op AS (SELECT open_day AS day, count(*) AS nn FROM iv GROUP BY 1),
-          cz AS (SELECT close_day AS day, count(*) AS nn FROM iv GROUP BY 1),
-          sp AS (SELECT CAST(unnest(generate_series(lo, hi,
-              INTERVAL 1 DAY)) AS DATE) AS day
-            FROM (SELECT min(open_day) AS lo, max(close_day) AS hi
-              FROM iv)),
-          g AS (SELECT sp.day, CAST(coalesce(op.nn, 0) AS BIGINT)
-              AS n_opened,
-            CAST(coalesce(cz.nn, 0) AS BIGINT) AS n_closed
-          FROM sp LEFT JOIN op ON sp.day = op.day
-          LEFT JOIN cz ON sp.day = cz.day)
-          SELECT day, n_opened, n_closed,
-            CAST(sum(n_opened) OVER w - sum(n_closed) OVER w AS BIGINT)
-              AS open_backlog
-          FROM g WINDOW w AS (ORDER BY day
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          ORDER BY day""",
-    // Order-grain close day + the same grid-percentile contract.
-    "q_order_completion" ->
-      """WITH cl AS (SELECT l_orderkey,
-            max(CAST(l_shipdate AS DATE)) AS close_day
-          FROM lineitem GROUP BY 1),
-          j AS (SELECT coalesce(o_orderpriority, '') AS priority,
-            date_diff('day', CAST(o_orderdate AS DATE), close_day)
-              AS days
-          FROM cl JOIN orders ON l_orderkey = o_orderkey),
-          q AS (SELECT priority, count(*) AS n_orders,
-            CAST(sum(days) AS BIGINT) AS sum_days,
-            quantile_cont(days, [0.25, 0.5, 0.75]) AS ps
-          FROM j GROUP BY 1)
-          SELECT priority, n_orders,
-            CAST(sum_days AS DOUBLE) / n_orders AS mean_days,
-            ps[1] AS p25_days, ps[2] AS p50_days, ps[3] AS p75_days
-          FROM q ORDER BY priority""",
-    // Day gaps on the (priority × days) grid; quantile_cont matches
-    // the engine's percentile-with-frequencies (q_event_gaps contract).
-    "q_fulfillment_latency" ->
-      """WITH j AS (SELECT coalesce(o_orderpriority, '') AS priority,
-            date_diff('day', CAST(o_orderdate AS DATE),
-              CAST(l_shipdate AS DATE)) AS lag_days
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-          q AS (SELECT priority, count(*) AS n_lines,
-            CAST(sum(lag_days) AS BIGINT) AS sum_days,
-            quantile_cont(lag_days, [0.25, 0.5, 0.75]) AS ps
-          FROM j GROUP BY 1)
-          SELECT priority, n_lines,
-            CAST(sum_days AS DOUBLE) / n_lines AS mean_days,
-            ps[1] AS p25_days, ps[2] AS p50_days, ps[3] AS p75_days
-          FROM q ORDER BY priority""",
-    // generate_series spine + running max of observed days replays the
-    // engine's fill; day arithmetic is all-integer.
-    "q_gap_fill" ->
-      s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            count(*) AS n_events FROM events
-            WHERE event_id % $GapSliceMod = 0 GROUP BY 1, 2),
-          sp AS (SELECT event_type,
-            CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE)
-              AS day
-            FROM (SELECT event_type, min(day) AS lo, max(day) AS hi
-              FROM daily GROUP BY 1)),
-          j AS (SELECT sp.event_type, sp.day, d.n_events
-            FROM sp LEFT JOIN daily d
-            ON sp.event_type = d.event_type AND sp.day = d.day),
-          f AS (SELECT event_type, day,
-            CAST(coalesce(n_events, 0) AS BIGINT) AS n_events,
-            CASE WHEN n_events IS NULL THEN 1 ELSE 0 END AS is_filled
-            FROM j),
-          g AS (SELECT *, max(CASE WHEN is_filled = 0 THEN day END)
-              OVER (PARTITION BY event_type ORDER BY day
-                ROWS UNBOUNDED PRECEDING) AS last_active FROM f)
-          SELECT event_type, day, n_events, is_filled,
-            CAST(day - last_active AS INTEGER) AS days_since_active
-          FROM g ORDER BY event_type, day""",
-    // Salted sampleBucket twin (':split' salt) + the 80/10/10 CASE.
-    "q_split" ->
-      s"""WITH tk AS (SELECT doc_id, lang, $ToksSql AS toks FROM documents),
-          b AS (SELECT doc_id, lang, len(toks) AS n_toks,
-            ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':split'), 1, 6))
-              ::BIGINT % $SampleBuckets AS bucket FROM tk),
-          s AS (SELECT *, CASE WHEN bucket < $SplitTrainBuckets THEN 'train'
-              WHEN bucket < ${SplitTrainBuckets + SplitValBuckets} THEN 'val'
-              ELSE 'test' END AS split FROM b),
-          tot AS (SELECT count(*) AS n_total FROM s)
-          SELECT split, lang, count(*) AS n_docs,
-            CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-            CAST(count(*) AS DOUBLE) / tot.n_total AS doc_share
-          FROM s CROSS JOIN tot GROUP BY 1, 2, tot.n_total
-          ORDER BY 1, 2""",
-    // norm² is the same sequential double fold as graft_dot; min/max
-    // are order-independent (a sum of doubles would not be).
-    "q_vector_health" ->
-      s"""WITH c AS (SELECT
-            CASE WHEN embedding IS NULL THEN 1 ELSE 0 END AS is_null,
-            CASE WHEN embedding IS NOT NULL
-              AND len(embedding) <> $EmbeddingDim THEN 1 ELSE 0 END
-              AS wrong_dim,
-            CASE WHEN embedding IS NOT NULL AND len(list_filter(embedding,
-              x -> isnan(x) OR isinf(x))) > 0 THEN 1 ELSE 0 END
-              AS is_nonfinite,
-            CASE WHEN embedding IS NOT NULL
-              AND len(embedding) = $EmbeddingDim
-              AND len(list_filter(embedding,
-                x -> isnan(x) OR isinf(x))) = 0 THEN
-              list_reduce(list_transform(embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                (a, b) -> a + b)
-            END AS norm2
-          FROM embeddings)
-          SELECT count(*) AS n_vecs,
-            CAST(sum(is_null) AS BIGINT) AS n_null,
-            CAST(sum(wrong_dim) AS BIGINT) AS n_wrong_dim,
-            CAST(sum(is_nonfinite) AS BIGINT) AS n_nonfinite,
-            CAST(coalesce(sum(CASE WHEN norm2 = 0.0 THEN 1 END), 0)
-              AS BIGINT) AS n_zero_norm,
-            min(norm2) AS min_norm2, max(norm2) AS max_norm2
-          FROM c""",
-    // Every float op is the same expression tree as the engine's
-    // (identical op order incl. the 0.0-init folds — 0+x is exact),
-    // so doubles hash-match; codes are exact integers.
-    "q_label_separation" ->
-      s"""WITH h AS (SELECT label, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) = $EmbeddingDim
-              AND len(list_filter(embedding,
-                x -> isnan(x) OR isinf(x))) = 0),
-          di AS (SELECT unnest(range(1, $EmbeddingDim + 1)) AS i),
-          ex AS (SELECT label, i - 1 AS d0,
-              CAST(embedding[i] AS DOUBLE) AS v
-            FROM h CROSS JOIN di),
-          cd AS (SELECT label, d0, count(*) AS n,
-              CAST(sum(CAST(floor(v * 1000000 + 0.5) AS BIGINT))
-                AS BIGINT) AS s
-            FROM ex GROUP BY 1, 2),
-          cm AS (SELECT *, CAST(s AS DOUBLE) / n AS mean_micro FROM cd),
-          pr AS (SELECT a.label AS label_a, b.label AS label_b, a.d0,
-              a.n AS n_a, b.n AS n_b,
-              (a.mean_micro - b.mean_micro) *
-                (a.mean_micro - b.mean_micro) AS dd2
-            FROM cm a JOIN cm b ON a.d0 = b.d0 AND a.label < b.label)
-          SELECT label_a, label_b, n_a, n_b,
-            sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(dd2 ORDER BY d0)), (x, y) -> x + y)) / 1000000.0
-              AS centroid_dist
-          FROM pr GROUP BY 1, 2, 3, 4 ORDER BY 1, 2""",
-    // The centroid grid probed per (vector, candidate label):
-    // deterministic fixed-order ssd folds, b2-vs-a2 verdicts compare
-    // those doubles exactly, each silhouette is one fixed-shape
-    // scalar chain, and the mean rides micro-quantized bigints.
-    "q_silhouette" ->
-      s"""WITH h AS (SELECT vec_id, label, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) = $EmbeddingDim
-              AND len(list_filter(embedding,
-                x -> isnan(x) OR isinf(x))) = 0),
-          di AS (SELECT unnest(range(1, $EmbeddingDim + 1)) AS i),
-          ex AS (SELECT vec_id, label, i - 1 AS d0,
-              CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5)
-                AS BIGINT) AS vm
-            FROM h CROSS JOIN di),
-          cd AS (SELECT label AS label_c, d0,
-              CAST(sum(vm) AS BIGINT) AS s, count(*) AS n
-            FROM ex GROUP BY 1, 2),
-          cm AS (SELECT label_c, d0,
-            CAST(s AS DOUBLE) / n AS mean_micro FROM cd),
-          dv AS (SELECT ex.vec_id, ex.label, cm.label_c, ex.d0,
-              (CAST(ex.vm AS DOUBLE) - cm.mean_micro) *
-                (CAST(ex.vm AS DOUBLE) - cm.mean_micro) AS dd
-            FROM ex JOIN cm ON cm.d0 = ex.d0),
-          pv AS (SELECT vec_id, label, label_c,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(dd ORDER BY d0)), (x, y) -> x + y) AS ssd
-            FROM dv GROUP BY 1, 2, 3),
-          per AS (SELECT vec_id, label,
-              min(CASE WHEN label_c = label THEN ssd END) AS a2,
-              min(CASE WHEN label_c <> label THEN ssd END) AS b2
-            FROM pv GROUP BY 1, 2),
-          sv AS (SELECT label, a2, b2,
-              CASE WHEN a2 = 0 AND b2 = 0 THEN 0.0
-                ELSE (sqrt(b2) - sqrt(a2)) /
-                  greatest(sqrt(a2), sqrt(b2)) END AS sil
-            FROM per),
-          sq AS (SELECT label, a2, b2, sil,
-            CAST(floor(sil * 1000000 + 0.5) AS BIGINT) AS sil_micro
-            FROM sv)
-          SELECT label, count(*) AS n,
-            CAST(count(*) FILTER (WHERE b2 > a2) AS BIGINT)
-              AS n_separated,
-            CAST(count(*) FILTER (WHERE b2 < a2) AS BIGINT)
-              AS n_misplaced,
-            CAST(count(*) FILTER (WHERE b2 = a2) AS BIGINT) AS n_tied,
-            CAST(count(*) FILTER (WHERE b2 > a2) AS DOUBLE) / count(*)
-              AS sep_share,
-            CAST(CAST(sum(sil_micro) AS BIGINT) AS DOUBLE) / count(*)
-              / 1000000.0 AS mean_sil,
-            min(sil) AS min_sil, max(sil) AS max_sil
-          FROM sq GROUP BY 1 ORDER BY 1""",
-    // q_label_separation's micro-integer centroid grid, probed per
-    // VECTOR: squared distance to own-label centroid, fixed-dim-order
-    // fold, top-k farthest per label with vec_id ties
-    "q_embed_outliers" ->
-      s"""WITH h AS (SELECT vec_id, label, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) = $EmbeddingDim
-              AND len(list_filter(embedding,
-                x -> isnan(x) OR isinf(x))) = 0),
-          di AS (SELECT unnest(range(1, $EmbeddingDim + 1)) AS i),
-          ex AS (SELECT label, vec_id, i - 1 AS d0,
-              CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5)
-                AS BIGINT) AS vm
-            FROM h CROSS JOIN di),
-          cd AS (SELECT label, d0, count(*) AS n,
-              CAST(sum(vm) AS BIGINT) AS s FROM ex GROUP BY 1, 2),
-          cm AS (SELECT *, CAST(s AS DOUBLE) / n AS mean_micro FROM cd),
-          dv AS (SELECT ex.label, ex.vec_id, ex.d0, cm.n,
-              (CAST(ex.vm AS DOUBLE) - cm.mean_micro) *
-                (CAST(ex.vm AS DOUBLE) - cm.mean_micro) AS dd
-            FROM ex JOIN cm ON cm.label = ex.label AND cm.d0 = ex.d0),
-          pv AS (SELECT label, vec_id, n,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(dd ORDER BY d0)), (x, y) -> x + y) AS ssd
-            FROM dv GROUP BY 1, 2, 3),
-          rk AS (SELECT *, row_number() OVER (PARTITION BY label
-              ORDER BY ssd DESC, vec_id) AS rank FROM pv)
-          SELECT label, vec_id, CAST(rank AS INTEGER) AS rank,
-            CAST(n AS BIGINT) AS n_label,
-            sqrt(ssd) / 1000000.0 AS centroid_dist
-          FROM rk WHERE rank <= $OutlierTopK ORDER BY label, rank""",
-    "q_schema_contract" -> {
-      val values = OrdersContract
-        .map { case (c, t) => s"('$c', '$t')" }.mkString(", ")
-      s"""WITH act AS (SELECT name AS col_name,
-            CASE WHEN lower(type) = 'varchar' THEN 'string'
-              -- DuckDB reports TIMESTAMP for both flavors; this
-              -- parquet is isAdjustedToUTC=false, which Spark
-              -- surfaces as timestamp_ntz
-              WHEN lower(type) = 'timestamp' THEN 'timestamp_ntz'
-              ELSE lower(type) END AS actual_type
-          FROM pragma_table_info('orders')),
-          exp AS (SELECT * FROM (VALUES $values)
-            AS t(col_name, expected_type))
-          SELECT coalesce(exp.col_name, act.col_name) AS col_name,
-            expected_type, actual_type,
-            CASE WHEN expected_type IS NULL THEN 'unexpected'
-              WHEN actual_type IS NULL THEN 'missing_in_actual'
-              WHEN expected_type <> actual_type THEN 'type_changed'
-              ELSE 'ok' END AS status
-          FROM exp FULL OUTER JOIN act USING (col_name)
-          ORDER BY col_name"""
-    },
-    "q_join_skew" ->
-      s"""WITH ca AS (SELECT l_partkey AS key, count(*) AS n_left
-            FROM lineitem GROUP BY 1),
-          cb AS (SELECT l_partkey AS key, count(*) AS n_right
-            FROM lineitem GROUP BY 1),
-          ct AS (SELECT ca.key, n_left, n_right,
-              CAST(n_left * n_right AS BIGINT) AS out_rows
-            FROM ca JOIN cb USING (key)),
-          tot AS (SELECT CAST(sum(out_rows) AS BIGINT) AS total_out,
-            count(*) AS n_join_keys FROM ct),
-          exc AS (SELECT CASE
-              WHEN (total_out + $JoinSkewTarget - 1) // $JoinSkewTarget <= 1
-                THEN 0
-              ELSE length(bin((total_out + $JoinSkewTarget - 1)
-                // $JoinSkewTarget - 1)) END AS e FROM tot)
-          SELECT key, n_left, n_right, out_rows, total_out, n_join_keys,
-            CAST(out_rows AS DOUBLE) / total_out AS share,
-            CAST(power(2, e) AS BIGINT) AS suggested_buckets
-          FROM ct CROSS JOIN tot CROSS JOIN exc
-          ORDER BY out_rows DESC, key LIMIT $JoinSkewTopK""",
-    "q_embed_quant" ->
-      s"""WITH h AS (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) = $EmbeddingDim
-              AND len(list_filter(embedding,
-                x -> isnan(x) OR isinf(x))) = 0),
-          dd AS (SELECT unnest(range(1, $EmbeddingDim + 1)) AS dim),
-          st AS (SELECT dim,
-              min(CAST(embedding[dim] AS DOUBLE)) AS lo,
-              max(CAST(embedding[dim] AS DOUBLE)) AS hi
-            FROM h CROSS JOIN dd GROUP BY dim),
-          m AS (SELECT list(lo ORDER BY dim) AS mins,
-              list(hi ORDER BY dim) AS maxs FROM st),
-          q AS (SELECT vec_id, embedding,
-              list_transform(range(1, $EmbeddingDim + 1), i ->
-                CASE WHEN maxs[i] - mins[i] = 0 THEN 0
-                ELSE CAST(floor((CAST(embedding[i] AS DOUBLE) - mins[i])
-                  / (maxs[i] - mins[i]) * 255 + 0.5) AS BIGINT) END)
-                AS codes
-            FROM h CROSS JOIN m),
-          r AS (SELECT vec_id, codes,
-              list_transform(range(1, $EmbeddingDim + 1), i ->
-                abs(CAST(embedding[i] AS DOUBLE) -
-                  CASE WHEN maxs[i] - mins[i] = 0 THEN mins[i]
-                  ELSE mins[i] + codes[i] / 255 * (maxs[i] - mins[i])
-                  END)) AS errs
-            FROM q CROSS JOIN m)
-          SELECT vec_id,
-            list_reduce(codes, (a, b) -> a + b) AS q_sum,
-            list_reduce(errs,
-              (a, b) -> CASE WHEN b > a THEN b ELSE a END) AS max_abs_err,
-            list_reduce(list_transform(errs, x -> x * x),
-              (a, b) -> a + b) AS sse
-          FROM r ORDER BY vec_id""",
-    "q_ann_sq" ->
-      s"""WITH h AS (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) = $EmbeddingDim
-              AND len(list_filter(embedding,
-                x -> isnan(x) OR isinf(x))) = 0),
-          dd AS (SELECT unnest(range(1, $EmbeddingDim + 1)) AS dim),
-          st AS (SELECT dim,
-              min(CAST(embedding[dim] AS DOUBLE)) AS lo,
-              max(CAST(embedding[dim] AS DOUBLE)) AS hi
-            FROM h CROSS JOIN dd GROUP BY dim),
-          m AS (SELECT list(lo ORDER BY dim) AS mins,
-              list(hi ORDER BY dim) AS maxs FROM st),
-          cd AS (SELECT vec_id,
-              list_transform(range(1, $EmbeddingDim + 1), i ->
-                CASE WHEN maxs[i] - mins[i] = 0 THEN 0
-                ELSE CAST(floor((CAST(embedding[i] AS DOUBLE) - mins[i])
-                  / (maxs[i] - mins[i]) * 255 + 0.5) AS BIGINT) END)
-                AS codes
-            FROM h CROSS JOIN m),
-          dq AS (SELECT vec_id,
-              list_transform(range(1, $EmbeddingDim + 1), i ->
-                CAST(CASE WHEN maxs[i] - mins[i] = 0 THEN mins[i]
-                ELSE mins[i] + codes[i] / 255 * (maxs[i] - mins[i]) END
-                AS FLOAT)) AS dqf
-            FROM cd CROSS JOIN m),
-          dn AS (SELECT vec_id, dqf,
-              sqrt(list_reduce(list_transform(dqf,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                (a, b) -> a + b)) AS dn
-            FROM dq),
-          dnn AS (SELECT * FROM dn WHERE dn <> 0),
-          qry AS (SELECT vec_id AS query_id, embedding AS qe
-            FROM h WHERE vec_id < 10),
-          qn AS (SELECT query_id, qe,
-              sqrt(list_reduce(list_transform(qe,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                (a, b) -> a + b)) AS qn
-            FROM qry),
-          qnn AS (SELECT * FROM qn WHERE qn <> 0),
-          s AS (SELECT query_id, d.vec_id AS neighbor_id,
-              list_reduce(list_transform(range(1, $EmbeddingDim + 1),
-                i -> CAST(qe[i] AS DOUBLE) * CAST(dqf[i] AS DOUBLE)),
-                (a, b) -> a + b) / (qn * dn) AS c
-            FROM qnn q CROSS JOIN dnn d WHERE q.query_id <> d.vec_id),
-          r AS (SELECT query_id, neighbor_id,
-              CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY c DESC, neighbor_id) AS INTEGER) AS "rank",
-              round(c, 6) AS cos FROM s)
-          SELECT query_id, neighbor_id, "rank", cos FROM r
-          WHERE "rank" <= 5 ORDER BY query_id, "rank"""",
-    "q_asof_join" ->
-      """WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            value FROM events WHERE event_type = 'purchase'),
-          x0 AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
-            row_number() OVER (PARTITION BY user_id, CAST(ts AS TIMESTAMP)
-              ORDER BY event_id DESC) AS rk
-            FROM events WHERE event_type <> 'purchase'),
-          x AS (SELECT user_id, ts, event_type FROM x0 WHERE rk = 1)
-          SELECT p.user_id, p.ts, p.event_id, p.value,
-            x.ts AS asof_ts, x.event_type AS asof_event_type,
-            epoch_us(p.ts) - epoch_us(x.ts) AS gap_us
-          FROM p ASOF LEFT JOIN x
-            ON p.user_id = x.user_id AND p.ts >= x.ts
-          ORDER BY p.user_id, p.ts, p.event_id""",
-    "q_rolling_daily" ->
-      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS date, event_type,
-            count(*) AS n_events, round(sum(value), 2) AS sum_value,
-            date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day_num
-          FROM events GROUP BY 1, 2, 5)
-          SELECT date, event_type, n_events, sum_value,
-            CAST(sum(n_events) OVER w AS BIGINT) AS n_events_7d,
-            round(sum(sum_value) OVER w, 2) AS sum_value_7d
-          FROM daily
-          WINDOW w AS (PARTITION BY event_type ORDER BY day_num
-            RANGE BETWEEN ${RollingDays - 1} PRECEDING AND CURRENT ROW)
-          ORDER BY date, event_type""",
-    "q_reach_rollup" ->
-      s"""WITH m AS (SELECT user_id AS household_id, event_type AS etype,
-            CAST(date_trunc('week', ts) AS DATE) AS week,
-            $ProjfactSql AS projfact FROM events)
-          SELECT coalesce(CAST(etype AS VARCHAR), 'all') AS etype,
-            coalesce(CAST(week AS VARCHAR), 'all') AS week,
-            count(*) AS exposures, round(sum(projfact)) AS proj_sum,
-            count(DISTINCT household_id) AS households,
-            CAST(GROUPING(etype) * 2 + GROUPING(week) AS INTEGER) AS lvl
-          FROM m GROUP BY ROLLUP (etype, week)
-          ORDER BY lvl, etype, week""",
-    "q_tfidf" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          e AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-          tf AS (SELECT doc_id, term, count(*) AS tf FROM e GROUP BY 1, 2),
-          dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
-          nd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs
-            FROM documents),
-          sc AS (SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-              tf.tf * (nd.n_docs / dfq.df) AS tfidf
-            FROM tf JOIN dfq USING (term) CROSS JOIN nd),
-          rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-              ORDER BY tfidf DESC, term) AS INTEGER) AS rk FROM sc)
-          SELECT doc_id, term, tf, df, tfidf, rk FROM rk
-          WHERE rk <= $TfidfPerDoc ORDER BY doc_id, rk""",
-    // tf replayed with the plain exploded GROUP BY (row-local vs
-    // shuffled formulations agree exactly); postings via the
-    // row_number window the heap aggregate replaces, same (tf desc,
-    // doc asc) tiebreak.
-    "q_inverted_index" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          e AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-          tf AS (SELECT doc_id, term, count(*) AS tf FROM e GROUP BY 1, 2),
-          r AS (SELECT *, row_number() OVER (PARTITION BY term
-              ORDER BY tf DESC, doc_id) AS rk FROM tf),
-          top AS (SELECT term, string_agg(doc_id || ':' || tf, ','
-              ORDER BY tf DESC, doc_id) AS top_postings
-            FROM r WHERE rk <= $IndexTopPostings GROUP BY term),
-          s AS (SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT)
-              AS total_tf
-            FROM tf GROUP BY term)
-          SELECT s.term, s.df, s.total_tf, top.top_postings
-          FROM s JOIN top USING (term)
-          WHERE s.df >= $IndexMinDf ORDER BY s.term""",
-    "q_lm_score" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          e AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-          tfreq AS (SELECT term, count(*) AS cnt FROM e GROUP BY 1),
-          tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM tfreq),
-          agg AS (SELECT e.doc_id, count(*) AS n_toks,
-              CAST(sum(tfreq.cnt) AS BIGINT) AS sum_cnt
-            FROM e JOIN tfreq USING (term) GROUP BY 1)
-          SELECT doc_id, n_toks, sum_cnt,
-            CAST(sum_cnt AS DOUBLE) / n_toks AS mean_term_freq,
-            CAST(sum_cnt AS DOUBLE) / (n_toks * total) AS typicality
-          FROM agg CROSS JOIN tot ORDER BY doc_id""",
-    // Planted PII mirrored verbatim from Privacy.plantPii; the three
-    // patterns are in the RE2 ∩ Java subset, so regexp_extract_all /
-    // regexp_replace('g') agree with Spark's regexp_count /
-    // regexp_replace match-for-match.
-    "q_pii_redact" ->
-      s"""WITH planted AS (SELECT doc_id,
-            CASE WHEN doc_id % ${Privacy.PlantEvery} = 0 THEN
-              text || ' Contact user' || doc_id ||
-              '@example.com or call 555-867-5309 from 10.' ||
-              (doc_id % 250) || '.0.1'
-            ELSE text END AS text
-          FROM documents),
-          c AS (SELECT doc_id,
-            CAST(len(regexp_extract_all(text, '${Privacy.EmailRe}')) AS BIGINT) AS n_email,
-            CAST(len(regexp_extract_all(text, '${Privacy.PhoneRe}')) AS BIGINT) AS n_phone,
-            CAST(len(regexp_extract_all(text, '${Privacy.Ipv4Re}')) AS BIGINT) AS n_ip,
-            regexp_replace(regexp_replace(regexp_replace(text,
-              '${Privacy.EmailRe}', '<EMAIL>', 'g'),
-              '${Privacy.PhoneRe}', '<PHONE>', 'g'),
-              '${Privacy.Ipv4Re}', '<IP>', 'g') AS redacted
-          FROM planted)
-          SELECT doc_id, n_email, n_phone, n_ip,
-            n_email + n_phone + n_ip AS pii_total, redacted
-          FROM c ORDER BY doc_id""",
-    // Planted boilerplate mirrored verbatim from TextAnalysis.plantNoise;
-    // patterns in the RE2 ∩ Java subset like the PII oracle above.
-    "q_text_clean" ->
-      s"""WITH planted AS (SELECT doc_id,
-            CASE WHEN doc_id % ${TextAnalysis.CleanPlantEvery} = 0 THEN
-              text || ' see https://ex' || doc_id ||
-              '.com/a?q=1  and <div class="x">tagged</div>  end'
-            ELSE text END AS text
-          FROM documents),
-          c AS (SELECT doc_id,
-            CAST(len(regexp_extract_all(text, '${TextAnalysis.UrlRe}')) AS BIGINT) AS url_count,
-            CAST(len(regexp_extract_all(text, '${TextAnalysis.TagRe}')) AS BIGINT) AS tag_count,
-            CAST(length(text) AS BIGINT) AS len_before,
-            trim(regexp_replace(regexp_replace(regexp_replace(text,
-              '${TextAnalysis.UrlRe}', ' ', 'g'),
-              '${TextAnalysis.TagRe}', ' ', 'g'),
-              '[ \t\n\r]+', ' ', 'g')) AS cleaned
-          FROM planted)
-          SELECT doc_id, url_count, tag_count, len_before,
-            CAST(length(cleaned) AS BIGINT) AS len_after, cleaned
-          FROM c ORDER BY doc_id""",
-    // chr(769) = U+0301 combining acute (decomposed), chr(233) = é
-    // composed; java.text.Normalizer NFC == DuckDB nfc_normalize
-    // (both implement the Unicode standard algorithm).
-    "q_unicode_norm" ->
-      s"""WITH planted AS (SELECT doc_id,
-            CASE WHEN doc_id % ${TextAnalysis.UnicodePlantMod} = 0 THEN
-              text || ' caf' || 'e' || chr(769)
-            WHEN doc_id % ${TextAnalysis.UnicodePlantMod} = 1 THEN
-              text || ' caf' || chr(233)
-            ELSE text END AS text FROM documents),
-          n AS (SELECT doc_id, text, nfc_normalize(text) AS nfc
-            FROM planted)
-          SELECT doc_id,
-            CASE WHEN text IS NULL THEN NULL
-                 WHEN text = nfc THEN 0 ELSE 1 END AS changed,
-            length(text) AS len_before, length(nfc) AS len_after,
-            md5(nfc) AS norm_fp
-          FROM n ORDER BY doc_id""",
-    // CDFs on the shared bucket grid via cumulative windows; D =
-    // max |F_src - F_rest| attained on bucket edges. DuckDB window
-    // sums widen to HUGEINT -> CAST before the double division.
-    "q_source_drift" ->
-      s"""WITH sb AS (SELECT source,
-            least(CAST(length(text) AS BIGINT) // 50, 40) AS bucket,
-            count(*) AS cnt FROM documents
-            WHERE text IS NOT NULL GROUP BY 1, 2),
-          g AS (SELECT bucket, CAST(sum(cnt) AS BIGINT) AS gcnt
-            FROM sb GROUP BY 1),
-          srcs AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS stot
-            FROM sb GROUP BY 1),
-          grid AS (SELECT s.source, s.stot, g.bucket, g.gcnt,
-            coalesce(sb.cnt, 0) AS cnt
-            FROM srcs s CROSS JOIN g LEFT JOIN sb
-            ON sb.source = s.source AND sb.bucket = g.bucket),
-          c AS (SELECT *,
-            sum(gcnt) OVER (PARTITION BY source) AS gtot,
-            sum(cnt) OVER (PARTITION BY source ORDER BY bucket
-              ROWS UNBOUNDED PRECEDING) AS scum,
-            sum(gcnt) OVER (PARTITION BY source ORDER BY bucket
-              ROWS UNBOUNDED PRECEDING) AS gcum
-            FROM grid),
-          t AS (SELECT source, stot,
-            abs(CAST(scum AS DOUBLE) / nullif(stot, 0) -
-              CAST(gcum - scum AS DOUBLE) / nullif(gtot - stot, 0))
-              AS term FROM c)
-          SELECT source, CAST(max(stot) AS BIGINT) AS n_docs,
-            max(term) AS ks_vs_rest
-          FROM t GROUP BY 1 ORDER BY 1""",
-    // Replays both passes: line document-frequency over distinct
-    // (doc, line) pairs, integer threshold line_df * 20 >= n_docs,
-    // then the row-local strip. list_filter + list_contains mirror
-    // the Spark higher-order filter; NULL text propagates NULL.
-    "q_boilerplate" ->
-      s"""WITH planted AS (SELECT doc_id, text ||
-            CASE WHEN doc_id % 3 = 0
-              THEN chr(10) || '${Curation.BoilerplateLine1}' ELSE '' END ||
-            CASE WHEN doc_id % 4 = 1
-              THEN chr(10) || '${Curation.BoilerplateLine2}' ELSE '' END
-            AS text FROM documents),
-          lines AS (SELECT DISTINCT doc_id,
-            unnest(string_split(text, chr(10))) AS line FROM planted),
-          ldf AS (SELECT line, count(*) AS line_df FROM lines GROUP BY line),
-          tot AS (SELECT count(*) AS n_total FROM planted),
-          freq AS (SELECT coalesce(list(line ORDER BY line), []) AS bp
-            FROM ldf, tot WHERE line_df * 20 >= n_total),
-          c AS (SELECT p.doc_id,
-            string_split(p.text, chr(10)) AS ls,
-            list_filter(string_split(p.text, chr(10)),
-              l -> NOT list_contains(f.bp, l)) AS keep
-            FROM planted p, freq f)
-          SELECT doc_id,
-            CAST(len(ls) AS INTEGER) AS n_lines,
-            CAST(len(ls) - len(keep) AS INTEGER) AS n_dropped,
-            array_to_string(keep, chr(10)) AS cleaned,
-            md5(array_to_string(keep, chr(10))) AS clean_fp
-          FROM c ORDER BY doc_id""",
-    "q_zorder" ->
-      s"""WITH base AS (SELECT
-            CAST(user_id % 1024 AS BIGINT) AS ux,
-            CAST((CAST(epoch(ts) AS BIGINT) // 3600) % 1024 AS BIGINT)
-              AS ty FROM events),
-          z AS (SELECT ux, ty,
-            (${spreadSql("ux")}) | ((${spreadSql("ty")}) << 1) AS zv
-            FROM base),
-          f AS (SELECT ux, ty, CAST(zv // 16384 AS INTEGER) AS file_id
-            FROM z)
-          SELECT file_id, count(*) AS n_rows,
-            min(ux) AS user_min, max(ux) AS user_max,
-            min(ty) AS time_min, max(ty) AS time_max,
-            (max(ux) - min(ux) + 1) / CAST(1024 AS DOUBLE) AS user_span_frac,
-            (max(ty) - min(ty) + 1) / CAST(1024 AS DOUBLE) AS time_span_frac
-          FROM f GROUP BY 1 ORDER BY 1""",
-    // Verified LSH pairs (shared MinhashVerCtes) classified by the
-    // same salted-hash split as q_split — both endpoints derive
-    // row-locally from the id, no join in either engine.
-    "q_split_leak" ->
-      s"""WITH $MinhashVerCtes,
-          sp AS (SELECT d1, d2,
-            CASE WHEN ('0x' || substr(md5(CAST(d1 AS VARCHAR) || ':split'), 1, 6))::BIGINT % $SampleBuckets < $SplitTrainBuckets THEN 'train'
-                 WHEN ('0x' || substr(md5(CAST(d1 AS VARCHAR) || ':split'), 1, 6))::BIGINT % $SampleBuckets < ${SplitTrainBuckets + SplitValBuckets} THEN 'val'
-                 ELSE 'test' END AS s1,
-            CASE WHEN ('0x' || substr(md5(CAST(d2 AS VARCHAR) || ':split'), 1, 6))::BIGINT % $SampleBuckets < $SplitTrainBuckets THEN 'train'
-                 WHEN ('0x' || substr(md5(CAST(d2 AS VARCHAR) || ':split'), 1, 6))::BIGINT % $SampleBuckets < ${SplitTrainBuckets + SplitValBuckets} THEN 'val'
-                 ELSE 'test' END AS s2
-            FROM ver),
-          x AS (SELECT least(s1, s2) AS split_a, greatest(s1, s2) AS split_b
-            FROM sp)
-          SELECT split_a, split_b, count(*) AS n_pairs,
-            CASE WHEN split_a <> split_b THEN 1 ELSE 0 END AS is_leak
-          FROM x GROUP BY 1, 2 ORDER BY 1, 2""",
-    // The oracle ranks with the plain single-window row_number the
-    // engine deliberately avoids — equality proves the bucketed
-    // offset+partitioned-window rank IS the global rank. // is
-    // integer division (rk and 16 are both BIGINT); engine sums stay
-    // BIGINT while DuckDB's widen to HUGEINT -> CAST back.
-    "q_shard_plan" ->
-      s"""WITH t AS (SELECT doc_id,
-            coalesce(len($ToksSql), 0) AS n_toks FROM documents),
-          r AS (SELECT doc_id, n_toks,
-            row_number() OVER (ORDER BY n_toks DESC, doc_id) - 1 AS rk
-            FROM t),
-          s AS (SELECT n_toks, CASE WHEN (rk // 16) % 2 = 0 THEN rk % 16
-            ELSE 15 - (rk % 16) END AS shard FROM r),
-          tot AS (SELECT CAST(sum(n_toks) AS BIGINT) AS tt FROM t)
-          SELECT CAST(shard AS INTEGER) AS shard, count(*) AS n_docs,
-            CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-            CAST(sum(n_toks) AS BIGINT) / tt AS token_share
-          FROM s, tot GROUP BY shard, tt ORDER BY shard""",
-    "q_range_join" ->
-      s"""WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id
-            FROM events WHERE event_type = 'purchase'),
-          x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-            FROM events WHERE event_type <> 'purchase')
-          SELECT p.user_id, p.ts, p.event_id,
-            count(x.ts) AS n_follow, round(sum(x.value), 2) AS follow_value
-          FROM p LEFT JOIN x ON p.user_id = x.user_id
-            AND x.ts >= p.ts AND x.ts <= p.ts + INTERVAL $AttribDays DAY
-          GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "q_dedup_bloom" ->
-      s"""WITH nw AS (SELECT doc_id, md5($NormSql) AS fp FROM documents
-            WHERE doc_id % $IncrementMod = $IncrementRem),
-          cf AS (SELECT md5($NormSql) AS fp, min(doc_id) AS rep_id
-            FROM documents WHERE doc_id % $IncrementMod <> $IncrementRem
-            GROUP BY 1)
-          SELECT nw.doc_id, cf.rep_id,
-            CASE WHEN cf.rep_id IS NULL THEN 0 ELSE 1 END AS is_dup
-          FROM nw LEFT JOIN cf ON nw.fp = cf.fp ORDER BY nw.doc_id""",
-    "q_qa_drift" ->
-      """WITH e AS (SELECT event_type,
-            date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS dn
-          FROM events),
-          b AS (SELECT event_type, count(*) AS n_base FROM e
-            WHERE dn % 2 = 0 GROUP BY 1),
-          c AS (SELECT event_type, count(*) AS n_cur FROM e
-            WHERE dn % 2 = 1 GROUP BY 1),
-          j AS (SELECT coalesce(b.event_type, c.event_type) AS event_type,
-              CAST(coalesce(n_base, 0) AS BIGINT) AS n_base,
-              CAST(coalesce(n_cur, 0) AS BIGINT) AS n_cur
-            FROM b FULL OUTER JOIN c ON b.event_type = c.event_type),
-          w AS (SELECT event_type, n_base, n_cur,
-              CAST(sum(n_base) OVER () AS BIGINT) AS tot_b,
-              CAST(sum(n_cur) OVER () AS BIGINT) AS tot_c FROM j),
-          s AS (SELECT event_type, n_base, n_cur,
-              CAST(n_base AS DOUBLE) / nullif(tot_b, 0) AS share_base,
-              CAST(n_cur AS DOUBLE) / nullif(tot_c, 0) AS share_cur
-            FROM w)
-          SELECT event_type, n_base, n_cur, share_base, share_cur,
-            share_cur - share_base AS share_delta,
-            (share_cur - share_base) * (share_cur - share_base) /
-              nullif(share_base, 0) AS chi2_term
-          FROM s ORDER BY event_type""",
-    "q_cohort" ->
-      s"""WITH s AS (SELECT user_id, CAST(date_trunc('week', ts) AS DATE)
-            AS week FROM events WHERE event_id % $CohortSliceMod = 0),
-          fu AS (SELECT user_id, min(week) AS cohort_week FROM s GROUP BY 1),
-          uw AS (SELECT DISTINCT s.user_id, fu.cohort_week, s.week
-            FROM s JOIN fu USING (user_id)),
-          m AS (SELECT cohort_week,
-              CAST(date_diff('day', cohort_week, week) / 7 AS INTEGER)
-                AS week_ix,
-              count(*) AS n_users FROM uw GROUP BY 1, 2),
-          z AS (SELECT cohort_week, week_ix, n_users,
-              max(CASE WHEN week_ix = 0 THEN n_users END)
-                OVER (PARTITION BY cohort_week) AS cohort_size FROM m)
-          SELECT cohort_week, week_ix, n_users, cohort_size,
-            CAST(n_users AS DOUBLE) / cohort_size AS retention
-          FROM z ORDER BY cohort_week, week_ix""",
-    // lag/lead windows replay the engine's row-local array-gap
-    // classification; churn lands on the first silent week, capped at
-    // the corpus max week. DuckDB date-date is integer days.
-    "q_lifecycle" ->
-      s"""WITH uw AS (SELECT DISTINCT user_id,
-            CAST(date_trunc('week', ts) AS DATE) AS week
-            FROM events WHERE event_id % $CohortSliceMod = 0),
-          mx AS (SELECT max(week) AS max_week FROM uw),
-          lagged AS (SELECT user_id, week,
-            lag(week) OVER (PARTITION BY user_id ORDER BY week) AS prev_w,
-            lead(week) OVER (PARTITION BY user_id ORDER BY week) AS next_w
-            FROM uw),
-          act AS (SELECT week,
-            CASE WHEN prev_w IS NULL THEN 'new'
-                 WHEN week - prev_w = 7 THEN 'retained'
-                 ELSE 'resurrected' END AS status FROM lagged),
-          churn AS (SELECT week + 7 AS week, 'churned' AS status
-            FROM lagged, mx
-            WHERE (next_w IS NULL OR next_w - week > 7)
-              AND week + 7 <= max_week),
-          allr AS (SELECT * FROM act UNION ALL SELECT * FROM churn)
-          SELECT week, status, count(*) AS n_users
-          FROM allr GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_funnel_steps" -> {
-      val src = s"SELECT user_id, ts, event_type FROM events " +
-        s"WHERE event_id % $FunnelSliceMod = 0"
-      val ctes = FunnelStages.zipWithIndex.map { case (st, i) =>
-        if (i == 0)
-          s"t0 AS (SELECT user_id, min(ts) AS ts FROM s " +
-            s"WHERE event_type = '$st' GROUP BY 1)"
-        else
-          s"t$i AS (SELECT s.user_id, min(s.ts) AS ts FROM s " +
-            s"JOIN t${i - 1} USING (user_id) WHERE s.event_type = '$st' " +
-            s"AND s.ts >= t${i - 1}.ts GROUP BY 1)"
-      }.mkString(",\n          ")
-      val stageRows = FunnelStages.zipWithIndex.map { case (st, i) =>
-        s"SELECT $i AS stage_ix, '$st' AS stage, count(*) AS n_users FROM t$i"
-      }.mkString("\n          UNION ALL ")
-      s"""WITH s AS ($src),
-          $ctes,
-          c AS ($stageRows)
-          SELECT stage_ix, stage, n_users,
-            CAST(n_users AS DOUBLE) /
-              nullif(lag(n_users) OVER (ORDER BY stage_ix), 0) AS pct_prev,
-            CAST(n_users AS DOUBLE) /
-              nullif(first_value(n_users) OVER (ORDER BY stage_ix
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)
-              AS pct_first
-          FROM c ORDER BY stage_ix"""
-    },
-    // The stage recurrence with the deadline: each stage's earliest
-    // event within gapUs of the previous completion; abandonment is
-    // the lag difference. Exact integer-microsecond compare.
-    "q_funnel_windowed" -> {
-      val src = s"SELECT user_id, ts, event_type FROM events " +
-        s"WHERE event_id % $FunnelSliceMod = 0"
-      val gapUs = FunnelWindowDays * 86400L * 1000000L
-      val ctes = FunnelStages.zipWithIndex.map { case (st, i) =>
-        if (i == 0)
-          s"t0 AS (SELECT user_id, min(ts) AS ts FROM s " +
-            s"WHERE event_type = '$st' GROUP BY 1)"
-        else
-          s"t$i AS (SELECT s.user_id, min(s.ts) AS ts FROM s " +
-            s"JOIN t${i - 1} USING (user_id) WHERE s.event_type = '$st' " +
-            s"AND s.ts >= t${i - 1}.ts " +
-            s"AND epoch_us(s.ts) - epoch_us(t${i - 1}.ts) <= $gapUs " +
-            s"GROUP BY 1)"
-      }.mkString(",\n          ")
-      val stageRows = FunnelStages.zipWithIndex.map { case (st, i) =>
-        s"SELECT $i AS stage_ix, '$st' AS stage, count(*) AS n_users FROM t$i"
-      }.mkString("\n          UNION ALL ")
-      s"""WITH s AS ($src),
-          $ctes,
-          c AS ($stageRows)
-          SELECT stage_ix, stage, n_users,
-            lag(n_users) OVER (ORDER BY stage_ix) - n_users
-              AS n_abandoned,
-            CAST(n_users AS DOUBLE) /
-              nullif(lag(n_users) OVER (ORDER BY stage_ix), 0) AS pct_prev
-          FROM c ORDER BY stage_ix"""
-    },
-    // Same stage CTEs as q_funnel_steps; per adjacent step the
-    // integer-microsecond latency distribution at dyadic quantiles —
-    // the eventGaps portability recipe.
-    "q_funnel_latency" -> {
-      val src = s"SELECT user_id, ts, event_type FROM events " +
-        s"WHERE event_id % $FunnelSliceMod = 0"
-      val ctes = FunnelStages.zipWithIndex.map { case (st, i) =>
-        if (i == 0)
-          s"t0 AS (SELECT user_id, min(ts) AS ts FROM s " +
-            s"WHERE event_type = '$st' GROUP BY 1)"
-        else
-          s"t$i AS (SELECT s.user_id, min(s.ts) AS ts FROM s " +
-            s"JOIN t${i - 1} USING (user_id) WHERE s.event_type = '$st' " +
-            s"AND s.ts >= t${i - 1}.ts GROUP BY 1)"
-      }.mkString(",\n          ")
-      val stepRows = FunnelStages.sliding(2).toSeq.zipWithIndex.map {
-        case (Seq(a, b), i) =>
-          s"""SELECT $i AS step_ix, '$a>$b' AS step,
-              epoch_us(t${i + 1}.ts) - epoch_us(t$i.ts) AS gap
-              FROM t${i + 1} JOIN t$i USING (user_id)"""
-      }.mkString("\n          UNION ALL ")
-      s"""WITH s AS ($src),
-          $ctes,
-          g AS ($stepRows),
-          q AS (SELECT step_ix, step, count(*) AS n_conv,
-            CAST(sum(gap) AS BIGINT) AS sum_gap,
-            quantile_cont(gap, [0.25, 0.5, 0.75]) AS ps
-            FROM g GROUP BY 1, 2)
-          SELECT step_ix, step, n_conv,
-            CAST(sum_gap AS DOUBLE) / n_conv / 1000000.0 AS mean_s,
-            ps[1] / 1000000.0 AS p25_s, ps[2] / 1000000.0 AS p50_s,
-            ps[3] / 1000000.0 AS p75_s
-          FROM q ORDER BY step_ix"""
-    },
-    // lead over (ts, event_id) — the unique id makes the successor
-    // deterministic; p is one bigint/bigint division.
-    "q_next_event" ->
-      """WITH p AS (SELECT event_type AS from_type,
-            lead(event_type) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id) AS to_type
-            FROM events),
-          c AS (SELECT from_type, to_type, count(*) AS n FROM p
-            WHERE to_type IS NOT NULL GROUP BY 1, 2),
-          t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS n_from
-            FROM c GROUP BY 1)
-          SELECT c.from_type, c.to_type, c.n,
-            CAST(c.n AS DOUBLE) / t.n_from AS p
-          FROM c JOIN t USING (from_type) ORDER BY 1, 2""",
-    // quantile_cont == Spark's exact percentile (same rank-(n-1)p
-    // interpolation); dyadic probabilities on integer grids are exact
-    // doubles, so the > threshold cuts agree bit-for-bit. Monetary
-    // sums integer cents; the one float division is per CELL.
-    "q_rfm" ->
-      """WITH u AS (SELECT user_id, max(CAST(ts AS DATE)) AS last_day,
-            count(*) AS freq,
-            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-              AS mon_cents
-            FROM events GROUP BY 1),
-          a AS (SELECT max(last_day) AS as_of FROM u),
-          ur AS (SELECT u.*,
-            CAST(date_diff('day', last_day, as_of) AS BIGINT) AS rec_days
-            FROM u CROSS JOIN a),
-          thr AS (SELECT
-            quantile_cont(rec_days, [0.25, 0.5, 0.75]) AS rq,
-            quantile_cont(freq, [0.25, 0.5, 0.75]) AS fq,
-            quantile_cont(mon_cents, [0.25, 0.5, 0.75]) AS mq FROM ur),
-          sc AS (SELECT mon_cents,
-            1 + CAST(rec_days > rq[1] AS INT) +
-              CAST(rec_days > rq[2] AS INT) +
-              CAST(rec_days > rq[3] AS INT) AS r_score,
-            1 + CAST(freq > fq[1] AS INT) + CAST(freq > fq[2] AS INT) +
-              CAST(freq > fq[3] AS INT) AS f_score,
-            1 + CAST(mon_cents > mq[1] AS INT) +
-              CAST(mon_cents > mq[2] AS INT) +
-              CAST(mon_cents > mq[3] AS INT) AS m_score
-            FROM ur CROSS JOIN thr)
-          SELECT r_score, f_score, m_score, count(*) AS n_users,
-            CAST(CAST(sum(mon_cents) AS BIGINT) AS DOUBLE) / count(*)
-              / 100.0 AS mean_spend
-          FROM sc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    // Integer moments, ONE final division each (the portability
-    // recipe); DuckDB sums BIGINT into HUGEINT -> CAST back.
-    "q_ewma_anomaly" ->
-      s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS date,
-            count(*) AS n_events FROM events GROUP BY 1, 2),
-          dd AS (SELECT *, CAST(date_diff('day', DATE '1970-01-01', date)
-            AS BIGINT) AS day_num FROM d),
-          j AS (SELECT a.event_type, a.date, a.n_events, a.day_num,
-              b.day_num AS p_day, b.n_events AS p_n
-            FROM dd a LEFT JOIN dd b ON a.event_type = b.event_type
-              AND a.day_num - b.day_num BETWEEN 1 AND $AnomalyDays),
-          jw AS (SELECT *, CAST(power(2, $AnomalyDays - (day_num - p_day))
-            AS BIGINT) AS w FROM j)
-          SELECT event_type, date, n_events,
-            count(p_day) AS base_days,
-            CAST(coalesce(sum(p_n * w), 0) AS DOUBLE) /
-              nullif(coalesce(sum(w), 0), 0) AS ewma,
-            (count(p_day) >= $AnomalyMinDays AND
-              n_events * coalesce(sum(w), 0) >
-                $AnomalyK * coalesce(sum(p_n * w), 0)) AS is_spike
-          FROM jw GROUP BY event_type, date, n_events, day_num
-          ORDER BY date, event_type""",
-    "q_theilsen_trend" ->
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            count(*) AS y FROM events GROUP BY 1, 2),
-          dd AS (SELECT *, CAST(date_diff('day', DATE '1970-01-01', day)
-            AS BIGINT) AS day_num FROM d),
-          p AS (SELECT a.event_type,
-              CAST(b.y - a.y AS DOUBLE) / (b.day_num - a.day_num) AS slope
-            FROM dd a JOIN dd b ON a.event_type = b.event_type
-              AND a.day_num < b.day_num),
-          nd AS (SELECT event_type, count(*) AS n_days FROM d GROUP BY 1)
-          SELECT p.event_type, nd.n_days, count(*) AS n_pairs,
-            quantile_cont(slope, 0.5) AS slope_per_day,
-            quantile_cont(slope, 0.5) > 0.0 AS rising
-          FROM p JOIN nd USING (event_type)
-          GROUP BY 1, 2 ORDER BY 1""",
-    "q_trend" ->
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            count(*) AS y FROM events GROUP BY 1, 2),
-          o AS (SELECT min(day) AS day0 FROM d),
-          x AS (SELECT event_type,
-            CAST(date_diff('day', day0, day) AS BIGINT) AS x, y
-            FROM d CROSS JOIN o),
-          m AS (SELECT event_type, count(*) AS n_days,
-            CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-            CAST(sum(x * y) AS BIGINT) AS sxy,
-            CAST(sum(x * x) AS BIGINT) AS sxx
-            FROM x GROUP BY 1),
-          s AS (SELECT *, CAST(n_days * sxy - sx * sy AS DOUBLE) /
-            nullif(n_days * sxx - sx * sx, 0) AS slope_per_day FROM m)
-          SELECT event_type, n_days, sy AS n_events, slope_per_day,
-            (CAST(sy AS DOUBLE) - slope_per_day * sx) / n_days AS intercept
-          FROM s ORDER BY 1""",
-    // Distinct (source, term) then a term-keyed self-join; union size
-    // by inclusion-exclusion, one bigint division per pair.
-    "q_source_overlap" ->
-      s"""WITH tk AS (SELECT source, $ToksSql AS toks FROM documents),
-          e AS (SELECT source, unnest(toks) AS term FROM tk),
-          st AS (SELECT DISTINCT source, term FROM e),
-          sz AS (SELECT source, count(*) AS vocab FROM st GROUP BY 1),
-          i AS (SELECT a.source AS source_a, b.source AS source_b,
-            count(*) AS n_shared
-            FROM st a JOIN st b ON a.term = b.term AND a.source < b.source
-            GROUP BY 1, 2)
-          SELECT source_a, source_b, sa.vocab AS vocab_a,
-            sb.vocab AS vocab_b, n_shared,
-            CAST(n_shared AS DOUBLE) /
-              (sa.vocab + sb.vocab - n_shared) AS jaccard
-          FROM i JOIN sz sa ON sa.source = i.source_a
-            JOIN sz sb ON sb.source = i.source_b
-          ORDER BY 1, 2""",
-    // Top-K + __other__ bucketed simplex; probabilities are single
-    // divisions of exact counts and the KL folds in bucket order.
-    "q_source_kl" ->
-      s"""WITH tk AS (SELECT source, $ToksSql AS toks FROM documents),
-          e AS (SELECT source, unnest(toks) AS term FROM tk),
-          tf AS (SELECT source, term, CAST(count(*) AS BIGINT) AS cnt
-            FROM e GROUP BY source, term),
-          corpus AS (SELECT term, CAST(sum(cnt) AS BIGINT) AS ct
-            FROM tf GROUP BY term),
-          tt AS (SELECT term FROM corpus
-            ORDER BY ct DESC, term LIMIT $KlTopTerms),
-          b AS (SELECT source,
-              CASE WHEN tt.term IS NOT NULL THEN tf.term
-                ELSE '__other__' END AS bucket, cnt
-            FROM tf LEFT JOIN tt ON tf.term = tt.term),
-          bk AS (SELECT source, bucket, CAST(sum(cnt) AS BIGINT) AS n_st
-            FROM b GROUP BY source, bucket),
-          bt AS (SELECT bucket, CAST(sum(n_st) AS BIGINT) AS n_t
-            FROM bk GROUP BY bucket),
-          btt AS (SELECT bucket, n_t,
-            CAST(sum(n_t) OVER () AS BIGINT) AS tot_c FROM bt),
-          j AS (SELECT source, bk.bucket, n_st,
-              CAST(sum(n_st) OVER (PARTITION BY source) AS BIGINT) AS tot_s,
-              n_t, tot_c
-            FROM bk JOIN btt ON bk.bucket = btt.bucket),
-          p AS (SELECT source, bucket, n_st,
-              CAST(n_st AS DOUBLE) / tot_s AS ps,
-              CAST(n_t AS DOUBLE) / tot_c AS pc
-            FROM j),
-          c AS (SELECT source, bucket, n_st, ps * ln(ps / pc) AS contrib
-            FROM p)
-          SELECT source, CAST(count(*) AS BIGINT) AS n_buckets,
-            CAST(sum(n_st) AS BIGINT) AS n_tokens,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(contrib ORDER BY bucket)), (x, y) -> x + y)
-              AS kl_vs_corpus
-          FROM c GROUP BY source ORDER BY source""",
-    // One (source, term) aggregate; ratios single divisions of exact
-    // bigint counts (count(*) FILTER = the engine's count(when)).
-    "q_ttr" ->
-      s"""WITH tk AS (SELECT source, $ToksSql AS toks FROM documents),
-          e AS (SELECT source, unnest(toks) AS term FROM tk),
-          tf AS (SELECT source, term, count(*) AS nn
-            FROM e GROUP BY source, term),
-          s AS (SELECT source, CAST(sum(nn) AS BIGINT) AS n_tokens,
-            CAST(count(*) AS BIGINT) AS n_types,
-            CAST(count(*) FILTER (WHERE nn = 1) AS BIGINT) AS n_hapax
-          FROM tf GROUP BY source)
-          SELECT source, n_tokens, n_types, n_hapax,
-            CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS ttr,
-            CAST(n_types AS DOUBLE) / sqrt(CAST(n_tokens AS DOUBLE))
-              AS guiraud_r,
-            CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE)
-              AS hapax_share
-          FROM s ORDER BY source""",
-    // Parallel-unnest adjacent pairs + unigram/total CTEs; PMI in the
-    // engine's left-assoc double order, micro-nat-quantized rank cut.
-    "q_pmi_bigrams" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          u AS (SELECT unnest(toks) AS term FROM t),
-          uni AS (SELECT term, CAST(count(*) AS BIGINT) AS n_term
-            FROM u GROUP BY 1),
-          tu AS (SELECT CAST(sum(n_term) AS BIGINT) AS nn FROM uni),
-          tp AS (SELECT CAST(sum(greatest(len(toks) - 1, 0)) AS BIGINT)
-            AS np FROM t),
-          p AS (SELECT
-            unnest(list_transform(range(1, len(toks)), i -> toks[i]))
-              AS t1,
-            unnest(list_transform(range(1, len(toks)), i -> toks[i + 1]))
-              AS t2
-          FROM t WHERE len(toks) >= 2),
-          co AS (SELECT t1, t2, CAST(count(*) AS BIGINT) AS n_pair
-            FROM p GROUP BY 1, 2 HAVING count(*) >= $PmiMinCount),
-          j AS (SELECT co.t1, co.t2, n_pair, a.n_term AS n_t1,
-            b.n_term AS n_t2, nn, np
-          FROM co JOIN uni a ON co.t1 = a.term
-          JOIN uni b ON co.t2 = b.term CROSS JOIN tu CROSS JOIN tp)
-          SELECT t1, t2, n_pair, n_t1, n_t2,
-            CAST(floor(ln((CAST(n_pair AS DOUBLE) * CAST(nn AS DOUBLE) *
-                CAST(nn AS DOUBLE)) /
-              (CAST(np AS DOUBLE) * CAST(n_t1 AS DOUBLE) *
-                CAST(n_t2 AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT)
-              AS pmi_micro
-          FROM j ORDER BY pmi_micro DESC, t1, t2 LIMIT $PmiTopN""",
-    // Per-source rank window + rank-ORDERED list folds (the B-point
-    // OLS discipline); nullif guards mirror the engine.
-    "q_zipf_by_source" ->
-      s"""WITH tk AS (SELECT source, $ToksSql AS toks FROM documents),
-          e AS (SELECT source, unnest(toks) AS term FROM tk),
-          f AS (SELECT source, term, CAST(count(*) AS BIGINT) AS n_occ
-            FROM e GROUP BY 1, 2),
-          nv AS (SELECT source, count(*) AS n_vocab FROM f GROUP BY 1),
-          r AS (SELECT source, term, n_occ, row_number() OVER (
-              PARTITION BY source ORDER BY n_occ DESC, term) AS rnk
-            FROM f),
-          p AS (SELECT source, rnk,
-            ln(CAST(rnk AS DOUBLE)) AS lx,
-            ln(CAST(n_occ AS DOUBLE)) AS ly
-          FROM r WHERE rnk <= $ZipfTopK),
-          m AS (SELECT source, count(*) AS k,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(lx ORDER BY rnk)), (x, y) -> x + y) AS sx,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(ly ORDER BY rnk)), (x, y) -> x + y) AS sy,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(lx * ly ORDER BY rnk)), (x, y) -> x + y) AS sxy,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(lx * lx ORDER BY rnk)), (x, y) -> x + y) AS sxx,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(ly * ly ORDER BY rnk)), (x, y) -> x + y) AS syy
-          FROM p GROUP BY 1)
-          SELECT m.source, n_vocab, k AS n_top_terms,
-            -(k * sxy - sx * sy) /
-              nullif(k * sxx - sx * sx, 0.0) AS zipf_alpha,
-            ((k * sxy - sx * sy) * (k * sxy - sx * sy)) /
-              nullif((k * sxx - sx * sx) * (k * syy - sy * sy), 0.0)
-              AS r2
-          FROM m JOIN nv ON m.source = nv.source
-          ORDER BY m.source""",
-    // Row-local first-k-token md5 + HAVING floor + deterministic
-    // (n_docs desc, fp) cut.
-    "q_prefix_templates" ->
-      s"""WITH t AS (SELECT doc_id, source, $ToksSql AS toks
-            FROM documents),
-          p AS (SELECT doc_id, source,
-            md5(array_to_string(list_slice(toks, 1, $PrefixK), ' '))
-              AS prefix_fp,
-            CAST(len(toks) AS BIGINT) AS n_toks
-          FROM t WHERE len(toks) > 0),
-          g AS (SELECT prefix_fp, count(*) AS n_docs,
-            CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-            CAST(sum(n_toks) AS BIGINT) AS total_tokens,
-            min(doc_id) AS example_doc
-          FROM p GROUP BY 1 HAVING count(*) >= $PrefixMinDocs)
-          SELECT prefix_fp, n_docs, n_sources, total_tokens, example_doc
-          FROM g ORDER BY n_docs DESC, prefix_fp LIMIT $PrefixTopN""",
-    // Id-grid bucket CTE (min/max via scalar CTE = the collected
-    // literals) + grid-window shares; drift recomputes the same
-    // expressions, so the doubles match the engine's reuse.
-    "q_ingest_mix" ->
-      s"""WITH ids AS (SELECT min(doc_id) AS mn, max(doc_id) AS mx
-            FROM documents),
-          b AS (SELECT ((doc_id - mn) * $IngestBuckets) //
-              (mx - mn + 1) + 1 AS bucket, source
-            FROM documents, ids),
-          g AS (SELECT bucket, source, count(*) AS n_docs
-            FROM b GROUP BY 1, 2)
-          SELECT bucket, source, n_docs,
-            CAST(n_docs AS DOUBLE) /
-              sum(n_docs) OVER (PARTITION BY bucket) AS bucket_share,
-            CAST(sum(n_docs) OVER (PARTITION BY source) AS DOUBLE) /
-              sum(n_docs) OVER () AS overall_share,
-            CAST(n_docs AS DOUBLE) /
-              sum(n_docs) OVER (PARTITION BY bucket) -
-              CAST(sum(n_docs) OVER (PARTITION BY source) AS DOUBLE) /
-                sum(n_docs) OVER () AS drift
-          FROM g ORDER BY bucket, source""",
-    // Fingerprint-window dup flags (q_dedup_exact contract) rolled to
-    // source grain in docs AND tokens; guarded pct division.
-    "q_dedup_savings" ->
-      s"""WITH f AS (SELECT source, doc_id, md5($NormSql) AS fp,
-            len($ToksSql) AS n_toks FROM documents),
-          s AS (SELECT source, n_toks, CASE WHEN doc_id <>
-              min(doc_id) OVER (PARTITION BY fp) THEN 1 ELSE 0 END
-            AS dup FROM f)
-          SELECT source, count(*) AS n_docs,
-            CAST(count(*) FILTER (WHERE dup = 1) AS BIGINT) AS n_dupes,
-            CAST(sum(n_toks) AS BIGINT) AS tokens_total,
-            CAST(sum(CASE WHEN dup = 1 THEN n_toks ELSE 0 END)
-              AS BIGINT) AS tokens_dropped,
-            CAST(sum(CASE WHEN dup = 1 THEN n_toks ELSE 0 END)
-                AS DOUBLE) /
-              CAST(greatest(sum(n_toks), 1) AS DOUBLE)
-              AS pct_tokens_dropped
-          FROM s GROUP BY source ORDER BY source""",
-    // Per-doc term-ordered n·ln n fold → fixed-shape H → micro-nat
-    // quantization; source rollup is exact bigint sums.
-    "q_entropy" ->
-      s"""WITH tk AS (SELECT source, doc_id, $ToksSql AS toks
-            FROM documents),
-          e AS (SELECT source, doc_id, unnest(toks) AS term FROM tk),
-          tf AS (SELECT source, doc_id, term, count(*) AS nn
-            FROM e GROUP BY 1, 2, 3),
-          c AS (SELECT source, doc_id, term, nn,
-            CAST(nn AS DOUBLE) * ln(CAST(nn AS DOUBLE)) AS contrib
-          FROM tf),
-          d AS (SELECT source, doc_id, CAST(sum(nn) AS BIGINT) AS n_toks,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(contrib ORDER BY term)), (x, y) -> x + y) AS nlogn
-          FROM c GROUP BY 1, 2),
-          h AS (SELECT source, CAST(floor((ln(CAST(n_toks AS DOUBLE)) -
-              nlogn / CAST(n_toks AS DOUBLE)) * 1000000.0 + 0.5)
-              AS BIGINT) AS hq
-          FROM d)
-          SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-            CAST(sum(hq) AS DOUBLE) / count(*) / 1000000.0
-              AS mean_entropy,
-            CAST(min(hq) AS DOUBLE) / 1000000.0 AS min_entropy,
-            CAST(max(hq) AS DOUBLE) / 1000000.0 AS max_entropy
-          FROM h GROUP BY source ORDER BY source""",
-    // Row-local integer counts → fixed-shape IEEE Flesch score →
-    // banding CASE; the aggregate is a (source, band) grid count.
-    "q_readability" ->
-      s"""WITH d AS (SELECT source,
-            len($ToksSql) AS words,
-            greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS sents,
-            len(regexp_extract_all(lower(text), '[aeiouy]+')) AS sylls
-          FROM documents),
-          b AS (SELECT source, CASE WHEN words = 0 THEN 'unscorable'
-              WHEN 206.835 - 1.015 * (CAST(words AS DOUBLE) /
-                  CAST(sents AS DOUBLE)) -
-                84.6 * (CAST(sylls AS DOUBLE) / CAST(words AS DOUBLE))
-                >= 70.0 THEN 'easy'
-              WHEN 206.835 - 1.015 * (CAST(words AS DOUBLE) /
-                  CAST(sents AS DOUBLE)) -
-                84.6 * (CAST(sylls AS DOUBLE) / CAST(words AS DOUBLE))
-                >= 50.0 THEN 'standard'
-              WHEN 206.835 - 1.015 * (CAST(words AS DOUBLE) /
-                  CAST(sents AS DOUBLE)) -
-                84.6 * (CAST(sylls AS DOUBLE) / CAST(words AS DOUBLE))
-                >= 30.0 THEN 'difficult'
-              ELSE 'very_difficult' END AS band
-          FROM d),
-          g AS (SELECT source, band, count(*) AS n_docs
-            FROM b GROUP BY source, band)
-          SELECT source, band, n_docs,
-            CAST(n_docs AS DOUBLE) /
-              sum(n_docs) OVER (PARTITION BY source) AS share
-          FROM g ORDER BY source, band""",
-    // Same session CTEs as q_sessionize, carrying event_type; the
-    // ordered list slice is the path prefix, share one bigint division.
-    "q_session_paths" ->
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-            event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          s AS (SELECT *, CASE WHEN lag(tu) OVER w IS NULL
-              OR tu - lag(tu) OVER w > ${SessionGapMin * 60L * 1000000L}
-              THEN 1 ELSE 0 END AS new_sess
-            FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          x AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS session_ix FROM s),
-          p AS (SELECT user_id, session_ix,
-            array_to_string(list(event_type ORDER BY ts, event_id)
-              [1:$PathMaxLen], '>') AS path
-            FROM x GROUP BY 1, 2),
-          t AS (SELECT count(*) AS n_sessions FROM p),
-          c AS (SELECT path, count(*) AS n FROM p GROUP BY 1)
-          SELECT path, n, CAST(n AS DOUBLE) / t.n_sessions AS share
-          FROM c CROSS JOIN t ORDER BY n DESC, path LIMIT $PathTopN""",
-    // Integer micro-cent credits (cents*1e6 // n) are summation-order
-    // exact; the one display division closes the query on both sides.
-    "q_attribution" ->
-      s"""WITH p AS (SELECT user_id, ts AS end_ts,
-            ts - INTERVAL $AttribDays DAYS AS start_ts,
-            event_id AS purchase_id,
-            CAST(round(value * 100) AS BIGINT) AS cents
-            FROM events WHERE event_type = 'purchase'),
-          x AS (SELECT user_id, ts, event_type AS channel FROM events
-            WHERE event_type <> 'purchase'),
-          pc AS (SELECT purchase_id, cents, channel, count(*) AS k
-            FROM p JOIN x ON x.user_id = p.user_id
-              AND x.ts >= p.start_ts AND x.ts < p.end_ts
-            GROUP BY 1, 2, 3),
-          pn AS (SELECT *, CAST(sum(k) OVER (PARTITION BY purchase_id)
-              AS BIGINT) AS n FROM pc),
-          cr AS (SELECT channel, k, (cents * 1000000) // n * k AS credit
-              FROM pn
-            UNION ALL
-            SELECT '(none)', 1, cents * 1000000 FROM p
-              WHERE purchase_id NOT IN (SELECT purchase_id FROM pc))
-          SELECT channel, CAST(sum(k) AS BIGINT) AS n_credits,
-            CAST(CAST(sum(credit) AS BIGINT) AS DOUBLE) / 100000000.0
-              AS credited_value
-          FROM cr GROUP BY 1 ORDER BY 1""",
-    // Same pairing as q_attribution; pos=1 / pos=n pick the first and
-    // last touch (ts, touch_id order = the engine's struct min/max),
-    // full cents credited to each, (none) rows feed both accountings.
-    "q_attribution_fl" ->
-      s"""WITH p AS (SELECT user_id, ts AS end_ts,
-            ts - INTERVAL $AttribDays DAYS AS start_ts,
-            event_id AS purchase_id,
-            CAST(round(value * 100) AS BIGINT) AS cents
-            FROM events WHERE event_type = 'purchase'),
-          x AS (SELECT user_id, ts, event_id AS touch_id,
-            event_type AS channel FROM events
-            WHERE event_type <> 'purchase'),
-          pc AS (SELECT purchase_id, cents, channel,
-              row_number() OVER (PARTITION BY purchase_id
-                ORDER BY x.ts, touch_id) AS pos,
-              count(*) OVER (PARTITION BY purchase_id) AS n
-            FROM p JOIN x ON x.user_id = p.user_id
-              AND x.ts >= p.start_ts AND x.ts < p.end_ts),
-          fr AS (SELECT channel, 1 AS nf, cents AS vf, 0 AS nl,
-              0 AS vl FROM pc WHERE pos = 1
-            UNION ALL SELECT channel, 0, 0, 1, cents
-              FROM pc WHERE pos = n
-            UNION ALL SELECT '(none)', 1, cents, 1, cents FROM p
-              WHERE purchase_id NOT IN (SELECT purchase_id FROM pc))
-          SELECT channel, CAST(sum(nf) AS BIGINT) AS n_first,
-            CAST(CAST(sum(vf) AS BIGINT) AS DOUBLE) / 100.0
-              AS first_value,
-            CAST(sum(nl) AS BIGINT) AS n_last,
-            CAST(CAST(sum(vl) AS BIGINT) AS DOUBLE) / 100.0
-              AS last_value
-          FROM fr GROUP BY channel ORDER BY channel""",
-    // The q_event_gaps gap CTE feeding exact HUGEINT moments;
-    // B = (sqrt(D) - S1)/(sqrt(D) + S1), D = n*S2 - S1^2 — the 1/n in
-    // sigma and mu cancels, so only exact integers reach the doubles.
-    "q_burstiness" ->
-      """WITH e AS (SELECT event_type, user_id, CAST(ts AS TIMESTAMP) AS ts,
-            event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS tu FROM events),
-          g AS (SELECT event_type, tu - lag(tu) OVER (
-              PARTITION BY user_id, event_type ORDER BY ts, event_id)
-              AS gap FROM e),
-          f AS (SELECT event_type, CAST(gap AS HUGEINT) AS gap
-            FROM g WHERE gap IS NOT NULL),
-          m AS (SELECT event_type, count(*) AS nn,
-            sum(gap) AS s1, sum(gap * gap) AS s2
-          FROM f GROUP BY event_type)
-          SELECT event_type, CAST(nn AS BIGINT) AS n_gaps,
-            CAST(s1 AS DOUBLE) / CAST(nn AS DOUBLE) / 1000000.0
-              AS mean_gap_s,
-            (sqrt(CAST(nn * s2 - s1 * s1 AS DOUBLE)) - CAST(s1 AS DOUBLE))
-              / nullif(sqrt(CAST(nn * s2 - s1 * s1 AS DOUBLE))
-                + CAST(s1 AS DOUBLE), 0.0) AS burstiness
-          FROM m ORDER BY event_type""",
-    // Part-grain cent revenue, cumulative window in (rev desc, key)
-    // order, integer cross-multiplied class cuts, 3-row grid shares.
-    "q_abc_analysis" ->
-      """WITH pr AS (SELECT l_partkey,
-            CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-              AS BIGINT)) AS BIGINT) AS rev_c
-            FROM lineitem GROUP BY l_partkey),
-          cum AS (SELECT rev_c,
-            CAST(sum(rev_c) OVER (ORDER BY rev_c DESC, l_partkey
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_c,
-            CAST(sum(rev_c) OVER () AS BIGINT) AS tot_c FROM pr),
-          cl AS (SELECT CASE WHEN cum_c * 5 <= tot_c * 4 THEN 'A'
-              WHEN cum_c * 20 <= tot_c * 19 THEN 'B'
-              ELSE 'C' END AS abc_class, rev_c FROM cum),
-          gr AS (SELECT abc_class, count(*) AS n_parts,
-            CAST(sum(rev_c) AS BIGINT) AS cls_c
-          FROM cl GROUP BY abc_class)
-          SELECT abc_class, n_parts,
-            CAST(cls_c AS DOUBLE) / 100.0 AS revenue,
-            CAST(cls_c AS DOUBLE) / CAST(sum(cls_c) OVER () AS DOUBLE)
-              AS revenue_share,
-            CAST(n_parts AS DOUBLE) / CAST(sum(n_parts) OVER () AS DOUBLE)
-              AS part_share
-          FROM gr ORDER BY abc_class""",
-    // The q_triangles support-filtered edge CTE; endpoint degrees join
-    // back on, five HUGEINT moments, Newman r off exact integers.
-    "q_assortativity" ->
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS okey,
-            l_partkey AS part FROM lineitem),
-          pr AS (SELECT a.part AS pa, b.part AS pb
-            FROM op a JOIN op b ON a.okey = b.okey AND a.part < b.part
-            GROUP BY 1, 2 HAVING count(*) >= $TriangleMinSupport),
-          e AS (SELECT pa AS src, pb AS dst FROM pr
-            UNION ALL SELECT pb, pa FROM pr),
-          deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-            FROM e GROUP BY 1),
-          dd AS (SELECT CAST(d1.deg AS HUGEINT) AS x,
-              CAST(d2.deg AS HUGEINT) AS y
-            FROM e JOIN deg d1 ON e.src = d1.src
-            JOIN deg d2 ON e.dst = d2.src),
-          m AS (SELECT CAST(count(*) AS HUGEINT) AS m2,
-            sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-            sum(x * x) AS sxx, sum(y * y) AS syy FROM dd),
-          n AS (SELECT count(*) AS n_nodes FROM deg)
-          SELECT CAST(n.n_nodes AS BIGINT) AS n_nodes,
-            CAST(m.m2 // 2 AS BIGINT) AS n_edges,
-            CAST(m.m2 * m.sxy - m.sx * m.sy AS DOUBLE) /
-              nullif(sqrt(CAST(m.m2 * m.sxx - m.sx * m.sx AS DOUBLE) *
-                CAST(m.m2 * m.syy - m.sy * m.sy AS DOUBLE)), 0.0)
-              AS assortativity
-          FROM m CROSS JOIN n""",
-    // Source-grain HUGEINT moments join back on the doc grain; the
-    // 3-sigma cut is (n*x - S1)^2 > 9*(n*S2 - S1^2), no doubles.
-    "q_length_outliers" ->
-      """WITH m AS (SELECT source, count(*) AS nn,
-            sum(CAST(n_chars AS HUGEINT)) AS s1,
-            sum(CAST(n_chars AS HUGEINT) * n_chars) AS s2
-          FROM documents GROUP BY source)
-          SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-            CAST(count(*) FILTER (WHERE
-              (m.nn * d.n_chars - m.s1) * (m.nn * d.n_chars - m.s1) >
-              9 * (m.nn * m.s2 - m.s1 * m.s1)) AS BIGINT) AS n_outliers,
-            CAST(count(*) FILTER (WHERE
-              (m.nn * d.n_chars - m.s1) * (m.nn * d.n_chars - m.s1) >
-              9 * (m.nn * m.s2 - m.s1 * m.s1)) AS DOUBLE) / count(*)
-              AS outlier_share,
-            CAST(min(m.s1) AS DOUBLE) / CAST(min(m.nn) AS DOUBLE)
-              AS mean_chars,
-            CAST(max(d.n_chars) AS BIGINT) AS max_chars
-          FROM documents d JOIN m ON d.source = m.source
-          GROUP BY d.source ORDER BY d.source""",
-    // The q_vocab top-N cut as a membership set; OOV mass and types
-    // ride the (source, term) grain, shares single bigint divisions.
-    "q_oov_rate" ->
-      s"""WITH tk AS (SELECT source, $ToksSql AS toks FROM documents),
-          e AS (SELECT source, unnest(toks) AS term FROM tk),
-          tf AS (SELECT source, term, CAST(count(*) AS BIGINT) AS cnt
-            FROM e GROUP BY source, term),
-          corpus AS (SELECT term, CAST(sum(cnt) AS BIGINT) AS ct
-            FROM tf GROUP BY term),
-          tt AS (SELECT term FROM corpus
-            ORDER BY ct DESC, term LIMIT $VocabTopN),
-          j AS (SELECT tf.source, tf.cnt, tt.term AS hit
-            FROM tf LEFT JOIN tt ON tf.term = tt.term)
-          SELECT source, CAST(sum(cnt) AS BIGINT) AS n_tokens,
-            CAST(coalesce(sum(cnt) FILTER (WHERE hit IS NULL), 0)
-              AS BIGINT) AS oov_tokens,
-            CAST(coalesce(sum(cnt) FILTER (WHERE hit IS NULL), 0)
-              AS DOUBLE) / CAST(sum(cnt) AS DOUBLE) AS oov_share,
-            CAST(count(*) AS BIGINT) AS n_types,
-            CAST(count(*) FILTER (WHERE hit IS NULL) AS BIGINT)
-              AS oov_types,
-            CAST(count(*) FILTER (WHERE hit IS NULL) AS DOUBLE) /
-              count(*) AS oov_type_share
-          FROM j GROUP BY source ORDER BY source""",
-    // The q_bpe_pairs bigram CTE; rank/cumsum windows over the top
-    // max(k) rows only, each checkpoint reads the cum at its rank.
-    "q_ngram_coverage" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          p AS (SELECT unnest(CASE WHEN len(toks) >= 2 THEN
-              list_transform(range(1, len(toks)),
-                i -> toks[i] || ' ' || toks[i + 1])
-            ELSE CAST([] AS VARCHAR[]) END) AS pair FROM t),
-          c AS (SELECT pair, CAST(count(*) AS BIGINT) AS nn
-            FROM p GROUP BY pair),
-          tot AS (SELECT CAST(sum(nn) AS BIGINT) AS total_occ FROM c),
-          r AS (SELECT nn, row_number()
-              OVER (ORDER BY nn DESC, pair) AS rk FROM c),
-          cumt AS (SELECT CAST(rk AS BIGINT) AS rk,
-            CAST(sum(nn) OVER (ORDER BY rk
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum
-            FROM r WHERE rk <= ${CoverageKs.max}),
-          ks AS (SELECT CAST(unnest([${CoverageKs.mkString(", ")}])
-            AS BIGINT) AS k)
-          SELECT k, max(rk) AS n_ngrams, max(cum) AS covered_occ,
-            tot.total_occ,
-            CAST(max(cum) AS DOUBLE) / CAST(tot.total_occ AS DOUBLE)
-              AS coverage
-          FROM ks JOIN cumt ON cumt.rk <= ks.k CROSS JOIN tot
-          GROUP BY k, tot.total_occ ORDER BY k""",
-    // The q_next_event pair CTE; H = ln N - (sum n ln n)/N folded in
-    // to_type order (the token-entropy discipline), CASE-normalized.
-    "q_transition_entropy" ->
-      """WITH p AS (SELECT event_type AS from_type,
-            lead(event_type) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id) AS to_type
-            FROM events),
-          c AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-            FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2),
-          d AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS n_transitions,
-            CAST(count(*) AS BIGINT) AS n_to_types,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(CAST(n AS DOUBLE) * ln(CAST(n AS DOUBLE))
-                ORDER BY to_type)), (x, y) -> x + y) AS nlogn
-          FROM c GROUP BY from_type),
-          h AS (SELECT from_type, n_transitions, n_to_types,
-            ln(CAST(n_transitions AS DOUBLE)) -
-              nlogn / CAST(n_transitions AS DOUBLE) AS entropy_nats
-          FROM d)
-          SELECT from_type, n_transitions, n_to_types, entropy_nats,
-            CASE WHEN n_to_types > 1 THEN entropy_nats /
-              ln(CAST(n_to_types AS DOUBLE)) ELSE 0.0 END AS entropy_norm
-          FROM h ORDER BY from_type""",
-    // User-grain count/cents aggregate, the ltv-decile ntile order
-    // (count DESC, user_id), grid windows for the three shares.
-    "q_user_concentration" ->
-      """WITH u AS (SELECT user_id, count(*) AS n_ev,
-            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-              AS cents
-            FROM events GROUP BY user_id),
-          t AS (SELECT *, ntile(10)
-            OVER (ORDER BY n_ev DESC, user_id) AS decile FROM u),
-          g AS (SELECT CAST(decile AS BIGINT) AS decile,
-            count(*) AS n_users, CAST(sum(n_ev) AS BIGINT) AS n_events,
-            CAST(sum(cents) AS BIGINT) AS dec_cents
-          FROM t GROUP BY decile)
-          SELECT decile, n_users, n_events,
-            CAST(n_events AS DOUBLE) / CAST(sum(n_events) OVER ()
-              AS DOUBLE) AS event_share,
-            CAST(sum(n_events) OVER (ORDER BY decile
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS DOUBLE) / CAST(sum(n_events) OVER () AS DOUBLE)
-              AS cum_event_share,
-            CAST(dec_cents AS DOUBLE) / 100.0 AS event_value,
-            CAST(dec_cents AS DOUBLE) / CAST(sum(dec_cents) OVER ()
-              AS DOUBLE) AS value_share
-          FROM g ORDER BY decile""",
-    // The q_active_users contribute-forward expansion at 30 days plus
-    // the ratio — only days with their own activity publish.
-    "q_stickiness" ->
-      s"""WITH uw AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-            FROM events),
-          dau AS (SELECT day, count(*) AS dau FROM uw GROUP BY 1),
-          ex AS (SELECT DISTINCT user_id, day + CAST(x AS INTEGER) AS day2
-            FROM uw, range(0, $StickinessDays) t(x)),
-          mau AS (SELECT day2 AS day, count(*) AS mau FROM ex GROUP BY 1)
-          SELECT d.day, d.dau, m.mau,
-            CAST(d.dau AS DOUBLE) / m.mau AS stickiness
-          FROM dau d JOIN mau m USING (day) ORDER BY day""",
-    // The jaccard index's df histogram on magnitude buckets, plus the
-    // dfCapCtes cap rule recomputed in-query — the derivation itself
-    // is hash-gated.
-    "q_shingle_stats" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          t AS (SELECT doc_id, $ShinglesSql AS sh FROM tk),
-          e0 AS (SELECT doc_id, unnest(sh) AS s FROM t),
-          dfs AS (SELECT s, CAST(count(*) AS BIGINT) AS df
-            FROM e0 GROUP BY s),
-          hist AS (SELECT df, count(*) AS cnt FROM dfs GROUP BY df),
-          pv AS (SELECT df, sum(cnt * (df * (df - 1) // 2))
-              OVER (ORDER BY df) AS pv FROM hist),
-          cap AS (SELECT CAST(greatest(${NearDup.DfCapFloor}, coalesce(
-              max(df) FILTER (WHERE pv <= ${NearDup.DfPairBudget}),
-              ${NearDup.DfCapFloor})) AS BIGINT) AS df_cap FROM pv)
-          SELECT CAST(length(CAST(df AS VARCHAR)) AS BIGINT) AS df_digits,
-            count(*) AS n_shingles, min(df) AS min_df, max(df) AS max_df,
-            CAST(sum(df) AS BIGINT) AS sum_postings,
-            CAST(sum(df * (df - 1) // 2) AS BIGINT) AS pair_volume,
-            cap.df_cap
-          FROM dfs CROSS JOIN cap GROUP BY df_digits, cap.df_cap
-          ORDER BY df_digits""",
-    // Integer-cent unit price via integer division, part-grain range,
-    // (max-min)*10 > min cross-multiplied dispersion cut.
-    "q_price_dispersion" ->
-      """WITH u AS (SELECT l_partkey,
-            CAST(round(l_extendedprice * 100) AS BIGINT) //
-              CAST(l_quantity AS BIGINT) AS unit_c
-          FROM lineitem),
-          p AS (SELECT l_partkey, min(unit_c) AS min_c,
-            max(unit_c) AS max_c FROM u GROUP BY l_partkey),
-          j AS (SELECT p_brand, min_c, max_c
-            FROM p JOIN part ON l_partkey = p_partkey)
-          SELECT p_brand, CAST(count(*) AS BIGINT) AS n_parts,
-            CAST(count(*) FILTER (WHERE (max_c - min_c) * 10 > min_c)
-              AS BIGINT) AS n_dispersed,
-            CAST(count(*) FILTER (WHERE (max_c - min_c) * 10 > min_c)
-              AS DOUBLE) / count(*) AS dispersed_share,
-            CAST(sum(max_c - min_c) AS DOUBLE) / count(*) / 100.0
-              AS mean_range
-          FROM j GROUP BY p_brand ORDER BY p_brand""",
-    // Part-grain revenue LEFT-joined from the catalog side so
-    // never-ordered parts survive; brand-grid ratios.
-    "q_catalog_coverage" ->
-      """WITH s AS (SELECT l_partkey,
-            CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-              AS BIGINT)) AS BIGINT) AS rev_c
-          FROM lineitem GROUP BY l_partkey)
-          SELECT p_brand, CAST(count(*) AS BIGINT) AS n_parts,
-            CAST(count(rev_c) AS BIGINT) AS n_sellers,
-            CAST(count(rev_c) AS DOUBLE) / count(*) AS coverage,
-            CAST(coalesce(sum(rev_c), 0) AS DOUBLE) / 100.0 AS revenue,
-            CAST(coalesce(sum(rev_c), 0) AS DOUBLE) /
-              nullif(CAST(count(rev_c) AS DOUBLE), 0.0) / 100.0
-              AS revenue_per_seller
-          FROM part LEFT JOIN s ON p_partkey = l_partkey
-          GROUP BY p_brand ORDER BY p_brand""",
-    // Daily grid, isodow groups, eta^2 off exact integer moments with
-    // the between-group fold in weekday order (list_reduce).
-    "q_weekday_anova" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(count(*) AS BIGINT) AS nd FROM events GROUP BY 1, 2),
-          wd AS (SELECT event_type, CAST(isodow(day) AS INTEGER) AS dow,
-            CAST(sum(nd) AS BIGINT) AS tg, CAST(count(*) AS BIGINT) AS kg
-          FROM daily GROUP BY 1, 2),
-          g AS (SELECT event_type,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(CAST(tg AS DOUBLE) * CAST(tg AS DOUBLE) /
-                CAST(kg AS DOUBLE) ORDER BY dow)),
-              (x, y) -> x + y) AS ssb_raw
-          FROM wd GROUP BY event_type),
-          m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-            CAST(sum(nd) AS BIGINT) AS tt,
-            sum(CAST(nd AS HUGEINT) * nd) AS s2
-          FROM daily GROUP BY event_type)
-          SELECT g.event_type, m.n_days,
-            (g.ssb_raw - CAST(m.tt AS DOUBLE) * CAST(m.tt AS DOUBLE) /
-              CAST(m.n_days AS DOUBLE)) /
-            nullif(CAST(m.s2 AS DOUBLE) -
-              CAST(m.tt AS DOUBLE) * CAST(m.tt AS DOUBLE) /
-              CAST(m.n_days AS DOUBLE), 0.0) AS eta_sq
-          FROM g JOIN m USING (event_type) ORDER BY event_type""",
-    // Daily cents, running-max window, deterministic (dd DESC, day)
-    // argmax — the engine's struct-max tie rule.
-    "q_drawdown" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
-            CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS rev_c
-          FROM orders GROUP BY 1),
-          r AS (SELECT day, rev_c, max(rev_c) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS peak_c FROM daily),
-          n AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM r),
-          b AS (SELECT day, rev_c, peak_c, peak_c - rev_c AS dd
-            FROM r ORDER BY dd DESC, day ASC LIMIT 1)
-          SELECT b.day AS dd_day, CAST(b.dd AS DOUBLE) / 100.0
-              AS max_drawdown,
-            CAST(b.peak_c AS DOUBLE) / 100.0 AS peak_revenue,
-            CAST(b.rev_c AS DOUBLE) / 100.0 AS trough_revenue,
-            n.n_days
-          FROM b CROSS JOIN n""",
-    // The q_ann_recall chain with BOTH rank lists kept to max(k);
-    // the ks grid reads pooled counts at each checkpoint.
-    "q_ann_recall_curve" -> {
-      val maxK = AnnCurveKs.max
-      s"""WITH e AS ($NormedEmbSql),
-          $TrainedCtrCtes,
-          asg AS (SELECT e.vec_id, e.embedding, e.nrm, ctr.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-              ORDER BY ${dotSql("e", "ctr")} / (e.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS rk
-            FROM e CROSS JOIN ctr WHERE e.nrm <> 0 AND ctr.nrm <> 0),
-          a2 AS (SELECT vec_id, embedding, nrm, centroid_id FROM asg
-            WHERE rk = 1),
-          q AS (SELECT vec_id AS query_id, embedding, nrm, centroid_id
-            FROM a2 WHERE vec_id < 10),
-          s AS (SELECT query_id, a2.vec_id AS neighbor_id,
-            ${dotSql("q", "a2")} / (q.nrm * a2.nrm) AS c
-            FROM q JOIN a2 USING (centroid_id) WHERE query_id <> a2.vec_id),
-          r AS (SELECT query_id, neighbor_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS rk FROM s),
-          ap AS (SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS ark
-            FROM r WHERE rk <= $maxK),
-          bq AS (SELECT * FROM e WHERE vec_id < 10),
-          bs AS (SELECT bq.vec_id AS query_id, e.vec_id AS neighbor_id,
-            ${dotSql("bq", "e")} / (bq.nrm * e.nrm) AS c
-            FROM bq JOIN e ON bq.vec_id <> e.vec_id),
-          br AS (SELECT query_id, neighbor_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS rk FROM bs),
-          ex AS (SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS erk
-            FROM br WHERE rk <= $maxK),
-          fo AS (SELECT erk, ark FROM ex FULL OUTER JOIN ap
-            ON ex.query_id = ap.query_id
-              AND ex.neighbor_id = ap.neighbor_id),
-          ks AS (SELECT CAST(unnest([${AnnCurveKs.mkString(", ")}])
-            AS BIGINT) AS k),
-          g AS (SELECT k,
-            CAST(count(*) FILTER (WHERE erk <= k) AS BIGINT) AS n_exact,
-            CAST(count(*) FILTER (WHERE ark <= k) AS BIGINT) AS n_approx,
-            CAST(count(*) FILTER (WHERE erk <= k AND ark <= k)
-              AS BIGINT) AS n_both
-          FROM ks CROSS JOIN fo GROUP BY k)
-          SELECT k, n_exact, n_approx, n_both,
-            CAST(n_both AS DOUBLE) /
-              nullif(CAST(n_exact AS DOUBLE), 0.0) AS recall,
-            CAST(n_both AS DOUBLE) /
-              nullif(CAST(n_approx AS DOUBLE), 0.0) AS precision
-          FROM g ORDER BY k"""
-    },
-    // 1-based lateral range over the vector; micro-quantized exact
-    // moments, HUGEINT sum of squares, fixed-shape mean/std.
-    "q_dim_stats" ->
-      """WITH e AS (SELECT embedding FROM embeddings
-            WHERE embedding IS NOT NULL),
-          x AS (SELECT CAST(u.i AS BIGINT) AS dim,
-            CAST(embedding[u.i] AS DOUBLE) AS vd
-          FROM e CROSS JOIN (SELECT unnest(generate_series(1,
-            (SELECT max(len(embedding)) FROM e))) AS i) u
-          WHERE u.i <= len(embedding)),
-          qv AS (SELECT dim, vd,
-            CAST(round(vd * 1000000) AS BIGINT) AS q FROM x),
-          m AS (SELECT dim, CAST(count(*) AS BIGINT) AS n_vals,
-            CAST(sum(q) AS BIGINT) AS s1,
-            sum(CAST(q AS HUGEINT) * q) AS s2,
-            min(q) AS min_q, max(q) AS max_q,
-            CAST(count(*) FILTER (WHERE vd = 0.0) AS BIGINT) AS n_zero
-          FROM qv GROUP BY dim)
-          SELECT dim, n_vals,
-            CAST(s1 AS DOUBLE) / n_vals / 1000000.0 AS mean_val,
-            sqrt(CAST(n_vals * s2 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE))
-              / n_vals / 1000000.0 AS std_val,
-            CAST(min_q AS DOUBLE) / 1000000.0 AS min_val,
-            CAST(max_q AS DOUBLE) / 1000000.0 AS max_val,
-            CAST(n_zero AS DOUBLE) / n_vals AS zero_share
-          FROM m ORDER BY dim""",
-    // (source, n_chars) grid percentiles WITH FREQUENCIES — the
-    // q_user_lifespan quantile contract, per source.
-    "q_length_bands" ->
-      """WITH q AS (SELECT source, count(*) AS n_docs,
-            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-            quantile_cont(n_chars, [0.25, 0.5, 0.75, 0.95]) AS ps
-          FROM documents GROUP BY source)
-          SELECT source, n_docs,
-            CAST(sum_chars AS DOUBLE) / n_docs AS mean_chars,
-            ps[1] AS p25_chars, ps[2] AS p50_chars,
-            ps[3] AS p75_chars, ps[4] AS p95_chars
-          FROM q ORDER BY source""",
-    // The q_simhash_pairs candidate chain rolled onto the hamming
-    // grid with a window share.
-    "q_hamming_hist" ->
-      s"""WITH $SimhashFpCtes,
-          bands AS (SELECT doc_id, b,
-            CASE b WHEN 0 THEN simhash & 1023
-                   WHEN 1 THEN (simhash >> 10) & 1023
-                   WHEN 2 THEN (simhash >> 20) & 1023
-                   ELSE (simhash >> 30) & 1023 END AS key
-            FROM fp CROSS JOIN (SELECT unnest(range(0, 4)) AS b)),
-          buckets AS (SELECT b, key,
-            (list_sort(list(doc_id)))[1:${NearDup.DefaultBucketCap}] AS ids
-            FROM bands GROUP BY 1, 2),
-          cand AS (SELECT DISTINCT p[1] AS d1, p[2] AS d2 FROM
-            (SELECT unnest(flatten(list_transform(range(1, len(ids)),
-              i -> list_transform(range(i + 1, len(ids) + 1),
-              j -> [ids[i], ids[j]])))) AS p
-             FROM buckets WHERE len(ids) > 1)),
-          pp AS (SELECT
-            CAST(bit_count(xor(f1.simhash, f2.simhash)) AS INTEGER)
-              AS hamming
-            FROM cand JOIN fp f1 ON f1.doc_id = d1
-            JOIN fp f2 ON f2.doc_id = d2
-            WHERE bit_count(xor(f1.simhash, f2.simhash)) <= 3),
-          g AS (SELECT hamming, count(*) AS n_pairs FROM pp GROUP BY 1)
-          SELECT hamming, n_pairs, CAST(n_pairs AS DOUBLE) /
-            CAST(sum(n_pairs) OVER () AS DOUBLE) AS pair_share
-          FROM g ORDER BY hamming""",
-    // The IVF assignment chain rolled to cell occupancy; imbalance =
-    // max cell over mean cell off the same exact integers on all rows.
-    "q_ivf_balance" ->
-      s"""WITH e AS ($NormedEmbSql),
-          $TrainedCtrCtes,
-          asg AS (SELECT e.vec_id, ctr.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-              ORDER BY ${dotSql("e", "ctr")} / (e.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS rk
-            FROM e CROSS JOIN ctr WHERE e.nrm <> 0 AND ctr.nrm <> 0),
-          cells AS (SELECT centroid_id, CAST(count(*) AS BIGINT) AS n_vecs
-            FROM asg WHERE rk = 1 GROUP BY 1),
-          g AS (SELECT CAST(count(*) AS BIGINT) AS n_cells_total,
-            CAST(sum(n_vecs) AS BIGINT) AS n_total,
-            max(n_vecs) AS max_total FROM cells)
-          SELECT CAST(length(CAST(n_vecs AS VARCHAR)) AS BIGINT)
-              AS size_digits,
-            count(*) AS n_cells, CAST(sum(n_vecs) AS BIGINT) AS n_vectors,
-            min(n_vecs) AS min_cell, max(n_vecs) AS max_cell,
-            CAST(g.max_total AS DOUBLE) *
-              CAST(g.n_cells_total AS DOUBLE) /
-              CAST(g.n_total AS DOUBLE) AS imbalance
-          FROM cells CROSS JOIN g
-          GROUP BY size_digits, g.max_total, g.n_cells_total, g.n_total
-          ORDER BY size_digits""",
-    // Probe-cost chain: the same trained-centroid assignment rolled to
-    // cell sizes, each query's ranked probe cells kept WITH their rank
-    // (q_ann_ivf_p2's qc), cumulative scan via the per-query window.
-    "q_ann_probe_cost" ->
-      s"""WITH e AS ($NormedEmbSql),
-          $TrainedCtrCtes,
-          asg AS (SELECT e.vec_id, ctr.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-              ORDER BY ${dotSql("e", "ctr")} / (e.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS rk
-            FROM e CROSS JOIN ctr WHERE e.nrm <> 0 AND ctr.nrm <> 0),
-          cells AS (SELECT centroid_id, CAST(count(*) AS BIGINT)
-              AS cell_size
-            FROM asg WHERE rk = 1 GROUP BY 1),
-          tot AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus
-            FROM asg WHERE rk = 1),
-          q AS (SELECT vec_id AS query_id, embedding, nrm FROM e
-            WHERE vec_id < 10 AND nrm <> 0),
-          qc AS (SELECT query_id, ctr.centroid_id,
-            CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY ${dotSql("q", "ctr")} / (q.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS INT) AS nprobe
-            FROM q CROSS JOIN ctr WHERE ctr.nrm <> 0),
-          pr AS (SELECT query_id, nprobe, centroid_id, cell_size,
-            CAST(sum(cell_size) OVER (PARTITION BY query_id
-              ORDER BY nprobe) AS BIGINT) AS scanned
-            FROM qc JOIN cells USING (centroid_id) WHERE nprobe <= 2)
-          SELECT query_id, nprobe, centroid_id, cell_size, scanned,
-            CAST(scanned AS DOUBLE) /
-              (SELECT CAST(n_corpus AS DOUBLE) FROM tot) AS corpus_share
-          FROM pr ORDER BY query_id, nprobe""",
-    // The q_ann_topk brute chain at k=$KnnK over the query prefix;
-    // majority vote via (votes DESC, label) row_number, per-class
-    // accuracy off exact counts.
-    "q_knn_accuracy" ->
-      s"""WITH e AS ($NormedEmbSql),
-          l AS (SELECT vec_id, label FROM embeddings),
-          bq AS (SELECT * FROM e WHERE vec_id < $KnnQueryMax),
-          bs AS (SELECT bq.vec_id AS query_id, e.vec_id AS neighbor_id,
-            ${dotSql("bq", "e")} / (bq.nrm * e.nrm) AS c
-            FROM bq JOIN e ON bq.vec_id <> e.vec_id),
-          br AS (SELECT query_id, neighbor_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY c DESC, neighbor_id) AS rk FROM bs),
-          top AS (SELECT query_id, neighbor_id FROM br WHERE rk <= $KnnK),
-          v AS (SELECT query_id, l.label AS n_label, count(*) AS votes
-            FROM top JOIN l ON neighbor_id = l.vec_id GROUP BY 1, 2),
-          p AS (SELECT query_id, n_label, row_number() OVER (
-              PARTITION BY query_id ORDER BY votes DESC, n_label) AS rn
-            FROM v),
-          pr AS (SELECT query_id, n_label AS pred FROM p WHERE rn = 1)
-          SELECT l.label, CAST(count(*) AS BIGINT) AS n_queries,
-            CAST(count(*) FILTER (WHERE pred = l.label) AS BIGINT)
-              AS n_correct,
-            CAST(count(*) FILTER (WHERE pred = l.label) AS DOUBLE) /
-              count(*) AS accuracy
-          FROM pr JOIN l ON pr.query_id = l.vec_id
-          GROUP BY l.label ORDER BY l.label""",
-    // (segment, cents) grid percentiles WITH FREQUENCIES + exact
-    // mean/negative share, /100 display divisions at the edge.
-    "q_acctbal_bands" ->
-      """WITH g AS (SELECT c_mktsegment AS segment,
-            CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-          FROM customer),
-          q AS (SELECT segment, count(*) AS n_custs,
-            CAST(sum(cents) AS BIGINT) AS sum_c,
-            CAST(count(*) FILTER (WHERE cents < 0) AS BIGINT) AS n_neg,
-            quantile_cont(cents, [0.25, 0.5, 0.75]) AS ps
-          FROM g GROUP BY segment)
-          SELECT segment, n_custs,
-            CAST(sum_c AS DOUBLE) / n_custs / 100.0 AS mean_bal,
-            CAST(n_neg AS DOUBLE) / n_custs AS neg_share,
-            ps[1] / 100.0 AS p25_bal, ps[2] / 100.0 AS p50_bal,
-            ps[3] / 100.0 AS p75_bal
-          FROM q ORDER BY segment""",
-    // The q_price_index panel with BOTH quantity weightings; each
-    // index one double division, Fisher one sqrt of their product.
-    "q_fisher_index" ->
-      """WITH pq AS (SELECT l_partkey,
-            CAST(date_trunc('quarter', l_shipdate) AS DATE) AS quarter,
-            CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-              AS BIGINT) AS c,
-            CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
-          FROM lineitem GROUP BY 1, 2),
-          pp AS (SELECT *, (2 * c + q) // (2 * q) AS p_cents FROM pq),
-          bq AS (SELECT min(quarter) AS g FROM pp),
-          base AS (SELECT l_partkey, p_cents AS p0, q AS q0
-            FROM pp, bq WHERE quarter = g),
-          j AS (SELECT p_brand, pp.quarter,
-            pp.p_cents * base.q0 AS num_l, base.p0 * base.q0 AS den_l,
-            pp.p_cents * pp.q AS num_p, base.p0 * pp.q AS den_p
-          FROM pp JOIN base USING (l_partkey)
-          JOIN part ON l_partkey = p_partkey),
-          g2 AS (SELECT p_brand, quarter,
-            CAST(count(*) AS BIGINT) AS n_parts,
-            sum(num_l) AS snl, sum(den_l) AS sdl,
-            sum(num_p) AS snp, sum(den_p) AS sdp
-          FROM j GROUP BY p_brand, quarter)
-          SELECT p_brand, quarter, n_parts,
-            CAST(snl AS DOUBLE) / CAST(sdl AS DOUBLE) * 100.0
-              AS laspeyres_pts,
-            CAST(snp AS DOUBLE) / CAST(sdp AS DOUBLE) * 100.0
-              AS paasche_pts,
-            sqrt((CAST(snl AS DOUBLE) / CAST(sdl AS DOUBLE)) *
-              (CAST(snp AS DOUBLE) / CAST(sdp AS DOUBLE))) * 100.0
-              AS fisher_pts
-          FROM g2 ORDER BY p_brand, quarter""",
-    // Integer year*4+quarter keys, part-grain min intro, conditional
-    // cent sums per relative quarter on the vintages grid.
-    "q_part_vintage" ->
-      """WITH pq AS (SELECT l_partkey,
-            CAST(year(l_shipdate) * 4 + quarter(l_shipdate) - 1
-              AS BIGINT) AS qk,
-            CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-              AS BIGINT)) AS BIGINT) AS c
-          FROM lineitem GROUP BY 1, 2),
-          intro AS (SELECT l_partkey, min(qk) AS q0 FROM pq GROUP BY 1),
-          j AS (SELECT pq.l_partkey, intro.q0, pq.qk - intro.q0 AS rel,
-            pq.c FROM pq JOIN intro USING (l_partkey)),
-          g AS (SELECT q0, CAST(count(DISTINCT l_partkey) AS BIGINT)
-              AS n_parts,
-            CAST(coalesce(sum(c) FILTER (WHERE rel = 0), 0) AS DOUBLE)
-              / 100.0 AS rev_q0,
-            CAST(coalesce(sum(c) FILTER (WHERE rel = 1), 0) AS DOUBLE)
-              / 100.0 AS rev_q1,
-            CAST(coalesce(sum(c) FILTER (WHERE rel = 2), 0) AS DOUBLE)
-              / 100.0 AS rev_q2,
-            CAST(coalesce(sum(c) FILTER (WHERE rel = 3), 0) AS DOUBLE)
-              / 100.0 AS rev_q3
-          FROM j GROUP BY q0)
-          SELECT q0 // 4 AS intro_year,
-            CAST(q0 % 4 + 1 AS BIGINT) AS intro_quarter,
-            n_parts, rev_q0, rev_q1, rev_q2, rev_q3
-          FROM g ORDER BY intro_year, intro_quarter""",
-    // Order-grain line counts onto the width grid, dual window shares.
-    "q_order_lines" ->
-      """WITH o AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS nl
-            FROM lineitem GROUP BY 1),
-          g AS (SELECT nl AS n_lines, count(*) AS n_orders
-            FROM o GROUP BY 1)
-          SELECT n_lines, n_orders,
-            CAST(n_orders AS DOUBLE) /
-              CAST(sum(n_orders) OVER () AS DOUBLE) AS order_share,
-            CAST(n_lines * n_orders AS DOUBLE) /
-              CAST(sum(n_lines * n_orders) OVER () AS DOUBLE)
-              AS line_share
-          FROM g ORDER BY n_lines""",
-    // Same pairing as q_attribution; integer power-of-two day weights
-    // and micro-cent credit division, so sums replay exactly
-    "q_attribution_u" ->
-      s"""WITH p AS (SELECT user_id, ts AS end_ts,
-            ts - INTERVAL $AttribDays DAYS AS start_ts,
-            event_id AS purchase_id,
-            CAST(round(value * 100) AS BIGINT) AS cents
-            FROM events WHERE event_type = 'purchase'),
-          x AS (SELECT user_id, ts, event_id AS touch_id,
-            event_type AS channel FROM events
-            WHERE event_type <> 'purchase'),
-          pc AS (SELECT purchase_id, cents, channel,
-              row_number() OVER (PARTITION BY purchase_id
-                ORDER BY x.ts, touch_id) AS pos,
-              CAST(count(*) OVER (PARTITION BY purchase_id) AS BIGINT)
-                AS n
-            FROM p JOIN x ON x.user_id = p.user_id
-              AND x.ts >= p.start_ts AND x.ts < p.end_ts),
-          cr AS (SELECT channel,
-              CASE WHEN n = 1 THEN cents * 1000000
-                WHEN n = 2 THEN (cents * 1000000 * 50) // 100
-                WHEN pos = 1 OR pos = n
-                  THEN (cents * 1000000 * 40) // 100
-                ELSE ((cents * 1000000 * 20) // 100) // (n - 2)
-              END AS credit FROM pc
-            UNION ALL
-            SELECT '(none)', cents * 1000000 FROM p
-              WHERE purchase_id NOT IN (SELECT purchase_id FROM pc))
-          SELECT channel, count(*) AS n_credits,
-            CAST(CAST(sum(credit) AS BIGINT) AS DOUBLE) / 100000000.0
-              AS credited_value
-          FROM cr GROUP BY 1 ORDER BY 1""",
-    "q_attribution_decay" ->
-      s"""WITH p AS (SELECT user_id, ts AS end_ts,
-            ts - INTERVAL $AttribDays DAYS AS start_ts,
-            event_id AS purchase_id,
-            CAST(round(value * 100) AS BIGINT) AS cents
-            FROM events WHERE event_type = 'purchase'),
-          x AS (SELECT user_id, ts, event_type AS channel FROM events
-            WHERE event_type <> 'purchase'),
-          pairs AS (SELECT purchase_id, cents, channel,
-              (epoch_us(end_ts) - epoch_us(x.ts)) // 86400000000 AS age
-            FROM p JOIN x ON x.user_id = p.user_id
-              AND x.ts >= p.start_ts AND x.ts < p.end_ts),
-          pw AS (SELECT purchase_id, cents, channel,
-              (CAST(1 AS BIGINT) <<
-                greatest(0, $AttribDays - 1 - CAST(age AS INT))) AS w
-            FROM pairs WHERE age < $AttribDays),
-          pc AS (SELECT purchase_id, cents, channel,
-              CAST(sum(w) AS BIGINT) AS wsum, count(*) AS k
-            FROM pw GROUP BY 1, 2, 3),
-          pn AS (SELECT *, CAST(sum(wsum) OVER (PARTITION BY purchase_id)
-              AS BIGINT) AS tw FROM pc),
-          cr AS (SELECT channel, k,
-              (cents * 1000000 * wsum) // tw AS credit FROM pn
-            UNION ALL
-            SELECT '(none)', 1, cents * 1000000 FROM p
-              WHERE purchase_id NOT IN (SELECT purchase_id FROM pc))
-          SELECT channel, CAST(sum(k) AS BIGINT) AS n_credits,
-            CAST(CAST(sum(credit) AS BIGINT) AS DOUBLE) / 100000000.0
-              AS credited_value
-          FROM cr GROUP BY 1 ORDER BY 1""",
-    // Replays the planted shift with integer epoch arithmetic, then
-    // the two-phase prefix max as ONE flat global window (a prefix max
-    // is partition-boundary-independent, so the values agree).
-    "q_ooo_audit" -> {
-      val lateCols = OooDelays.map(d =>
-        s"CAST(sum(CAST(late_us > ${d * 1000000L} AS INT)) AS BIGINT) " +
-          s"AS n_late_${d}s").mkString(",\n            ")
-      s"""WITH e AS (SELECT event_type, event_id,
-            CASE WHEN event_id % 101 = 7
-              THEN epoch_us(ts) - (1 + event_id % 7) * 60000000
-              ELSE epoch_us(ts) END AS tu FROM events),
-          m AS (SELECT *, max(tu) OVER (ORDER BY event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pfx
-            FROM e),
-          l AS (SELECT event_type,
-            CASE WHEN pfx IS NULL OR pfx <= tu THEN 0
-              ELSE pfx - tu END AS late_us FROM m)
-          SELECT event_type, count(*) AS n_events,
-            CAST(sum(CAST(late_us > 0 AS INT)) AS BIGINT) AS n_ooo,
-            CAST(max(late_us) AS DOUBLE) / 1000000.0 AS max_late_s,
-            $lateCols,
-            CAST(CAST(sum(CAST(late_us > 0 AS INT)) AS BIGINT) AS DOUBLE)
-              / count(*) AS ooo_frac
-          FROM l GROUP BY 1 ORDER BY 1"""
-    },
-    // Same lateness CTEs as q_ooo_audit; the CASE chains pick the
-    // FIRST (smallest) qualifying delay, selection by integer
-    // cross-multiplication, one final division for the rate.
-    "q_watermark_rec" -> {
-      val lateCols = OooDelays.map(d =>
-        s"CAST(sum(CAST(late_us > ${d * 1000000L} AS INT)) AS BIGINT) " +
-          s"AS n_late_${d}s").mkString(",\n            ")
-      def cases(value: Int => String) = OooDelays.map(d =>
-        s"WHEN n_late_${d}s * 1000 <= $WatermarkTargetPm * n_events " +
-          s"THEN ${value(d)}").mkString("CASE ", " ", " END")
-      s"""WITH e AS (SELECT event_type, event_id,
-            CASE WHEN event_id % 101 = 7
-              THEN epoch_us(ts) - (1 + event_id % 7) * 60000000
-              ELSE epoch_us(ts) END AS tu FROM events),
-          m AS (SELECT *, max(tu) OVER (ORDER BY event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pfx
-            FROM e),
-          l AS (SELECT event_type,
-            CASE WHEN pfx IS NULL OR pfx <= tu THEN 0
-              ELSE pfx - tu END AS late_us FROM m),
-          a AS (SELECT event_type, count(*) AS n_events,
-            CAST(sum(CAST(late_us > 0 AS INT)) AS BIGINT) AS n_ooo,
-            $lateCols
-          FROM l GROUP BY 1)
-          SELECT event_type, n_events, n_ooo,
-            ${cases(d => d.toString)} AS recommended_delay_s,
-            ${cases(d => s"n_late_${d}s")} AS pred_dropped,
-            CAST(${cases(d => s"n_late_${d}s")} AS DOUBLE) / n_events
-              AS pred_drop_rate
-          FROM a ORDER BY event_type"""
-    },
-    "q_ship_priority" ->
-      s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-          FROM customer
-          JOIN orders ON c_custkey = o_custkey
-          JOIN lineitem ON l_orderkey = o_orderkey
-          WHERE c_mktsegment = '$ShipSegment'
-            AND o_orderdate < DATE '$ShipCutoff'
-            AND l_shipdate > DATE '$ShipCutoff'
-          GROUP BY 1, 2, 3
-          ORDER BY revenue DESC, o_orderdate, l_orderkey
-          LIMIT $ShipTopK""",
-    // The semi/anti joins replayed as EXISTS / NOT EXISTS.
-    "q_late_suppliers" ->
-      s"""WITH late AS (SELECT l_orderkey, l_suppkey
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            WHERE date_diff('day', o_orderdate, l_shipdate)
-              > $LateDelayDays),
-          sole AS (SELECT l1.* FROM late l1
-            WHERE EXISTS (SELECT 1 FROM lineitem l2
-                WHERE l2.l_orderkey = l1.l_orderkey
-                  AND l2.l_suppkey <> l1.l_suppkey)
-              AND NOT EXISTS (SELECT 1 FROM late l3
-                WHERE l3.l_orderkey = l1.l_orderkey
-                  AND l3.l_suppkey <> l1.l_suppkey))
-          SELECT s_name, count(*) AS numwait
-          FROM sole JOIN supplier ON l_suppkey = s_suppkey
-          GROUP BY 1 ORDER BY numwait DESC, s_name""",
-    "q_k_anon" ->
-      s"""SELECT c_nationkey AS nationkey, c_mktsegment AS segment,
-            CAST(floor(c_acctbal / $KAnonBalBand) AS BIGINT) AS bal_band,
-            count(*) AS class_size, count(*) >= $KAnonK AS anonymous
-          FROM customer GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "q_l_diversity" ->
-      s"""SELECT c_nationkey AS nationkey, c_mktsegment AS segment,
-            count(*) AS class_size,
-            count(DISTINCT CAST(floor(c_acctbal / $KAnonBalBand) AS BIGINT))
-              AS n_sensitive,
-            count(DISTINCT CAST(floor(c_acctbal / $KAnonBalBand) AS BIGINT))
-              >= $LDiversityL AS diverse
-          FROM customer GROUP BY 1, 2 ORDER BY 1, 2""",
-    // Integer EMD numerator (c·N − g·n) with one double division at
-    // the end — band order is the window order in both engines
-    "q_t_closeness" ->
-      s"""WITH cb AS (SELECT c_nationkey AS nationkey,
-            c_mktsegment AS segment,
-            CAST(floor(c_acctbal / $KAnonBalBand) AS BIGINT) AS sens,
-            count(*) AS c
-          FROM customer GROUP BY 1, 2, 3),
-          cls AS (SELECT nationkey, segment, sum(c) AS n
-            FROM cb GROUP BY 1, 2),
-          gb AS (SELECT sens, sum(c) AS g FROM cb GROUP BY 1),
-          tot AS (SELECT sum(g) AS nn, count(*) AS m FROM gb),
-          grid AS (SELECT cls.nationkey, cls.segment, cls.n,
-              gb.sens, gb.g, coalesce(cb.c, 0) AS c
-            FROM cls CROSS JOIN gb
-            LEFT JOIN cb ON cb.nationkey = cls.nationkey
-              AND cb.segment = cls.segment AND cb.sens = gb.sens),
-          cum AS (SELECT nationkey, segment, n,
-              sum(c * (SELECT nn FROM tot) - g * n)
-                OVER (PARTITION BY nationkey, segment ORDER BY sens)
-                AS cum_num
-            FROM grid)
-          SELECT nationkey, segment, CAST(n AS BIGINT) AS class_size,
-            CAST(sum(abs(cum_num)) AS DOUBLE) /
-              (CAST(n AS DOUBLE) * (SELECT nn FROM tot)
-                * ((SELECT m FROM tot) - 1)) AS t_value,
-            CAST(sum(abs(cum_num)) AS DOUBLE) /
-              (CAST(n AS DOUBLE) * (SELECT nn FROM tot)
-                * ((SELECT m FROM tot) - 1)) <= $TClosenessT AS close
-          FROM cum GROUP BY nationkey, segment, n ORDER BY 1, 2""",
-    "q_forecast_naive" ->
-      s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            count(*) AS n FROM events GROUP BY 1, 2),
-          b AS (SELECT event_type, day + $ForecastLagDays AS day,
-            n AS forecast_n FROM d)
-          SELECT d.event_type, d.day, d.n, b.forecast_n,
-            abs(d.n - b.forecast_n) AS abs_err
-          FROM d LEFT JOIN b USING (event_type, day)
-          ORDER BY 1, 2""",
-    // Moments are exact BIGINT sums (DuckDB sums into HUGEINT — cast
-    // back); the r combination runs in DOUBLE off the exact moments on
-    // both engines (identical correctly-rounded scalar chain), with
-    // zero variance on either side -> NULL.
-    "q_comovement" ->
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            count(*) AS n FROM events GROUP BY 1, 2)
-          SELECT a.event_type AS type_a, b.event_type AS type_b,
-            count(*) AS n_days,
-            CAST(count(*) * sum(a.n * b.n) - sum(a.n) * sum(b.n)
-              AS DOUBLE) /
-              sqrt(nullif(
-                CAST(count(*) * sum(a.n * a.n) - sum(a.n) * sum(a.n)
-                  AS DOUBLE) *
-                CAST(count(*) * sum(b.n * b.n) - sum(b.n) * sum(b.n)
-                  AS DOUBLE), 0.0)) AS corr
-          FROM d a JOIN d b ON a.day = b.day
-            AND a.event_type < b.event_type
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-    // First digit from the INTEGER cent amount's decimal string (no
-    // float log10 boundary risk); dense 9-digit spine; χ² terms fold
-    // in digit order
-    "q_benford" ->
-      s"""WITH c AS (SELECT event_type,
-            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-          FROM events WHERE value IS NOT NULL),
-          dg AS (SELECT event_type,
-              CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS INTEGER)
-                AS digit
-            FROM c WHERE cents > 0),
-          dc AS (SELECT event_type, digit, count(*) AS nd
-            FROM dg GROUP BY 1, 2),
-          tt AS (SELECT event_type, CAST(sum(nd) AS BIGINT) AS nt
-            FROM dc GROUP BY 1),
-          sp AS (SELECT event_type, nt,
-              CAST(unnest(range(1, 10)) AS INTEGER) AS digit FROM tt),
-          fl AS (SELECT sp.event_type, sp.digit, sp.nt,
-              CAST(coalesce(dc.nd, 0) AS BIGINT) AS nd,
-              log10(1.0 + 1.0 / sp.digit) AS exp_share
-            FROM sp LEFT JOIN dc ON dc.event_type = sp.event_type
-              AND dc.digit = sp.digit),
-          tm AS (SELECT *,
-              (CAST(nd AS DOUBLE) - CAST(nt AS DOUBLE) * exp_share) *
-                (CAST(nd AS DOUBLE) - CAST(nt AS DOUBLE) * exp_share) /
-                (CAST(nt AS DOUBLE) * exp_share) AS term
-            FROM fl),
-          ch AS (SELECT event_type,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(term ORDER BY digit)), (x, y) -> x + y) AS chi2
-            FROM tm GROUP BY 1)
-          SELECT tm.event_type, digit, nd AS n_obs,
-            CAST(nd AS DOUBLE) / nt AS obs_share, exp_share, chi2,
-            chi2 > $BenfordChi2Crit AS suspect
-          FROM tm JOIN ch ON ch.event_type = tm.event_type
-          ORDER BY 1, 2""",
-    "q_autocorr" ->
-      s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1, 2),
-          l AS (${AutocorrLags.map(x => s"SELECT $x AS lag")
-            .mkString(" UNION ALL ")}),
-          b AS (SELECT d.event_type, l.lag, d.day + l.lag AS day,
-            d.y AS yp FROM d CROSS JOIN l),
-          p AS (SELECT d.event_type, b.lag, d.y AS yc, b.yp
-            FROM d JOIN b ON b.event_type = d.event_type
-              AND b.day = d.day),
-          m AS (SELECT event_type, lag, count(*) AS n_pairs,
-            CAST(sum(yc) AS BIGINT) AS sy, CAST(sum(yp) AS BIGINT) AS sx,
-            CAST(sum(yc * yp) AS BIGINT) AS sxy,
-            CAST(sum(yc * yc) AS BIGINT) AS syy,
-            CAST(sum(yp * yp) AS BIGINT) AS sxx
-            FROM p GROUP BY 1, 2),
-          s AS (SELECT event_type, lag, n_pairs,
-            CAST(n_pairs AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy AS num,
-            CAST(n_pairs AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx AS varx,
-            CAST(n_pairs AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy AS vary
-            FROM m)
-          SELECT event_type, lag, CAST(n_pairs AS BIGINT) AS n_pairs,
-            CASE WHEN varx > 0 AND vary > 0
-              THEN num / sqrt(varx * vary) END AS acf
-          FROM s ORDER BY 1, 2""",
-    // Spark weekday() is Monday=0 -> +1 == DuckDB isodow (Monday=1).
-    // expected/term are pure scalar IEEE chains over exact integer
-    // marginals — (n−e)·(n−e), never pow() (not correctly rounded).
-    "q_chi2_independence" ->
-      """WITH obs AS (SELECT event_type, CAST(isodow(ts) AS INT) AS dow,
-            count(*) AS n FROM events GROUP BY 1, 2),
-          r AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS row_n
-            FROM obs GROUP BY 1),
-          c AS (SELECT dow, CAST(sum(n) AS BIGINT) AS col_n
-            FROM obs GROUP BY 1),
-          t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM obs),
-          sc AS (SELECT o.event_type, o.dow, o.n, r.row_n, c.col_n,
-            CAST(r.row_n AS DOUBLE) * c.col_n / t.total AS expected
-            FROM obs o JOIN r USING (event_type) JOIN c USING (dow)
-            CROSS JOIN t)
-          SELECT event_type, dow, n, row_n, col_n, expected,
-            (n - expected) * (n - expected) / expected AS chi2_term
-          FROM sc ORDER BY 1, 2""",
-    "q_fanout_audit" ->
-      s"""WITH la AS (SELECT c_custkey AS k, CAST(count(*) AS BIGINT)
-            AS ln FROM customer GROUP BY 1),
-          ra AS (SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS rn
-            FROM orders GROUP BY 1),
-          j AS (SELECT coalesce(la.ln, 0) AS ln, coalesce(ra.rn, 0) AS rn
-            FROM la FULL JOIN ra USING (k))
-          SELECT least(ln, $FanoutMultCap) AS left_mult,
-            least(rn, $FanoutMultCap) AS right_mult,
-            count(*) AS n_keys, CAST(sum(ln) AS BIGINT) AS left_rows,
-            CAST(sum(rn) AS BIGINT) AS right_rows,
-            CAST(sum(ln * rn) AS BIGINT) AS join_rows
-          FROM j GROUP BY 1, 2 ORDER BY 1, 2""",
-    // cos = cooc/sqrt(n_a·n_b): every input an exact integer, every
-    // IEEE step correctly rounded -> bit-identical across engines. The
-    // row_number tie order (cos DESC, other) is graft_topk's exact
-    // (score desc, id asc) heap order.
-    "q_item_similarity" ->
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS okey,
-            l_partkey AS part FROM lineitem),
-          cnt AS (SELECT part, CAST(count(*) AS BIGINT) AS cnt
-            FROM op GROUP BY 1),
-          pr AS (SELECT a.part AS pa, b.part AS pb,
-            CAST(count(*) AS BIGINT) AS cooc
-            FROM op a JOIN op b ON a.okey = b.okey AND a.part < b.part
-            GROUP BY 1, 2),
-          sym AS (SELECT pa AS part, pb AS other, cooc FROM pr
-            UNION ALL SELECT pb, pa, cooc FROM pr),
-          sc AS (SELECT s.part, s.other, s.cooc,
-            ca.cnt AS n_a, cb.cnt AS n_b,
-            CAST(s.cooc AS DOUBLE) / sqrt(CAST(ca.cnt AS DOUBLE) * cb.cnt)
-              AS cos_sim
-            FROM sym s JOIN cnt ca ON ca.part = s.part
-              JOIN cnt cb ON cb.part = s.other),
-          rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY part
-              ORDER BY cos_sim DESC, other) AS INT) AS rk FROM sc)
-          SELECT part, other, cooc, n_a, n_b, cos_sim, rk FROM rk
-          WHERE rk <= $ItemSimTopN ORDER BY part, rk""",
-    // The value iteration unrolled: one (contribution, rank) CTE pair
-    // per round, all-integer arithmetic — truncating div replaces
-    // float rounding, so sums are order-independent and the chain
-    // replays bit-for-bit.
-    "q_pagerank" ->
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS okey,
-            l_partkey AS part FROM lineitem),
-          pr AS (SELECT DISTINCT a.part AS pa, b.part AS pb
-            FROM op a JOIN op b ON a.okey = b.okey AND a.part < b.part),
-          e AS (SELECT pa AS src, pb AS dst FROM pr
-            UNION ALL SELECT pb, pa FROM pr),
-          deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-            FROM e GROUP BY 1),
-          nodes AS (SELECT DISTINCT src AS node FROM e),
-          r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_micro
-            FROM nodes),
-          $PageRankIterCtes
-          SELECT node AS part, rank_micro FROM r$PageRankIters
-          ORDER BY rank_micro DESC, part LIMIT $PageRankTopN""",
-    // Integer micro-probability contributions ((10⁶·cb) div cf) make
-    // per-doc sums order-independent; the two display divisions run
-    // once at the end in the same order on both engines.
-    "q_bigram_lm" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          p AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
-              list_transform(range(1, len(toks)),
-                i -> toks[i] || ' ' || toks[i + 1])
-            ELSE CAST([] AS VARCHAR[]) END) AS big FROM tk),
-          bf AS (SELECT big, CAST(count(*) AS BIGINT) AS cb
-            FROM p GROUP BY 1),
-          cf AS (SELECT split_part(big, ' ', 1) AS t1,
-            CAST(count(*) AS BIGINT) AS cf FROM p GROUP BY 1),
-          st AS (SELECT bf.big, (1000000 * bf.cb) // cf.cf AS score
-            FROM bf JOIN cf ON cf.t1 = split_part(bf.big, ' ', 1)),
-          agg AS (SELECT p.doc_id, count(*) AS n_bigrams,
-            CAST(sum(st.score) AS BIGINT) AS sum_score
-            FROM p JOIN st USING (big) GROUP BY 1)
-          SELECT doc_id, n_bigrams, sum_score,
-            CAST(sum_score AS DOUBLE) / 1000000 / n_bigrams AS mean_cond
-          FROM agg ORDER BY doc_id""",
-    "q_graph_stats" ->
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS okey,
-            l_partkey AS part FROM lineitem),
-          pr AS (SELECT DISTINCT a.part AS pa, b.part AS pb
-            FROM op a JOIN op b ON a.okey = b.okey AND a.part < b.part),
-          e AS (SELECT pa AS src, pb AS dst FROM pr
-            UNION ALL SELECT pb, pa FROM pr),
-          deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-            FROM e GROUP BY 1),
-          t AS (SELECT count(*) AS n_nodes_total FROM deg)
-          SELECT length(CAST(deg AS VARCHAR)) AS deg_digits,
-            count(*) AS n_nodes, min(deg) AS deg_min,
-            max(deg) AS deg_max, CAST(sum(deg) AS BIGINT) AS sum_deg,
-            CAST(count(*) AS DOUBLE) / t.n_nodes_total AS node_frac
-          FROM deg CROSS JOIN t GROUP BY 1, t.n_nodes_total
-          ORDER BY 1""",
-    // The NAIVE a<b<c triangle join — the engine's degree-ordered
-    // orientation changes the plan, never the count, so equality here
-    // proves the orientation exact.
-    "q_triangles" ->
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS okey,
-            l_partkey AS part FROM lineitem),
-          pr AS (SELECT a.part AS pa, b.part AS pb
-            FROM op a JOIN op b ON a.okey = b.okey AND a.part < b.part
-            GROUP BY 1, 2 HAVING count(*) >= $TriangleMinSupport),
-          e AS (SELECT pa AS src, pb AS dst FROM pr
-            UNION ALL SELECT pb, pa FROM pr),
-          deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-            FROM e GROUP BY 1),
-          tr AS (SELECT count(*) AS t FROM pr p1
-            JOIN pr p2 ON p2.pa = p1.pa AND p2.pb > p1.pb
-            JOIN pr p3 ON p3.pa = p1.pb AND p3.pb = p2.pb),
-          sz AS (SELECT count(*) AS n_nodes,
-            CAST(sum(deg) // 2 AS BIGINT) AS n_edges,
-            CAST(sum(deg * (deg - 1) // 2) AS BIGINT) AS n_wedges
-            FROM deg)
-          SELECT sz.n_nodes, sz.n_edges, sz.n_wedges,
-            tr.t AS n_triangles,
-            CAST(tr.t * 3 AS DOUBLE) / nullif(sz.n_wedges, 0)
-              AS transitivity
-          FROM sz CROSS JOIN tr""",
-    "q_k_core" -> kCoreOracleSql,
-    // Capped sorted neighbor prefixes + in-task wedge pairs (the
-    // simhash-bucket idiom) — the cap is replayed, so a binding cap
-    // is a gate event. The SUPPORT level is corpus-derived (smallest
-    // s ≥ floor whose edge set fits the budget, off the pair
-    // multiplicity histogram — wedgeSupportFor's exact rule) and
-    // emitted as min_support, so the derivation itself is
-    // hash-checked.
-    "q_wedge_recs" ->
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS okey,
-            l_partkey AS part FROM lineitem),
-          pr0 AS (SELECT a.part AS pa, b.part AS pb,
-            CAST(count(*) AS BIGINT) AS cooc
-            FROM op a JOIN op b ON a.okey = b.okey AND a.part < b.part
-            GROUP BY 1, 2),
-          hist AS (SELECT cooc, CAST(count(*) AS BIGINT) AS c
-            FROM pr0 GROUP BY 1),
-          ge AS (SELECT cooc, sum(c) OVER (ORDER BY cooc DESC) AS g
-            FROM hist),
-          thr AS (SELECT CAST(greatest($TriangleMinSupport,
-              1 + coalesce(max(cooc), 0)) AS BIGINT) AS s
-            FROM ge WHERE g > $WedgeEdgeBudget),
-          pr AS (SELECT pa, pb FROM pr0, thr WHERE cooc >= thr.s),
-          e AS (SELECT pa AS src, pb AS dst FROM pr
-            UNION ALL SELECT pb, pa FROM pr),
-          nb AS (SELECT src, CAST(count(*) AS BIGINT) AS deg,
-            (list_sort(list(dst)))[1:$WedgeNeighborCap] AS ns
-            FROM e GROUP BY 1),
-          cand AS (SELECT p[1] AS part_u, p[2] AS part_w,
-            count(*) AS n_common, CAST(sum(ra) AS BIGINT) AS ra_micro
-            FROM
-            (SELECT 1000000 // deg AS ra,
-              unnest(flatten(list_transform(range(1, len(ns)),
-              i -> list_transform(range(i + 1, len(ns) + 1),
-                j -> [ns[i], ns[j]])))) AS p
-             FROM nb WHERE len(ns) >= 2) GROUP BY 1, 2),
-          open_p AS (SELECT c.part_u, c.part_w, c.n_common, c.ra_micro
-            FROM cand c
-            LEFT JOIN pr ON pr.pa = c.part_u AND pr.pb = c.part_w
-            WHERE pr.pa IS NULL)
-          SELECT part_u, part_w, n_common, ra_micro,
-            (SELECT s FROM thr) AS min_support FROM open_p
-          ORDER BY ra_micro DESC, part_u, part_w LIMIT $WedgeTopN""",
-    // Both RANGE frames replay gap-correct (missing days shrink the
-    // frame); means are single divisions of exact window sums, and
-    // the |shift| argmax ties break on the earlier day.
-    "q_changepoint" ->
-      s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(count(*) AS BIGINT) AS y,
-            date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-              AS day_num
-            FROM events GROUP BY 1, 2, 4),
-          w AS (SELECT event_type, day, y,
-            count(y) OVER wb AS b_days,
-            CAST(sum(y) OVER wb AS BIGINT) AS b_sum,
-            count(y) OVER wa AS a_days,
-            CAST(sum(y) OVER wa AS BIGINT) AS a_sum
-            FROM d WINDOW
-              wb AS (PARTITION BY event_type ORDER BY day_num
-                RANGE BETWEEN $ChangepointDays PRECEDING AND 1 PRECEDING),
-              wa AS (PARTITION BY event_type ORDER BY day_num
-                RANGE BETWEEN CURRENT ROW
-                  AND ${ChangepointDays - 1} FOLLOWING)),
-          f AS (SELECT event_type, day, b_days, a_days,
-            CAST(b_sum AS DOUBLE) / b_days AS before_mean,
-            CAST(a_sum AS DOUBLE) / a_days AS after_mean,
-            CAST(a_sum AS DOUBLE) / a_days -
-              CAST(b_sum AS DOUBLE) / b_days AS shift
-            FROM w
-            WHERE b_days >= $ChangepointMinDays
-              AND a_days >= $ChangepointMinDays),
-          r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-              ORDER BY abs(shift) DESC, day) AS rk FROM f)
-          SELECT event_type, day, b_days, a_days, before_mean,
-            after_mean, shift
-          FROM r WHERE rk = 1 ORDER BY event_type""",
-    // Closed-corpus freshness: frontier day/us are maxes over the
-    // same (type, day) grain; lag is exact integer microseconds with
-    // one integer division to seconds.
-    "q_freshness" ->
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            count(*) AS n, CAST(max(epoch_us(ts)) AS BIGINT) AS max_us
-            FROM events GROUP BY 1, 2),
-          a AS (SELECT max(max_us) AS as_of_us, max(day) AS as_of_day
-            FROM d),
-          t AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS n_events,
-            max(max_us) AS last_us, max(as_of_us) AS as_of_us,
-            CAST(coalesce(sum(CASE WHEN day > as_of_day - 1
-              THEN n END), 0) AS BIGINT) AS n_1d,
-            CAST(coalesce(sum(CASE WHEN day > as_of_day - 7
-              THEN n END), 0) AS BIGINT) AS n_7d
-            FROM d CROSS JOIN a GROUP BY 1)
-          SELECT event_type, n_events, make_timestamp(last_us) AS last_ts,
-            (as_of_us - last_us) // 1000000 AS lag_s, n_1d, n_7d
-          FROM t ORDER BY 1""",
-    // mean ratios are fixed-shape correctly-rounded chains over exact
-    // counts — bit-portable like the trend/autocorr combinations.
-    "q_seasonality" ->
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            count(*) AS n FROM events GROUP BY 1, 2),
-          w AS (SELECT event_type, CAST(isodow(day) AS INT) AS dow,
-            count(*) AS n_days, CAST(sum(n) AS BIGINT) AS n_events
-            FROM d GROUP BY 1, 2),
-          t AS (SELECT event_type, count(*) AS t_days,
-            CAST(sum(n) AS BIGINT) AS t_events FROM d GROUP BY 1)
-          SELECT w.event_type, w.dow, w.n_days, w.n_events,
-            CAST(w.n_events AS DOUBLE) / w.n_days AS mean_day,
-            (CAST(w.n_events AS DOUBLE) / w.n_days) /
-              (CAST(t.t_events AS DOUBLE) / t.t_days) AS idx
-          FROM w JOIN t USING (event_type) ORDER BY 1, 2""",
-    // full-coverage centered RANGE mean, micro-quantized detrending
-    // before the weekday average (BIGINT sums, one division) — the
-    // residual is a pure function of already-identical doubles
-    "q_decompose" ->
-      s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(count(*) AS BIGINT) AS n,
-            date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-              AS day_num
-            FROM events GROUP BY 1, 2, 4),
-          w AS (SELECT event_type, day, n,
-            CAST(isodow(day) AS INT) AS dow,
-            count(n) OVER wc AS w_days,
-            CAST(sum(n) OVER wc AS BIGINT) AS w_sum
-            FROM d WINDOW wc AS (PARTITION BY event_type ORDER BY day_num
-              RANGE BETWEEN $DecomposeHalf PRECEDING
-                AND $DecomposeHalf FOLLOWING)),
-          f AS (SELECT event_type, day, dow, n,
-            CASE WHEN w_days = ${2 * DecomposeHalf + 1} THEN
-              CAST(w_sum AS DOUBLE) /
-                CAST(${2 * DecomposeHalf + 1} AS DOUBLE) END AS trend
-            FROM w),
-          g AS (SELECT *,
-            CAST(floor((CAST(n AS DOUBLE) - trend) * 1000000.0 + 0.5)
-              AS BIGINT) AS dt_micro FROM f),
-          s AS (SELECT event_type, dow,
-            CAST(sum(dt_micro) AS DOUBLE) / count(dt_micro) / 1000000.0
-              AS seasonal_all
-            FROM g WHERE dt_micro IS NOT NULL GROUP BY 1, 2)
-          SELECT g.event_type, g.day, g.dow, g.n, g.trend,
-            CASE WHEN g.trend IS NOT NULL THEN s.seasonal_all END
-              AS seasonal,
-            CASE WHEN g.trend IS NOT NULL THEN
-              CAST(g.dt_micro AS DOUBLE) / 1000000.0 - s.seasonal_all END
-              AS residual
-          FROM g LEFT JOIN s USING (event_type, dow)
-          ORDER BY g.event_type, g.day""",
-    // Replays the zorder ladder (shared with q_zorder) then probes the
-    // per-file footers with the same 2×nProbes range grid.
-    "q_file_skipping" ->
-      s"""WITH base AS (SELECT
-            CAST(user_id % 1024 AS BIGINT) AS ux,
-            CAST((CAST(epoch(ts) AS BIGINT) // 3600) % 1024 AS BIGINT)
-              AS ty FROM events),
-          z AS (SELECT ux, ty,
-            (${spreadSql("ux")}) | ((${spreadSql("ty")}) << 1) AS zv
-            FROM base),
-          f AS (SELECT ux, ty, CAST(zv // ${(1L << 20) / SkipFiles}
-            AS INTEGER) AS file_id FROM z),
-          rep AS (SELECT file_id, count(*) AS n_rows,
-            min(ux) AS user_min, max(ux) AS user_max,
-            min(ty) AS time_min, max(ty) AS time_max
-            FROM f GROUP BY 1),
-          pg AS (SELECT d.dim, CAST(r.range AS INT) AS probe_ix,
-            CAST(r.range * ${1024 / SkipProbes} AS INT) AS lo,
-            CAST(r.range * ${1024 / SkipProbes} +
-              ${1024 / SkipProbes - 1} AS INT) AS hi
-            FROM range($SkipProbes) r CROSS JOIN
-              (SELECT 'user' AS dim UNION ALL SELECT 'time') d),
-          ov AS (SELECT pg.dim, pg.probe_ix, pg.lo, pg.hi, rep.n_rows,
-            CASE WHEN pg.dim = 'user'
-              THEN rep.user_min <= pg.hi AND rep.user_max >= pg.lo
-              ELSE rep.time_min <= pg.hi AND rep.time_max >= pg.lo
-            END AS hit
-            FROM pg CROSS JOIN rep),
-          ag AS (SELECT dim, probe_ix, lo, hi, count(*) AS n_files,
-            CAST(coalesce(sum(CAST(hit AS INT)), 0) AS BIGINT)
-              AS files_scanned,
-            CAST(coalesce(sum(CASE WHEN hit THEN n_rows END), 0)
-              AS BIGINT) AS rows_scanned
-            FROM ov GROUP BY 1, 2, 3, 4),
-          t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS total_rows
-            FROM rep)
-          SELECT dim, probe_ix, lo, hi, n_files, files_scanned,
-            1.0 - CAST(files_scanned AS DOUBLE) / n_files AS skip_frac,
-            rows_scanned,
-            CAST(rows_scanned AS DOUBLE) / total_rows AS rows_frac
-          FROM ag CROSS JOIN t ORDER BY dim, probe_ix""",
-    // Integer-valued quantities sum exactly in double in any order, so
-    // avg is ONE correctly-rounded division and the 0.2·avg threshold
-    // replays bit-identically.
-    "q_small_orders" ->
-      s"""WITH a AS (SELECT l_partkey,
-            sum(l_quantity) / count(*) AS avg_qty
-            FROM lineitem GROUP BY 1),
-          s AS (SELECT l.l_partkey, l.l_extendedprice
-            FROM lineitem l JOIN a USING (l_partkey)
-            WHERE l.l_quantity < CAST($SmallOrderFrac AS DOUBLE)
-              * a.avg_qty),
-          j AS (SELECT p.p_brand, s.l_extendedprice
-            FROM s JOIN part p ON p.p_partkey = s.l_partkey)
-          SELECT p_brand, count(*) AS n_small_lines,
-            CAST(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-              AS BIGINT) AS DOUBLE) / 100.0 AS revenue
-          FROM j GROUP BY 1 ORDER BY 1""",
-    // Costs are integer cents (round -> bigint div, the
-    // q_price_dispersion idiom), so min and the equality join-back
-    // replay exactly; the ORDER BY is total because (p_partkey,
-    // s_name) is unique on the candidate grain.
-    "q_min_cost_supplier" ->
-      s"""WITH ps AS (SELECT l_partkey, l_suppkey,
-            min(CAST(round(l_extendedprice * 100) AS BIGINT) //
-              CAST(l_quantity AS BIGINT)) AS cost_cents
-            FROM lineitem GROUP BY 1, 2),
-          eu AS (SELECT s_suppkey, s_name, s_acctbal, n_name
-            FROM supplier JOIN nation ON n_nationkey = s_nationkey
-            JOIN region ON r_regionkey = n_regionkey
-            WHERE r_name = '$Q2Region'),
-          cand AS (SELECT ps.l_partkey, p.p_brand, ps.cost_cents,
-              eu.s_name, eu.s_acctbal, eu.n_name
-            FROM ps JOIN eu ON eu.s_suppkey = ps.l_suppkey
-            JOIN part p ON p.p_partkey = ps.l_partkey
-            WHERE p.p_type = '$Q2PartType' AND p.p_size % $Q2SizeMod = 0),
-          mn AS (SELECT l_partkey, min(cost_cents) AS mc
-            FROM cand GROUP BY 1)
-          SELECT c.s_acctbal, c.s_name, c.n_name,
-            c.l_partkey AS p_partkey, c.p_brand,
-            CAST(c.cost_cents AS DOUBLE) / 100.0 AS supply_cost
-          FROM cand c JOIN mn ON mn.l_partkey = c.l_partkey
-            AND c.cost_cents = mn.mc
-          ORDER BY c.s_acctbal DESC, c.n_name, c.s_name, c.l_partkey
-          LIMIT $Q2TopK""",
-    // Cent-exact part values, cross-multiplied share threshold
-    // (val*den > total — pure bigint, no division in the cut).
-    "q_important_stock" ->
-      s"""WITH v AS (SELECT l_partkey,
-            CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-              AS BIGINT) AS value_c
-            FROM lineitem JOIN supplier ON s_suppkey = l_suppkey
-            WHERE s_nationkey = $Q11NationKey GROUP BY 1),
-          t AS (SELECT CAST(sum(value_c) AS BIGINT) AS total_c FROM v)
-          SELECT l_partkey AS p_partkey,
-            CAST(value_c AS DOUBLE) / 100.0 AS stock_value,
-            CAST(value_c AS DOUBLE) / total_c AS share
-          FROM v CROSS JOIN t WHERE value_c * $Q11FracDen > total_c
-          ORDER BY stock_value DESC, p_partkey""",
-    // Integer-valued quantities sum exactly in double in any order;
-    // the dominance cut is the 2*supp > part cross-multiply.
-    "q_promo_stock_suppliers" ->
-      s"""WITH w AS (SELECT l_partkey, l_suppkey,
-            sum(l_quantity) AS supp_qty
-            FROM lineitem JOIN part ON p_partkey = l_partkey
-            WHERE p_type = '$Q20PartType'
-              AND l_shipdate >= '$Q20Start' AND l_shipdate < '$Q20End'
-            GROUP BY 1, 2),
-          pt AS (SELECT l_partkey, sum(supp_qty) AS part_qty
-            FROM w GROUP BY 1),
-          q AS (SELECT w.l_suppkey, count(*) AS n_parts,
-              CAST(sum(w.supp_qty) AS BIGINT) AS dominated_qty
-            FROM w JOIN pt ON pt.l_partkey = w.l_partkey
-            WHERE w.supp_qty * 2 > pt.part_qty GROUP BY 1)
-          SELECT s_suppkey, s_name, n_name, n_parts, dominated_qty
-          FROM q JOIN supplier ON s_suppkey = l_suppkey
-          JOIN nation ON n_nationkey = s_nationkey
-          ORDER BY s_suppkey""",
-    "q_bulk_orders" ->
-      s"""WITH big AS (SELECT l_orderkey, sum(l_quantity) AS sum_qty
-            FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > $BulkMinQty)
-          SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate,
-            o.o_totalprice, big.sum_qty
-          FROM orders o JOIN big ON big.l_orderkey = o.o_orderkey
-          JOIN customer c ON c.c_custkey = o.o_custkey
-          ORDER BY o.o_totalprice DESC, o.o_orderkey
-          LIMIT $BulkTopK""",
-    // The above-average test is the integer cross-multiplication
-    // bal·n > Σbal — no average division anywhere; anti-join replays
-    // as NOT EXISTS over the same recency window.
-    "q_idle_customers" ->
-      s"""WITH b AS (SELECT c_custkey, c_nationkey,
-            CAST(round(c_acctbal * 100) AS BIGINT) AS bc FROM customer),
-          t AS (SELECT CAST(sum(bc) AS BIGINT) AS sc, count(*) AS n
-            FROM b WHERE bc > 0),
-          mx AS (SELECT max(o_orderdate) AS m FROM orders),
-          idle AS (SELECT b.c_nationkey, b.bc
-            FROM b CROSS JOIN t CROSS JOIN mx
-            WHERE b.bc * t.n > t.sc AND NOT EXISTS (
-              SELECT 1 FROM orders o WHERE o.o_custkey = b.c_custkey
-                AND o.o_orderdate > mx.m - INTERVAL $IdleDays DAY))
-          SELECT c_nationkey, count(*) AS n_custs,
-            CAST(CAST(sum(bc) AS BIGINT) AS DOUBLE) / 100.0 AS total_bal
-          FROM idle GROUP BY 1 ORDER BY 1""",
-    // p̂ and the Wilson bound are the SAME fixed-shape scalar chain
-    // over exact integer (n, s) on both engines — every step
-    // correctly rounded, so doubles hash-match. The z² literal is the
-    // Scala-computed product interpolated at full precision.
-    "q_ctr_wilson" -> {
-      val z2 = CtrZ * CtrZ
-      s"""WITH a AS (SELECT user_id % $CtrSegments AS segment,
-            count(DISTINCT user_id) AS n,
-            count(DISTINCT CASE WHEN event_type = '$CtrSuccessType'
-              THEN user_id END) AS s
-            FROM events GROUP BY 1),
-          p AS (SELECT segment, n, s,
-            CAST(s AS DOUBLE) / n AS rate FROM a)
-          SELECT segment, n, s,
-            CASE WHEN n > 0 THEN rate END AS rate,
-            CASE WHEN n > 0 THEN
-              (rate + $z2 / (CAST(n AS DOUBLE) * 2) - $CtrZ *
-                sqrt(rate * (1.0 - rate) / CAST(n AS DOUBLE) +
-                  $z2 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * 4))) /
-              (1.0 + $z2 / CAST(n AS DOUBLE))
-            END AS wilson_lb
-          FROM p ORDER BY segment""" },
-    // Star edges to each key group's min record, then the recursive
-    // reach closure — identical components to the all-pairs graph.
-    "q_entity_components" ->
-      s"""WITH RECURSIVE ids AS (SELECT c_custkey AS doc_id FROM customer),
-          keyed AS (
-            SELECT c_custkey AS id,
-              'g3:' || CAST(c_custkey // $EntityG3 AS VARCHAR) AS k
-            FROM customer
-            UNION ALL
-            SELECT c_custkey,
-              'dec:' || CAST(c_custkey // $EntityDecade AS VARCHAR)
-            FROM customer WHERE c_custkey % $EntityG3 = 0),
-          hubs AS (SELECT k, min(id) AS d1 FROM keyed GROUP BY 1),
-          star AS (SELECT DISTINCT hubs.d1, keyed.id AS d2
-            FROM keyed JOIN hubs USING (k) WHERE keyed.id <> hubs.d1),
-          edges AS (SELECT d1, d2 FROM star
-            UNION ALL SELECT d2, d1 FROM star),
-          reach AS (
-            SELECT doc_id, doc_id AS r FROM ids
-            UNION
-            SELECT e.d2 AS doc_id, reach.r FROM reach
-            JOIN edges e ON e.d1 = reach.doc_id),
-          lab AS (SELECT doc_id, min(r) AS rep FROM reach GROUP BY 1),
-          sz AS (SELECT rep, count(*) AS entity_size FROM lab GROUP BY 1)
-          SELECT lab.doc_id AS record_id, lab.rep AS entity_id,
-            sz.entity_size
-          FROM lab JOIN sz USING (rep) ORDER BY 1""",
-    // Replays the planting (char-10 deletion, +0.25 dyadic balance
-    // drift) and the block-then-verify match; the blocking key is
-    // nation × LAST-3 name chars on both sides, so the candidate sets
-    // are identical and the pair list matches row-for-row.
-    "q_record_dedup" ->
-      s"""WITH c AS (SELECT c_custkey AS k, c_name AS nm,
-            c_nationkey AS nk, c_acctbal AS bal, c_mktsegment AS seg
-            FROM customer),
-          p AS (SELECT k + ${Linkage.DupKeyOffset} AS k,
-            substr(nm, 1, 9) || substr(nm, 11) AS nm, nk,
-            bal + CAST(0.25 AS DOUBLE) AS bal, seg
-            FROM c WHERE k % 10 = 3),
-          u AS (SELECT * FROM c UNION ALL SELECT * FROM p),
-          wp AS (SELECT least(8, greatest(3, CAST(ceil(log10(
-            CAST(count(*) AS DOUBLE) / 1600.0)) AS INT))) AS wd FROM u),
-          b AS (SELECT u.*, nk || '|' ||
-            substr(nm, length(nm) - (wp.wd - 1), wp.wd) AS blk
-            FROM u, wp)
-          SELECT a.k AS a_key, b2.k AS b_key,
-            CAST(levenshtein(a.nm, b2.nm) AS INT) AS name_lev,
-            abs(a.bal - b2.bal) AS bal_diff, a.seg AS segment
-          FROM b a JOIN b b2 ON a.blk = b2.blk AND a.k < b2.k
-          WHERE levenshtein(a.nm, b2.nm) <= 1 AND a.seg = b2.seg
-            AND abs(a.bal - b2.bal) <= 100
-          ORDER BY 1, 2""",
-    // One SELECT per rule over the same predicate text the engine
-    // builds from orderRules; NULL predicate = violation on both sides.
-    "q_dq_rules" -> {
-      val preds = Seq(
-        "custkey_not_null" -> "o_custkey IS NOT NULL",
-        "orderdate_in_range" ->
-          "o_orderdate BETWEEN '1992-01-01' AND '1998-12-31'",
-        "orderkey_not_null" -> "o_orderkey IS NOT NULL",
-        "status_known" -> "o_orderstatus IN ('O', 'F', 'P')",
-        "totalprice_below_cap" -> s"o_totalprice < $OrderPriceCap",
-        "totalprice_positive" -> "o_totalprice > 0")
-      preds.map { case (name, p) =>
-        s"""SELECT '$name' AS rule, count(*) AS n_rows,
-            CAST(sum(CAST(NOT coalesce($p, false) AS INT)) AS BIGINT)
-              AS n_violations,
-            CAST(CAST(sum(CAST(NOT coalesce($p, false) AS INT)) AS BIGINT)
-              AS DOUBLE) / count(*) AS violation_rate
-            FROM orders"""
-      }.mkString("", "\n          UNION ALL ", "\n          ORDER BY rule")
-    },
-    // One det-grain subquery per declared candidate pair, 1-row
-    // summaries unioned — the engine's exact shape
-    "q_fd_audit" -> FdAuditPairs.map { case (det, dep) =>
-      s"""SELECT '$det' AS determinant, '$dep' AS dependent,
-          CAST(count(*) AS BIGINT) AS n_classes,
-          CAST(sum(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_violating,
-          CAST(sum(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS DOUBLE) /
-            count(*) AS violation_rate,
-          CAST(max(n_dep) AS BIGINT) AS max_distinct,
-          CAST(sum(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS BIGINT) = 0
-            AS holds
-          FROM (SELECT $det AS det_value, count(DISTINCT $dep) AS n_dep
-            FROM orders GROUP BY 1)"""
-    }.mkString("SELECT * FROM (", "\n          UNION ALL ",
-      ")\n          ORDER BY determinant, dependent"),
-    // Quantize on the declared decimal grids, ONE moment aggregate,
-    // per-pair r with every moment cast to double BEFORE combining
-    // (the comovement overflow form)
-    "q_corr_matrix" -> {
-      val names = CorrMatrixCols.map(_._1)
-      val pairs = for {
-        i <- names.indices; j <- (i + 1) until names.size
-      } yield (names(i), names(j))
-      val qsel = CorrMatrixCols.map { case (c, s) =>
-        s"CAST(floor($c * ${math.pow(10, s)} + 0.5) AS BIGINT) AS $c"
-      }.mkString(", ")
-      // moments stay HUGEINT (the engine's decimal(38,0) twin) — the
-      // sum of squared cent prices passes int64 at ~1e5 rows; the only
-      // cast is the per-moment double cast inside the r expression
-      val aggsql = (names.map(c => s"sum($c) AS s_$c") ++
-        names.map(c => s"sum($c * $c) AS ss_$c") ++
-        pairs.map { case (a, b) =>
-          s"sum($a * $b) AS sp_${a}_$b" }).mkString(", ")
-      def dd(c: String) = s"CAST($c AS DOUBLE)"
-      val rows = pairs.map { case (a, b) =>
-        s"""SELECT '$a' AS col_a, '$b' AS col_b, n AS n_rows,
-            (${dd("n")} * ${dd(s"sp_${a}_$b")} -
-              ${dd(s"s_$a")} * ${dd(s"s_$b")}) /
-            sqrt(nullif(
-              (${dd("n")} * ${dd(s"ss_$a")} - ${dd(s"s_$a")} * ${dd(s"s_$a")}) *
-              (${dd("n")} * ${dd(s"ss_$b")} - ${dd(s"s_$b")} * ${dd(s"s_$b")}),
-              0.0)) AS corr
-            FROM m"""
-      }
-      s"""WITH c AS (SELECT $qsel FROM lineitem
-            WHERE ${names.map(n => s"$n IS NOT NULL").mkString(" AND ")}),
-          m AS (SELECT CAST(count(*) AS BIGINT) AS n, $aggsql FROM c)
-          SELECT * FROM (${rows.mkString("\n          UNION ALL ")})
-          ORDER BY col_a, col_b"""
-    },
-    // Single GROUP BY replay; cadence is (last-first)/(n-1) off integer
-    // microsecond extremes, spend sums integer cents.
-    "q_user_features" -> {
-      val typeCols = EventTypes.map(t =>
-        s"CAST(sum(CAST(event_type = '$t' AS INT)) AS BIGINT) AS n_$t")
-        .mkString(",\n            ")
-      s"""WITH u AS (SELECT user_id, count(*) AS n_events,
-            count(DISTINCT CAST(ts AS DATE)) AS active_days,
-            min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us,
-            max(CAST(ts AS DATE)) AS last_day,
-            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-              AS spend_cents,
-            $typeCols
-            FROM events GROUP BY 1),
-          a AS (SELECT max(last_day) AS as_of FROM u)
-          SELECT user_id, n_events, active_days,
-            CAST(date_diff('day', last_day, as_of) AS INT) AS rec_days,
-            CAST(last_us - first_us AS DOUBLE) / nullif(n_events - 1, 0)
-              / 1000000.0 AS mean_gap_s,
-            CAST(spend_cents AS DOUBLE) / 100.0 AS spend,
-            ${EventTypes.map("n_" + _).mkString(", ")}
-          FROM u CROSS JOIN a ORDER BY user_id"""
-    },
-    "q_histogram" ->
-      s"""WITH b AS (SELECT event_type,
-            CASE WHEN value < $HistLo THEN -1
-                 ELSE CAST(least(floor((value - $HistLo) / $HistWidth),
-                   $HistBins) AS INTEGER) END AS bin
-            FROM events WHERE value IS NOT NULL),
-          g AS (SELECT event_type, bin, count(*) AS n FROM b GROUP BY 1, 2)
-          SELECT event_type, bin,
-            CASE WHEN bin >= 0 THEN $HistLo + bin * $HistWidth END AS bin_lo,
-            CASE WHEN bin < $HistBins
-                 THEN $HistLo + (bin + 1) * $HistWidth END AS bin_hi,
-            n, CAST(n AS DOUBLE) /
-              CAST(sum(n) OVER (PARTITION BY event_type) AS BIGINT) AS share
-          FROM g ORDER BY event_type, bin""",
-    // median/MAD via quantile_cont — the percentileBands interpolation
-    // contract; the flag is one multiply-compare per grid row
-    "q_mad_anomaly" ->
-      s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            count(*) AS n FROM events GROUP BY 1, 2),
-          md AS (SELECT event_type, quantile_cont(n, 0.5) AS med
-            FROM d GROUP BY 1),
-          dv AS (SELECT d.event_type, day, n, med,
-              abs(CAST(n AS DOUBLE) - med) AS adev
-            FROM d JOIN md ON md.event_type = d.event_type),
-          md2 AS (SELECT event_type, quantile_cont(adev, 0.5) AS mad
-            FROM dv GROUP BY 1)
-          SELECT dv.event_type, day, n, med, md2.mad,
-            adev > $AnomalyK * md2.mad AS is_outlier
-          FROM dv JOIN md2 ON md2.event_type = dv.event_type
-          ORDER BY 1, 2""",
-    "q_qa_anomaly" ->
-      s"""WITH d AS (SELECT CAST(ts AS DATE) AS date, event_type,
-            count(*) AS n_events,
-            date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day_num
-          FROM events GROUP BY 1, 2, 4),
-          w AS (SELECT date, event_type, n_events,
-            count(n_events) OVER win AS base_days,
-            coalesce(CAST(sum(n_events) OVER win AS BIGINT), 0) AS base_sum,
-            coalesce(CAST(sum(n_events * n_events) OVER win AS BIGINT), 0)
-              AS base_sumsq
-          FROM d WINDOW win AS (PARTITION BY event_type ORDER BY day_num
-            RANGE BETWEEN $AnomalyDays PRECEDING AND 1 PRECEDING))
-          SELECT date, event_type, n_events, base_days, base_sum,
-            CASE WHEN base_days < $AnomalyMinDays THEN false
-              ELSE (CAST(base_days AS DOUBLE) * CAST(n_events AS DOUBLE)
-                    - CAST(base_sum AS DOUBLE))
-                 * (CAST(base_days AS DOUBLE) * CAST(n_events AS DOUBLE)
-                    - CAST(base_sum AS DOUBLE))
-                 > ${AnomalyK * AnomalyK}.0 *
-                   (CAST(base_days AS DOUBLE) * CAST(base_sumsq AS DOUBLE)
-                    - CAST(base_sum AS DOUBLE) * CAST(base_sum AS DOUBLE))
-              END AS is_anomaly
-          FROM w ORDER BY date, event_type""",
-    "q_semantic_dedup" ->
-      s"""WITH e AS ($NormedEmbSql),
-          $TrainedCtrCtes,
-          asg AS (SELECT e.vec_id, e.embedding, e.nrm, ctr.centroid_id,
-            row_number() OVER (PARTITION BY e.vec_id
-              ORDER BY ${dotSql("e", "ctr")} / (e.nrm * ctr.nrm) DESC,
-                       ctr.centroid_id) AS rk
-            FROM e CROSS JOIN ctr WHERE e.nrm <> 0 AND ctr.nrm <> 0),
-          a2 AS (SELECT vec_id, embedding, nrm, centroid_id FROM asg
-            WHERE rk = 1),
-          dp AS (SELECT hi.vec_id, min(lo.vec_id) AS dup_of
-            FROM a2 lo JOIN a2 hi ON lo.centroid_id = hi.centroid_id
-              AND lo.vec_id < hi.vec_id
-            WHERE ${dotSql("lo", "hi")} / (lo.nrm * hi.nrm)
-              >= $SemDedupThreshold
-            GROUP BY 1)
-          SELECT a2.vec_id, a2.centroid_id,
-            CASE WHEN dp.dup_of IS NULL THEN 0 ELSE 1 END AS is_dup,
-            dp.dup_of
-          FROM a2 LEFT JOIN dp ON a2.vec_id = dp.vec_id
-          ORDER BY a2.vec_id""",
-    "q_mixture" -> MixtureSql,
-    // sqrt() is correctly rounded in both engines; the Σ√share
-    // normalizer replays the engine's source-ordered fold exactly
-    "q_mixture_temp" ->
-      s"""WITH t AS (SELECT source, $ToksSql AS toks FROM documents),
-          g AS (SELECT source, count(*) AS n_docs,
-            CAST(coalesce(sum(len(toks)), 0) AS BIGINT) AS n_tokens
-            FROM t GROUP BY 1),
-          w AS (SELECT source, n_docs, n_tokens,
-            CAST(sum(n_tokens) OVER () AS BIGINT) AS tot_tokens FROM g),
-          x AS (SELECT source, n_docs, n_tokens,
-            CAST(n_tokens AS DOUBLE) / nullif(tot_tokens, 0) AS avail_share,
-            sqrt(CAST(n_tokens AS DOUBLE) / nullif(tot_tokens, 0)) AS root
-            FROM w),
-          nr AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(root ORDER BY source)), (a, b) -> a + b) AS tot_root
-            FROM x)
-          SELECT source, n_docs, n_tokens, avail_share,
-            root / nullif(tot_root, 0.0) AS smoothed_share,
-            (root / nullif(tot_root, 0.0)) / nullif(avail_share, 0.0)
-              AS boost
-          FROM x, nr ORDER BY source""",
-    // integer micro-token floor-div per doc, BIGINT sums — the 1/n
-    // soft-dedup weight replayed order-independently
-    "q_effective_tokens" ->
-      s"""WITH t AS (SELECT doc_id, source, md5($NormSql) AS fingerprint,
-            CAST(coalesce(len($ToksSql), 0) AS BIGINT) AS n_toks
-            FROM documents),
-          fam AS (SELECT fingerprint, CAST(count(*) AS BIGINT) AS csize
-            FROM t GROUP BY 1),
-          j AS (SELECT t.source, t.n_toks, fam.csize
-            FROM t JOIN fam USING (fingerprint))
-          SELECT source, count(*) AS n_docs,
-            CAST(coalesce(sum(CASE WHEN csize > 1 THEN 1 ELSE 0 END), 0)
-              AS BIGINT) AS n_dup_docs,
-            CAST(coalesce(sum(n_toks), 0) AS BIGINT) AS raw_tokens,
-            CAST(coalesce(sum(n_toks * 1000000 // csize), 0) AS BIGINT)
-              AS eff_tokens_micro,
-            CAST(CAST(coalesce(sum(n_toks * 1000000 // csize), 0) AS BIGINT)
-                AS DOUBLE) /
-              nullif(CAST(coalesce(sum(n_toks), 0) AS BIGINT) * 1000000, 0)
-              AS eff_ratio
-          FROM j GROUP BY source ORDER BY source""",
-    // ntile over the identical (quality_score, doc_id) total order;
-    // NULL-quality docs excluded on both sides (NULL sort order is
-    // engine-specific and must not sit inside a rank window)
-    "q_quality_norm" ->
-      s"""WITH $QualityScoreCtes,
-          nn AS (SELECT source, doc_id, quality_score FROM qsc
-            WHERE quality_score IS NOT NULL),
-          dd AS (SELECT source, doc_id, quality_score,
-            CAST(ntile(10) OVER (PARTITION BY source
-              ORDER BY quality_score, doc_id) AS INTEGER) AS decile
-            FROM nn)
-          SELECT source, decile, count(*) AS n_docs,
-            min(quality_score) AS q_lo, max(quality_score) AS q_hi,
-            (CAST(decile AS DOUBLE) - CAST(0.5 AS DOUBLE)) /
-              CAST(10.0 AS DOUBLE) AS norm_mid
-          FROM dd GROUP BY 1, 2 ORDER BY 1, 2""",
-    // the oracle replays the PLAIN per-bucket window; the engine's
-    // graft_topk τ-prune keeps everything with cnt ≥ the k-th count,
-    // so the row_number cut is bit-identical by construction
-    "q_trending_terms" ->
-      s"""WITH t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          mb AS (SELECT min(doc_id) AS min_id, max(doc_id) AS max_id
-            FROM documents),
-          tf AS (SELECT ((doc_id - min_id) * $TrendBuckets) //
-              (max_id - min_id + 1) + 1 AS bucket,
-            unnest(toks) AS term FROM t, mb),
-          c AS (SELECT bucket, term, count(*) AS cnt FROM tf
-            GROUP BY 1, 2),
-          r AS (SELECT bucket, term, cnt,
-            CAST(row_number() OVER (PARTITION BY bucket
-              ORDER BY cnt DESC, term) AS INTEGER) AS rnk
-            FROM c),
-          k AS (SELECT * FROM r WHERE rnk <= $TrendTopK)
-          SELECT k.bucket, k.term, k.cnt, k.rnk,
-            p.rnk AS prev_rnk,
-            p.rnk - k.rnk AS rank_delta
-          FROM k LEFT JOIN k p
-            ON p.bucket = k.bucket - 1 AND p.term = k.term
-          ORDER BY k.bucket, k.rnk""",
-    "q_mixture_sample" ->
-      s"""WITH mix AS ($MixtureSql),
-          d AS (SELECT doc_id, source,
-            ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mix'), 1, 6))::BIGINT
-              % $SampleBuckets AS bucket
-            FROM documents),
-          c AS (SELECT d.doc_id, d.source,
-            CAST(floor(mix.epochs) AS BIGINT) +
-              CASE WHEN d.bucket <
-                CAST(floor((mix.epochs - floor(mix.epochs)) * $SampleBuckets)
-                  AS BIGINT)
-              THEN 1 ELSE 0 END AS n_copies
-            FROM d JOIN mix USING (source))
-          SELECT doc_id, source, unnest(range(0, n_copies)) AS copy_ix
-          FROM c WHERE n_copies > 0 ORDER BY doc_id, copy_ix""",
-    "q_dedup_recall" ->
-      s"""WITH ex AS ($EmbedNearDupSql),
-          ap AS ($EmbedLshSql),
-          j AS (SELECT v1, v2, in_exact, in_approx FROM
-            (SELECT v1, v2, 1 AS in_exact FROM ex) a
-            FULL OUTER JOIN (SELECT v1, v2, 1 AS in_approx FROM ap) b
-            USING (v1, v2)),
-          g AS (SELECT
-            coalesce(CAST(sum(in_exact) AS BIGINT), 0) AS n_exact,
-            coalesce(CAST(sum(in_approx) AS BIGINT), 0) AS n_approx,
-            coalesce(CAST(sum(in_exact * in_approx) AS BIGINT), 0) AS n_both
-            FROM j)
-          SELECT n_exact, n_approx, n_both,
-            CAST(n_both AS DOUBLE) / nullif(n_approx, 0) AS precision,
-            CAST(n_both AS DOUBLE) / nullif(n_exact, 0) AS recall
-          FROM g""",
-    "q_props_health" ->
-      """SELECT event_type, count(*) AS n_events, count(k) AS n_valid,
-          count(*) - count(k) AS n_invalid, min(k) AS min_k,
-          max(k) AS max_k, CAST(sum(k) AS BIGINT) AS sum_k
-          FROM (SELECT event_type,
-            CASE WHEN json_valid(props) THEN
-              TRY_CAST(json_extract_string(props, '$.k') AS INTEGER)
-            END AS k FROM events)
-          GROUP BY 1 ORDER BY 1""",
-    "q_search" -> {
-      val terms = SearchTerms.map(t => s"'$t'").mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          ex AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-          h AS (SELECT doc_id, term, count(*) AS tf FROM ex
-            WHERE term IN ($terms) GROUP BY 1, 2),
-          dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM h
-            GROUP BY 1),
-          nd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs
-            FROM documents),
-          sc AS (SELECT h.doc_id, h.term, h.tf,
-              h.tf * (nd.n_docs / dfq.df) AS w
-            FROM h JOIN dfq USING (term) CROSS JOIN nd),
-          ag AS (SELECT doc_id, count(*) AS n_terms,
-              CAST(sum(tf) AS BIGINT) AS n_hits,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(w ORDER BY term)), (x, y) -> x + y) AS score
-            FROM sc GROUP BY 1)
-          SELECT doc_id, n_terms, n_hits, score FROM ag
-          ORDER BY score DESC, doc_id LIMIT $SearchK"""
-    },
-    "q_search_eval" -> searchEvalOracleSql,
-    "q_search_ndcg" -> searchNdcgOracleSql,
-    // same hit/df/dl CTEs as the engine; the fold is term-sorted and
-    // the k-cut orders by the ROUNDED score (ln is the one libm op —
-    // see searchBm25 scaladoc)
-    "q_search_bm25" -> {
-      val terms = SearchTerms.map(t => s"'$t'").mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-          dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM tk),
-          st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-            CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-          ex AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-          h AS (SELECT doc_id, term, count(*) AS tf FROM ex
-            WHERE term IN ($terms) GROUP BY 1, 2),
-          dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM h
-            GROUP BY 1),
-          sc AS (SELECT h.doc_id, h.term, h.tf,
-              ln(1.0 + (st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5)) *
-                (h.tf * (1.2 + 1)) /
-                (h.tf + 1.2 * (CAST(1 AS DOUBLE) - 0.75 +
-                  0.75 * dl.dl / st.avgdl)) AS w
-            FROM h JOIN dfq USING (term) JOIN dl USING (doc_id)
-            CROSS JOIN st),
-          ag AS (SELECT doc_id, count(*) AS n_terms,
-              CAST(sum(tf) AS BIGINT) AS n_hits,
-              round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                list(w ORDER BY term)), (x, y) -> x + y), 6) AS score
-            FROM sc GROUP BY 1)
-          SELECT doc_id, n_terms, n_hits, score FROM ag
-          ORDER BY score DESC, doc_id LIMIT $SearchK"""
-    },
-    "q_qa_orphans" ->
-      s"""WITH k AS (SELECT DISTINCT c_custkey AS user_id FROM customer
-            WHERE c_custkey < $PanelMaxKey),
-          j AS (SELECT e.event_type,
-              CASE WHEN k.user_id IS NULL THEN 0 ELSE 1 END AS m
-            FROM events e LEFT JOIN k ON e.user_id = k.user_id)
-          SELECT event_type, count(*) AS n_rows,
-            CAST(sum(m) AS BIGINT) AS n_matched,
-            count(*) - CAST(sum(m) AS BIGINT) AS n_orphans,
-            CAST(count(*) - CAST(sum(m) AS BIGINT) AS DOUBLE) / count(*)
-              AS orphan_share
-          FROM j GROUP BY 1 ORDER BY 1""",
-    "q_percentiles" ->
-      """WITH c AS (SELECT event_type,
-            CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL),
-          q AS (SELECT event_type, count(*) AS n_rows,
-            quantile_cont(c, [0.25, 0.5, 0.75]) AS ps FROM c GROUP BY 1)
-          SELECT event_type, n_rows, ps[1] / 100.0 AS p25,
-            ps[2] / 100.0 AS p50, ps[3] / 100.0 AS p75
-          FROM q ORDER BY event_type""",
-    // Dyadic 1/16 cut points on the cent grid — interpolation exact,
-    // clipped sums on the 2^-4 grid stay order-independent (same
-    // bit-portability contract as q_percentiles).
-    "q_winsorize" ->
-      """WITH c0 AS (SELECT event_type,
-            CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL),
-          cuts AS (SELECT event_type, count(*) AS n_rows,
-            quantile_cont(c, [0.0625, 0.9375]) AS ps
-          FROM c0 GROUP BY 1),
-          j AS (SELECT c0.event_type, c0.c, cuts.n_rows,
-            ps[1] AS lo_c, ps[2] AS hi_c
-          FROM c0 JOIN cuts USING (event_type))
-          SELECT event_type, n_rows,
-            lo_c / 100.0 AS lo_cut, hi_c / 100.0 AS hi_cut,
-            CAST(coalesce(sum(CASE WHEN c < lo_c THEN 1 END), 0) AS BIGINT)
-              AS n_clip_lo,
-            CAST(coalesce(sum(CASE WHEN c > hi_c THEN 1 END), 0) AS BIGINT)
-              AS n_clip_hi,
-            CAST(sum(c) AS DOUBLE) / n_rows / 100.0 AS mean_before,
-            sum(greatest(lo_c, least(hi_c, CAST(c AS DOUBLE)))) / n_rows
-              / 100.0 AS mean_after
-          FROM j GROUP BY event_type, n_rows, lo_c, hi_c
-          ORDER BY event_type""",
-    "q_active_users" ->
-      s"""WITH uw AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-            FROM events),
-          dau AS (SELECT day, count(*) AS dau FROM uw GROUP BY 1),
-          ex AS (SELECT DISTINCT user_id, day + CAST(x AS INTEGER) AS day2
-            FROM uw, range(0, $ActiveDays) t(x)),
-          wau AS (SELECT day2 AS day, count(*) AS active_${ActiveDays}d
-            FROM ex GROUP BY 1)
-          SELECT d.day, d.dau, w.active_${ActiveDays}d
-          FROM dau d JOIN wau w USING (day) ORDER BY day""",
-    // sketch-bound gates: the oracle recomputes the EXACT leg and
-    // expects literal TRUE per verdict column — a sketch drifting
-    // past its bound hash-fails the gate (the estimate itself never
-    // rides in the output; it is the engine-specific part)
-    "q_reach_approx_gate" ->
-      """WITH pv AS (SELECT CAST(event_type AS VARCHAR) AS value,
-            count(DISTINCT user_id) AS reach_exact FROM events GROUP BY 1
-          UNION ALL
-          SELECT 'all', count(DISTINCT user_id) FROM events)
-          SELECT value, CAST(reach_exact AS BIGINT) AS reach_exact,
-            TRUE AS within_bound
-          FROM pv ORDER BY value""",
-    "q_active_users_gate" ->
-      s"""WITH uw AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-            FROM events),
-          dau AS (SELECT day, count(*) AS dau FROM uw GROUP BY 1),
-          ex AS (SELECT DISTINCT user_id, day + CAST(x AS INTEGER) AS day2
-            FROM uw, range(0, $ActiveDays) t(x)),
-          wau AS (SELECT day2 AS day, count(*) AS active_${ActiveDays}d
-            FROM ex GROUP BY 1)
-          SELECT d.day, d.dau, w.active_${ActiveDays}d,
-            TRUE AS dau_within, TRUE AS wau_within
-          FROM dau d JOIN wau w USING (day) ORDER BY day""",
-    "q_pairwise_approx_gate" ->
-      """WITH hv AS (SELECT DISTINCT event_type AS value,
-            user_id AS household_id FROM events),
-          pv AS (SELECT value, count(*) AS nx FROM hv GROUP BY 1),
-          ep AS (SELECT a.value AS media_type_1, b.value AS media_type_2,
-            count(*) AS overlap_exact
-            FROM hv a JOIN hv b ON a.household_id = b.household_id
-              AND a.value < b.value
-            GROUP BY 1, 2)
-          SELECT p1.value AS media_type_1, p2.value AS media_type_2,
-            CAST(p1.nx AS BIGINT) AS n1_exact,
-            CAST(p2.nx AS BIGINT) AS n2_exact,
-            CAST(coalesce(ep.overlap_exact, 0) AS BIGINT) AS overlap_exact,
-            TRUE AS within_bound
-          FROM pv p1 JOIN pv p2 ON p1.value < p2.value
-          LEFT JOIN ep ON ep.media_type_1 = p1.value
-            AND ep.media_type_2 = p2.value
-          ORDER BY 1, 2""",
-    "q_lifecycle_approx_gate" ->
-      s"""WITH uw AS (SELECT DISTINCT user_id,
-            CAST(date_trunc('week', ts) AS DATE) AS week
-            FROM events WHERE event_id % $CohortSliceMod = 0),
-          mx AS (SELECT max(week) AS max_week FROM uw),
-          lagged AS (SELECT user_id, week,
-            lag(week) OVER (PARTITION BY user_id ORDER BY week) AS prev_w,
-            lead(week) OVER (PARTITION BY user_id ORDER BY week) AS next_w
-            FROM uw),
-          act AS (SELECT week,
-            CASE WHEN prev_w IS NULL THEN 'new'
-                 WHEN week - prev_w = 7 THEN 'retained'
-                 ELSE 'resurrected' END AS status FROM lagged),
-          churn AS (SELECT week + 7 AS week, 'churned' AS status
-            FROM lagged, mx
-            WHERE (next_w IS NULL OR next_w - week > 7)
-              AND week + 7 <= max_week),
-          allr AS (SELECT * FROM act UNION ALL SELECT * FROM churn),
-          wide AS (SELECT week,
-            CAST(coalesce(count(*) FILTER (WHERE status = 'new'), 0)
-              AS BIGINT) AS new_exact,
-            CAST(coalesce(count(*) FILTER (WHERE status = 'retained'), 0)
-              AS BIGINT) AS retained_exact,
-            CAST(coalesce(count(*) FILTER (WHERE status = 'resurrected'), 0)
-              AS BIGINT) AS resurrected_exact,
-            CAST(coalesce(count(*) FILTER (WHERE status = 'churned'), 0)
-              AS BIGINT) AS churned_exact
-            FROM allr GROUP BY week),
-          actv AS (SELECT week, count(*) AS active_exact FROM uw GROUP BY 1),
-          fs AS (SELECT week, count(*) AS first_seen FROM
-            (SELECT user_id, min(week) AS week FROM uw GROUP BY 1)
-            GROUP BY 1),
-          grain AS (SELECT a.week, a.active_exact,
-            CAST(sum(coalesce(f.first_seen, 0)) OVER (ORDER BY a.week
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_exact
-            FROM actv a LEFT JOIN fs f USING (week))
-          SELECT a.week, CAST(a.active_exact AS BIGINT) AS active_exact,
-            a.cum_exact,
-            coalesce(w.new_exact, 0) AS new_exact,
-            coalesce(w.retained_exact, 0) AS retained_exact,
-            coalesce(w.resurrected_exact, 0) AS resurrected_exact,
-            coalesce(w.churned_exact, 0) AS churned_exact,
-            TRUE AS active_within, TRUE AS new_within,
-            TRUE AS retained_within, TRUE AS resurrected_within,
-            TRUE AS churned_within
-          FROM grain a LEFT JOIN wide w USING (week) ORDER BY a.week""",
-    "q_percentiles_approx_gate" ->
-      """WITH c AS (SELECT event_type,
-            CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL),
-          q AS (SELECT event_type, count(*) AS n_rows,
-            quantile_cont(c, [0.25, 0.5, 0.75]) AS ps FROM c GROUP BY 1)
-          SELECT event_type, n_rows, ps[1] / 100.0 AS p25,
-            ps[2] / 100.0 AS p50, ps[3] / 100.0 AS p75,
-            TRUE AS p25_within, TRUE AS p50_within, TRUE AS p75_within
-          FROM q ORDER BY event_type""",
-    // The CMS counters are plain commutative sums, so the estimates
-    // are merge-order independent and the oracle rebuilds the sketch
-    // bucket-for-bucket from the interpolated (a, b, p, w) literals —
-    // the one sketch query that is hash-gated, not rows-only.
-    "q_cms_freq" -> {
-      val cmsRows = Skew.CmsA.indices.map(i =>
-        s"(${i}, ${Skew.CmsA(i)}, ${Skew.CmsB(i)})").mkString(", ")
-      val p = Skew.CmsPrime
-      val w = Skew.CmsWidth
-      s"""WITH h AS (SELECT CASE WHEN event_id % 2 = 0 THEN 0
-            ELSE user_id END AS hot_key FROM events),
-          c(row_i, a, b) AS (VALUES $cmsRows),
-          sk AS (SELECT row_i,
-            ((a * (hot_key % $p) + b) % $p) % $w AS bucket,
-            count(*) AS cnt FROM h CROSS JOIN c GROUP BY 1, 2),
-          t AS (SELECT count(*) AS n_total FROM h),
-          top AS (SELECT hot_key, count(*) AS n_rows FROM h GROUP BY 1
-            ORDER BY n_rows DESC, hot_key LIMIT $SkewTopN),
-          probe AS (SELECT hot_key, n_rows, row_i,
-            ((a * (hot_key % $p) + b) % $p) % $w AS bucket
-            FROM top CROSS JOIN c),
-          e AS (SELECT hot_key, n_rows, min(cnt) AS est_rows
-            FROM probe JOIN sk USING (row_i, bucket) GROUP BY 1, 2)
-          SELECT hot_key, CAST(n_rows AS BIGINT) AS n_rows, est_rows,
-            est_rows - n_rows AS over_rows,
-            CAST(n_total AS BIGINT) AS n_total
-          FROM e CROSS JOIN t ORDER BY n_rows DESC, hot_key"""
-    },
-    "q_skew_report_gate" ->
-      s"""WITH h AS (SELECT CASE WHEN event_id % 2 = 0 THEN 0
-            ELSE user_id END AS hot_key FROM events),
-          t AS (SELECT count(*) AS n_total FROM h),
-          g AS (SELECT hot_key, count(*) AS n_rows FROM h GROUP BY 1),
-          top AS (SELECT hot_key, n_rows, n_total FROM g CROSS JOIN t
-            ORDER BY n_rows DESC, hot_key LIMIT $SkewTopN)
-          SELECT hot_key, CAST(n_rows AS BIGINT) AS n_rows,
-            CAST(n_total AS BIGINT) AS n_total, TRUE AS within_bound
-          FROM top WHERE n_rows * ${Skew.MgSummaryK + 1} > n_total
-          ORDER BY n_rows DESC, hot_key""",
-    "q_skew_report" ->
-      s"""WITH h AS (SELECT CASE WHEN event_id % 2 = 0 THEN 0
-            ELSE user_id END AS hot_key FROM events),
-          t AS (SELECT count(*) AS n_total FROM h),
-          g AS (SELECT hot_key, count(*) AS n_rows FROM h GROUP BY 1)
-          SELECT hot_key, n_rows, n_total,
-            CAST(n_rows AS DOUBLE) / n_total AS share
-          FROM g CROSS JOIN t ORDER BY n_rows DESC, hot_key
-          LIMIT $SkewTopN""",
-    "q_dedup_best" ->
-      s"""WITH $QualityScoreCtes,
-          f AS (SELECT doc_id, md5($NormSql) AS fingerprint FROM documents),
-          j AS (SELECT f.doc_id, f.fingerprint, qsc.quality_score
-            FROM f JOIN qsc USING (doc_id)),
-          w AS (SELECT *, first_value(doc_id) OVER (PARTITION BY fingerprint
-            ORDER BY quality_score DESC NULLS LAST, doc_id) AS rep_id FROM j)
-          SELECT doc_id, fingerprint, quality_score, rep_id,
-            CASE WHEN doc_id <> rep_id THEN 1 ELSE 0 END AS is_dup
-          FROM w ORDER BY doc_id""",
-    "q_table_diff" ->
-      s"""WITH cust AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-          aft AS (SELECT c_custkey, c_name,
-              CASE WHEN c_custkey % $ChangeMod = 0 THEN c_acctbal + 100.0
-                   ELSE c_acctbal END AS c_acctbal
-            FROM cust WHERE c_custkey % $DropMod <> 0
-            UNION ALL
-            SELECT c_custkey + $NewKeyOffset, c_name, c_acctbal FROM cust
-            WHERE c_custkey % $NewMod = 0),
-          j AS (SELECT o.c_custkey AS ok, a.c_custkey AS nk,
-              o.c_name AS onm, o.c_acctbal AS ob,
-              a.c_name AS nnm, a.c_acctbal AS nb
-            FROM cust o FULL OUTER JOIN aft a
-              ON o.c_custkey = a.c_custkey),
-          st AS (SELECT *,
-            CASE WHEN ok IS NULL THEN 'added'
-                 WHEN nk IS NULL THEN 'removed'
-                 WHEN (onm IS DISTINCT FROM nnm) OR
-                      (ob IS DISTINCT FROM nb) THEN 'changed'
-                 ELSE 'unchanged' END AS status FROM j)
-          SELECT coalesce(ok, nk) AS c_custkey, status,
-            CASE WHEN status = 'changed' THEN concat_ws(',',
-              CASE WHEN onm IS DISTINCT FROM nnm THEN 'c_name' END,
-              CASE WHEN ob IS DISTINCT FROM nb THEN 'c_acctbal' END)
-            END AS changed_cols
-          FROM st WHERE status <> 'unchanged' ORDER BY c_custkey""",
-    "q_scd_merge" ->
-      s"""WITH cust AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-          up AS (SELECT c_custkey, c_name, c_acctbal + 100.0 AS c_acctbal
-            FROM cust WHERE c_custkey % $ChangeMod = 0
-            UNION ALL
-            SELECT c_custkey, c_name, c_acctbal FROM cust
-            WHERE c_custkey % $ChangeMod = 1
-            UNION ALL
-            SELECT c_custkey + $NewKeyOffset, c_name, c_acctbal FROM cust
-            WHERE c_custkey % $NewMod = 0),
-          j AS (SELECT o.c_custkey AS ok, o.c_name AS onm,
-              o.c_acctbal AS ob, u.c_custkey AS uk, u.c_name AS unm,
-              u.c_acctbal AS ub
-            FROM cust o FULL OUTER JOIN up u ON o.c_custkey = u.c_custkey),
-          df AS (SELECT *, (onm IS DISTINCT FROM unm) OR
-              (ob IS DISTINCT FROM ub) AS d FROM j)
-          SELECT ok AS c_custkey, onm AS c_name, ob AS c_acctbal,
-            DATE '2024-01-01' AS effective_from,
-            CAST(NULL AS DATE) AS effective_to
-          FROM df WHERE ok IS NOT NULL AND (uk IS NULL OR NOT d)
-          UNION ALL
-          SELECT ok, onm, ob, DATE '2024-01-01', DATE '2024-06-01'
-          FROM df WHERE ok IS NOT NULL AND uk IS NOT NULL AND d
-          UNION ALL
-          SELECT uk, unm, ub, DATE '2024-06-01', CAST(NULL AS DATE)
-          FROM df WHERE uk IS NOT NULL AND (ok IS NULL OR d)
-          ORDER BY c_custkey, effective_from""",
-    "q_cdc_apply" ->
-      s"""WITH cust AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-          chg AS (
-            SELECT c_custkey, c_name, c_acctbal + 50.0 AS c_acctbal,
-              1 AS seq, 'U' AS op FROM cust WHERE c_custkey % $CdcUpdMod = 0
-            UNION ALL
-            SELECT c_custkey, c_name, c_acctbal, 2, 'D' FROM cust
-            WHERE c_custkey % $CdcDelMod = 0
-            UNION ALL
-            SELECT c_custkey + $NewKeyOffset, c_name, c_acctbal, 2, 'U'
-            FROM cust WHERE c_custkey % $CdcInsMod = 0
-            UNION ALL
-            SELECT c_custkey, c_name, 0.0, 3, 'U' FROM cust
-            WHERE c_custkey % $CdcResMod = 0),
-          latest AS (SELECT * FROM (SELECT *, row_number() OVER
-              (PARTITION BY c_custkey ORDER BY seq DESC) AS rn FROM chg)
-            WHERE rn = 1),
-          j AS (SELECT s.c_custkey AS sk, s.c_name AS snm,
-              s.c_acctbal AS sb, l.c_custkey AS lk, l.c_name AS lnm,
-              l.c_acctbal AS lb, l.seq, l.op
-            FROM cust s FULL OUTER JOIN latest l
-              ON s.c_custkey = l.c_custkey)
-          SELECT coalesce(sk, lk) AS c_custkey,
-            CASE WHEN op = 'U' THEN lnm ELSE snm END AS c_name,
-            CASE WHEN op = 'U' THEN lb ELSE sb END AS c_acctbal,
-            CAST(coalesce(seq, 0) AS BIGINT) AS version_seq
-          FROM j WHERE op IS NULL OR op = 'U'
-          ORDER BY c_custkey""",
-    // Integer-moment merge; the variance step runs in double as
-    // E[c²]−E[c]² with the operation order mirrored exactly — no
-    // int64 overflow cliff, and bigint→double casts round identically
-    // in both engines.
-    "q_agg_merge" ->
-      """WITH c AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL),
-          p AS (SELECT event_type, day, count(*) AS n, sum(c) AS sum_c,
-            sum(c * c) AS sumsq_c, min(c) AS min_c, max(c) AS max_c
-          FROM c GROUP BY 1, 2),
-          m AS (SELECT event_type,
-            CAST(date_trunc('week', day) AS DATE) AS week,
-            CAST(sum(n) AS BIGINT) AS n, count(*) AS n_days,
-            CAST(sum(sum_c) AS BIGINT) AS sum_c,
-            CAST(sum(sumsq_c) AS BIGINT) AS sumsq_c,
-            min(min_c) AS min_c, max(max_c) AS max_c
-          FROM p GROUP BY 1, 2)
-          SELECT event_type, week, n, n_days,
-            CAST(sum_c AS DOUBLE) / n / 100.0 AS mean_value,
-            (CAST(sumsq_c AS DOUBLE) / n - (CAST(sum_c AS DOUBLE) / n)
-              * (CAST(sum_c AS DOUBLE) / n)) / 10000.0 AS var_value,
-            CAST(min_c AS DOUBLE) / 100.0 AS min_value,
-            CAST(max_c AS DOUBLE) / 100.0 AS max_value
-          FROM m ORDER BY event_type, week""",
-    "q_entity_match" ->
-      s"""WITH clean AS (SELECT c_custkey AS id, c_name AS name
-            FROM customer),
-          dirty AS (SELECT id,
-            CASE WHEN id % 3 = 0 THEN
-                substr(name, 1, 5) || 'x' || substr(name, 7)
-              WHEN id % 3 = 1 THEN
-                substr(name, 1, 5) || 'xy' || substr(name, 8)
-              ELSE substr(name, 1, length(name) - 1) || 'z'
-            END AS name FROM clean),
-          wq AS (SELECT least(8, greatest(4, CAST(ceil(log10(
-            CAST(count(*) AS DOUBLE) / 64.0)) AS INT))) AS wd FROM clean),
-          d AS (SELECT id AS dirty_id, name AS dirty_name,
-            right(name, wq.wd) AS blk FROM dirty, wq),
-          c AS (SELECT id AS clean_id, name AS clean_name,
-            right(name, wq.wd) AS blk FROM clean, wq),
-          j AS (SELECT d.dirty_id, d.dirty_name, c.clean_id,
-              levenshtein(d.dirty_name, c.clean_name) AS dist
-            FROM d LEFT JOIN c USING (blk)),
-          r AS (SELECT *, row_number() OVER (PARTITION BY dirty_id
-              ORDER BY CASE WHEN dist <= $EntityMaxDist THEN 0 ELSE 1 END,
-                dist, clean_id) AS rn FROM j)
-          SELECT dirty_id, dirty_name,
-            CASE WHEN dist <= $EntityMaxDist THEN clean_id END AS clean_id,
-            CASE WHEN dist <= $EntityMaxDist THEN dist END AS dist
-          FROM r WHERE rn = 1 ORDER BY dirty_id""",
-    "q_langid_eval" ->
-      s"""WITH p AS ($LangIdSql),
-          g AS (SELECT lang, lang_pred, count(*) AS n FROM p GROUP BY 1, 2)
-          SELECT lang, lang_pred, n,
-            CAST(n AS DOUBLE) /
-              CAST(sum(n) OVER (PARTITION BY lang) AS BIGINT)
-              AS share_of_lang
-          FROM g ORDER BY lang, lang_pred""",
-    "q_sample_fixed" ->
-      s"""WITH h AS (SELECT doc_id, lang,
-            md5(CAST(doc_id AS VARCHAR) || ':fix') AS h FROM documents),
-          r AS (SELECT doc_id, lang,
-            CAST(row_number() OVER (PARTITION BY lang
-              ORDER BY h, doc_id) AS INTEGER) AS rk FROM h)
-          SELECT doc_id, lang, rk FROM r WHERE rk <= $FixedPerStratum
-          ORDER BY lang, rk""",
-    // A-ES keys replayed off the same md5 uniforms; the engine's
-    // bounded-heap top-k is proven against the window formulation
-    "q_weighted_sample" ->
-      s"""WITH t AS (SELECT source AS stratum, doc_id,
-            CAST(len($ToksSql) AS BIGINT) AS weight,
-            (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':es'),
-              1, 6))::BIGINT AS DOUBLE) + CAST(0.5 AS DOUBLE)) /
-              CAST(16777216.0 AS DOUBLE) AS u
-          FROM documents),
-          k AS (SELECT stratum, doc_id, ln(u) / CAST(weight AS DOUBLE)
-              AS es_key
-            FROM t WHERE weight > 0),
-          r AS (SELECT stratum, doc_id, es_key,
-            CAST(row_number() OVER (PARTITION BY stratum
-              ORDER BY es_key DESC, doc_id) AS INTEGER) AS rk FROM k)
-          SELECT stratum, doc_id, es_key, rk FROM r
-          WHERE rk <= $WeightedPerStratum ORDER BY stratum, rk""",
-    // quality mean off the floor(score*1e6) integer grid, dup flag off
-    // the fingerprint counts, policy CASE with the engine's thresholds
-    "q_domain_policy" ->
-      s"""WITH $QualityScoreCtes,
-          fp AS (SELECT doc_id, md5($NormSql) AS f FROM documents),
-          fc AS (SELECT f, count(*) AS cnt FROM fp GROUP BY f),
-          d AS (SELECT qsc.source, qsc.token_cnt, qsc.quality_score,
-              CASE WHEN fc.cnt > 1 THEN 1 ELSE 0 END AS is_dup
-            FROM qsc JOIN fp ON qsc.doc_id = fp.doc_id
-              JOIN fc ON fp.f = fc.f),
-          g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(coalesce(sum(is_dup), 0) AS BIGINT) AS n_dup,
-              CAST(coalesce(sum(CASE WHEN token_cnt <
-                ${Curation.PolicyMinTokens} THEN 1 ELSE 0 END), 0)
-                AS BIGINT) AS n_short,
-              sum(CAST(floor(quality_score * 1000000) AS BIGINT)) AS sq_sum,
-              CAST(count(quality_score) AS BIGINT) AS n_scored
-            FROM d GROUP BY source),
-          r AS (SELECT source, n_docs,
-              CAST(n_dup AS DOUBLE) / n_docs AS dup_rate,
-              CAST(n_short AS DOUBLE) / n_docs AS short_rate,
-              CAST(sq_sum AS DOUBLE) / nullif(n_scored, 0) / 1000000.0
-                AS avg_quality
-            FROM g)
-          SELECT source, n_docs, dup_rate, short_rate, avg_quality,
-            CASE WHEN avg_quality IS NULL
-                OR avg_quality < ${Curation.PolicyMinQuality}
-                OR dup_rate > ${Curation.PolicyMaxDupRate} THEN 'drop'
-              WHEN avg_quality < ${Curation.PolicySampleQuality}
-                OR dup_rate > ${Curation.PolicySampleDupRate}
-                OR short_rate > ${Curation.PolicyMaxShortRate}
-                THEN 'sample'
-              ELSE 'keep' END AS policy
-          FROM r ORDER BY source""",
-    "q_cluster_best" ->
-      s"""WITH RECURSIVE $MinhashVerCtes,
-          $ClusterCtes,
-          $QualityScoreCtes,
-          cb AS (SELECT lab.doc_id, lab.rep_id, sz.cluster_size,
-              qsc.quality_score
-            FROM lab JOIN sz USING (rep_id) JOIN qsc USING (doc_id)),
-          wv AS (SELECT *, first_value(doc_id) OVER (PARTITION BY rep_id
-            ORDER BY quality_score DESC NULLS LAST, doc_id) AS best_id
-            FROM cb)
-          SELECT doc_id, rep_id, cluster_size, quality_score, best_id,
-            CASE WHEN doc_id <> best_id THEN 1 ELSE 0 END AS is_dup
-          FROM wv ORDER BY doc_id""",
-    "q_reach_var" ->
-      s"""WITH m AS (SELECT user_id AS household_id,
-            $ProjfactSql AS projfact FROM events),
-          hh AS (SELECT household_id, max(projfact) AS w FROM m GROUP BY 1),
-          sp AS (SELECT CAST(unnest(range(0, $JackknifeGroups)) AS BIGINT)
-            AS g),
-          xg AS (SELECT ((household_id % $JackknifeGroups) +
-              $JackknifeGroups) % $JackknifeGroups AS g, w FROM hh),
-          pg AS (SELECT sp.g, coalesce(sum(xg.w), 0.0) AS s_g,
-              count(xg.w) AS n_g
-            FROM sp LEFT JOIN xg ON sp.g = xg.g GROUP BY 1),
-          t AS (SELECT g, s_g, CAST(sum(s_g) OVER () AS DOUBLE) AS total,
-              CAST(sum(n_g) OVER () AS BIGINT) AS n_households FROM pg),
-          d AS (SELECT g, total, n_households,
-              (total - s_g) * (CAST($JackknifeGroups AS DOUBLE) /
-                CAST(${JackknifeGroups - 1} AS DOUBLE)) - total AS dev
-            FROM t)
-          SELECT first(total) AS reach,
-            first(n_households) AS n_households,
-            $JackknifeGroups AS groups,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(dev * dev ORDER BY g)), (x, y) -> x + y) *
-              (CAST(${JackknifeGroups - 1} AS DOUBLE) /
-               CAST($JackknifeGroups AS DOUBLE)) AS jk_variance
-          FROM d""",
-    "q_reach_var_by_type" ->
-      s"""WITH m AS (SELECT user_id AS household_id, event_type AS etype,
-            $ProjfactSql AS projfact FROM events),
-          hv AS (SELECT etype, household_id, max(projfact) AS w FROM m
-            GROUP BY 1, 2),
-          pg0 AS (SELECT etype, ((household_id % $JackknifeGroups) +
-              $JackknifeGroups) % $JackknifeGroups AS g,
-            w FROM hv),
-          pg AS (SELECT etype, g, sum(w) AS s_g FROM pg0 GROUP BY 1, 2),
-          sp AS (SELECT DISTINCT etype,
-              CAST(unnest(range(0, $JackknifeGroups)) AS BIGINT) AS g
-            FROM pg),
-          fl AS (SELECT sp.etype, sp.g, coalesce(pg.s_g, 0.0) AS s_g
-            FROM sp LEFT JOIN pg ON sp.etype = pg.etype AND sp.g = pg.g),
-          t AS (SELECT etype, g, s_g,
-              CAST(sum(s_g) OVER (PARTITION BY etype) AS DOUBLE) AS total
-            FROM fl),
-          d AS (SELECT etype, g, total,
-              (total - s_g) * (CAST($JackknifeGroups AS DOUBLE) /
-                CAST(${JackknifeGroups - 1} AS DOUBLE)) - total AS dev
-            FROM t)
-          SELECT etype, first(total) AS reach,
-            $JackknifeGroups AS groups,
-            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-              list(dev * dev ORDER BY g)), (x, y) -> x + y) *
-              (CAST(${JackknifeGroups - 1} AS DOUBLE) /
-               CAST($JackknifeGroups AS DOUBLE)) AS jk_variance
-          FROM d GROUP BY etype ORDER BY etype""",
-  )
+  /** Drops the per-data-dir session memos of the vector keys (IVF
+    * centroids, corpus counts); Bench calls it between timed trials. */
+  def clearSessionMemos(): Unit = VectorKeys.clearSessionMemos()
 }

@@ -142,9 +142,9 @@ object PureProps extends Properties("graft") {
       "q_dedup_clusters" -> s"[1:${NearDup.DefaultBucketCap}]",
       "q_embed_lsh" -> s"[1:${NearDup.DefaultBucketCap}]",
       "q_dedup_incremental" -> s"[1:${NearDup.DefaultBucketCap}]",
-      "q_fanout_audit" -> s"least(ln, ${SparkEntry.FanoutMultCap})",
-      "q_wedge_recs" -> s"[1:${SparkEntry.WedgeNeighborCap}]",
-      "q_wedge_recs" -> s"> ${SparkEntry.WedgeEdgeBudget}",
+      "q_fanout_audit" -> s"least(ln, ${keys.QualityKeys.FanoutMultCap})",
+      "q_wedge_recs" -> s"[1:${keys.GraphKeys.WedgeNeighborCap}]",
+      "q_wedge_recs" -> s"> ${keys.GraphKeys.WedgeEdgeBudget}",
       // the peel-depth cap is replayed STRUCTURALLY (the oracle's
       // unroll ends at p<depth>); a depth change without the oracle
       // regenerating would leave the final-step marker stale
@@ -159,31 +159,23 @@ object PureProps extends Properties("graft") {
   /** The declared rows-only set: hash-function-dependent sketches and
     * the engine-specific DEFLATE signal — each spec-gated elsewhere
     * (the BPE loop pair graduated to the unrolled-CTE oracle in
-    * round 9). A query added WITHOUT an oracle silently downgrades
-    * the driver's gate to a rows>0 check; this pin makes that a
-    * deliberate, reviewed decision instead of an accident. */
+    * round 9). A key declared without an oracle downgrades the
+    * driver's gate to a rows>0 check; pinning the set here makes that
+    * a reviewed test diff instead of an accident. */
   private val RowsOnlyDeclared = Set(
     "q_active_users_approx",
     "q_compress_ratio", "q_lifecycle_approx", "q_pairwise_approx",
     "q_percentiles_approx", "q_reach_approx", "q_skew_report_approx")
 
   property("every query key has an oracle or a declared rows-only slot") = {
-    val undeclared = SparkEntry.queries.keySet --
-      SparkEntry.oracleSql.keySet -- RowsOnlyDeclared
-    val stale = RowsOnlyDeclared -- SparkEntry.queries.keySet
-    val shadowed = RowsOnlyDeclared & SparkEntry.oracleSql.keySet
-    (Prop(undeclared.isEmpty) :| s"missing oracle: ${undeclared.mkString(", ")}") &&
-      (Prop(stale.isEmpty) :| s"stale rows-only: ${stale.mkString(", ")}") &&
-      (Prop(shadowed.isEmpty) :| s"declared rows-only but has oracle: ${shadowed.mkString(", ")}")
-  }
-
-  property("every bench headline name is a real query, no duplicates") = {
-    // a typo'd headline name fails loud at bench time; this fails it
-    // at build time, and a duplicate would double-count the total
-    val unknown = Bench.headline.filterNot(SparkEntry.queries.keySet)
-    val dups = Bench.headline.groupBy(identity).filter(_._2.size > 1).keys
-    (Prop(unknown.isEmpty) :| s"unknown: ${unknown.mkString(", ")}") &&
-      (Prop(dups.isEmpty) :| s"duplicated: ${dups.mkString(", ")}")
+    val rowsOnly = SparkEntry.registry.collect {
+      case keys.Key(n, _, keys.Key.RowsOnly(_), _) => n
+    }.toSet
+    val noSql = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    (Prop(rowsOnly == RowsOnlyDeclared) :|
+      s"registry rows-only ${rowsOnly.toSeq.sorted.mkString(", ")}") &&
+      (Prop(noSql == RowsOnlyDeclared) :|
+        s"keys without SQL ${noSql.toSeq.sorted.mkString(", ")}")
   }
 
   property("every query key has a SURVEY.md §2 inventory row") = {
