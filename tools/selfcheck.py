@@ -38,6 +38,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 fails = []
+rows_only = []
 for name in sorted(os.listdir(outdir)):
     d = os.path.join(outdir, name)
     if not os.path.isdir(d):
@@ -45,6 +46,7 @@ for name in sorted(os.listdir(outdir)):
     spark_df = pd.concat([pd.read_parquet(f) for f in glob.glob(f"{d}/*.parquet")],
                          ignore_index=True)
     if name not in oracles:
+        rows_only.append(name)
         print(f"{name:24s} rows-only: {len(spark_df)} rows "
               + ("OK" if len(spark_df) > 0 else "EMPTY!"))
         if len(spark_df) == 0:
@@ -87,5 +89,8 @@ for name in sorted(os.listdir(outdir)):
         fails.append(name)
 
 fails += missing
-print("\n%d/%d passed" % (len(oracles) - sum(1 for f in fails if f in oracles), len(oracles)))
+# a key that lost its oracle lands here instead of failing: name them
+print("\n%d/%d passed; %d rows-only: %s" % (
+    len(oracles) - sum(1 for f in fails if f in oracles), len(oracles),
+    len(rows_only), ", ".join(rows_only) or "-"))
 sys.exit(1 if fails else 0)
