@@ -9,6 +9,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 object MinHashSigs {
   /** 2^40 — must equal NearDup.HashMod (asserted at the call site). */
   val Mod: Long = 1L << 40
+
+  /** Coefficient i is the pair (a(i), b(i)): arrays of different
+    * lengths have no such pairing, and a shorter `b` would be read
+    * past its end. */
+  def checkCoefficients(a: Array[Long], b: Array[Long]): Unit =
+    require(a.length == b.length, s"graft_minhash: coefficient arrays " +
+      s"differ in length (a: ${a.length}, b: ${b.length})")
 }
 
 /** Native Catalyst expression: all k minhash signature values of a
@@ -70,6 +77,7 @@ case class MinHashSigs(hashes: Expression, a: Expression, b: Expression)
     if (n == 0) return null
     val aa = av.asInstanceOf[ArrayData].toLongArray()
     val ba = bv.asInstanceOf[ArrayData].toLongArray()
+    MinHashSigs.checkCoefficients(aa, ba)
     val k = aa.length
     val out = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -110,6 +118,7 @@ case class MinHashSigs(hashes: Expression, a: Expression, b: Expression)
          |} else {
          |  long[] $aa = $av.toLongArray();
          |  long[] $ba = $bv.toLongArray();
+         |  graft.functions.MinHashSigs.checkCoefficients($aa, $ba);
          |  int $k = $aa.length;
          |  long[] $out = new long[$k];
          |  java.util.Arrays.fill($out, Long.MAX_VALUE);
