@@ -43,7 +43,7 @@ object QualityKeys extends Family {
   private val TClosenessT = 0.15
 
   /** q_autocorr: lags (days) tested — 1 for day-to-day persistence, 7
-    * for weekly cadence (the [[ForecastLagDays]] model check). */
+    * for weekly cadence (the [[EventKeys.ForecastLagDays]] model check). */
   private val AutocorrLags = Seq(1, 7)
 
   /** q_fanout_audit: per-key multiplicity cap — the top bucket reads

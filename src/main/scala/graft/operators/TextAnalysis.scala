@@ -960,7 +960,7 @@ object TextAnalysis {
     * `localCheckpoint` per round keeps lineage O(1) across
     * iterations (the Lloyd pattern) — without it round k replays all
     * k−1 rewrites. Oracle: the loop unrolls to one MATERIALIZED CTE
-    * step per round (SparkEntry.BpeVocabCtes, the k-core precedent) —
+    * step per round (keys.TextKeys.BpeVocabCtes, the k-core precedent) —
     * the greedy fold is replayed by SQL replace()'s left-to-right
     * non-overlapping scan over '[sym]'-encoded arrays, so the full
     * merge sequence is hash-gated; TextSpec additionally pins it on a
