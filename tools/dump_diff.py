@@ -26,6 +26,10 @@ def read(dump, key):
     return pa.concat_tables([pq.read_table(p) for p in parts])
 
 
+def fields(table):
+    return ", ".join(str(f) for f in table.schema)
+
+
 def main(parent, change):
     diffs = []
     with open(os.path.join(parent, "oracle_sql.json"), "rb") as f:
@@ -46,7 +50,7 @@ def main(parent, change):
     for k in sorted(pk & ck):
         ta, tb = read(parent, k), read(change, k)
         if not ta.schema.equals(tb.schema):
-            print(f"{k:28s} SCHEMA {ta.schema} vs {tb.schema}")
+            print(f"{k:28s} SCHEMA [{fields(ta)}] vs [{fields(tb)}]")
             mismatched.append(k)
         elif not ta.equals(tb):
             print(f"{k:28s} ROWS {ta.num_rows} vs {tb.num_rows} rows differ")
