@@ -245,7 +245,7 @@ object HouseholdKeys extends Family {
           SELECT dimension, value, count, "unique", count - "unique" AS duplicates
           FROM u ORDER BY dimension, count DESC, value""").excluded(
       "multi-dimension variant of the benched " +
-      "q_reach_by_type (one stacked reach pass)"),
+        "q_reach_by_type (one stacked reach pass)"),
     key("q_reach_week", (s, d) =>
       ReachWeek.weeklyReach(Tables.media(s, d).where(col("event_id") % 101 === 0)))(
       s"""WITH m AS (SELECT user_id AS household_id,
@@ -302,7 +302,7 @@ object HouseholdKeys extends Family {
           SELECT date, round(sum(pf2), 1) AS proj_sum, count(*) AS n
           FROM r GROUP BY 1 ORDER BY 1""").excluded(
       "dim-frame assembly over the benched " +
-      "reach/projection legs"),
+        "reach/projection legs"),
     key("q_before_after", (s, d) => {
       val (p, e, u) = beforeAfterInputs(s, d)
       BeforeAfter.metrics(
@@ -422,7 +422,7 @@ object HouseholdKeys extends Family {
            AND dm.label = ka2.id_value AND dm.etype = ka2.etype2
          ORDER BY id, val_id""").excluded(
       "dim-frame assembly (right-outer coalesce " +
-      "of the tiny friendly map)"),
+        "of the tiny friendly map)"),
     key("q_reach_rollup", (s, d) =>
       Reach.reachRollup(Tables.media(s, d), Seq("etype", "week"),
         "projfact"))(

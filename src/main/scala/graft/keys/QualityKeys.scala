@@ -251,7 +251,7 @@ object QualityKeys extends Family {
          WHERE date_diff('day', date, max_d) < 7
          GROUP BY date ORDER BY date""").excluded(
       "parameter variant of the benched q_qa_daily " +
-      "(hour shift + trailing period)"),
+        "(hour shift + trailing period)"),
     key("q_qa_multigroup", (s, d) => {
       val ev = Tables.events(s, d)
       def prep(df: DataFrame) = df.select(

@@ -279,7 +279,7 @@ object VectorKeys extends Family {
       VectorSearch.cosineNearDup(Tables.embeddings(s, d), 0.4))(
       EmbedNearDupSql).excluded(
       "quadratic-by-design exact eval baseline " +
-      "(all-pairs cosine; the benched scale path is q_embed_lsh)"),
+        "(all-pairs cosine; the benched scale path is q_embed_lsh)"),
     // corpus-derived plane count (srpParamsFor): gate corpora derive
     // 12/20 planes, 100 TB derives more — the oracle replays the
     // power-of-two ladder in SQL against a prefix-stable plane table
@@ -314,7 +314,7 @@ object VectorKeys extends Family {
           SELECT query_id, neighbor_id, "rank", cos FROM r
           WHERE "rank" <= 5 ORDER BY query_id, "rank"""").excluded(
       "quadratic-by-design exact eval baseline " +
-      "(brute-force top-k; the benched scale paths are ivf/pq/sq)"),
+        "(brute-force top-k; the benched scale paths are ivf/pq/sq)"),
     // pre-filtered top-k within the query's own label stratum
     key("q_ann_filtered", (s, d) => {
       val emb = Tables.embeddings(s, d)
@@ -1041,6 +1041,6 @@ object VectorKeys extends Family {
             CAST(n_both AS DOUBLE) / nullif(n_exact, 0) AS recall
           FROM g""").excluded(
       "runs the quadratic exact leg to score the " +
-      "approximate one; at scale it runs on a held-out sample")
+        "approximate one; at scale it runs on a held-out sample")
   )
 }
